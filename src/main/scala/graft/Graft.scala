@@ -26,9 +26,6 @@ object Graft {
     shufflePartitions.fold(b)(n => b.config("spark.sql.shuffle.partitions", n))
   }
 
-  def session(master: String = "local[*]", shufflePartitions: Option[Int] = None): SparkSession =
-    builder(master, shufflePartitions).getOrCreate()
-
   // ------------------------------------------------------------------
   // Session-scoped cache registry (r15). The catalog's family-sharing
   // caches (q67's candidate-pair frame that q68 rides, the MinHash

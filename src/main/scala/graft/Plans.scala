@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dumper (not part of the driver contract): writes
   * `.explain("formatted")` for each catalog query (optionally filtered by
   * SPARK_GRAFT_QUERIES) to `<outDir>/<query>_<tag>.txt`, in the same session
@@ -16,22 +14,9 @@ object Plans {
     val outDir = if (args.nonEmpty) args(0) else "plans/r21"
     val tag = if (args.length > 1) args(1) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
-    for (q <- SparkEntry.queries.keys.toSeq.sorted if only.forall(_.contains(q))) {
+    for (q <- Measure.selected(SparkEntry.queries.keys)) {
       try {
         // Plan text only — `explain` plans lazily, but some operators
         // (iterative graph, path-choosing containment) run bounded stats

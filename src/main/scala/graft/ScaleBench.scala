@@ -44,12 +44,12 @@ import org.apache.spark.sql.functions._
   * generation to the tables the selected queries read.
   *
   * == Measurement ==
-  * Same discipline as Bench: steady-state (full warmup pass at sf0.001,
-  * or SPARK_GRAFT_WARM_DIR), min-of-2 passes with cache clears at pass
-  * boundaries, single-thread and all-core spin probes before each
-  * measurement so host contention is legible in the record. A pass that
-  * throws records NO timing; a query with no successful pass emits
-  * {failed, failed_at, error} instead of a flattering near-zero number.
+  * Bench's loop ([[Measure.timePasses]]): steady-state (one warmup pass
+  * at [[Measure.warmDir]]), min-of-2 materialized passes with cache clears
+  * at every pass and corpus boundary, spin probes before each run so host
+  * contention is legible in the record. A pass that throws records NO
+  * timing; a query with no successful pass emits {failed, failed_at,
+  * error} instead of a flattering near-zero number.
   * Output: one JSON line + scale.json in CWD with per-query {base_sec,
   * scaled_sec, ratio, exponent} plus base_tag/scaled_tag; exponent =
   * log(ratio)/log(k) (1.0 = linear, <=~1.2 allows shuffle growth).
@@ -58,32 +58,30 @@ object ScaleBench {
 
   /** Queries whose cost model the 100 TB claims lean on, plus three
     * relational anchors (q01/q06/q17) as linear-scaling controls and the
-    * derived-planes x-variants (r11) so fixed-vs-derived bucket
-    * granularity is measured side by side.
+    * [[extraQueries]] regime variants, measured side by side.
     */
   val hotSet: Seq[String] = Seq(
     "q01_pricing_summary", "q06_star_agg", "q17_sessionize",
     "q19_dedup_exact", "q20_ngram_jaccard", "q21_minhash_lsh",
     "q22_simhash", "q35_dedup_cosine", "q39_dup_clusters",
-    "q43_ann_ivf", "q56_tfidf", "q59_crosscorpus_dedup",
-    "q66_winnow", "q67_containment", "q68_containment_prune",
-    "q72_chunk_dedup", "q74_bigram_logprob", "q76_copurchase",
-    "q82_line_dedup", "q83_source_overlap", "q85_boilerplate_grams",
-    "q86_semdedup", "q87_span_dedup", "q88_bloom_decontaminate",
-    "q89_gopher_filter", "q90_contamination_spans", "q91_corpus_report",
-    "q95_bpe_train",
+    "q43_ann_ivf", "q48_frame_sample", "q56_tfidf",
+    "q59_crosscorpus_dedup", "q66_winnow", "q67_containment",
+    "q68_containment_prune", "q72_chunk_dedup", "q74_bigram_logprob",
+    "q76_copurchase", "q82_line_dedup", "q83_source_overlap",
+    "q85_boilerplate_grams", "q86_semdedup", "q87_span_dedup",
+    "q88_bloom_decontaminate", "q89_gopher_filter",
+    "q90_contamination_spans", "q91_corpus_report", "q92_bpe_encode",
+    "q93_html_extract", "q94_span_trim", "q95_bpe_train",
+    "q97_contamination_trim", "q100_quality_classifier",
+    "q101_image_dhash", "q102_url_curate", "q104_langid_learned",
+    "q105_link_graph", "q107_crawl_frontier", "q108_anchor_text",
+    "q109_collocations", "q110_pca_project", "q113_sequence_pack",
+    "q115_corpus_shuffle", "q116_token_shards", "q117_frontier_budget",
+    "q120_eos_pack", "q121_epoch_plan", "q122_image_gate",
+    "q123_audio_gate",
     "x35_dedup_cosine_auto", "x86_semdedup_auto", "x88_bloom_fixed_eval",
-    "x89_gopher_work", "x92_bpe_encode_work", "x93_html_extract_work",
-    "x94_span_trim_work", "x97_contamination_trim_work",
-    "x100_classifier_work", "x101_image_dhash_work",
-    "x102_url_curate_work", "x102_url_canon_work", "x104_langid_work",
-    "x105_link_graph_work", "x107_frontier_work", "x108_anchor_work",
-    "x109_colloc_work", "x110_pca_work", "x111_audio_work",
-    "x112_unigram_encode_work", "x113_sequence_pack_work",
-    "x48_frames_work", "x115_shuffle_pack_work", "x116_token_shards_work",
-    "x117_frontier_budget_work", "x120_eos_pack_work",
-    "x121_epoch_plan_work", "x122_image_gate_work",
-    "x123_audio_gate_work", "x124_hnsw_work", "x130_versioned_dml_work")
+    "x102_url_canon_work", "x111_audio_work", "x112_unigram_encode_work",
+    "x124_hnsw_work", "x130_versioned_dml_work")
 
   /** Default key stride between copies: far above any sf0.1 key range, so
     * strided ids never collide across copies. A SECOND derivation (e.g.
@@ -180,13 +178,14 @@ object ScaleBench {
     }
   }
 
-  /** Production-regime x-variants of catalog queries whose oracle bakes a
-    * test-scale knob in: derived-planes embedding dedup (q35/q86 keep
-    * planes=8 for their DuckDB oracles; [[graft.sim.Ann.planesFor]] holds
-    * expected bucket size as the corpus grows) and fixed-eval bloom
-    * decontamination (the catalog q88's derived-corpus eval side grows
-    * WITH the corpus). Measured here so each fixed-vs-production exponent
-    * gap is OBSERVED, not argued.
+  /** x-variants that measure a different regime than their catalog
+    * query: production knobs where the oracle bakes a test-scale one in
+    * (derived-planes embedding dedup — q35/q86 keep planes=8 for their
+    * DuckDB oracles, [[graft.sim.Ann.planesFor]] holds expected bucket
+    * size as the corpus grows; fixed-eval bloom decontamination; derived
+    * HNSW shards), an every-row or cache-free face of a capped or cached
+    * query, an encode-only face, and the versioned write path. Measured
+    * here so each fixed-vs-production exponent gap is OBSERVED, not argued.
     */
   val extraQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // q88 with a FIXED eval suite (copy-0's src0 docs — original ids stay
@@ -210,66 +209,7 @@ object ScaleBench {
         Tables.embeddings(s, d).select(col("vec_id").as("id"),
           graft.sim.Ann.toDouble(col("embedding")).as("vec")), 0.35)
     },
-    // Prune-proof work variants (r12): the harness action is `.count()`,
-    // and Catalyst rightly ELIMINATES work a count doesn't need — a
-    // projection-shaped query (q92/q93) prunes to its scan, and q94's
-    // per-doc left joins against aggregates are dropped wholesale by the
-    // outer-join eliminator (measured: "q94" 0.67s where q87, a strict
-    // subset of its work, runs 41.6s at the same 100x corpus). Grouping BY
-    // the computed fingerprints forces every row's full computation into
-    // the key, so these x-variants measure the OPERATOR, not the scan.
-    // The catalog queries keep their oracle-matching shapes.
-    "x92_bpe_encode_work" -> { (s, d) =>
-      SparkEntry.queries("q92_bpe_encode")(s, d)
-        .groupBy(col("bpe_fp")).agg(sum(col("n_bpe_tokens")).as("t"))
-    },
-    "x93_html_extract_work" -> { (s, d) =>
-      SparkEntry.queries("q93_html_extract")(s, d)
-        .groupBy(col("main_fp")).agg(sum(col("kept_chars")).as("t"))
-    },
-    "x94_span_trim_work" -> { (s, d) =>
-      graft.text.SpanDedup.trim(Tables.documents(s, d), "doc_id", "text", 8)
-        .groupBy(md5(col("text_trimmed")).as("fp"))
-        .agg(sum(col("removed_tokens")).as("t"))
-    },
-    "x97_contamination_trim_work" -> { (s, d) =>
-      graft.text.Decontaminate.trim(Tables.documents(s, d),
-          "doc_id", "text", col("source") === "src0", 8)
-        .groupBy(md5(col("text_trimmed")).as("fp"))
-        .agg(sum(col("removed_tokens")).as("t"))
-    },
-    "x89_gopher_work" -> { (s, d) =>
-      graft.text.Gopher.verdicts(Tables.documents(s, d), "doc_id", "text")
-        .groupBy(col("words_ok"), col("word_len_ok"), col("symbol_ok"),
-          col("bullet_ok"), col("ellipsis_ok"), col("alpha_ok"),
-          col("stopword_ok"), col("keep"))
-        .agg(count(lit(1)).as("n"), sum(col("n_tokens")).as("t"))
-    },
-    // q100's count() is prunable the q94 way (its per-doc LEFT join against
-    // a grouped aggregate preserves cardinality, so the eliminator can drop
-    // the scoring wholesale); summing the logits forces every doc's hash +
-    // weight fold to execute.
-    "x100_classifier_work" -> { (s, d) =>
-      SparkEntry.queries("q100_quality_classifier")(s, d)
-        .groupBy(col("pass")).agg(sum(col("logit")).as("t"), count(lit(1)).as("n"))
-    },
-    // q101's pair count is NOT join-eliminable (the banded join gates
-    // cardinality), but summing hamming additionally forces the verify
-    // column; render+decode+hash is the linear term, banded candidates
-    // the SimHash-family term (cap-bounded past bucket saturation).
-    "x101_image_dhash_work" -> { (s, d) =>
-      SparkEntry.queries("q101_image_dhash")(s, d)
-        .agg(count(lit(1)).as("n"), sum(col("hamming")).as("t"))
-    },
-    // q102: a bare count() lets column pruning drop the canonicalize
-    // regexp chain (rank needs only domain + n_chars + doc_id); summing
-    // url lengths forces the full canonical form per surviving row.
-    "x102_url_curate_work" -> { (s, d) =>
-      SparkEntry.queries("q102_url_curate")(s, d)
-        .groupBy(col("domain"))
-        .agg(sum(length(col("url"))).as("t"), count(lit(1)).as("n"))
-    },
-    // The capped end-to-end variant above lets Catalyst defer the url
+    // q102_url_curate's capped plan lets Catalyst defer the url
     // projection past the rank filter (a GOOD plan — only ~cap·domains
     // survivors get canonicalized), so it measures the window, not the
     // regexp chain. This one runs canonicalize over EVERY row — the
@@ -280,53 +220,11 @@ object ScaleBench {
           graft.queries.TextQueries.syntheticRawUrl).as("u"))
         .agg(sum(length(col("u"))).as("t"), count(lit(1)).as("n"))
     },
-    // q104's left join preserves cardinality (outer-join eliminable under
-    // a bare count, the q100/q94 honesty class); grouping on the
-    // prediction and summing logits forces every doc's featurize + K-way
-    // score + argmax.
-    "x104_langid_work" -> { (s, d) =>
-      SparkEntry.queries("q104_langid_learned")(s, d)
-        .groupBy(col("pred_lang"))
-        .agg(sum(col("logit")).as("t"), count(lit(1)).as("n"))
-    },
-    // q105's own groupBy already forces the per-anchor extract→resolve→
-    // canonicalize chain (target_host derives from the canonical url, so
-    // nothing prunes); the sum over the edge rollup just collapses the
-    // bounded host-pair output. q106 adds only a HOST-sized PageRank on
-    // top (graph size follows the host catalog, not the corpus), so q105
-    // is the scaling face for both.
-    "x105_link_graph_work" -> { (s, d) =>
-      SparkEntry.queries("q105_link_graph")(s, d)
-        .agg(sum(col("n_links")).as("t"), count(lit(1)).as("n"))
-    },
-    // q107's own cost model beyond x105's scan: the per-url citation agg
-    // + the corpus-sized anti-join against the crawled set. The host
-    // window needs every citation row, so nothing prunes; the per-host
-    // cap only bounds the OUTPUT.
-    "x107_frontier_work" -> { (s, d) =>
-      SparkEntry.queries("q107_crawl_frontier")(s, d)
-        .agg(sum(col("n_citations")).as("t"), count(lit(1)).as("n"))
-    },
-    // q108: the rollup needs every anchor's text+target — nothing prunes.
-    "x108_anchor_work" -> { (s, d) =>
-      SparkEntry.queries("q108_anchor_text")(s, d)
-        .agg(sum(col("n_links")).as("t"), count(lit(1)).as("n"))
-    },
-    // q109: the top-50 cut needs every bigram's lift — nothing prunes.
-    "x109_colloc_work" -> { (s, d) =>
-      SparkEntry.queries("q109_collocations")(s, d)
-        .agg(sum(col("lift_ppm")).as("t"), count(lit(1)).as("n"))
-    },
-    // q110: summing projections forces every row's k dot folds.
-    "x110_pca_work" -> { (s, d) =>
-      SparkEntry.queries("q110_pca_project")(s, d)
-        .agg(sum(col("proj")).as("t"), count(lit(1)).as("n"))
-    },
     // q111's linear term, measured WITHOUT the catalog query's registry
     // cache (a cached clips frame would make pass 2 read storage and
     // report fake sublinearity): every clip's WAV render, sample decode,
     // stats, and envelope hash per pass. The banded dup join is the
-    // SimHash-family capped term x101/q22 already measure.
+    // SimHash-family capped term q101/q22 already measure.
     "x111_audio_work" -> { (s, d) =>
       graft.multimodal.Audio.clipRows(
           graft.multimodal.Audio.toWavPayloads(s, Tables.documents(s, d)))
@@ -345,74 +243,6 @@ object ScaleBench {
       Tables.documents(s, d)
         .select(explode(graft.text.TextFunctions.tokens(col("text"))).as("w"))
         .agg(sum(size(graft.text.Unigram.encode(col("w"), vocab))).as("t"),
-          count(lit(1)).as("n"))
-    },
-    // q113: summing both offsets + lens forces the full manifest (the
-    // two-phase prefix sum, the bucket-totals window — which grows with
-    // bucket COUNT, the exponent this probe watches — and the explode).
-    "x113_sequence_pack_work" -> { (s, d) =>
-      SparkEntry.queries("q113_sequence_pack")(s, d)
-        .agg(sum(col("len")).as("t"), sum(col("doc_offset") + col("seq_offset")).as("o"),
-          count(lit(1)).as("n"))
-    },
-    // q48 (r17): the REAL per-frame cost — every doc's GIF encode, the
-    // container walk, the sampled frames' LZW decode + dHash. Linear in
-    // corpus bytes; the stride only divides the decode term.
-    "x48_frames_work" -> { (s, d) =>
-      SparkEntry.queries("q48_frame_sample")(s, d)
-        .agg(sum(col("frame_dhash")).as("t"), count(lit(1)).as("n"))
-    },
-    // q115: x113's manifest under the seeded-hash permutation — the
-    // probe watches the HASH-SPACE bucketing's exponent (bucket count is
-    // fixed by hashBucketWidth, fill grows with the corpus).
-    "x115_shuffle_pack_work" -> { (s, d) =>
-      SparkEntry.queries("q115_corpus_shuffle")(s, d)
-        .agg(sum(col("len")).as("t"), sum(col("doc_offset") + col("seq_offset")).as("o"),
-          count(lit(1)).as("n"))
-    },
-    // i22/q116: the WHOLE materialization — encode, vocab, manifest,
-    // assemble, shard WRITE to disk, shard READ back. The honest end-
-    // product cost (I/O included); token_sum forces every byte parsed.
-    "x116_token_shards_work" -> { (s, d) =>
-      SparkEntry.queries("q116_token_shards")(s, d)
-        .agg(sum(col("token_sum")).as("t"), count(lit(1)).as("n"))
-    },
-    // q117: x107's frontier cost + the real robots parse over the host
-    // dim + the budget filter — nothing prunes before the rank.
-    "x117_frontier_budget_work" -> { (s, d) =>
-      SparkEntry.queries("q117_frontier_budget")(s, d)
-        .agg(sum(col("n_citations")).as("t"), count(lit(1)).as("n"))
-    },
-    // q120: x116's assembly cost with the per-doc EOS append, minus the
-    // disk round-trip — isolates the separator's (negligible) overhead
-    // and the assembly's own exponent.
-    "x120_eos_pack_work" -> { (s, d) =>
-      SparkEntry.queries("q120_eos_pack")(s, d)
-        .agg(sum(col("token_sum")).as("t"), sum(col("n_eos")).as("e"),
-          count(lit(1)).as("n"))
-    },
-    // q121: sequence-rate per epoch — the manifest (token-rate cumsum)
-    // dominates; the plan itself is corpus/seqLen rows through the
-    // hash-space rank. The probe watches both terms together.
-    "x121_epoch_plan_work" -> { (s, d) =>
-      SparkEntry.queries("q121_epoch_plan")(s, d)
-        .agg(sum(col("position")).as("t"), sum(col("byte_offset")).as("o"),
-          count(lit(1)).as("n"))
-    },
-    // q122: render + parse + raster-sum per image — pure per-partition
-    // byte-rate scan; the exponent should track corpus bytes.
-    "x122_image_gate_work" -> { (s, d) =>
-      SparkEntry.queries("q122_image_gate")(s, d)
-        .agg(sum(col("sum_bytes")).as("t"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("k"),
-          count(lit(1)).as("n"))
-    },
-    // q123: WAV render + sample decode + stats per clip — the same
-    // byte-rate scan shape as x111/x122.
-    "x123_audio_gate_work" -> { (s, d) =>
-      SparkEntry.queries("q123_audio_gate")(s, d)
-        .agg(sum(col("sum_sq")).as("t"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("k"),
           count(lit(1)).as("n"))
     },
     // q124 (r18): the PRODUCTION shard policy — shard count derives from
@@ -468,10 +298,7 @@ object ScaleBench {
     val seedBase = sys.env.get("SPARK_GRAFT_SCALE_SEED").map(_.toLong).getOrElse(1042L)
     val genTables = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
       .map(_.split(",").toSet).getOrElse(AllTables)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = Graft.session(s"local[$cpus]", Some(cpus.toInt))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
 
     // The marker records the derivation PARAMETERS: a partial or
     // differently-derived corpus at the same path regenerates instead of
@@ -499,87 +326,48 @@ object ScaleBench {
     // (when the derived corpus carries its tables) or an extraQueries
     // entry, not just the hot set.
     val allQueries = SparkEntry.queries ++ extraQueries
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
-    val catalog = only
-      .fold(hotSet)(sel => allQueries.keys.toSeq.sorted.filter(sel.contains))
-      .map(n => n -> allQueries(n))
+    val catalog =
+      if (Measure.querySubset().isEmpty) hotSet else Measure.selected(allQueries.keys)
 
-    // Steady-state warmup (compile-cache fill) at the smallest SF.
-    val warmDir = sys.env.get("SPARK_GRAFT_WARM_DIR").getOrElse {
-      val sib = new java.io.File(new java.io.File(srcDir).getParentFile, "sf0.001")
-      if (sib.isDirectory) sib.getPath else srcDir
+    val warmDir = Measure.warmDir(srcDir)
+    catalog.foreach { n =>
+      try Measure.materialize(allQueries(n)(spark, warmDir))
+      catch { case e: Throwable =>
+        System.err.println(s"[scale] warm $n failed: ${String.valueOf(e).take(160)}") }
     }
-    catalog.foreach { case (n, fn) =>
-      try fn(spark, warmDir).count() catch {
-        case t: Throwable => System.err.println(s"[scale] warm $n failed: ${String.valueOf(t).take(160)}")
-      }
-    }
+    spark.catalog.clearCache()
 
-    def spin(): Long = { var s = 0L; var i = 0; while (i < (1 << 22)) { s += i * 2654435761L; i += 1 }; s }
-    def probe(): Double = try {
-      val t0 = System.nanoTime(); if (spin() == 42L) System.err.println("")
-      (System.nanoTime() - t0) / 1e6
-    } catch { case _: Throwable => -1.0 }
-    val nThreads = Runtime.getRuntime.availableProcessors()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads,
-      (r: Runnable) => { val t = new Thread(r, "scale-probe"); t.setDaemon(true); t })
-    def pprobe(): Double = try {
-      import scala.jdk.CollectionConverters._
-      val t0 = System.nanoTime()
-      val tasks = Seq.fill(nThreads)(new java.util.concurrent.Callable[Long] {
-        override def call(): Long = spin()
-      }).asJava
-      if (pool.invokeAll(tasks).asScala.map(_.get()).sum == 42L) System.err.println("")
-      (System.nanoTime() - t0) / 1e6
-    } catch { case _: Throwable => -1.0 }
-    probe(); pprobe()
-
-    // name -> (dir-tag -> (best sec, probes)); min over SUCCESSFUL passes,
-    // caches cleared at each pass boundary so family-cache builds are paid
-    // in both. A pass that THROWS records no timing (its near-zero elapsed
-    // would otherwise flatter the exponent — r10 ADVICE); a query with no
-    // successful pass on a dir emits an explicit failure marker row.
+    // (name, dir-tag) -> best successful timing. Each pass measures the
+    // base corpus then the scaled one; every corpus sweep is its own loop
+    // pass, so caches are cleared between the two as well as between passes.
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(2)
-    val best = scala.collection.mutable.Map[(String, String), (Double, Double, Double)]()
     val failures = scala.collection.mutable.Map[(String, String), String]()
     val baseTag = new java.io.File(srcDir).getName // "sf0.1", "sf1", …
     val scaledTag = s"${baseTag}x$k" // e.g. sf0.1x10, sf1x100
     val dirs = Seq(baseTag -> srcDir, scaledTag -> outDir)
-    (1 to passes).foreach { pass =>
-      dirs.foreach { case (tag, dir) =>
-        spark.catalog.clearCache()
-        catalog.foreach { case (name, fn) =>
-          val p = probe(); val pp = pprobe()
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, dir).count(); true } catch {
-              case t: Throwable =>
-                System.err.println(s"[scale] $name@$tag FAILED: ${String.valueOf(t).take(200)}")
-                failures((name, tag)) = String.valueOf(t.getMessage).take(160)
-                false
-            }
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (ok) {
-            val cur = best.get((name, tag))
-            if (cur.forall(_._1 > sec)) best((name, tag)) = (sec, p, pp)
-          }
-          System.err.println(
-            f"[scale] pass$pass $name@$tag $sec%.2fs${if (ok) "" else " [FAILED]"} (probe $p%.1f/$pp%.1f ms)")
+    val dirOf = dirs.toMap
+    val sweeps = dirs.map { case (tag, _) => catalog.map(_ -> tag) }
+    val best = Measure.timePasses[(String, String)](Seq.fill(passes)(sweeps).flatten,
+      { case (name, tag) => Measure.materialize(allQueries(name)(spark, dirOf(tag))) },
+      boundary = _ => spark.catalog.clearCache(),
+      onTiming = { case ((name, tag), t, _) =>
+        t.error.foreach { e =>
+          System.err.println(s"[scale] $name@$tag FAILED: ${String.valueOf(e).take(200)}")
+          failures((name, tag)) = String.valueOf(e.getMessage).take(160)
         }
-      }
-    }
-    pool.shutdown()
+        val pass = (t.pass - 1) / dirs.size + 1
+        System.err.println(f"[scale] pass$pass $name@$tag ${t.sec}%.2fs" +
+          f"${if (t.ok) "" else " [FAILED]"} (probe ${t.probeMs}%.1f/${t.pprobeMs}%.1f ms)")
+      })
 
     def f2(d: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\\n\\r\\t]", " ") + "\""
-    val qjson = catalog.map(_._1).map { n =>
+    import Measure.jstr
+    val qjson = catalog.map { n =>
       (best.get((n, baseTag)), best.get((n, scaledTag))) match {
-        case (Some((a, pa, ppa)), Some((b, pb, ppb))) =>
-          val ratio = b / a
+        case (Some(a), Some(b)) =>
+          val ratio = b.sec / a.sec
           val expo = math.log(ratio) / math.log(k.toDouble)
-          s""""$n":{"base_sec":${f2(a)},"scaled_sec":${f2(b)},"ratio":${f2(ratio)},"exponent":${f2(expo)},"probe_ms":${f2(Seq(pa, pb).max)},"pprobe_ms":${f2(Seq(ppa, ppb).max)}}"""
+          s""""$n":{"base_sec":${f2(a.sec)},"scaled_sec":${f2(b.sec)},"ratio":${f2(ratio)},"exponent":${f2(expo)},"probe_ms":${f2(a.probeMs max b.probeMs)},"pprobe_ms":${f2(a.pprobeMs max b.pprobeMs)}}"""
         case (ba, _) =>
           val failedTag = if (ba.isEmpty) baseTag else scaledTag
           val why = failures.getOrElse((n, failedTag), "unknown")

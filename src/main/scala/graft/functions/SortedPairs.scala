@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** All C(n,2) ordered index pairs of an array, as
   * `array<struct<item_a, item_b>>` — the within-basket pair expansion of
@@ -46,8 +47,7 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
   override def nullSafeEval(a: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
     val n = xs.numElements()
-    val m = n * (n - 1) / 2
-    val out = new Array[Any](m)
+    val out = new Array[Any](SortedPairs.pairCount(n))
     // Box once per element, not once per pair (an element appears in n-1
     // pairs); boxed values are shared references, as in the HOF spelling.
     val boxed = new Array[Any](n)
@@ -85,7 +85,7 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
          |for (int $i = 0; $i < $n; $i++) {
          |  $boxed[$i] = $a.isNullAt($i) ? null : (Object) $value;
          |}
-         |Object[] $out = new Object[$n * ($n - 1) / 2];
+         |Object[] $out = new Object[${classOf[SortedPairs].getName}.pairCount($n)];
          |int $k = 0;
          |for (int $i = 0; $i < $n; $i++) {
          |  for (int $j = $i + 1; $j < $n; $j++) {
@@ -101,4 +101,19 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "graft_pairs"
+}
+
+object SortedPairs {
+
+  /** C(n,2), computed in Long: the Int product overflows above 65,536
+    * elements. A count past Spark's maximum array length is a named error,
+    * not a `NegativeArraySizeException` from a wrapped allocation.
+    */
+  def pairCount(n: Int): Int = {
+    val m = n.toLong * (n - 1) / 2
+    if (m > ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH) throw new IllegalArgumentException(
+      s"graft_pairs: a $n-element array has $m pairs, above the maximum " +
+        s"array length ${ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH}")
+    m.toInt
+  }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only i17 scale probe (not part of the driver contract): renders the
@@ -36,11 +35,8 @@ object WarcScale {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     val nFiles = sys.env.get("SPARK_GRAFT_WARC_FILES").map(_.toInt).getOrElse(16)
-    val spark = graft.Graft.session(s"local[$cpus]", Some(cpus.toInt))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Measure.session()
     import spark.implicits._
 
     val outRoot = java.nio.file.Files.createTempDirectory("warcscale").toString

@@ -379,6 +379,27 @@ class ExtOpsSpec extends SparkSpec {
     assert(gotBig == gotBig.sorted, "pairs must be i-major ordered")
   }
 
+  test("graft_pairs names an over-long array on both the interpreted and codegen paths") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, IntegerType}
+    // 65,537 elements: C(n,2) = 2,147,516,416 overflows Int (the old
+    // `n * (n - 1) / 2` went negative) and exceeds the max array length.
+    val row = InternalRow(new GenericArrayData(Array.tabulate[Any](65537)(identity)))
+    val expr = graft.functions.SortedPairs(
+      BoundReference(0, ArrayType(IntegerType, containsNull = false), nullable = false))
+    def named(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.startsWith("graft_pairs: a 65537-element array has 2147516416 pairs"),
+        e.getMessage)
+    }
+    named(expr.eval(row))
+    named(GenerateUnsafeProjection.generate(Seq(expr)).apply(row))
+    assert(graft.functions.SortedPairs.pairCount(65536) == 65536L * 65535 / 2)
+  }
+
   test("GapFill.dense densifies, zero-fills, LOCFs — and names the key on an over-span row") {
     val daily = Seq(
       (1L, java.sql.Date.valueOf("2024-03-01"), 5.0),
