@@ -36,10 +36,15 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Observation metric → Long; 0 when the metric is absent (empty input). */
-  private def asLongG(v: Any): Long = v match {
+  /** Observation metric `name` → Long; 0 when the metric is absent or
+    * null (empty input). Any other type fails named: a silent 0 would
+    * take pageRank's empty-graph return and serve an empty result.
+    */
+  private[graft] def asLongG(name: String, v: Any): Long = v match {
     case l: java.lang.Long => l.longValue()
-    case _ => 0L
+    case null => 0L
+    case other => throw new IllegalStateException(
+      s"Graph metric '$name' is a ${other.getClass.getName}, expected java.lang.Long")
   }
 
   /** (id, cluster_id) for every vertex appearing in `edges` (src, dst);
@@ -200,10 +205,7 @@ object Graph {
         col("src"), col("dst"))
       .distinct().observe(obsE, count(lit(1)).as("n")).localCheckpoint()
     val defaultP = spark.sessionState.conf.numShufflePartitions
-    val nEdges = obsE.get("n") match {
-      case l: java.lang.Long => l.longValue()
-      case _ => 0L
-    }
+    val nEdges = asLongG("n", obsE.get.getOrElse("n", null))
     val p = math.max(1, math.min(defaultP, (nEdges / 2000000L).toInt))
     val e = if (p > 1) e0.repartition(p, col("src")).localCheckpoint()
             else e0.coalesce(1)
@@ -220,7 +222,7 @@ object Graph {
     val nodes = byNode(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
       .observe(obsN, count(lit(1)).as("n")).localCheckpoint()
-    val n = asLongG(obsN.get("n")).toDouble
+    val n = asLongG("n", obsN.get.getOrElse("n", null)).toDouble
     lastPageRankIters = 0
     if (n == 0) return nodes.withColumn("rank", lit(0.0))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("outdeg"))

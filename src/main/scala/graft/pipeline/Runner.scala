@@ -98,13 +98,10 @@ object Runner {
     * schedules concurrent jobs from one session fine; only the audit
     * append is serialized (see [[graft.meta.Audit.log]]).
     *
-    * `objectStoreCommit = true` publishes full refreshes through
-    * [[graft.sources.Sinks.publishVersioned]] (manifest-pointer commit —
-    * the swap an object store can do atomically) instead of the
-    * rename-based [[graft.sources.Sinks.overwriteAtomic]]; readers then
-    * resolve tables via [[graft.sources.Sinks.readCurrent]]. Incremental
-    * appends are unchanged (appending new files is already safe on an
-    * object store — nothing existing is touched).
+    * Full refreshes go through [[graft.sources.Sinks.overwriteAtomic]],
+    * whose directory rename is atomic on HDFS and on ADLS Gen2's
+    * hierarchical namespace; tables that need versions are written with
+    * [[graft.sources.VersionedTable]] downstream of the load.
     *
     * `onFailure` fires once per table whose load exhausted its attempts —
     * the engine-side analog of the reference's explicit Fail activities
@@ -118,7 +115,6 @@ object Runner {
       runId: String, source: String => DataFrame,
       transform: Map[String, DataFrame => DataFrame] = Map.empty,
       maxAttempts: Int = 1, parallelism: Int = 1,
-      objectStoreCommit: Boolean = false,
       onFailure: LoadResult => Unit = _ => ()): Seq[LoadResult] = {
     val watermarks = lastWatermarks(spark, auditDir)
 
@@ -167,7 +163,6 @@ object Runner {
 
           val path = s"$outDir/${e.qualifiedName}"
           if (windowedLoad) staged.write.mode("append").parquet(path)
-          else if (objectStoreCommit) graft.sources.Sinks.publishVersioned(staged, path)
           else graft.sources.Sinks.overwriteAtomic(staged, path)
 
           // The staged frame was just written, so the metric is delivered

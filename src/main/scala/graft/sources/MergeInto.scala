@@ -256,7 +256,6 @@ final class MergeIntoBuilder private[sources] (
           }
           else if (matched.isEmpty) Nil
           else matchHitFiles
-        MergeIntoBuilder.lastPlannedScan = hitFiles.size
 
         var nUpdated = 0L; var nDeleted = 0L
         var removeFiles = Seq.empty[AddFile]
@@ -433,7 +432,8 @@ final class MergeIntoBuilder private[sources] (
           if (nUpdated + nDeleted + nInserted == 0) {
             // nothing acted: commit NOTHING (no version, no feed breakage)
             orphans.sweep()
-            MergeMetrics(base.version, committed = false, 0L, 0L, 0L)
+            MergeMetrics(base.version, committed = false, 0L, 0L, 0L,
+              hitFiles.size)
           } else {
             val cdcAdds =
               if (!base.changeFeed || cdcFrames.isEmpty) Nil
@@ -454,7 +454,8 @@ final class MergeIntoBuilder private[sources] (
                   (survivorAdds ++ changedAdds ++ insertAdds).map(VT.addLine) ++
                   cdcAdds.map { case (p, r) => VT.cdcLine(p, r) })
             }.get
-            MergeMetrics(v, committed = true, nUpdated, nDeleted, nInserted)
+            MergeMetrics(v, committed = true, nUpdated, nDeleted, nInserted,
+              hitFiles.size)
           }
         } finally { marked.foreach(_.unpersist()); () }
       }
@@ -467,13 +468,6 @@ object MergeIntoBuilder {
   private val MatchTag = "__gf_s_match"
   private val ActCol = "__gf_act"
   private val Keep = "keep"
-
-  /** File count of the most recent merge's planned target scan on this
-    * JVM — the test/observability hook the by-source stats-pruning spec
-    * pins (the [[graft.ops.Graph.lastPageRankIters]] precedent); not
-    * meaningful under concurrent merges.
-    */
-  @volatile private[graft] var lastPlannedScan: Int = -1
 
   private[sources] final case class MatchedClause(condition: Option[Column],
       set: Option[Map[String, Column]]) {
@@ -492,9 +486,12 @@ object MergeIntoBuilder {
   /** MERGE metrics (Delta's operationMetrics shape): `version` is the
     * committed version, or the unchanged base version when `committed`
     * is false (the no-row-acted no-op — nothing was written to the log).
+    * `targetFilesScanned` is the number of target files the merge's
+    * rewrite scan planned (after stats pruning), on both paths.
     */
   final case class MergeMetrics(version: Long, committed: Boolean,
-      rowsUpdated: Long, rowsDeleted: Long, rowsInserted: Long)
+      rowsUpdated: Long, rowsDeleted: Long, rowsInserted: Long,
+      targetFilesScanned: Int)
 
   /** Equi-conjunct pairs (targetCol, sourceCol) of the ANALYZED `on` —
     * resolved against zero-row probes of both schemas so attribute

@@ -7,8 +7,10 @@ import org.apache.spark.sql.DataFrame
   * the reference uses — append-only (silver_settlements), full refresh
   * (gold dims/facts), and dynamic partition overwrite (incremental
   * re-statements that must not clobber untouched partitions) — plus an
-  * ATOMIC full refresh ([[overwriteAtomic]]) standing in for the
-  * reference's transactional Delta table writes
+  * ATOMIC full refresh ([[overwriteAtomic]]) and plain-parquet layout
+  * moves (z-order, compaction, bucketing). The transactional table format
+  * — versions, time travel, per-file stats pruning, MERGE — is
+  * [[VersionedTable]], the one analog of the reference's Delta tables
   * (reference: 4_silver/silver_transactions.py MERGE INTO ... USING DELTA).
   */
 object Sinks {
@@ -38,9 +40,9 @@ object Sinks {
     * complete old copy under `<path>.__old-*` for manual recovery — at no
     * point is the only copy a half-written directory, which is exactly the
     * failure mode of Spark's plain `mode("overwrite")` (delete, then
-    * rewrite in place). Directory rename is atomic on HDFS-like
-    * filesystems; object stores need a manifest-based commit (Delta /
-    * Iceberg) instead, which is what the reference leans on.
+    * rewrite in place). Directory rename is atomic on HDFS and on ADLS
+    * Gen2's hierarchical namespace (the reference's store); a table that
+    * needs versions or a log-based commit is a [[VersionedTable]].
     */
   def overwriteAtomic(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
     val fs = new Path(path)
@@ -152,7 +154,10 @@ object Sinks {
     * from the layout): rows are range-partitioned and sorted by their
     * Morton value, so every output file covers a compact REGION of the
     * (a, b) space rather than a slab of one column. The 100 TB payoff is
-    * file/row-group pruning on EITHER column: a single-column sort prunes
+    * file/row-group pruning on EITHER column (per-file stats pruning once
+    * the layout is a versioned table: [[VersionedTable.convert]] then
+    * [[VersionedTable.readWhere]], or [[VersionedTable.optimize]] with
+    * `zorderBy` on an existing one): a single-column sort prunes
     * perfectly on that column and not at all on the other; z-order prunes
     * on both at ~sqrt cost (a thin predicate slab in either dimension
     * touches ~√nFiles files instead of all of them — spec-measured).
@@ -239,7 +244,8 @@ object Sinks {
     * outnumber cores by enough. Rewriting through `coalesce` (no shuffle)
     * keeps the cost at read+write of the data once; output sizes track
     * input skew rather than rebalancing it (Spark has no shuffle-free
-    * bin-packing), which is the standard compaction trade.
+    * bin-packing), which is the standard compaction trade. A versioned
+    * table compacts as a commit instead ([[VersionedTable.optimize]]).
     *
     * Partitioned tables compact per-partition-directory by the same move
     * (point this at one partition dir); compacting across partition
@@ -276,643 +282,6 @@ object Sinks {
     // path being compacted is safe.
     overwriteAtomic(spark.read.parquet(path).coalesce(n), path)
     (before, dataFiles())
-  }
-
-  /** File-level min/max stats manifest (i15): writes, for each data file of
-    * the parquet table at `path`, the min/max of `statsCols` (+ row count)
-    * to `path/_graft_stats` — the underscore prefix keeps the manifest
-    * invisible to every parquet reader of the table itself. One extra scan
-    * of the written table (grouped by `input_file_name`, file-catalog-sized
-    * output, write-time cost); [[readSkipping]] then prunes the file list
-    * by predicate interval BEFORE Spark plans the scan — the Delta/Iceberg
-    * data-skipping move derived purely from the layout, and the read-side
-    * payoff of [[zorderWrite]]/[[zorderWriteRanked]]/[[compact]] (each of
-    * which clusters values so per-file ranges are tight).
-    *
-    * Call AFTER the table is (re)written; any later rewrite/append makes
-    * the manifest stale, which [[readSkipping]] detects and fails NAMED on
-    * (a silently stale manifest would skip files that now hold matching
-    * rows — the worst failure mode for a pruning layer).
-    */
-  def writeStatsManifest(spark: org.apache.spark.sql.SparkSession, path: String,
-      statsCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    require(statsCols.nonEmpty, "statsCols must not be empty")
-    // Unpartitioned tables (or one partition dir) only — the compact()
-    // contract: readSkipping re-reads pruned files INDIVIDUALLY, which
-    // would silently drop hive-style partition-column values from a
-    // partitioned root's schema. Loud error beats quiet schema loss.
-    val root = new Path(path)
-    val rfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partDirs = rfs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .map(_.getPath.getName)
-    require(partDirs.isEmpty,
-      s"writeStatsManifest must target an unpartitioned table or ONE " +
-        s"partition directory; $path has partition-style subdirectories: " +
-        partDirs.take(3).mkString(", "))
-    val df = spark.read.parquet(path)
-    val missing = statsCols.filterNot(df.columns.contains)
-    require(missing.isEmpty, s"stats columns absent from $path: ${missing.mkString(", ")}")
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
-      count(lit(1)).as("n_rows")
-    val grouped = df.groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-    // The manifest is file-catalog-sized: collect it once (one data scan
-    // total) and finish driver-side. groupBy(input_file_name) can never
-    // list a ZERO-ROW part file (Spark writers open every task's file
-    // eagerly, so they exist on disk), and a missing manifest row would
-    // make readSkipping's staleness check reject a fresh manifest forever
-    // — cover them with explicit null-stat rows; null stats already mean
-    // "skip safely" on the read side.
-    val groupedRows = grouped.collect()
-    val counted = groupedRows
-      .map(r => normFilePath(r.getString(0))).toSet
-    val zeroRows = rfs.listStatus(root)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => s.getPath.toUri.getPath)
-      .filterNot(counted)
-      .map(f => org.apache.spark.sql.Row.fromSeq(
-        f +: Seq.fill(statsCols.size * 2)(null) :+ 0L))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize((groupedRows ++ zeroRows).toIndexedSeq, 1),
-        grouped.schema)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_stats")
-  }
-
-  /** Stats manifest for HIVE-PARTITIONED tables (i16) — closes i15's
-    * documented unpartitioned-only limitation (at 100 TB every real table
-    * is partitioned): one data scan computes per-file min/max(+rows) for
-    * `statsCols` AND records each file's partition-column values (constant
-    * per file by the hive layout), so [[readSkippingPartitioned]] can
-    * prune on data stats and partition values together and re-attach the
-    * partition columns a per-file re-read would silently lose (the exact
-    * failure [[writeStatsManifest]] refuses partitioned roots over).
-    * Manifest lands at `path/_graft_stats`; same staleness contract.
-    *
-    * Zero-row part files take their partition values from their own k=v
-    * path segments, UNESCAPED per the hive layout contract: `%XX` escape
-    * sequences decode to their character (`%3D` → `=`) and
-    * `__HIVE_DEFAULT_PARTITION__` maps to null — so the stored value
-    * matches what the data-derived rows would have held, and pruning
-    * never drops a zero-row file on its escaped spelling.
-    */
-  def writeStatsManifestPartitioned(spark: org.apache.spark.sql.SparkSession,
-      path: String, statsCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    require(statsCols.nonEmpty, "statsCols must not be empty")
-    val df = spark.read.parquet(path)
-    val partCols = df.schema.fields.map(_.name).toSeq.diff(
-      spark.read.parquet(firstLeafFile(spark, path)).schema.fields.map(_.name).toSeq)
-    require(partCols.nonEmpty,
-      s"$path has no hive partition columns — use writeStatsManifest")
-    val missing = statsCols.filterNot(df.columns.contains)
-    require(missing.isEmpty, s"stats columns absent from $path: ${missing.mkString(", ")}")
-    val overlap = statsCols.intersect(partCols)
-    require(overlap.isEmpty,
-      s"partition columns are pruned by VALUE, not stats — drop ${overlap.mkString(", ")} from statsCols")
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
-      partCols.map(c => first(col(c)).as(s"part_$c")) :+
-      count(lit(1)).as("n_rows")
-    // Partition values ride as STRINGS (the zero-row cover below parses
-    // them from k=v path segments; readSkippingPartitioned re-casts to
-    // the table's inferred types). ONE collect = one data scan total.
-    val grouped = df.groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-    val stringified = grouped.select(
-      (col("file") +: statsCols.flatMap(c => Seq(col(s"min_$c"), col(s"max_$c"))))
-        ++ partCols.map(c => col(s"part_$c").cast("string").as(s"part_$c"))
-        :+ col("n_rows"): _*)
-    val strRows = stringified.collect()
-    // Zero-row part files: cover with null stats + partition values parsed
-    // from the file's own k=v path segments (the hive layout contract).
-    val counted = strRows
-      .map(r => normFilePath(r.getString(0))).toSet
-    val root = new Path(path)
-    val rfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val zeroRows = leafDataFiles(rfs, root)
-      .filterNot(f => counted(f))
-      .map { f =>
-        val kv = f.split("/").collect {
-          case seg if seg.contains("=") =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> unescapeHivePartitionValue(v)
-        }.toMap
-        org.apache.spark.sql.Row.fromSeq(
-          (f +: statsCols.flatMap(_ => Seq(null, null))) ++
-            partCols.map(c => kv.getOrElse(c,
-              sys.error(s"zero-row file $f lacks partition segment $c="))) :+ 0L)
-      }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize((strRows ++ zeroRows).toIndexedSeq, 1),
-        stringified.schema)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_stats")
-  }
-
-  /** Normalize a file reference to its raw on-disk path spelling.
-    * `input_file_name()` — and manifest rows derived from it — return
-    * URI-ESCAPED strings: a literal `%` in a hive-escaped partition
-    * directory (`src=a%3Db` on disk) arrives as `%25` (`…a%253Db…`),
-    * while `FileSystem` directory walks return the raw path. Comparing
-    * the two spellings directly double-counts every file under an
-    * escaped partition directory (one phantom "zero-row" manifest entry
-    * per real file) and then fails the staleness check.
-    */
-  private def normFilePath(u: String): String =
-    if (u.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*")) new java.net.URI(u).getPath
-    else new Path(u).toUri.getPath
-
-  /** Decode a hive partition-path VALUE segment back to the value the
-    * writer held: `%XX` escapes (hive escapes `=`, `/`, `%`, … when
-    * writing `k=v` directories) decode byte-for-byte, and the sentinel
-    * `__HIVE_DEFAULT_PARTITION__` is the null spelling. Not
-    * `URLDecoder`: hive escaping never turns space into `+`, so a
-    * literal `+` in a partition value must survive.
-    */
-  private def unescapeHivePartitionValue(v: String): String =
-    if (v == "__HIVE_DEFAULT_PARTITION__") null
-    else if (!v.contains('%')) v
-    else {
-      val sb = new StringBuilder(v.length)
-      var i = 0
-      while (i < v.length) {
-        val c = v.charAt(i)
-        if (c == '%' && i + 3 <= v.length) {
-          val hex = v.substring(i + 1, i + 3)
-          val code = try Integer.parseInt(hex, 16) catch {
-            case _: NumberFormatException =>
-              sys.error(s"malformed hive escape '%$hex' in partition segment '$v'")
-          }
-          sb.append(code.toChar); i += 3
-        } else if (c == '%')
-          sys.error(s"malformed hive escape at end of partition segment '$v'")
-        else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
-
-  /** First leaf data file under a (possibly partitioned) root — used to
-    * read the FILE schema (which excludes hive partition columns).
-    */
-  private def firstLeafFile(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val root = new Path(path)
-    val rfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    leafDataFiles(rfs, root).headOption
-      .getOrElse(sys.error(s"no part- files under $path"))
-  }
-
-  /** All part- files under `root`, recursive, normalized paths; skips the
-    * `_graft_stats` manifest dir and other underscore-prefixed metadata.
-    */
-  private def leafDataFiles(rfs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    def walk(p: Path): Unit =
-      rfs.listStatus(p).foreach { s =>
-        if (s.isDirectory) {
-          if (!s.getPath.getName.startsWith("_")) walk(s.getPath)
-        } else if (s.getPath.getName.startsWith("part-"))
-          out += s.getPath.toUri.getPath
-      }
-    walk(root)
-    out.toSeq
-  }
-
-  /** [[readSkipping]] over a HIVE-PARTITIONED table (i16): prunes files
-    * whose per-column stat ranges OR partition values cannot satisfy the
-    * conjunction, then re-reads the survivors per partition with the
-    * partition columns re-attached as literals cast to the table's
-    * inferred types — so results are EXACTLY the full-scan filter, with
-    * partition columns usable in `preds` like any data column (their
-    * "range" is the single value). Staleness = manifest file set vs the
-    * recursive directory walk, same named failure as [[readSkipping]].
-    */
-  def readSkippingPartitioned(spark: org.apache.spark.sql.SparkSession,
-      path: String, preds: Seq[(String, Any, Any)]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(preds.nonEmpty, "readSkippingPartitioned needs at least one predicate")
-    val statsPath = new Path(s"$path/_graft_stats")
-    val rfs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(rfs.exists(statsPath),
-      s"no stats manifest at $statsPath — run writeStatsManifestPartitioned after writing $path")
-    val stats = spark.read.parquet(statsPath.toString)
-    val partCols = stats.columns.filter(_.startsWith("part_")).map(_.stripPrefix("part_")).toSeq
-    require(partCols.nonEmpty,
-      s"manifest at $statsPath is unpartitioned — use readSkipping")
-    val tableSchema = spark.read.parquet(path).schema
-    preds.foreach { case (c, _, _) =>
-      require(stats.columns.contains(s"min_$c") || partCols.contains(c),
-        s"column $c is neither stats-indexed nor a partition column of $statsPath")
-    }
-    def norm(u: String) = normFilePath(u)
-    val keepCol = preds.map { case (c, lo, hi) =>
-      if (partCols.contains(c)) {
-        val v = col(s"part_$c").cast(tableSchema(c).dataType)
-        coalesce(v >= lit(lo) && v <= lit(hi), lit(false))
-      } else
-        coalesce(col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi), lit(false))
-    }.reduce(_ && _)
-    val rows = stats
-      .select((col("file") +: col("n_rows") +: keepCol.as("keep") +:
-        partCols.map(c => col(s"part_$c"))): _*)
-      .collect()
-    val manifestFiles = rows.map(r => norm(r.getString(0))).toSet
-    val actual = leafDataFiles(rfs, new Path(path)).toSet
-    require(manifestFiles == actual,
-      s"stats manifest is STALE for $path (manifest ${manifestFiles.size} files, " +
-        s"directory ${actual.size}) — rewrite it with writeStatsManifestPartitioned")
-    val kept = rows.filter(_.getAs[Boolean]("keep"))
-    val dataFilter = preds.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
-    if (kept.isEmpty)
-      return spark.read.parquet(path).filter(lit(false)).select(
-        tableSchema.fields.map(f => col(f.name)).toIndexedSeq: _*)
-    // basePath keeps hive partition-column INFERENCE alive on a per-file
-    // read (values and types come from the k=v path segments exactly as a
-    // root read infers them) — one scan node however many partitions
-    // survive, where a per-partition union-of-literals would grow the
-    // plan linearly in surviving-partition count.
-    spark.read.option("basePath", path)
-      .parquet(kept.map(r => normFilePath(r.getString(0))).toIndexedSeq: _*)
-      .select(tableSchema.fields.map(f => col(f.name)).toIndexedSeq: _*)
-      .filter(dataFilter)
-  }
-
-  /** Incremental manifest maintenance for APPEND-ONLY tables (i15b): stat
-    * ONLY the data files the manifest doesn't know yet and union them in —
-    * refreshing after an append costs O(new files), not the full rescan
-    * [[writeStatsManifest]] pays, and [[readSkipping]]'s staleness check
-    * passes again the moment this returns. Indexed columns come FROM the
-    * existing manifest, so a refresh can never drift the manifest schema.
-    *
-    * Fails NAMED when no manifest exists (nothing to append to), or when
-    * the manifest lists files MISSING on disk — that table was rewritten
-    * or compacted, not appended (part files are immutable and rewrites
-    * mint new names, so missing-known-files is a reliable rewrite
-    * signal), and only a full [[writeStatsManifest]] can make the
-    * manifest honest again. No-op when the manifest is already current.
-    */
-  def appendStatsManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val root = new Path(path)
-    val rfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statsPath = new Path(s"$path/_graft_stats")
-    require(rfs.exists(statsPath),
-      s"no stats manifest at $statsPath — appendStatsManifest refreshes an " +
-        "existing manifest; run writeStatsManifest first")
-    val partDirs = rfs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .map(_.getPath.getName)
-    require(partDirs.isEmpty,
-      s"appendStatsManifest must target an unpartitioned table or ONE " +
-        s"partition directory; $path has partition-style subdirectories: " +
-        partDirs.take(3).mkString(", "))
-    // The manifest is file-catalog-sized by contract: collect it BEFORE
-    // the overwrite below (a lazy union reading the parquet it overwrites
-    // would corrupt the manifest mid-write).
-    val old = spark.read.parquet(statsPath.toString)
-    val oldRows = old.collect()
-    val statsCols = old.columns.filter(_.startsWith("min_"))
-      .map(_.stripPrefix("min_")).toSeq
-    def norm(u: String) = normFilePath(u)
-    val known = oldRows.map(r => norm(r.getString(old.columns.indexOf("file")))).toSet
-    val disk = rfs.listStatus(root)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => s.getPath.toUri.getPath)
-    val gone = known -- disk.toSet
-    require(gone.isEmpty,
-      s"stats manifest for $path lists files missing on disk — the table " +
-        s"was rewritten/compacted, not appended; run writeStatsManifest " +
-        s"(missing: ${gone.take(3).mkString(", ")})")
-    val fresh = disk.filterNot(known).toIndexedSeq
-    if (fresh.isEmpty) return // manifest already covers every data file
-    val df = spark.read.parquet(fresh: _*)
-    val missing = statsCols.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"stats columns absent from appended files of $path: ${missing.mkString(", ")}")
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
-      count(lit(1)).as("n_rows")
-    val grouped = df.groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(old.columns.map(col).toIndexedSeq: _*) // pin the manifest column order
-    val groupedRows = grouped.collect()
-    val counted = groupedRows.map(r => norm(r.getString(0))).toSet
-    val zeroRows = fresh.filterNot(counted)
-      .map(f => org.apache.spark.sql.Row.fromSeq(
-        f +: Seq.fill(statsCols.size * 2)(null) :+ 0L))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          (oldRows ++ groupedRows ++ zeroRows).toIndexedSeq, 1),
-        old.schema)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(statsPath.toString)
-  }
-
-  /** Pruned interval read (i15): rows of `path` with `c` in [lo, hi],
-    * planned over ONLY the files whose manifest [min_c, max_c] range
-    * intersects the interval. The manifest is file-catalog-sized, so the
-    * driver-side file filtering is bounded metadata by construction. Files
-    * whose stats are NULL (no non-null `c` values) are skipped — their rows
-    * cannot satisfy the interval predicate. The row-level filter is still
-    * applied on the surviving files (their ranges overlap the interval;
-    * their rows need not), so results are EXACTLY the full-scan filter —
-    * equality the spec pins.
-    *
-    * Fails NAMED when the manifest is missing, doesn't index `c`, or is
-    * STALE (its file set differs from the directory's current data files —
-    * silent skipping of unindexed new files would drop matching rows).
-    */
-  def readSkipping(spark: org.apache.spark.sql.SparkSession, path: String,
-      c: String, lo: Any, hi: Any): DataFrame =
-    readSkipping(spark, path, Seq((c, lo, hi)))
-
-  /** Multi-column [[readSkipping]]: rows where EVERY `(c, lo, hi)` interval
-    * holds, planned over only the files whose per-column ranges intersect
-    * ALL intervals. This is the read that pays for [[zorderWrite]]'s 2-D
-    * clustering: a z-ordered layout keeps each file compact in BOTH
-    * dimensions, so the conjunction prunes multiplicatively where a
-    * single-column sort prunes on one axis and scans the other.
-    */
-  def readSkipping(spark: org.apache.spark.sql.SparkSession, path: String,
-      preds: Seq[(String, Any, Any)]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(preds.nonEmpty, "readSkipping needs at least one (column, lo, hi) predicate")
-    val keepCol = preds.map { case (c, lo, hi) =>
-      coalesce(col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi), lit(false))
-    }.reduce(_ && _)
-    val pruned = prunedByStats(spark, path, preds.map(_._1), keepCol)
-    pruned.filter(preds.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _))
-  }
-
-  /** Point-set file pruning: the rows where `c` equals ANY of `keys`,
-    * planned over only the files whose [min_c, max_c] range CONTAINS at
-    * least one key. This is the batched-point-lookup shape ([[readSkipping]]
-    * with the keys' overall [min, max] interval would also scan every file
-    * in the GAPS between scattered keys — over a petabyte index that is
-    * the difference between k file reads and a full scan). File selection
-    * is one driver-side binary search per file range over the sorted key
-    * set (file-rate × log keys — metadata); the exact membership filter is
-    * a broadcast semi-join, so results EQUAL the full-scan `isin`. Same
-    * named missing/unindexed/stale manifest contract as [[readSkipping]].
-    */
-  def readSkippingKeys(spark: org.apache.spark.sql.SparkSession, path: String,
-      c: String, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val clean = keys.filter(_ != null).distinct
-    require(clean.nonEmpty, "readSkippingKeys needs at least one non-null key")
-    // Spark's string min/max stats order by UTF-8 BYTES (UTF8String's
-    // binary comparator), which diverges from Java's UTF-16 char order for
-    // supplementary-plane text (U+E000 sorts ABOVE a surrogate pair in
-    // char order, below it in byte order) — the search must compare in the
-    // stats' own order or a non-ASCII key's file prunes away silently.
-    def cmp(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val sorted = clean.sortWith(cmp(_, _) < 0).toIndexedSeq
-    // first key >= lo exists and is <= hi  ⇔  some key falls in [lo, hi];
-    // evaluated DRIVER-SIDE over the collected stats rows (file-rate
-    // metadata × log keys), so this stays UDF-free
-    def anyKeyIn(lo: String, hi: String): Boolean = {
-      var l = 0; var r = sorted.length
-      while (l < r) { val m = (l + r) >>> 1; if (cmp(sorted(m), lo) < 0) l = m + 1 else r = m }
-      l < sorted.length && cmp(sorted(l), hi) <= 0
-    }
-    val (fs, stats) = loadStats(spark, path, Seq(c))
-    require(stats.schema(s"min_$c").dataType ==
-      org.apache.spark.sql.types.StringType,
-      s"readSkippingKeys needs a STRING-keyed column; min_$c is " +
-        s"${stats.schema(s"min_$c").dataType.simpleString}")
-    val rows = stats
-      .select(col("file"), col(s"min_$c"), col(s"max_$c")).collect()
-    validateStatsFresh(fs, path, rows.map(r => normFilePath(r.getString(0))).toSet)
-    val kept = rows.filter(r => !r.isNullAt(1) && !r.isNullAt(2) &&
-        anyKeyIn(r.getString(1), r.getString(2)))
-      .map(r => normFilePath(r.getString(0)))
-    // exact membership via a broadcast semi-join (an `isin` literal of
-    // 10^5 keys would bloat the plan; the join is the scalable spelling)
-    import spark.implicits._
-    planKept(spark, path, kept.toIndexedSeq)
-      .join(broadcast(sorted.toDF(c)), Seq(c), "left_semi")
-  }
-
-  /** Stats-manifest file pruning behind [[readSkipping]]: the files whose
-    * stats row satisfies `keepCol`, freshness-gated.
-    */
-  private def prunedByStats(spark: org.apache.spark.sql.SparkSession,
-      path: String, cols: Seq[String],
-      keepCol: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val (fs, stats) = loadStats(spark, path, cols)
-    val rows = stats.select(col("file"), coalesce(keepCol, lit(false)).as("keep")).collect()
-    validateStatsFresh(fs, path, rows.map(r => normFilePath(r.getString(0))).toSet)
-    planKept(spark, path,
-      rows.filter(r => r.getBoolean(1)).map(r => normFilePath(r.getString(0))).toIndexedSeq)
-  }
-
-  /** Load `_graft_stats` for `path`, failing named when absent or when any
-    * of `cols` is unindexed — shared by both skipping reads.
-    */
-  private def loadStats(spark: org.apache.spark.sql.SparkSession,
-      path: String, cols: Seq[String]): (org.apache.hadoop.fs.FileSystem, DataFrame) = {
-    val statsPath = new Path(s"$path/_graft_stats")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(statsPath),
-      s"no stats manifest at $statsPath — run writeStatsManifest after writing $path")
-    val stats = spark.read.parquet(statsPath.toString)
-    cols.foreach { c =>
-      require(stats.columns.contains(s"min_$c"),
-        s"column $c is not indexed by the stats manifest at $statsPath " +
-          s"(indexed: ${stats.columns.filter(_.startsWith("min_")).map(_.stripPrefix("min_")).mkString(", ")})")
-    }
-    (fs, stats)
-  }
-
-  /** Plan a read over exactly `kept` files (all of `path` filtered to
-    * nothing when the prune left zero) — shared by both skipping reads.
-    */
-  private def planKept(spark: org.apache.spark.sql.SparkSession,
-      path: String, kept: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    if (kept.isEmpty) spark.read.parquet(path).filter(lit(false))
-    else spark.read.parquet(kept: _*)
-  }
-
-  /** The manifest-freshness gate both skipping reads share: the manifest's
-    * file set must equal the directory's current data files — silently
-    * skipping unindexed NEW files would drop matching rows.
-    */
-  private def validateStatsFresh(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, manifestFiles: Set[String]): Unit = {
-    val actual = fs.listStatus(new Path(path))
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => normFilePath(s.getPath.toString)).toSet
-    require(manifestFiles == actual,
-      s"stats manifest is STALE for $path (manifest ${manifestFiles.size} files, " +
-        s"directory ${actual.size}) — rewrite it with writeStatsManifest")
-  }
-
-  /** Object-store-safe atomic publish (manifest-pointer commit): data lands
-    * in a fresh immutable `v-<token>` directory under `path`, and the
-    * commit is ONE replace of the tiny `_current` pointer file naming the
-    * live version. [[overwriteAtomic]]'s directory-rename swap is atomic
-    * only on HDFS-like filesystems — on object stores "rename" is
-    * copy+delete per object, with a window where the table is half-gone;
-    * replacing a single small object (one PUT) is atomic there. Readers
-    * resolve the pointer via [[readCurrent]].
-    *
-    * Crash behavior: dying mid-write or before the pointer replace leaves
-    * the OLD version live (plus an unreferenced v-dir the next successful
-    * publish prunes); dying after it leaves the NEW version live. The
-    * retained version history (`keepVersions` most recent, default 2 =
-    * current + immediate predecessor) serves two needs: a reader that
-    * resolved the pointer just before the swap may still be streaming the
-    * old files, and retained versions are TIME-TRAVEL-readable via
-    * [[readVersion]] / listable via [[versionHistory]] (the Delta
-    * `VERSION AS OF` analog the reference's silver tables rely on).
-    * Version dirs are named `v-<seq>-<token>` with a monotonically
-    * increasing zero-padded seq, so history ordering needs no extra
-    * manifest. Single-writer per table (the Runner's discipline) — but the
-    * common race is detected best-effort: after the data write, the version
-    * list is re-checked and a competing directory claiming the same seq
-    * aborts THIS publish with a named error, its own v-dir removed and the
-    * live pointer untouched. That converts silent double-assignment into a
-    * loud failure; it is NOT a transaction (two publishers can still
-    * interleave list→write inside the check window) — a real object store
-    * deployment must guard the pointer PUT with a conditional (if-match)
-    * request to close it completely.
-    *
-    * Returns the committed version directory name.
-    */
-  def publishVersioned(df: DataFrame, path: String, partitionCols: Seq[String] = Nil,
-      keepVersions: Int = 2): String = {
-    require(keepVersions >= 2,
-      s"keepVersions must be >= 2 (current + in-flight-reader predecessor), got $keepVersions")
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val seq = listVersions(fs, root).lastOption.map(_._1 + 1).getOrElse(1L)
-    val version = f"v-$seq%09d-${java.util.UUID.randomUUID().toString.take(8)}"
-    write(df, new Path(root, version).toString, "overwrite", partitionCols)
-
-    // Best-effort concurrent-publish guard (see scaladoc): the data write is
-    // the long window, so re-listing AFTER it catches the overwhelmingly
-    // common interleaving where a second publisher claimed the same seq
-    // while we wrote. Abort loudly, drop our orphan, leave `_current` alone.
-    val rivals = listVersions(fs, root)
-      .filter { case (s, name) => s == seq && name != version }
-    if (rivals.nonEmpty) {
-      fs.delete(new Path(root, version), true)
-      sys.error(
-        s"concurrent publish detected under $path: seq $seq was also written by " +
-          s"${rivals.map(_._2).mkString(", ")}; aborting this publish (live pointer " +
-          "untouched, our version dir removed). publishVersioned is single-writer " +
-          "per table — retry to take the next seq, or serialize publishers; an " +
-          "object store needs a conditional PUT on `_current` to close the race.")
-    }
-
-    val prev = currentVersion(fs, root)
-    // Pointer replace: write a temp pointer file, then atomically rename it
-    // over `_current` (FileContext supports overwrite-rename; on an object
-    // store the equivalent is the store's atomic single-object PUT).
-    val ptr = new Path(root, "_current")
-    val tmpPtr = new Path(root, s"_current.tmp-$version")
-    val out = fs.create(tmpPtr, true)
-    try out.write(version.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-      .rename(tmpPtr, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-
-    // Prune: keep the `keepVersions` most-recent well-formed versions (the
-    // new one and the pointer's predecessor always among them); everything
-    // else — aged-out versions and half-written dirs left by crashed
-    // publishes (unparseable names included) — goes.
-    val ordered = listVersions(fs, root).map(_._2)
-    val keep = (ordered.takeRight(keepVersions) ++ Seq(version) ++ prev).toSet
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("v-") && !keep(p.getName))
-      .foreach(fs.delete(_, true))
-    version
-  }
-
-  /** Time-travel read of a retained version published by
-    * [[publishVersioned]]: accepts either the full version directory name
-    * the publish returned, or the bare sequence number (`VERSION AS OF n`).
-    * Fails with a named error when the version has been pruned past the
-    * table's `keepVersions` retention.
-    */
-  def readVersion(spark: org.apache.spark.sql.SparkSession, path: String,
-      version: String): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val retained = listVersions(fs, root)
-    val hit = retained.find { case (seq, name) =>
-      name == version || version.forall(_.isDigit) && version.nonEmpty && seq == version.toLong
-    }
-    hit match {
-      case Some((_, name)) => spark.read.parquet(new Path(root, name).toString)
-      case None => sys.error(
-        s"version '$version' not retained under $path " +
-          s"(retained: ${retained.map(_._2).mkString(", ")}) — pruned past keepVersions?")
-    }
-  }
-
-  /** Retained version history for a [[publishVersioned]] table, oldest
-    * first: (seq, version dir name, commit time ms, is_current). The Delta
-    * `DESCRIBE HISTORY` analog, derived purely from the layout — no extra
-    * manifest to corrupt.
-    */
-  def versionHistory(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentVersion(fs, root)
-    val rows = listVersions(fs, root).map { case (seq, name) =>
-      (seq, name, fs.getFileStatus(new Path(root, name)).getModificationTime,
-        cur.contains(name))
-    }
-    spark.createDataFrame(rows)
-      .toDF("seq", "version", "committed_at_ms", "is_current")
-  }
-
-  /** Well-formed `v-<seq>-<token>` version dirs under `root`, seq
-    * ascending. Ignores unparseable `v-*` names (crashed publishes, or the
-    * pre-r5 UUID-only layout — those are prune candidates, not history).
-    */
-  private def listVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Seq[(Long, String)] = {
-    val VDir = """v-(\d{9})-[0-9a-f]{8}""".r
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName).collect {
-      case n @ VDir(seq) => (seq.toLong, n)
-    }.sortBy(_._1)
-  }
-
-  /** Resolve the `_current` pointer written by [[publishVersioned]] and
-    * read the live version.
-    */
-  def readCurrent(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = currentVersion(fs, root)
-      .getOrElse(sys.error(s"no _current pointer under $path"))
-    spark.read.parquet(new Path(root, v).toString)
-  }
-
-  private def currentVersion(fs: org.apache.hadoop.fs.FileSystem, root: Path): Option[String] = {
-    val ptr = new Path(root, "_current")
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-      finally in.close()
-    }
   }
 
   private def write(df: DataFrame, path: String, mode: String, partitionCols: Seq[String]): Unit = {

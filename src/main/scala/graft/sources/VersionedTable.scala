@@ -110,8 +110,8 @@ object VersionedTable {
   private val mapper = new ObjectMapper()
 
   /** Per-file, per-column footer statistics carried IN the `add` action
-    * (i25) — the i15 manifest discipline folded into the commit itself, so
-    * a snapshot read can prune files by predicate without a side file that
+    * (i25) — file-level data skipping carried by the commit itself, so a
+    * snapshot read can prune files by predicate without a side file that
     * can go stale. Values are normalized to three carriers: Long (all
     * integrals + date days + timestamp micros), Double, String (UTF-8
     * unsigned order — parquet's own binary ordering). None min/max =
@@ -1073,9 +1073,8 @@ object VersionedTable {
     * (and because partitioned writes produce partition-pure files,
     * partition pruning IS stats pruning here, no separate code path). The
     * exact `pred` is re-applied on the survivors, so pruning power never
-    * affects RESULTS, only file count — the same safety stance as
-    * Sinks.readSkipping, with the manifest folded into the commits (it can
-    * never go stale: the stats travel WITH the add action).
+    * affects RESULTS, only file count. The stats can never go stale: they
+    * travel WITH the add action.
     *
     * Prunable conjuncts: =, <, <=, >, >=, IN, IS NULL, IS NOT NULL over a
     * top-level column vs a literal. Anything else is kept exact but
@@ -1254,9 +1253,9 @@ object VersionedTable {
     *
     * Partitioned tables (i26) write through a DUPLICATED `__p_<col>`
     * column so the hive layout gets partition-pure files while the data
-    * files keep the real column (a per-file re-read never loses it, the
-    * exact failure Sinks.writeStatsManifest refuses partitioned roots
-    * over); partition values land in the `add` action, parsed back from
+    * files keep the real column (a per-file re-read never loses it, where
+    * a plain hive layout keeps the value only in the path); partition
+    * values land in the `add` action, parsed back from
     * the `__p_<col>=v` path segments.
     *
     * Every add carries byte size and per-column footer stats (i25) — one
@@ -2671,6 +2670,11 @@ object VersionedTable {
     * version the txn will record (a commit racing in mid-hop is consumed
     * by the NEXT hop, never half-consumed). Returns the consumed source
     * version and the target version, or None when already caught up.
+    *
+    * A `merge_update` commit on `source` is served as appends (see
+    * [[readChangesSince]]): an updated key reaches `target` as a second
+    * row version, and the old version is never retracted. Consumers that
+    * need retractions use [[feedChangesInto]].
     */
   def feedInto(spark: SparkSession, source: String, target: String, app: String)(
       transform: DataFrame => DataFrame): Option[(Long, Long)] = {
@@ -2719,6 +2723,12 @@ object VersionedTable {
     * overwrite, overwrite_partitions, delete — fail NAMED (a refresh or
     * deletion means reconsume; pretending otherwise serves a table state
     * that never existed).
+    *
+    * A `merge_update` commit is served as appends: its staged rows (the
+    * post-images of updated keys plus inserts) are read like any append,
+    * so an updated key reaches downstream as a second row version and the
+    * old one is never retracted. Consumers that need retractions read
+    * [[readChangeFeed]] or hop with [[feedChangesInto]].
     */
   def readChangesSince(spark: SparkSession, table: String, sinceVersion: Long,
       untilVersion: Long = -1L): DataFrame = {

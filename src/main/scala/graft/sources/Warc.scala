@@ -732,10 +732,8 @@ object Warc {
     * member's offset, which a per-member scan doesn't see).
     *
     * Pure projection — scan-shaped at any archive size. The layout step
-    * for a serveable index is the ranked write the library already owns:
-    * range-partition by `surt_key`, sort within partitions
-    * (`Sinks.writeZOrderedRanked` discipline) so a lookup binary-searches
-    * one partition file.
+    * for a servable index is [[writeCdx]]: range-partition by `surt_key`,
+    * sort within partitions, so a lookup reads one partition file.
     */
   def cdxIndex(records: DataFrame,
       captureTypes: Seq[String] = Seq("response", "conversion")): DataFrame = {
@@ -750,28 +748,28 @@ object Warc {
         col("warc_file"), col("rec_offset"))
   }
 
-  /** SERVABLE CDX layout (i19 + i15): [[cdxIndex]] was a frame — "all
+  /** SERVABLE CDX layout (i19): [[cdxIndex]] was a frame — "all
     * captures of host X" still scanned the whole index. This writes it as
     * a lookup STRUCTURE from parts the library already owns: range-
     * partition by `surt_key` (host labels reversed, so one domain's
     * captures are lexicographically contiguous → they land in few files),
-    * sort within partitions, and publish a [[Sinks.writeStatsManifest]]
-    * min/max manifest — [[lookupHost]] then plans its scan over only the
-    * files whose key range intersects the prefix. At web-archive scale
-    * (10⁹+ captures, thousands of index files) a host lookup touches ~1
-    * file instead of all of them.
+    * sort within partitions, and commit the files as a [[VersionedTable]],
+    * whose log carries each file's `surt_key` min/max — [[lookupHost]]
+    * then plans its scan over only the files whose key range intersects
+    * the prefix. At web-archive scale (10⁹+ captures, thousands of index
+    * files) a host lookup touches ~1 file instead of all of them.
     *
-    * `nFiles = 0` keeps the session's shuffle parallelism. Overwrites.
+    * `nFiles = 0` keeps the session's shuffle parallelism. Creates the
+    * table, or commits a full [[VersionedTable.overwrite]] when it exists.
     */
   def writeCdx(index: DataFrame, path: String, nFiles: Int = 0): Unit = {
     import org.apache.spark.sql.functions.col
-    val spark = index.sparkSession
     val part =
       if (nFiles > 0) index.repartitionByRange(nFiles, col("surt_key"))
       else index.repartitionByRange(col("surt_key"))
-    part.sortWithinPartitions(col("surt_key"))
-      .write.mode("overwrite").parquet(path)
-    Sinks.writeStatsManifest(spark, path, Seq("surt_key"))
+    val laid = part.sortWithinPartitions(col("surt_key"))
+    if (VersionedTable.exists(index.sparkSession, path)) VersionedTable.overwrite(laid, path)
+    else VersionedTable.create(laid, path)
   }
 
   /** The SURT prefix owning every DEFAULT-PORT capture of `host`:
@@ -789,9 +787,9 @@ object Warc {
     // miss them
     host.trim.toLowerCase(java.util.Locale.ROOT).split('.').reverse.mkString(",") + ")"
 
-  /** Host-prefix lookup over a [[writeCdx]] layout: file-pruned via the
-    * stats manifest ([[Sinks.readSkipping]] — touches only the files whose
-    * surt range intersects), then filtered exactly, so the result EQUALS
+  /** Host-prefix lookup over a [[writeCdx]] layout: file-pruned by the
+    * log's stats ([[VersionedTable.readWhere]] — touches only the files
+    * whose surt range intersects), then filtered exactly, so the result EQUALS
     * the full-scan filter while reading ~1 file. `surtPrefix` is
     * [[surtHostPrefix]]'s output (a whole host) or any longer key prefix
     * (`example,a)/page`). A whole-host prefix (ending `)`) ALSO covers the
@@ -807,9 +805,11 @@ object Warc {
     // U+FFFF caps each prefix interval: every key starting with the
     // prefix sorts within [prefix, prefix + U+FFFF] (keys are url-derived
     // ASCII, so U+FFFF never occurs in them)
-    def range(p: String): DataFrame =
-      Sinks.readSkipping(spark, cdxPath, "surt_key", p, p + "\uffff")
-        .filter(col("surt_key").startsWith(p))
+    def range(p: String): DataFrame = {
+      val k = col("surt_key")
+      VersionedTable.readWhere(spark, cdxPath, k >= p && k <= p + "\uffff")
+        .filter(k.startsWith(p))
+    }
     val base = range(surtPrefix)
     if (surtPrefix.endsWith(")"))
       base.unionByName(range(surtPrefix.dropRight(1) + ":"))
@@ -833,11 +833,10 @@ object Warc {
     import org.apache.spark.sql.functions._
     val key = spark.range(1).select(graft.text.Urls.surtKey(
       graft.text.Urls.canonicalize(lit(url))).as("k")).head.getString(0)
-    if (key == null)
-      return spark.read.parquet(cdxPath).filter(lit(false)) // hostless url
+    if (key == null) // hostless url
+      return VersionedTable.emptyFrame(spark, VersionedTable.snapshotAt(spark, cdxPath).schema)
     val atMicros = at.getTime * 1000L
-    Sinks.readSkipping(spark, cdxPath, "surt_key", key, key)
-      .filter(col("surt_key") === key)
+    VersionedTable.readWhere(spark, cdxPath, col("surt_key") === key)
       .withColumn("_dist", abs(unix_micros(col("fetch_ts")) - lit(atMicros)))
       .orderBy(col("_dist"), col("fetch_ts"), col("warc_file"), col("rec_offset"))
       .limit(1)
@@ -850,8 +849,8 @@ object Warc {
     * here the request urls SURT-key through the index's own expressions,
     * the distinct keys collect BOUNDED (fails NAMED past `maxKeys` — a
     * corpus-scale request set should go through a join on the full index,
-    * not a point-lookup API), [[Sinks.readSkippingKeys]] prunes the file
-    * list to those containing ≥ 1 key (driver-side binary search per file
+    * not a point-lookup API), the file list prunes to those whose logged
+    * `surt_key` range contains ≥ 1 key (driver-side binary search per file
     * range — gaps between scattered keys are never read), and the winner
     * per request is one min-struct aggregate with [[lookupAt]]'s exact
     * tie order (dist, fetch_ts, warc_file, rec_offset). LEFT join back,
@@ -886,12 +885,26 @@ object Warc {
       .toSeq.distinct
     val capCols = Seq("surt_key", "url_canon", "url", "fetch_ts",
       "http_status", "mime", "payload_len", "warc_file", "rec_offset")
-    if (keys.isEmpty) { // every request is hostless: all-NULL captures
-      val schema = spark.read.parquet(cdxPath).schema
+    val snap = VersionedTable.snapshotAt(spark, cdxPath)
+    if (keys.isEmpty) // every request is hostless: all-NULL captures
       return reqs.select((Seq(col("req_url"), col("req_at")) ++
-        capCols.map(c => lit(null).cast(schema(c).dataType).as(c))): _*)
+        capCols.map(c => lit(null).cast(snap.schema(c).dataType).as(c))): _*)
+    // Keys sort once in the log stats' own order (unsigned UTF-8 — Java's
+    // UTF-16 order diverges on supplementary-plane text and would prune a
+    // matching file), then one binary search per file: is the first key
+    // >= the file's min also <= its max? An isin over the keys would bloat
+    // the plan; the broadcast join below is the exact membership filter.
+    val cmp = VersionedTable.compareStatVals _
+    val sorted = keys.sortWith(cmp(_, _) < 0).toIndexedSeq
+    def anyKeyIn(lo: Any, hi: Any): Boolean = {
+      var l = 0; var r = sorted.length
+      while (l < r) { val m = (l + r) >>> 1; if (cmp(sorted(m), lo) < 0) l = m + 1 else r = m }
+      l < sorted.length && cmp(sorted(l), hi) <= 0
     }
-    val caps = Sinks.readSkippingKeys(spark, cdxPath, "surt_key", keys)
+    // no stats: keep (never mis-prune); all-null or zero-row: no key lives there
+    val kept = snap.files.filter(f => f.rows > 0 && f.stats.get("surt_key")
+      .forall(s => s.min.zip(s.max).exists { case (lo, hi) => anyKeyIn(lo, hi) }))
+    val caps = VersionedTable.scanFiles(spark, cdxPath, kept, snap.schema)
     val winners = caps
       .join(reqs.hint("broadcast"), caps("surt_key") === reqs("_key"))
       .withColumn("_dist",

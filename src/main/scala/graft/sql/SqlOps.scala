@@ -15,10 +15,10 @@ package graft.sql
   *
   * Why generators returning SELECT text, not a parsed MERGE: open-source
   * Spark over parquet has no transactional MERGE target (the reference gets
-  * that from Delta), and graft publishes immutable snapshots
-  * ([[graft.sources.Sinks]] `publishVersioned`) rather than mutating tables
-  * in place. The same upsert is therefore spelled as a pure SELECT that
-  * produces the POST-merge table; the caller publishes it atomically. Rows
+  * that from Delta), so the same upsert is spelled as a pure SELECT that
+  * produces the POST-merge table; the caller publishes it atomically
+  * ([[graft.sources.Sinks.overwriteAtomic]], or
+  * [[graft.sources.VersionedTable.overwrite]] as one commit). Rows
   * are identical to the reference's expire+insert pair, with one deliberate
   * fix kept from [[graft.ops.Scd2.merge]]: change detection is null-safe
   * (`<=>`), where the reference's `<>` predicate silently treats NULL

@@ -52,6 +52,14 @@ class ExtOpsSpec extends SparkSpec {
     assert(Graph.connectedComponents(edges, "src", "dst").count() == 0)
   }
 
+  test("Graph.asLongG: null/absent metric is 0, a non-Long metric fails named") {
+    assert(Graph.asLongG("n", null) == 0L)
+    assert(Graph.asLongG("n", java.lang.Long.valueOf(7L)) == 7L)
+    val e = intercept[IllegalStateException](Graph.asLongG("n", Integer.valueOf(7)))
+    assert(e.getMessage.contains("'n'") && e.getMessage.contains("java.lang.Integer"),
+      e.getMessage)
+  }
+
   test("AsOf.asofJoin with an empty right side yields all-null values") {
     val quotes = Seq.empty[(String, Timestamp, Double)].toDF("ccy", "qts", "rate")
     val trades = Seq((1L, "eur", ts("2024-01-01 09:00:00"))).toDF("trade_id", "ccy", "tts")

@@ -346,9 +346,9 @@ class MergeIntoSpec extends SparkSpec {
       .whenNotMatchedBySourceDelete(expr("t.day = '2024-01-02'"))
       .execute()
     assert(r.committed && r.rowsDeleted == 1L, s"$r")
-    assert(graft.sources.MergeIntoBuilder.lastPlannedScan == day2,
+    assert(r.targetFilesScanned == day2,
       s"by-source scan should stats-prune to the day-2 files ($day2), " +
-        s"planned ${graft.sources.MergeIntoBuilder.lastPlannedScan}")
+        s"planned ${r.targetFilesScanned}")
     assert(rows3(t) == Set((1L, "2024-01-01", "a"), (2L, "2024-01-01", "b"),
       (3L, "2024-01-02", "c"), (5L, "2024-01-03", "e")))
     // a condition referencing the SOURCE side cannot bound the scan
@@ -359,9 +359,9 @@ class MergeIntoSpec extends SparkSpec {
       .whenNotMatchedBySourceDelete(expr("t.day = s.day"))
       .execute()
     assert(!r2.committed)
-    assert(graft.sources.MergeIntoBuilder.lastPlannedScan == all,
+    assert(r2.targetFilesScanned == all,
       s"unprunable by-source condition must scan all $all files, " +
-        s"planned ${graft.sources.MergeIntoBuilder.lastPlannedScan}")
+        s"planned ${r2.targetFilesScanned}")
     // matched clauses still add their semi-join hits to a pruned scan:
     // update id 1 (day-1 partition) while the by-source clause scopes day-3
     val src3 = Seq((1L, "2024-01-01", "A"), (2L, "2024-01-01", "b"),
@@ -379,9 +379,9 @@ class MergeIntoSpec extends SparkSpec {
     // and day-2 hold matched ids) — strictly less than the whole table
     // would be only if partitions outnumber acting ones; here it must at
     // least include day3 and the match hits, and exclude nothing wrongly:
-    assert(graft.sources.MergeIntoBuilder.lastPlannedScan >= day3 + 1 &&
-      graft.sources.MergeIntoBuilder.lastPlannedScan <= snap.files.size,
-      s"planned ${graft.sources.MergeIntoBuilder.lastPlannedScan}")
+    assert(r3.targetFilesScanned >= day3 + 1 &&
+      r3.targetFilesScanned <= snap.files.size,
+      s"planned ${r3.targetFilesScanned}")
     assert(rows3(t) == Set((1L, "2024-01-01", "A"), (2L, "2024-01-01", "b"),
       (3L, "2024-01-02", "c")))
   }

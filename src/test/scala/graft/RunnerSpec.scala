@@ -232,26 +232,6 @@ class RunnerSpec extends SparkSpec {
     assert(audit.count() == 6 && audit.filter(col("status") === "failed").count() == 1)
   }
 
-  test("Runner full loads publish via the manifest pointer under objectStoreCommit") {
-    val dir = Files.createTempDirectory("runner_osc").toFile.getAbsolutePath
-    val cfg = s"$dir/load_config.csv"
-    Files.write(java.nio.file.Paths.get(cfg),
-      ("source_type,table_name,is_active,load_mode,watermark_column\n" +
-        "sql,dim,1,full,\n").getBytes)
-    val dim1 = Seq((1L, "a")).toDF("id", "v")
-    val dim2 = Seq((2L, "b"), (3L, "c")).toDF("id", "v")
-    Runner.run(spark, cfg, s"$dir/out", s"$dir/audit", "run1",
-      Map("dim" -> dim1).apply, objectStoreCommit = true)
-    Runner.run(spark, cfg, s"$dir/out", s"$dir/audit", "run2",
-      Map("dim" -> dim2).apply, objectStoreCommit = true)
-    // readers resolve through the pointer; the refresh replaced the content
-    val cur = graft.sources.Sinks.readCurrent(spark, s"$dir/out/dim")
-    assert(cur.select("id").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
-    // versioned layout on disk: pointer + (current, previous) v-dirs
-    val names = new java.io.File(s"$dir/out/dim").listFiles().map(_.getName).toSet
-    assert(names.contains("_current") && names.count(_.startsWith("v-")) == 2, names)
-  }
-
   test("Runner: a load killed mid-write leaves a crash-visible running row") {
     val dir = Files.createTempDirectory("runner_crash").toFile.getAbsolutePath
     val cfg = s"$dir/load_config.csv"

@@ -328,83 +328,6 @@ class SourcesSpec extends SparkSpec {
     assert(leftovers.isEmpty, s"swap left garbage: ${leftovers.toSeq}")
   }
 
-  test("publishVersioned survives a crashed publish; readers follow the pointer") {
-    val dir = tmp("versioned")
-    val path = s"$dir/t"
-    val v1 = Sinks.publishVersioned(Seq((1L, "a")).toDF("id", "v"), path)
-    assert(Sinks.readCurrent(spark, path).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
-
-    // Simulated crash: a publish died after writing its version dir but
-    // BEFORE the pointer replace — readers must still see v1.
-    val crashed = new java.io.File(s"$path/v-crashed")
-    crashed.mkdirs()
-    Files.write(java.nio.file.Paths.get(s"$path/v-crashed/part-00000.parquet"),
-      "half-written garbage".getBytes)
-    assert(Sinks.readCurrent(spark, path).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
-
-    // Next successful publish goes live and prunes the crash garbage;
-    // the immediately-previous version survives for in-flight readers.
-    val v2 = Sinks.publishVersioned(Seq((2L, "b")).toDF("id", "v"), path)
-    assert(Sinks.readCurrent(spark, path).as[(Long, String)].collect().toSeq == Seq((2L, "b")))
-    val dirs = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("v-")).toSet
-    assert(dirs == Set(v1, v2), s"expected {$v1, $v2}, found $dirs")
-
-    // One more publish: v1 ages out, v2 is retained as previous.
-    val v3 = Sinks.publishVersioned(Seq((3L, "c")).toDF("id", "v"), path)
-    val dirs2 = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("v-")).toSet
-    assert(dirs2 == Set(v2, v3))
-    assert(Sinks.readCurrent(spark, path).as[(Long, String)].collect().toSeq == Seq((3L, "c")))
-  }
-
-  test("publishVersioned: competing same-seq publish aborts loudly, pointer untouched") {
-    val dir = tmp("race")
-    val path = s"$dir/t"
-    val v1 = Sinks.publishVersioned(Seq((1L, "a")).toDF("id", "v"), path)
-
-    // The next publish will claim seq 2. Simulate a rival publisher winning
-    // the race inside the check window by materializing its same-seq version
-    // dir DURING our data write (the write evaluates this plan), i.e.
-    // between our seq selection and the post-write guard re-list.
-    val rivalDir = new java.io.File(s"$path/v-000000002-abcdef01")
-    import spark.implicits._
-    val injecting = spark.range(0, 4).mapPartitions { it =>
-      rivalDir.mkdirs(); it
-    }.toDF("id")
-    val e = intercept[RuntimeException](Sinks.publishVersioned(injecting, path))
-    assert(e.getMessage.contains("concurrent publish detected"),
-      s"wrong error: ${e.getMessage}")
-
-    // Live pointer still resolves v1; our aborted v-dir was removed (only
-    // v1 and the rival's dir remain).
-    assert(Sinks.readCurrent(spark, path).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
-    val dirs = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("v-")).toSet
-    assert(dirs == Set(v1, rivalDir.getName), s"unexpected dirs: $dirs")
-  }
-
-  test("readVersion time-travels retained versions; history orders and prunes") {
-    val dir = tmp("timetravel")
-    val path = s"$dir/t"
-    val v1 = Sinks.publishVersioned(Seq((1L, "a")).toDF("id", "v"), path, keepVersions = 3)
-    val v2 = Sinks.publishVersioned(Seq((2L, "b")).toDF("id", "v"), path, keepVersions = 3)
-    val v3 = Sinks.publishVersioned(Seq((3L, "c")).toDF("id", "v"), path, keepVersions = 3)
-    // by returned name and by bare seq (VERSION AS OF n)
-    assert(Sinks.readVersion(spark, path, v1).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
-    assert(Sinks.readVersion(spark, path, "2").as[(Long, String)].collect().toSeq == Seq((2L, "b")))
-    val hist = Sinks.versionHistory(spark, path)
-      .select("seq", "version", "is_current").as[(Long, String, Boolean)]
-      .collect().toSeq.sortBy(_._1)
-    assert(hist.map(_._1) == Seq(1L, 2L, 3L))
-    assert(hist.map(_._2) == Seq(v1, v2, v3))
-    assert(hist.collect { case (_, v, true) => v } == Seq(v3))
-    // v4 ages v1 out of keepVersions=3 retention; reading it names the cause
-    val v4 = Sinks.publishVersioned(Seq((4L, "d")).toDF("id", "v"), path, keepVersions = 3)
-    assert(Sinks.versionHistory(spark, path).count() == 3)
-    val err = intercept[RuntimeException](Sinks.readVersion(spark, path, v1))
-    assert(err.getMessage.contains("not retained"), err.getMessage)
-    assert(Sinks.readVersion(spark, path, "4").as[(Long, String)].collect().toSeq == Seq((4L, "d")))
-    assert(Sinks.readCurrent(spark, path).as[(Long, String)].collect().toSeq == Seq((4L, "d")))
-  }
-
   test("csvQuarantined routes malformed rows to quarantine, loads the rest") {
     val dir = tmp("csvq")
     Files.write(java.nio.file.Paths.get(s"$dir/data.csv"),
@@ -434,248 +357,6 @@ class SourcesSpec extends SparkSpec {
     val (good, bad) = Sources.jsonQuarantined(spark, s"$dir/d.json", schema)
     assert(good.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
     assert(bad.as[String].collect().toSeq == Seq("{\"id\":2,\"v\":"))
-  }
-
-  test("stats skipping: pruned read touches fewer files, equals the full-scan filter") {
-    val dir = tmp("skip")
-    val path = s"$dir/lineitem"
-    // range-partition by key so each file covers a contiguous key range —
-    // the layout readSkipping exists to exploit
-    Tables.lineitem(spark, sfDir).repartitionByRange(8, col("l_orderkey"))
-      .write.mode("overwrite").parquet(path)
-    Sinks.writeStatsManifest(spark, path, Seq("l_orderkey", "l_quantity"))
-    val all = spark.read.parquet(path)
-    val keys = all.select(col("l_orderkey")).as[Long].collect().sorted
-    val (lo, hi) = (keys(keys.length / 4), keys(keys.length / 4 + keys.length / 16))
-    val skipped = Sinks.readSkipping(spark, path, "l_orderkey", lo, hi)
-    assert(skipped.inputFiles.length < all.inputFiles.length,
-      s"no files pruned: ${skipped.inputFiles.length} of ${all.inputFiles.length}")
-    val expect = all.filter(col("l_orderkey") >= lo && col("l_orderkey") <= hi)
-      .select(col("l_orderkey"), col("l_linenumber")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val got = skipped.select(col("l_orderkey"), col("l_linenumber")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    assert(got == expect)
-    // empty intersection: zero rows without touching any data file
-    assert(Sinks.readSkipping(spark, path, "l_orderkey",
-      keys.last + 1000L, keys.last + 2000L).count() == 0)
-  }
-
-  test("stats skipping tolerates zero-row part files (manifest covers them, reads skip them)") {
-    val dir = tmp("skip_zero")
-    val path = s"$dir/t"
-    // 3 rows round-robined over 8 partitions → ≥ 5 zero-row part files
-    Tables.lineitem(spark, sfDir).limit(3).repartition(8)
-      .write.mode("overwrite").parquet(path)
-    val nFiles = spark.read.parquet(path).inputFiles.length
-    Sinks.writeStatsManifest(spark, path, Seq("l_orderkey"))
-    val manifest = spark.read.parquet(s"$path/_graft_stats")
-    assert(manifest.count() == nFiles,
-      s"manifest must cover every data file: ${manifest.count()} vs $nFiles")
-    // a fresh manifest must NOT read as stale, and results stay exact
-    val keys = spark.read.parquet(path).select(col("l_orderkey")).as[Long].collect()
-    val got = Sinks.readSkipping(spark, path, "l_orderkey", keys.min, keys.max)
-      .count()
-    assert(got == 3, s"expected 3 rows, got $got")
-    if (nFiles > 3) {
-      // zero-row files must be skippable: null stats never intersect
-      val pruned = Sinks.readSkipping(spark, path, "l_orderkey", keys.min, keys.min)
-      assert(pruned.inputFiles.length <= 3, pruned.inputFiles.length.toString)
-    }
-  }
-
-  test("stats skipping pays for z-order: a 2-D predicate prunes files multiplicatively") {
-    val dir = tmp("skip_z")
-    val path = s"$dir/li"
-    val li = Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_quantity"), col("l_linenumber"))
-    Sinks.zorderWrite(li, path, "l_orderkey", "l_quantity", nFiles = 16)
-    Sinks.writeStatsManifest(spark, path, Seq("l_orderkey", "l_quantity"))
-    val all = spark.read.parquet(path)
-    val keys = all.select(col("l_orderkey")).as[Long].collect().sorted
-    val (kLo, kHi) = (keys(keys.length / 3), keys(keys.length / 3 + keys.length / 8))
-    val preds = Seq[(String, Any, Any)](
-      ("l_orderkey", kLo, kHi), ("l_quantity", 5.0, 15.0))
-    val skipped = Sinks.readSkipping(spark, path, preds)
-    // a thin 2-D region of a 16-file z-layout must not touch most files
-    assert(skipped.inputFiles.length <= 8,
-      s"2-D pruning too weak: ${skipped.inputFiles.length} of ${all.inputFiles.length}")
-    val expect = all.filter(col("l_orderkey").between(kLo, kHi) &&
-        col("l_quantity").between(5.0, 15.0))
-      .select(col("l_orderkey"), col("l_linenumber")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val got = skipped.select(col("l_orderkey"), col("l_linenumber")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    assert(got == expect)
-  }
-
-  test("stats skipping fails named on stale manifests and unindexed columns") {
-    val dir = tmp("skip_stale")
-    val path = s"$dir/t"
-    Tables.lineitem(spark, sfDir).limit(100)
-      .write.mode("overwrite").parquet(path)
-    // missing manifest
-    val none = intercept[IllegalArgumentException] {
-      Sinks.readSkipping(spark, path, "l_orderkey", 1L, 2L)
-    }
-    assert(none.getMessage.contains("no stats manifest"), none.getMessage)
-    Sinks.writeStatsManifest(spark, path, Seq("l_orderkey"))
-    // unindexed column
-    val unidx = intercept[IllegalArgumentException] {
-      Sinks.readSkipping(spark, path, "l_quantity", 1.0, 2.0)
-    }
-    assert(unidx.getMessage.contains("not indexed"), unidx.getMessage)
-    // append a file AFTER the manifest → stale, named
-    Tables.lineitem(spark, sfDir).limit(10)
-      .write.mode("append").parquet(path)
-    val stale = intercept[IllegalArgumentException] {
-      Sinks.readSkipping(spark, path, "l_orderkey", 1L, 2L)
-    }
-    assert(stale.getMessage.contains("STALE"), stale.getMessage)
-    // partitioned roots are rejected loudly — a per-file re-read would
-    // silently drop hive partition-column values (the compact() contract)
-    val pdir = s"$dir/pt"
-    Tables.lineitem(spark, sfDir).limit(50)
-      .withColumn("flag", col("l_linenumber") % 2)
-      .write.partitionBy("flag").mode("overwrite").parquet(pdir)
-    val part = intercept[IllegalArgumentException] {
-      Sinks.writeStatsManifest(spark, pdir, Seq("l_orderkey"))
-    }
-    assert(part.getMessage.contains("partition-style"), part.getMessage)
-  }
-
-  test("partitioned stats skipping: value+stat pruning, exact rows, typed partition cols (i16)") {
-    val dir = tmp("skip_part")
-    val path = s"$dir/li"
-    // partition by a derived flag; range-partition within so key stats prune
-    Tables.lineitem(spark, sfDir)
-      .withColumn("flag", (col("l_linenumber") % 3).cast("int"))
-      .repartitionByRange(4, col("l_orderkey"))
-      .write.partitionBy("flag").mode("overwrite").parquet(path)
-    // the unpartitioned writer refuses; the partitioned one covers it
-    intercept[IllegalArgumentException] {
-      Sinks.writeStatsManifest(spark, path, Seq("l_orderkey"))
-    }
-    // partition columns are pruned by VALUE — statsCols naming one fails
-    val ov = intercept[IllegalArgumentException] {
-      Sinks.writeStatsManifestPartitioned(spark, path, Seq("l_orderkey", "flag"))
-    }
-    assert(ov.getMessage.contains("pruned by VALUE"), ov.getMessage)
-    Sinks.writeStatsManifestPartitioned(spark, path, Seq("l_orderkey"))
-    val all = spark.read.parquet(path)
-    val nFiles = all.inputFiles.length
-    assert(spark.read.parquet(s"$path/_graft_stats").count() == nFiles)
-    val keys = all.select(col("l_orderkey")).as[Long].collect().sorted
-    val (lo, hi) = (keys(keys.length / 4), keys(keys.length / 2))
-    // 2-D conjunction: key range + partition VALUE
-    val preds = Seq[(String, Any, Any)](("l_orderkey", lo, hi), ("flag", 1, 1))
-    val skipped = Sinks.readSkippingPartitioned(spark, path, preds)
-    assert(skipped.inputFiles.length < nFiles,
-      s"no files pruned: ${skipped.inputFiles.length} of $nFiles")
-    // results EXACTLY equal the full-scan filter, schema incl. typed flag
-    assert(skipped.schema("flag").dataType == all.schema("flag").dataType)
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("l_orderkey"), col("l_linenumber"), col("flag")).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq
-    assert(key(skipped) == key(all.filter(
-      col("l_orderkey").between(lo, hi) && col("flag") === 1)))
-    // empty intersection reads no data files, schema intact
-    val none = Sinks.readSkippingPartitioned(spark, path,
-      Seq(("l_orderkey", keys.last + 10L, keys.last + 20L)))
-    assert(none.count() == 0 && none.columns.contains("flag"))
-    // append → stale, named
-    Tables.lineitem(spark, sfDir).limit(5)
-      .withColumn("flag", lit(1))
-      .write.partitionBy("flag").mode("append").parquet(path)
-    val stale = intercept[IllegalArgumentException] {
-      Sinks.readSkippingPartitioned(spark, path, preds)
-    }
-    assert(stale.getMessage.contains("STALE"), stale.getMessage)
-  }
-
-  test("partitioned manifest unescapes hive partition segments for zero-row files") {
-    // Hive escapes special characters when writing k=v directories
-    // ('a=b' lands as src=a%3Db) and spells null as
-    // __HIVE_DEFAULT_PARTITION__. Zero-row part files take their
-    // partition value from the path segment, so the manifest must store
-    // the UNESCAPED value — or value pruning would drop those files on
-    // the escaped spelling ('a%3Db' != 'a=b').
-    val dir = tmp("skip_escape")
-    val path = s"$dir/t"
-    // 2 rows spread over 5 partitions → ≥ 3 zero-row part files, in a
-    // partition whose value needs escaping AND one that is null
-    Seq((1L, "a=b"), (2L, null.asInstanceOf[String]))
-      .toDF("k", "src").repartition(5)
-      .write.partitionBy("src").mode("overwrite").parquet(path)
-    val escaped = new java.io.File(path).listFiles()
-      .map(_.getName).filter(_.startsWith("src="))
-    assert(escaped.contains("src=a%3Db"), escaped.toSeq.toString)
-    Sinks.writeStatsManifestPartitioned(spark, path, Seq("k"))
-    val manifest = spark.read.parquet(s"$path/_graft_stats")
-    // every manifest row holds the unescaped value — zero-row rows match
-    // the data-derived spelling exactly
-    val vals = manifest.select(col("part_src")).distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(vals == Set("a=b", null), vals.toString)
-    // pruning on the unescaped value keeps the row (and its zero-row
-    // partition-mates never block the read)
-    val got = Sinks.readSkippingPartitioned(spark, path,
-      Seq[(String, Any, Any)](("src", "a=b", "a=b")))
-    assert(got.select(col("k")).as[Long].collect().toSeq == Seq(1L))
-  }
-
-  test("appendStatsManifest: append-only refresh stats only the new files (i15b)") {
-    val dir = tmp("skip_append")
-    val path = s"$dir/t"
-    val li = Tables.lineitem(spark, sfDir)
-    li.filter(col("l_linenumber") =!= 1).repartitionByRange(4, col("l_orderkey"))
-      .write.mode("overwrite").parquet(path)
-    Sinks.writeStatsManifest(spark, path, Seq("l_orderkey"))
-    val before = spark.read.parquet(s"$path/_graft_stats").count()
-    // append (including zero-row part files: 3 rows over 8 partitions)
-    li.filter(col("l_linenumber") === 1).limit(3).repartition(8)
-      .write.mode("append").parquet(path)
-    intercept[IllegalArgumentException] { // stale until refreshed
-      Sinks.readSkipping(spark, path, "l_orderkey", 1L, 2L)
-    }
-    Sinks.appendStatsManifest(spark, path)
-    val manifest = spark.read.parquet(s"$path/_graft_stats")
-    val nFiles = spark.read.parquet(path).inputFiles.length
-    assert(manifest.count() == nFiles,
-      s"refreshed manifest must cover every file: ${manifest.count()} vs $nFiles")
-    assert(manifest.count() > before, "append must add manifest rows")
-    // pruned read equals the full-scan filter over old + appended rows
-    val all = spark.read.parquet(path)
-    val keys = all.select(col("l_orderkey")).as[Long].collect().sorted
-    val (lo, hi) = (keys(keys.length / 4), keys(keys.length / 2))
-    val got = Sinks.readSkipping(spark, path, "l_orderkey", lo, hi)
-      .select(col("l_orderkey"), col("l_linenumber")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val expect = all.filter(col("l_orderkey").between(lo, hi))
-      .select(col("l_orderkey"), col("l_linenumber")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    assert(got == expect)
-    // idempotent no-op when already current
-    Sinks.appendStatsManifest(spark, path)
-    assert(spark.read.parquet(s"$path/_graft_stats").count() == nFiles)
-    // a compaction/rewrite (not an append) leaves the manifest knowing
-    // files that no longer exist → named failure, full rewrite required.
-    // (A plain .mode(overwrite) also wipes _graft_stats itself, landing in
-    // the no-manifest branch; deleting a data file models the compaction
-    // case where the manifest survives but its file set is wrong.)
-    val victim = spark.read.parquet(path).inputFiles.head
-    Files.delete(java.nio.file.Paths.get(new java.net.URI(victim).getPath))
-    val gone = intercept[IllegalArgumentException] {
-      Sinks.appendStatsManifest(spark, path)
-    }
-    assert(gone.getMessage.contains("rewritten/compacted"), gone.getMessage)
-    // and with no manifest at all, append refuses (nothing to append to)
-    val p2 = s"$dir/t2"
-    li.limit(5).write.mode("overwrite").parquet(p2)
-    val none = intercept[IllegalArgumentException] {
-      Sinks.appendStatsManifest(spark, p2)
-    }
-    assert(none.getMessage.contains("writeStatsManifest first"), none.getMessage)
   }
 
   test("textLines: one doc per line, deterministic contiguous ids, feeds the B block") {

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import graft.sources.VersionedTable
+import graft.sources.{VersionedTable, Warc}
 
 class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
@@ -1005,5 +1005,96 @@ class VersionedTableSpec extends SparkSpec {
       "an empty dynamic overwrite must not commit a version")
     // the feed reads straight through — no overwrite_partitions op to trip on
     assert(VersionedTable.readChangesSince(spark, t, 0L).count() == 0L)
+  }
+
+  // ------------------------------------- data skipping over one table format
+
+  test("readWhere over a range-partitioned layout: an interval read equals " +
+      "the full-scan filter, an empty intersection plans no file, zero-row " +
+      "files are never planned") {
+    val t = tmpTable("interval")
+    // an empty create commits a zero-row file; the appended layout then
+    // gives each of 8 files a contiguous id range
+    VersionedTable.create(Seq((0L, "x")).toDF("id", "v").filter(lit(false)), t)
+    VersionedTable.append(spark.range(0L, 4000L)
+      .select(col("id"), concat(lit("v"), col("id")).as("v"))
+      .repartitionByRange(8, col("id")), t)
+    val files = VersionedTable.snapshotAt(spark, t).files
+    assert(files.count(_.rows == 0) == 1 && files.count(_.rows > 0) == 8,
+      s"fixture needs 8 data files and one zero-row file: ${files.map(_.rows)}")
+    val full = VersionedTable.read(spark, t)
+    val interval = col("id") >= 1000L && col("id") <= 1500L
+    val hit = VersionedTable.readWhere(spark, t, interval)
+    assert(hit.inputFiles.length < full.inputFiles.length,
+      s"no files pruned: ${hit.inputFiles.length} of ${full.inputFiles.length}")
+    assert(rows(hit) == rows(full.filter(interval)) && rows(hit).size == 501)
+    // empty intersection: zero rows without planning any data file
+    val none = VersionedTable.readWhere(spark, t, col("id") > 5000L)
+    assert(none.inputFiles.isEmpty && none.count() == 0)
+    // a zero-row file survives no prunable predicate
+    Seq(col("id") === 5L, col("v").isNull, col("v").isNotNull, interval).foreach { p =>
+      assert(VersionedTable.survivingFiles(spark, t, p).forall(_.rows > 0), p.toString)
+    }
+  }
+
+  test("readWhere pays for Sinks.zorderWrite: a 2-D conjunction prunes a " +
+      "converted z-ordered layout") {
+    val dir = Files.createTempDirectory("vt_zconv").resolve("li").toString
+    // 128×128 grid in 16 z-ordered files: each covers a compact region,
+    // so a thin 2-D box crosses a few files, not all 16
+    val grid = spark.range(1L << 14).select(
+      (col("id") % 128).as("x"), (col("id") / 128).cast("long").as("y"))
+    graft.sources.Sinks.zorderWrite(grid, dir, "x", "y", nFiles = 16, bits = 7)
+    VersionedTable.convert(spark, dir)
+    assert(VersionedTable.snapshotAt(spark, dir).files.size == 16)
+    val box = col("x").between(40L, 60L) && col("y").between(40L, 60L)
+    val hit = VersionedTable.readWhere(spark, dir, box)
+    assert(hit.inputFiles.length <= 8, s"2-D pruning too weak: ${hit.inputFiles.length} of 16")
+    def xy(df: org.apache.spark.sql.DataFrame) =
+      df.select("x", "y").as[(Long, Long)].collect().toSet
+    assert(xy(hit) == xy(VersionedTable.read(spark, dir).filter(box)) && xy(hit).size == 21 * 21)
+  }
+
+  test("supplementary-plane keys: readWhere (=, range) and Warc.lookupAtMany " +
+      "keep a file whose only match sorts above U+E000 in UTF-8 order") {
+    import graft.text.Urls
+    val t = tmpTable("utf8order")
+    val at = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def captures(urls: String*) = urls.map(u => (u, at, 200, "text/html", 1L, "w.warc", 0L))
+      .toDF("url", "fetch_ts", "http_status", "mime", "payload_len", "warc_file", "rec_offset")
+      .withColumn("url_canon", Urls.canonicalize(col("url")))
+      .withColumn("surt_key", Urls.surtKey(col("url_canon")))
+      .coalesce(1)
+    val (pua, emoji) = ("https://a.example/\uE000", "https://a.example/\uD83D\uDE00")
+    VersionedTable.create(captures("https://a.example/a"), t)
+    VersionedTable.append(captures(pua, emoji), t)
+    val (puaKey, emojiKey) = ("example,a)/\uE000", "example,a)/\uD83D\uDE00")
+    // the fixture bites: UTF-16 order puts the emoji key BELOW the file's
+    // logged min, UTF-8 order (the stats' own) inside [min, max]
+    assert(emojiKey.compareTo(puaKey) < 0)
+    val second = VersionedTable.snapshotAt(spark, t).files.filter(_.rows == 2)
+    assert(second.size == 1 && second.head.stats("surt_key").min.contains(puaKey) &&
+      second.head.stats("surt_key").max.contains(emojiKey), second.toString)
+    def keysOf(df: org.apache.spark.sql.DataFrame) = df.select("surt_key").as[String].collect().toSet
+    assert(keysOf(VersionedTable.readWhere(spark, t, col("surt_key") === emojiKey)) == Set(emojiKey))
+    assert(keysOf(VersionedTable.readWhere(spark, t, col("surt_key") > puaKey)) == Set(emojiKey))
+    val many = Warc.lookupAtMany(spark, t, Seq((emoji, at)).toDF("url", "at"))
+    assert(many.select("surt_key").as[String].collect().toSeq == Seq(emojiKey))
+    assert(many.inputFiles.length == 1, many.inputFiles.mkString(", "))
+  }
+
+  test("one table format: no main source names the side stats manifest or " +
+      "a version pointer file") {
+    val main = new java.io.File("src/main")
+    assert(main.isDirectory, s"run from the project root (cwd ${new java.io.File(".").getAbsolutePath})")
+    val banned = Seq("_graft_stats".r, "(?<![A-Za-z0-9_])_current(?![A-Za-z0-9_])".r)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val hits = files(main).filter { f =>
+      val text = new String(Files.readAllBytes(f.toPath), "UTF-8")
+      banned.exists(_.findFirstIn(text).isDefined)
+    }.map(_.getPath)
+    assert(hits.isEmpty, s"side-format names in: ${hits.mkString(", ")}")
   }
 }

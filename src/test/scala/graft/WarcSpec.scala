@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.functions._
-import graft.sources.Warc
+import graft.sources.{VersionedTable, Warc}
 import graft.text.HtmlExtract
 
 /** i17 WARC intake: record framing, member-level quarantine + recovery,
@@ -522,20 +522,19 @@ class WarcSpec extends SparkSpec {
     val (recs, _) = Warc.read(spark, s"$dir/wet/*.warc.gz")
     val idx = Warc.cdxIndex(recs)
     Warc.writeCdx(idx, s"$dir/cdx", nFiles = 8)
-    val nFiles = new java.io.File(s"$dir/cdx").listFiles()
-      .count(f => f.getName.startsWith("part-"))
+    val nFiles = VersionedTable.snapshotAt(spark, s"$dir/cdx").files.size
     assert(nFiles == 8, s"fixture needs a multi-file index, got $nFiles")
     val prefix = Warc.surtHostPrefix("h05.example")
     assert(prefix == "example,h05)")
     val hit = Warc.lookupHost(spark, s"$dir/cdx", prefix)
     // exact: equals the full-scan filter, row for row
-    val full = spark.read.parquet(s"$dir/cdx")
+    val full = VersionedTable.read(spark, s"$dir/cdx")
       .filter(col("surt_key").startsWith(prefix))
     assert(hit.count() == 4)
     assert(hit.exceptAll(full).isEmpty && full.exceptAll(hit).isEmpty,
       "pruned lookup must equal the full scan exactly")
-    // the i15 discipline: the lookup's plan touches ≤ the files whose
-    // range intersects the prefix — far fewer than the full index
+    // the lookup's plan touches ≤ the files whose logged key range
+    // intersects the prefix — far fewer than the full index
     val touched = hit.select(input_file_name()).distinct().count()
     assert(touched <= 2, s"host lookup touched $touched of $nFiles files")
     // the full loop: index row → fetchAt → the page's actual bytes
@@ -660,7 +659,7 @@ class WarcSpec extends SparkSpec {
     assert(rows(0).getAs[String]("url") == url)
     assert(rows(0).getAs[java.sql.Timestamp]("fetch_ts") == ts("2024-01-10 00:00:00"))
     // equals the full-scan argmin exactly
-    val full = spark.read.parquet(s"$dir/cdx")
+    val full = VersionedTable.read(spark, s"$dir/cdx")
       .filter(col("url") === url).collect()
       .minBy(r => (math.abs(r.getAs[java.sql.Timestamp]("fetch_ts").getTime -
         ts("2024-01-12 00:00:00").getTime),
@@ -714,12 +713,8 @@ class WarcSpec extends SparkSpec {
           s"$u@$a: batched winner differs from lookupAt")
       }
     }
-    // the batched plan also prunes: 3 distinct hosts ⇒ well under 8 files
-    val manyTouched = graft.sources.Sinks.readSkippingKeys(spark, s"$dir/cdx", "surt_key",
-        Seq(url, s"$url/child", "https://bulk7.example/x").map(u =>
-          spark.range(1).select(graft.text.Urls.surtKey(
-            graft.text.Urls.canonicalize(lit(u))).as("k")).head.getString(0)))
-      .select(input_file_name()).distinct().count()
+    // the batched plan also prunes: 3 captured hosts ⇒ well under 8 files
+    val manyTouched = Warc.lookupAtMany(spark, s"$dir/cdx", requests).inputFiles.length
     assert(manyTouched <= 4, s"batched lookup touched $manyTouched of 8 files")
   }
 
