@@ -1,7 +1,13 @@
 package graft.meta
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.UUID
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import graft.ops.Incremental
 
@@ -10,8 +16,9 @@ import graft.ops.Incremental
   * 1_audit/audit_start.py / audit_end.py, and
   * catch_new_watermark_value.py for the post-load watermark capture).
   *
-  * Stored as an append-only parquet log. At scale this is a tiny
-  * metadata-rate table — one row per pipeline run, not per data row.
+  * Stored as an append-only parquet log, one file per row. At scale this
+  * is a tiny metadata-rate table — one row per pipeline run, not per data
+  * row.
   */
 object Audit {
 
@@ -27,18 +34,59 @@ object Audit {
       start_time: Timestamp,
       end_time: Timestamp)
 
-  /** Append one run record to the audit log directory.
+  /** The log's row schema: the case class's, as `Seq(run).toDS()` gives
+    * it — nullable strings and timestamps, a non-null `rows_processed`.
+    */
+  private val schema = Encoders.product[Run].schema
+
+  /** Run → Spark's internal row, the conversion `toDS()` applies. The
+    * serializer reuses one output row, so it is only used under the lock.
+    */
+  private lazy val toRow = encoderFor(Encoders.product[Run]).createSerializer()
+
+  /** Test seam: runs after the record is written, before it is
+    * published; a throw here is a failed publish.
+    */
+  private[graft] var testHookBeforePublish: () => Unit = () => ()
+
+  /** Append one run record to the audit log directory, written from the
+    * driver — no Spark job. The record is a one-row parquet file made by
+    * Spark's own parquet writer factory (the session's codec and timestamp
+    * type, INT96 by default, and the Spark row-schema footer key), so it
+    * is byte-compatible with rows an earlier `toDS().write.parquet` append
+    * left in the same directory, and every reader stays a plain
+    * `spark.read.parquet(auditDir)`.
     *
-    * Synchronized: the Runner's parallel table dispatch appends from
-    * several driver threads, and concurrent `append` writes into ONE
-    * directory race on the shared `_temporary` committer workspace. The
-    * JVM-local lock serializes the (tiny, one-row) writes; multiple
-    * concurrent DRIVERS would need a transactional log (Delta/Iceberg)
-    * instead, which is what the reference's audit DB gives it.
+    * Publish by rename: the file is written under a dot-prefixed name,
+    * which Spark's file listing skips, then renamed to a fresh
+    * `part-<uuid>-c000.<codec>.parquet` name. A reader sees the whole row
+    * or nothing; a failed write or rename deletes the temp file and
+    * leaves no `part-` file behind.
+    *
+    * Synchronized, although appends no longer race: there is no shared
+    * `_temporary` committer workspace any more, and each row publishes
+    * under its own uuid name, so appends from Runner's parallel dispatch
+    * or from several drivers cannot collide. The lock stays because the
+    * shared row serializer above is not thread-safe; it guards one small
+    * file write. Rows from several drivers get no order between them; a
+    * transactional log (Delta or Iceberg) is what the reference's audit
+    * DB gives it.
     */
   def log(spark: SparkSession, auditDir: String, run: Run): Unit = this.synchronized {
-    import spark.implicits._
-    Seq(run).toDS().write.mode("append").parquet(auditDir)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val writers = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${UUID.randomUUID()}-c000${writers.getFileExtension(ctx)}"
+    val dir = new Path(auditDir)
+    val tmp = new Path(dir, s".$name")
+    val fs = dir.getFileSystem(job.getConfiguration)
+    try {
+      val w = writers.newInstance(tmp.toString, schema, ctx)
+      try w.write(toRow(run)) finally w.close()
+      testHookBeforePublish()
+      if (!fs.rename(tmp, new Path(dir, name)))
+        throw new java.io.IOException(s"audit log $auditDir: could not publish $name")
+    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
   }
 
   /** New watermark after a load: stringified max of the watermark column,

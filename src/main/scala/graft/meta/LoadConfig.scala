@@ -39,7 +39,11 @@ object LoadConfig {
     * at the orchestration boundary — not whatever Spark happens to throw
     * three operators later.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
+  def read(spark: SparkSession, path: String): DataFrame =
+    readRaw(spark, path).withColumn("is_active", col("is_active") === "1")
+
+  /** The config's columns as written, `is_active` still a string. */
+  private def readRaw(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
@@ -54,17 +58,34 @@ object LoadConfig {
     val sys = if (raw.columns.contains("source_system"))
       coalesce(col("source_system"), lit("")) else lit("")
     raw.select(col("source_type"), sys.as("source_system"), col("table_name"),
-      (col("is_active") === "1").as("is_active"),
-      col("load_mode"), col("watermark_column"))
+      col("is_active"), col("load_mode"), col("watermark_column"))
   }
 
   /** Active entries as typed config (small table — collected on the driver,
     * as ADF does when fanning out per-table copy activities).
+    *
+    * Every row is validated before any is returned, each failure a NAMED
+    * error naming the table and the offending value: `is_active` must be
+    * `0` or `1` (anything else would silently deactivate the table),
+    * `load_mode` must be `full` or `incremental` (anything else would
+    * silently fully overwrite bronze every run), and an `incremental` row
+    * needs a non-blank `watermark_column` (without one every run would
+    * silently reload in full).
     */
   def activeEntries(spark: SparkSession, path: String): Seq[Entry] =
-    read(spark, path).filter(col("is_active")).collect().toSeq.map { r =>
-      Entry(
-        r.getString(0), r.getString(1), r.getString(2), r.getBoolean(3),
-        r.getString(4), Option(r.getString(5)).filter(_.nonEmpty))
-    }
+    readRaw(spark, path).collect().toSeq.map { r =>
+      val active = r.getString(3)
+      val wm = Option(r.getString(5))
+      val e = Entry(r.getString(0), r.getString(1), r.getString(2), active == "1",
+        r.getString(4), wm.filter(_.trim.nonEmpty))
+      def bad(what: String) = throw new IllegalArgumentException(
+        s"load config at $path: table ${e.qualifiedName} $what")
+      if (active != "0" && active != "1")
+        bad(s"has is_active '$active' — expected 0 or 1")
+      if (e.loadMode != "full" && e.loadMode != "incremental")
+        bad(s"has load_mode '${e.loadMode}' — expected full or incremental")
+      if (e.loadMode == "incremental" && e.watermarkColumn.isEmpty)
+        bad(s"is incremental but its watermark_column is blank ('${wm.getOrElse("")}')")
+      e
+    }.filter(_.isActive)
 }

@@ -68,7 +68,8 @@ object Graph {
       .observe(obsE, count(lit(1)).as("n"))
       .localCheckpoint()
     val defaultP = spark.sessionState.conf.numShufflePartitions
-    val p = math.max(1, math.min(defaultP, (asLong(obsE.get("n"), 0L) / 2000000L).toInt))
+    val nEdges = asLong(Observations.of(obsE, "connectedComponents edge count")("n"), 0L)
+    val p = math.max(1, math.min(defaultP, (nEdges / 2000000L).toInt))
     // Pre-partition the edges by the per-round join key (b): localCheckpoint
     // preserves outputPartitioning, so every round's neighbor-min join reads
     // the edge side without an Exchange. At p == 1 every operator already
@@ -88,9 +89,10 @@ object Graph {
 
     def labelSum(df: DataFrame): Long =
       Option(df.agg(sum("label")).head.get(0)).fold(0L)(_.asInstanceOf[Long])
-    var prevSum = asLong(obsL.get("s"), 0L)
+    val labelStats = Observations.of(obsL, "connectedComponents label sum")
+    var prevSum = asLong(labelStats("s"), 0L)
 
-    var converged = asLong(obsL.get("n"), 0L) == 0L
+    var converged = asLong(labelStats("n"), 0L) == 0L
     var iter = 0
     while (!converged && iter < maxIter) {
       // Min label across self and neighbors…
@@ -109,9 +111,9 @@ object Graph {
         .observe(obs, sum(col("label")).as("s"))
         .localCheckpoint()
       // The checkpoint materialization runs through withAction, which fires
-      // the observation listener; `get` blocks only until that (already
+      // the observation listener; the read waits only until that (already
       // finished) action's metrics are delivered.
-      val s = obs.get("s") match {
+      val s = Observations.of(obs, "connectedComponents round label sum")("s") match {
         case v: java.lang.Long => v.longValue()
         case _ => labelSum(prop)
       }
@@ -205,7 +207,7 @@ object Graph {
         col("src"), col("dst"))
       .distinct().observe(obsE, count(lit(1)).as("n")).localCheckpoint()
     val defaultP = spark.sessionState.conf.numShufflePartitions
-    val nEdges = asLongG("n", obsE.get.getOrElse("n", null))
+    val nEdges = asLongG("n", Observations.of(obsE, "pageRank edge count")("n"))
     val p = math.max(1, math.min(defaultP, (nEdges / 2000000L).toInt))
     val e = if (p > 1) e0.repartition(p, col("src")).localCheckpoint()
             else e0.coalesce(1)
@@ -222,7 +224,7 @@ object Graph {
     val nodes = byNode(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
       .observe(obsN, count(lit(1)).as("n")).localCheckpoint()
-    val n = asLongG("n", obsN.get.getOrElse("n", null)).toDouble
+    val n = asLongG("n", Observations.of(obsN, "pageRank node count")("n")).toDouble
     lastPageRankIters = 0
     if (n == 0) return nodes.withColumn("rank", lit(0.0))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("outdeg"))
@@ -275,7 +277,7 @@ object Graph {
           .observe(obs, max(abs(col("rank") - col("_prev"))).as("d"))
           .select(col("node"), col("rank"))
           .localCheckpoint()
-        val dmax = obs.get("d") match {
+        val dmax = Observations.of(obs, "pageRank round delta")("d") match {
           case v: java.lang.Double => v.doubleValue()
           case _ => Double.MaxValue // empty metrics: keep iterating
         }

@@ -138,8 +138,10 @@ object Scd2 {
     // pin the version the upsert is DERIVED from and thread it into
     // txnMerge's conflict anchor: a concurrent merge landing between this
     // read and the commit must fail named, not interleave into two
-    // current rows per key (txnMerge's own snapshot would be too late)
-    val live = VT.readVersion(spark, table, baseSnap.version).localCheckpoint()
+    // current rows per key (txnMerge's own snapshot would be too late).
+    // Not materialized here: the pinned version's files are immutable, and
+    // the one job that needs them is the merge's staged checkpoint.
+    val live = VT.readVersion(spark, table, baseSnap.version)
     val existingCols = live.columns.toSeq
     val changed = attrs.map(a => !(col(a) <=> col(s"_stg_$a"))).reduce(_ || _)
     val stg = staged.select(
@@ -164,11 +166,9 @@ object Scd2 {
       .withColumn("valid_to", lit(null).cast("timestamp"))
       .withColumn("is_current", lit(true))
       .select(existingCols.map(col): _*)
-    val upsert = expired.unionByName(inserts).localCheckpoint()
-    try {
-      if (upsert.isEmpty) None
-      else VT.txnMerge(upsert, table, keys :+ "valid_from", app, batch,
-        readVersion = baseSnap.version)
-    } finally { upsert.unpersist(); live.unpersist(); () }
+    // handed over lazily: the merge materializes it once and reads its
+    // row count from that same job, committing nothing when it is empty
+    VT.mergeStaged(expired.unionByName(inserts), table, keys :+ "valid_from", app, batch,
+      readVersion = baseSnap.version, emptyIsNoop = true)
   }
 }

@@ -6,7 +6,7 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.meta.{Audit, LoadConfig}
-import graft.ops.Incremental
+import graft.ops.{Incremental, Observations}
 
 /** Metadata-driven ingest orchestrator — the engine-side equivalent of the
   * reference's ADF pipeline loop (reference:
@@ -59,29 +59,6 @@ object Runner {
         Map.empty
     }
 
-  /** Bounded wait on an Observation: its metrics only ever arrive if the
-    * observed node was part of an executed plan — a `transform` that does
-    * not derive its output from its input would otherwise hang `get`
-    * forever. Polls the non-blocking `getOrEmpty` (no detached blocked
-    * thread to leak on timeout); timing out falls back to the
-    * separate-scan path.
-    */
-  // Observation.getOrEmpty is the documented non-blocking read of delivered
-  // metrics, but its Scala signature is `private[sql]` — the JVM method is
-  // public, so a one-time reflective handle bridges the access gap without
-  // a detached blocked thread.
-  private val getOrEmptyMethod = classOf[Observation].getMethod("getOrEmpty")
-
-  private def getWithin(obs: Observation, timeout: FiniteDuration): Option[Map[String, Any]] = {
-    val deadline = System.nanoTime() + timeout.toNanos
-    var m = getOrEmptyMethod.invoke(obs).asInstanceOf[Map[String, Any]]
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      m = getOrEmptyMethod.invoke(obs).asInstanceOf[Map[String, Any]]
-    }
-    if (m.isEmpty) None else Some(m)
-  }
-
   /** Run every active config entry: read via `source` (called with the
     * system-qualified name, e.g. `bank_a.orders`), optionally window to
     * rows past the last watermark, apply the table's silver `transform`
@@ -95,8 +72,11 @@ object Runner {
     * (reference: 2_bronze_ingestion_adf/pipelines/pl_ingestion_bronze.json
     * ForEach batchCount). Per-table failure isolation and per-table audit
     * rows are unchanged: each load is a self-contained job and Spark
-    * schedules concurrent jobs from one session fine; only the audit
-    * append is serialized (see [[graft.meta.Audit.log]]).
+    * schedules concurrent jobs from one session fine. Audit rows are
+    * written from the driver, not by Spark jobs: each is one parquet file
+    * published by rename under its own uuid name, so concurrent appends
+    * cannot collide; the appends still take one JVM-local lock, which
+    * guards the shared row serializer (see [[graft.meta.Audit.log]]).
     *
     * Full refreshes go through [[graft.sources.Sinks.overwriteAtomic]],
     * whose directory rename is atomic on HDFS and on ADLS Gen2's
@@ -137,7 +117,7 @@ object Runner {
         e.loadMode, e.watermarkColumn.getOrElse(""),
         watermarks.get(wmKey).orNull, 0L, "running", start, start))
       try {
-        val incremental = e.loadMode == "incremental" && e.watermarkColumn.isDefined
+        val incremental = e.loadMode == "incremental" // LoadConfig: implies a watermark column
         // Bootstrap-then-incremental (reference: pl_bootstrap.json +
         // bootstrap_load_config.csv): an incremental table with NO prior
         // watermark is a full bootstrap — written as an atomic OVERWRITE,
@@ -166,14 +146,14 @@ object Runner {
           else graft.sources.Sinks.overwriteAtomic(staged, path)
 
           // The staged frame was just written, so the metric is delivered
-          // with the write action; the bounded poll only covers listener
+          // with the write action; the bounded wait only covers listener
           // delivery lag, with a recount fallback instead of an unbounded
           // block.
-          val rows = getWithin(rowObs, 10.seconds)
+          val rows = Observations.within(rowObs)
             .map(_("rows").asInstanceOf[Long])
             .getOrElse(transform.getOrElse(e.tableName, identity[DataFrame] _)(windowed).count())
           val wm = e.watermarkColumn.flatMap { c =>
-            getWithin(wmObs, 10.seconds) match {
+            Observations.within(wmObs) match {
               case Some(m) => Option(m("wm")).map(_.toString)
               case None    => Audit.newWatermark(windowed, c) // severed lineage
             }

@@ -57,7 +57,7 @@ object ApiExtract {
     val obs = Observation()
     parseFx(spark, payloads).observe(obs, count(lit(1)).as("rows"))
       .write.mode("append").parquet(bronzeDir)
-    obs.get("rows").asInstanceOf[Long]
+    graft.ops.Observations.of(obs, s"landFx into $bronzeDir")("rows").asInstanceOf[Long]
   }
 
   /** Thrown when `fetchWithRetry` exhausts its attempts; carries the last

@@ -1535,7 +1535,7 @@ object VersionedTable {
       when(not(coalesce(expr(constraints(n)), lit(false))), 1L).otherwise(0L)).as(n))
     val observed = df.observe(obs, aggs.head, aggs.tail: _*)
     val adds = writeData(observed, table, schema, partitionBy)
-    val row = obs.get
+    val row = graft.ops.Observations.of(obs, s"versioned table $table: CHECK constraint counts")
     def violations(n: String): Long =
       row.get(n).flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
     val violated = names.filter(violations(_) > 0L)
@@ -2014,10 +2014,10 @@ object VersionedTable {
     * copy-on-write, vs [[overwrite]]'s full rewrite).
     *
     * The scan that finds those files is two-stage, both stages bounded:
-    *  1. the staged batch's per-key-column [min,max] (one small agg)
-    *    prunes the live file list through the log's own i25 stats — a
-    *    merge of one day's keys into a year's table plans ~one day's
-    *    files;
+    *  1. the staged batch's per-key-column [min,max] (observed on the
+    *    staged checkpoint, no job of its own) prunes the live file list
+    *    through the log's own i25 stats — a merge of one day's keys
+    *    into a year's table plans ~one day's files;
     *  2. the surviving candidates are scanned key-columns-only (column-
     *    pruned, DV-aware) carrying per-row file metadata, joined to the staged keys: the
     *    result is the exact matched-file list, file-catalog-sized.
@@ -2060,7 +2060,20 @@ object VersionedTable {
     * current rows per key.
     */
   def txnMerge(staged: DataFrame, table: String, keys: Seq[String],
-      app: String, batch: Long, readVersion: Long = -1L): Option[Long] = {
+      app: String, batch: Long, readVersion: Long = -1L): Option[Long] =
+    mergeStaged(staged, table, keys, app, batch, readVersion, emptyIsNoop = false)
+
+  /** [[txnMerge]]'s body. The staged batch is materialized ONCE, by the
+    * checkpoint below, and that job also yields, through `observe()`, the
+    * batch's row count and per-key [min,max]: no separate range
+    * aggregation or emptiness job. With `emptyIsNoop` an empty batch
+    * commits nothing and returns None — the SCD2 no-op contract of
+    * [[graft.ops.Scd2.mergeVersioned]], which can then hand over its
+    * upsert unmaterialized; [[merge]] and [[txnMerge]] commit an empty
+    * version, as they always did.
+    */
+  private[graft] def mergeStaged(staged: DataFrame, table: String, keys: Seq[String],
+      app: String, batch: Long, readVersion: Long, emptyIsNoop: Boolean): Option[Long] = {
     import org.apache.spark.sql.functions._
     val spark = staged.sparkSession
     val base = snapshotAt(spark, table)
@@ -2072,8 +2085,15 @@ object VersionedTable {
       s"merge keys absent from table schema: ${missing.mkString(", ")}")
     // cheap pre-check: a replayed batch must not even write data files
     if (app != null && base.txns.get(app).exists(_ >= batch)) return None
-    val stagedAligned = align(staged, base.schema).localCheckpoint()
+    val stats = org.apache.spark.sql.Observation()
+    val stagedAligned = align(staged, base.schema)
+      .observe(stats, count(lit(1)).as("__n"),
+        keys.flatMap(k => Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k"))): _*)
+      .localCheckpoint()
     try {
+      val observed = graft.ops.Observations.of(stats, s"merge into $table: staged batch statistics")
+      val stagedRows = observed("__n").asInstanceOf[Long]
+      if (stagedRows == 0L && emptyIsNoop) return None
       // multiple staged rows per key would make the upsert ambiguous —
       // the Delta MERGE multiple-match error, named. Null-key rows are
       // EXCLUDED from the check: they never match a live row and never
@@ -2090,13 +2110,8 @@ object VersionedTable {
           "dedupe upstream (Dedup.latestPerKey), exactly as the reference does")
 
       // stage 1: staged key ranges prune the live file list via log stats
-      val rangeRow = stagedAligned.agg(
-        keys.flatMap(k => Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k"))).head,
-        keys.flatMap(k => Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k"))).tail: _*
-      ).collect()(0)
-      def ext(i: Int): Option[Any] = statCarrier(rangeRow.get(i))
-      val rangePruners = keys.zipWithIndex.flatMap { case (k, i) =>
-        (ext(2 * i), ext(2 * i + 1)) match {
+      val rangePruners = keys.flatMap { k =>
+        (statCarrier(observed(s"__mn_$k")), statCarrier(observed(s"__mx_$k"))) match {
           case (Some(mn), Some(mx)) =>
             Seq(Pruner(k, "ge", Seq(mn)), Pruner(k, "le", Seq(mx)))
           case _ => Nil // all-null or unprunable key type: no stage-1 pruning
@@ -2109,7 +2124,7 @@ object VersionedTable {
       // of the candidates (DV-aware: a key present only in deleted rows is
       // NOT a match), joined to the distinct staged keys
       val matchedFiles: Seq[AddFile] =
-        if (candidates.isEmpty || stagedAligned.isEmpty) Nil
+        if (candidates.isEmpty || stagedRows == 0L) Nil
         else {
           val cand = scanFiles(spark, table, candidates, base.schema, keepMeta = true)
             .select((keys.map(col) :+ col(MetaRelCol)): _*)

@@ -1,0 +1,95 @@
+package graft
+
+import java.sql.Timestamp
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import graft.meta.Audit
+import graft.sources.VersionedTable
+
+/** Spark jobs per call of the medallion's bookkeeping paths, counted the
+  * way a user reads them: a `SparkListener` keeping the jobs of one job
+  * group. Metadata-rate work (an audit row, a merge's counts and key
+  * ranges) must not cost jobs of its own; a reintroduced one fails here.
+  */
+class JobCountSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Jobs started under a fresh job group while `body` runs. Listener
+    * events arrive in order, so once a sentinel job started after `body`
+    * is seen, every job of `body` has been counted.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    val sentinelGroup = s"$group-sentinel"
+    val jobs = new AtomicInteger(0)
+    val sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `sentinelGroup` => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinelGroup, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never seen")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the job counter sees jobs: one count() is at least one job") {
+    assert(jobsOf(spark.range(10).count()) >= 1)
+  }
+
+  test("Audit.log launches no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("audit_jobs").toFile.getAbsolutePath
+    val run = Audit.Run("r1", "bank_a", "tx", "incremental", "ts", null, 0L, "running",
+      new Timestamp(1000), new Timestamp(1000))
+    assert(jobsOf(Audit.log(spark, s"$dir/log", run)) == 0)
+    assert(jobsOf(Audit.log(spark, s"$dir/log",
+      run.copy(status = "succeeded", rows_processed = 7L))) == 0)
+    assert(Audit.latestRuns(spark, s"$dir/log").collect().map(_.getAs[Long]("rows_processed"))
+      .toSeq == Seq(7L))
+  }
+
+  test("one Scd2.mergeVersioned batch runs a pinned number of jobs") {
+    val ts = (d: Int) => new Timestamp(d * 86400000L)
+    val t = java.nio.file.Files.createTempDirectory("scd2_jobs").toFile.getAbsolutePath + "/dim"
+    val dim0 = (1L to 6L).map(i =>
+      (i, s"addr-$i", ts(1), null.asInstanceOf[Timestamp], true))
+      .toDF("id", "addr", "valid_from", "valid_to", "is_current")
+    VersionedTable.create(dim0.repartition(3, col("id")), t)
+    // two changed keys, one unchanged repeat, two new keys
+    val staged = Seq((1L, "addr-1b"), (2L, "addr-2b"), (3L, "addr-3"),
+      (7L, "addr-7"), (8L, "addr-8")).toDF("id", "addr")
+    var v: Option[Long] = None
+    val jobs = jobsOf {
+      v = graft.ops.Scd2.mergeVersioned(spark, t, staged, Seq("id"), Seq("addr"), lit(ts(2)),
+        app = "silver", batch = 1L)
+    }
+    assert(v.isDefined)
+    val current = VersionedTable.read(spark, t).filter(col("is_current"))
+      .select("id", "addr").as[(Long, String)].collect().toMap
+    assert(current == Map(1L -> "addr-1b", 2L -> "addr-2b", 3L -> "addr-3", 4L -> "addr-4",
+      5L -> "addr-5", 6L -> "addr-6", 7L -> "addr-7", 8L -> "addr-8"))
+    // five executions, each a few jobs under AQE: the upsert checkpoint
+    // (its row count and key ranges observed on the same job), the
+    // duplicate-key check, the matched-file scan, and the survivor and
+    // staged writes — nothing re-derives what these produced
+    assert(jobs == 14, s"mergeVersioned ran $jobs jobs")
+    // an unchanged batch runs only the upsert checkpoint and commits nothing
+    val noop = jobsOf {
+      v = graft.ops.Scd2.mergeVersioned(spark, t, Seq((4L, "addr-4")).toDF("id", "addr"),
+        Seq("id"), Seq("addr"), lit(ts(3)), app = "silver", batch = 2L)
+    }
+    assert(v.isEmpty && noop == 3, s"no-op mergeVersioned ran $noop jobs")
+  }
+}

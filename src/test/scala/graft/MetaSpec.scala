@@ -46,6 +46,106 @@ class MetaSpec extends SparkSpec {
     assert(empty.getMessage.contains("invalid"), empty.getMessage)
   }
 
+  test("LoadConfig fails named on out-of-range is_active, load_mode and watermark_column") {
+    val dir = Files.createTempDirectory("cfg_range").toFile.getAbsolutePath
+    def failure(rows: String): String = {
+      val f = s"$dir/cfg_${java.util.UUID.randomUUID()}.csv"
+      Files.writeString(java.nio.file.Paths.get(f),
+        "source_type,source_system,table_name,is_active,load_mode,watermark_column\n" +
+          "sql,bank_a,good,1,full,\n" + rows)
+      intercept[IllegalArgumentException](LoadConfig.activeEntries(spark, f)).getMessage
+    }
+    // is_active other than 0/1 used to read as inactive
+    val active = failure("sql,bank_a,accounts,yes,full,\n")
+    assert(active.contains("bank_a.accounts") && active.contains("is_active 'yes'"), active)
+    // a load_mode other than full/incremental used to run as a full overwrite
+    val mode = failure("sql,bank_b,orders,1,Incremental,ts\n")
+    assert(mode.contains("bank_b.orders") && mode.contains("load_mode 'Incremental'"), mode)
+    // incremental without a watermark column used to reload in full every run
+    val wm = failure("sql,bank_a,tx,1,incremental, \n")
+    assert(wm.contains("bank_a.tx") && wm.contains("watermark_column is blank"), wm)
+    assert(failure("sql,bank_a,tx,1,incremental,\n").contains("bank_a.tx"))
+    // an inactive row is still validated: its value is a config error too
+    assert(failure("sql,bank_a,legacy,2,full,\n").contains("is_active '2'"))
+  }
+
+  test("Audit.log rows are Spark-writer rows: one directory mixing both reads back as one log") {
+    val dir = Files.createTempDirectory("audit_fmt").toFile.getAbsolutePath
+    // microsecond timestamps and a null watermark must survive the round trip
+    val t0 = new Timestamp(1700000000123L); t0.setNanos(123456000)
+    val t1 = new Timestamp(1700000005987L); t1.setNanos(987654000)
+    val runs = Seq(
+      Audit.Run("r1", "bank_a", "tx", "incremental", "ts", null, 0L, "running", t0, t0),
+      Audit.Run("r1", "bank_a", "tx", "incremental", "ts", "2024-01-30 10:00:00", 42L,
+        "succeeded", t0, t1),
+      Audit.Run("r1", "bank_b", "tx", "incremental", "ts", null, 0L, "failed", t0, t1),
+      Audit.Run("r2", "bank_a", "tx", "incremental", "ts", "2024-01-30 10:00:00", 0L,
+        "running", t1, t1))
+    // the writer audit rows used before: one Spark write job per row
+    def sparkAppend(d: String, r: Audit.Run): Unit =
+      Seq(r).toDS().write.mode("append").parquet(d)
+    runs.foreach(sparkAppend(s"$dir/spark", _))
+    runs.foreach(Audit.log(spark, s"$dir/driver", _))
+    runs.zipWithIndex.foreach { case (r, i) =>
+      if (i % 2 == 0) sparkAppend(s"$dir/mixed", r) else Audit.log(spark, s"$dir/mixed", r) }
+
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val logs = Seq("spark", "driver", "mixed").map(d => s"$dir/$d")
+    val expected = runs.map(r => r.productIterator.toSeq).toSet
+    for (l <- logs) {
+      val df = spark.read.parquet(l)
+      assert(df.schema == spark.read.parquet(logs.head).schema, l)
+      assert(df.schema("start_time").dataType == org.apache.spark.sql.types.TimestampType)
+      assert(rows(df.select(runs.head.productElementNames.toSeq.map(col): _*)) == expected, l)
+      assert(rows(Audit.latestRuns(spark, l)) == rows(Audit.latestRuns(spark, logs.head)), l)
+      assert(rows(Audit.latestCompletedRuns(spark, l)) ==
+        rows(Audit.latestCompletedRuns(spark, logs.head)), l)
+    }
+
+    // the files themselves: same parquet schema (INT96 timestamps, a
+    // REQUIRED rows_processed) and the same Spark footer keys
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footer(d: String) = {
+      val f = new java.io.File(d).listFiles().filter(_.getName.startsWith("part-")).head
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter.getFileMetaData finally r.close()
+    }
+    val (fromSpark, fromDriver) = (footer(s"$dir/spark"), footer(s"$dir/driver"))
+    assert(fromDriver.getSchema == fromSpark.getSchema)
+    assert(fromDriver.getKeyValueMetaData == fromSpark.getKeyValueMetaData)
+    val ps = fromDriver.getSchema
+    def field(n: String) = ps.getType(ps.getFieldIndex(n))
+    assert(field("rows_processed").isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED))
+    assert(field("start_time").asPrimitiveType.getPrimitiveTypeName ==
+      org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96)
+    val rowSchema = org.apache.spark.sql.types.DataType.fromJson(
+      fromDriver.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(!rowSchema("rows_processed").nullable)
+    // one file per row, as before
+    assert(new java.io.File(s"$dir/driver").listFiles()
+      .count(_.getName.endsWith(".parquet")) == runs.size)
+  }
+
+  test("Audit.log: a failed publish leaves no visible part- file and no temp file") {
+    val dir = Files.createTempDirectory("audit_fail").toFile.getAbsolutePath
+    val run = Audit.Run("r1", "", "tx", "full", "", null, 3L, "succeeded",
+      new Timestamp(1000), new Timestamp(2000))
+    Audit.log(spark, s"$dir/log", run)
+    def names = new java.io.File(s"$dir/log").listFiles().map(_.getName).toSet
+    val before = names
+    Audit.testHookBeforePublish = () => throw new RuntimeException("publish interrupted")
+    val e = try intercept[RuntimeException] {
+      Audit.log(spark, s"$dir/log", run.copy(run_id = "r2"))
+    } finally Audit.testHookBeforePublish = () => ()
+    assert(e.getMessage == "publish interrupted")
+    assert(names == before, s"left behind: ${names -- before}")
+    assert(spark.read.parquet(s"$dir/log").collect().map(_.getAs[String]("run_id")).toSeq ==
+      Seq("r1"))
+  }
+
   test("Audit prefers terminal rows over running markers in the status views") {
     val dir = Files.createTempDirectory("audit_run").toFile.getAbsolutePath
     val base = Audit.Run("r1", "", "tx", "incremental", "ts", "2024-01-30", 0L,

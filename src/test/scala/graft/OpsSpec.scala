@@ -76,4 +76,16 @@ class OpsSpec extends SparkSpec {
     val out = Incremental.tail(df, col("ts"), "7 DAY").collect()
     assert(out.map(_.getLong(0)).toSet == Set(2L, 3L))
   }
+
+  test("Observations: metrics of an executed frame; a named error, not a hang, when none arrive") {
+    val seen = org.apache.spark.sql.Observation()
+    spark.range(3).observe(seen, count(lit(1)).as("n")).collect()
+    assert(Observations.of(seen, "probe")("n") == 3L)
+    // observed, but the plan that ran is another one: no metrics ever come
+    val unseen = org.apache.spark.sql.Observation()
+    spark.range(3).observe(unseen, count(lit(1)).as("n"))
+    spark.range(3).collect()
+    val e = intercept[IllegalStateException](Observations.of(unseen, "probe"))
+    assert(e.getMessage.startsWith("probe: no observed metrics"), e.getMessage)
+  }
 }

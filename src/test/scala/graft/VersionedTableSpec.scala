@@ -923,6 +923,18 @@ class VersionedTableSpec extends SparkSpec {
       Seq("id"), Seq("addr"), lit(ts(5)), app = "s04", batch = 1L).isEmpty)
   }
 
+  test("merge of an empty staged batch commits an empty version; only " +
+      "Scd2.mergeVersioned treats an empty upsert as a no-op") {
+    val t = tmpTable("emptymerge")
+    VersionedTable.create(Seq((1L, "a")).toDF("id", "v"), t)
+    // a statically empty frame and one that is empty only once executed
+    assert(VersionedTable.merge(Seq.empty[(Long, String)].toDF("id", "v"), t, Seq("id")) == 1L)
+    assert(VersionedTable.merge(Seq((2L, "b")).toDF("id", "v").filter(col("id") > 5L),
+      t, Seq("id")) == 2L)
+    assert(VersionedTable.latestVersion(spark, t) == 2L)
+    assert(VersionedTable.read(spark, t).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
   // ------------------------------------------------ r19: ADVICE fixes
 
   test("merge: null staged keys are legal — two null-key rows land as " +
