@@ -501,10 +501,10 @@ object ExtQueries {
     // aggregate STATE is folded with the new window's partial aggregates —
     // commutative (count, sum) algebra — instead of rescanning history;
     // at scale the merged rows dynamically overwrite only the touched day
-    // partitions (Sinks.dynamicOverwrite). Sums run in DECIMAL so the
-    // two-level reassociation is EXACT and matches the oracle's one-pass
-    // sum (double addition is order-sensitive; decimal is not). The oracle
-    // is the full recompute — the check proves the merge algebra.
+    // partitions (VersionedTable.overwritePartitions). Sums run in DECIMAL
+    // so the two-level reassociation is EXACT and matches the oracle's
+    // one-pass sum (double addition is order-sensitive; decimal is not).
+    // The oracle is the full recompute — the check proves the merge algebra.
     "q62_incremental_agg" -> { (s, d) =>
       // The state/delta split filters on the TIMESTAMP, not the derived
       // day string: a ts predicate pushes to the scan / prunes partitions

@@ -3,14 +3,13 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
-/** Sink writers (i04): partitioned parquet with the three write disciplines
-  * the reference uses — append-only (silver_settlements), full refresh
-  * (gold dims/facts), and dynamic partition overwrite (incremental
-  * re-statements that must not clobber untouched partitions) — plus an
-  * ATOMIC full refresh ([[overwriteAtomic]]) and plain-parquet layout
-  * moves (z-order, compaction, bucketing). The transactional table format
-  * — versions, time travel, per-file stats pruning, MERGE — is
-  * [[VersionedTable]], the one analog of the reference's Delta tables
+/** Sink writers (i04): partitioned parquet with the reference's
+  * append-only (silver_settlements) and full-refresh (gold dims/facts)
+  * disciplines, plus an ATOMIC full refresh ([[overwriteAtomic]]) and
+  * plain-parquet layout moves (z-order, bucketing). The transactional
+  * table format — versions, time travel, per-file stats pruning,
+  * dynamic partition overwrite, compaction, MERGE — is [[VersionedTable]],
+  * the one analog of the reference's Delta tables
   * (reference: 4_silver/silver_transactions.py MERGE INTO ... USING DELTA).
   */
 object Sinks {
@@ -20,17 +19,6 @@ object Sinks {
 
   def overwrite(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit =
     write(df, path, "overwrite", partitionCols)
-
-  /** Overwrite only the partitions present in `df` (requires
-    * spark.sql.sources.partitionOverwriteMode=dynamic, set per-write here so
-    * the session default stays untouched).
-    */
-  def dynamicOverwrite(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .mode("overwrite")
-      .parquet(path)
 
   /** Full refresh that never destroys the current table copy mid-write:
     * the frame is written to a temp directory NEXT TO `path`, then swapped
@@ -232,56 +220,6 @@ object Sinks {
       .sortWithinPartitions(col("_graft_z"))
       .drop("_graft_z")
       .write.mode("overwrite").parquet(path)
-  }
-
-  /** Small-file compaction (i13): rewrite an unpartitioned parquet table
-    * into `ceil(bytes / targetFileBytes)` files via the [[overwriteAtomic]]
-    * swap — the live table is never half-written, and a crash mid-compact
-    * leaves it untouched. The 100 TB problem this serves: a table fed by
-    * incremental appends (the Runner's steady state) accretes one-file-per-
-    * run; every later scan then pays per-file open/footer cost and the
-    * scheduler pays per-split overhead, which quietly dominates once files
-    * outnumber cores by enough. Rewriting through `coalesce` (no shuffle)
-    * keeps the cost at read+write of the data once; output sizes track
-    * input skew rather than rebalancing it (Spark has no shuffle-free
-    * bin-packing), which is the standard compaction trade. A versioned
-    * table compacts as a commit instead ([[VersionedTable.optimize]]).
-    *
-    * Partitioned tables compact per-partition-directory by the same move
-    * (point this at one partition dir); compacting across partition
-    * boundaries would need the partition columns re-derived, which a
-    * caller can do explicitly with a repartition+dynamicOverwrite.
-    *
-    * Returns (filesBefore, filesAfter).
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Fail fast on a PARTITIONED table root: dataFiles() would count 0
-    // top-level part files and the unpartitioned rewrite would materialize
-    // the inferred partition columns as data columns — silently flattening
-    // the on-disk layout for every downstream reader. The documented
-    // contract (point compact at ONE partition directory) becomes a loud
-    // error instead of a quiet corruption.
-    val partDirs = fs.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .map(_.getPath.getName)
-    require(partDirs.isEmpty,
-      s"compact() must target an unpartitioned table or ONE partition " +
-        s"directory; $path has partition-style subdirectories: " +
-        partDirs.take(3).mkString(", "))
-    def dataFiles(): Int = fs.listStatus(p)
-      .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    val before = dataFiles()
-    val bytes = fs.getContentSummary(p).getLength
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // The read materializes INTO the temp dir before any rename touches
-    // the live dir (overwriteAtomic's write-then-swap), so reading the
-    // path being compacted is safe.
-    overwriteAtomic(spark.read.parquet(path).coalesce(n), path)
-    (before, dataFiles())
   }
 
   private def write(df: DataFrame, path: String, mode: String, partitionCols: Seq[String]): Unit = {

@@ -15,9 +15,13 @@ import graft.ops.{Dedup, Scd2}
   * - [[sessionize]]: gap-based session windows via flatMapGroupsWithState
   *   with event-time timeouts (batch equivalent: q17_sessionize).
   * - [[dedupWithinWatermark]]: streaming keyed dedup (silver dedup analog).
-  * - [[scd2Sink]]: foreachBatch SCD2 upsert into a parquet dimension
-  *   (the reference's per-batch Delta MERGE analog,
+  * - [[scd2VersionedSink]]: foreachBatch SCD2 upsert into a versioned
+  *   dimension (the reference's per-batch Delta MERGE,
   *   reference: 4_silver/silver_customers.py:103-170).
+  *
+  * The foreachBatch sinks keep their state in [[BatchLog]]s: one
+  * versioned table per log, partitioned by `batch_id`, where a replay
+  * replaces its own batch and old batches compact into a base batch.
   *
   * Scale: state stores are keyed by user/business key — high cardinality,
   * evenly sharded across `spark.sql.shuffle.partitions` state partitions;
@@ -33,25 +37,6 @@ object Streams {
   // codegen resolves accessor methods by name and a `sum()` accessor
   // collides with the generated aggregate helpers.
   final case class SessState(startUs: Long, endUs: Long, cnt: Long, total: Double)
-
-  /** The replay-idempotence write shared by every batch-log sink: when
-    * `df` is non-empty, dynamic-overwrite its rows into
-    * `dir/batch_id=<batchId>`; when the recomputation produces NOTHING,
-    * delete the stale partition instead — dynamic overwrite of an empty
-    * frame writes no partitions, so a replay after config/state drift
-    * would otherwise silently resurrect rows the replayed batch no longer
-    * produces. One definition, not a per-sink copy.
-    */
-  private def writeBatchPartition(spark: SparkSession, df: DataFrame,
-      dir: String, batchId: Long): Unit =
-    if (df.isEmpty) {
-      val part = new org.apache.hadoop.fs.Path(s"$dir/batch_id=$batchId")
-      val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(part)) fs.delete(part, true)
-    } else {
-      graft.sources.Sinks.dynamicOverwrite(
-        df.withColumn("batch_id", lit(batchId)), dir, Seq("batch_id"))
-    }
 
   /** Watermarked tumbling-window count/sum over an event stream. */
   def windowedAgg(events: DataFrame, watermarkDelay: String, windowLen: String): DataFrame =
@@ -167,27 +152,11 @@ object Streams {
     // returned signature cache is explicitly dropped at the end.
     val sig = MinHash.signature(MinHash.shingleRows(sh, "doc_id"), "doc_id", k,
       inlineHashes = true)
-    // Replay-idempotent: both outputs are partitioned by batch_id and this
-    // batch's partition is dynamically overwritten, so a micro-batch retry
-    // after a failure REPLACES its own rows instead of appending duplicates.
-    // The index read likewise drops any rows a half-finished attempt of
-    // THIS batch already landed — otherwise a replay would join the batch
-    // against its own signatures and emit self-pairs forever after.
-    // Path-missing (first batch ever), corrupt files and schema-mismatch
-    // are DIFFERENT failures: only the first means "no index yet"
-    // (parquetIfExists); a legacy index without the batch_id column must
-    // fail loudly, not be silently treated as empty (which would drop
-    // every pre-existing signature from dedup and mix layouts on disk).
-    val existing =
-      graft.sources.Sources.parquetIfExists(spark, indexDir) match {
-        case None => sig.limit(0) // no index yet
-        case Some(idx) =>
-          require(idx.columns.contains("batch_id"),
-            s"near-dup index at $indexDir lacks the batch_id partition column " +
-              "(legacy layout) — migrate it into batch_id=<n> partitions " +
-              "before streaming resumes")
-          idx.filter(col("batch_id") =!= batchId).drop("batch_id")
-      }
+    // Both outputs are BatchLogs. The index read drops any rows a
+    // half-finished attempt of THIS batch already landed — otherwise a
+    // replay would join the batch against its own signatures and emit
+    // self-pairs forever after.
+    val existing = BatchLog.prior(spark, indexDir, batchId).getOrElse(sig.limit(0))
     val all = existing.unionByName(sig).cache()
     val newBands = MinHash.bands(sig, "doc_id", k, bandRows)
       .withColumnRenamed("doc_id", "id_new")
@@ -206,14 +175,12 @@ object Streams {
       .select(least(col("id_new"), col("id_other")).as("id_a"),
         greatest(col("id_new"), col("id_other")).as("id_b"))
       .distinct()
-    graft.sources.Sinks.dynamicOverwrite(
+    BatchLog.write(
       MinHash.signatureSimilarity(cand, all, "doc_id", k)
-        .filter(col("sig_sim") >= minSigSim)
-        .withColumn("batch_id", lit(batchId)),
-      pairsDir, Seq("batch_id"))
+        .filter(col("sig_sim") >= minSigSim),
+      pairsDir, batchId)
     // Emit pairs first (reads the old index), then extend the index.
-    graft.sources.Sinks.dynamicOverwrite(
-      sig.withColumn("batch_id", lit(batchId)), indexDir, Seq("batch_id"))
+    BatchLog.write(sig, indexDir, batchId)
     all.unpersist(); sig.unpersist()
   }
 
@@ -233,10 +200,8 @@ object Streams {
     *
     * State under `stateDir`: `kept` (doc_id, quality_score), `fps`
     * (kept fingerprints), `sigs` (kept docs' wide signatures) — all
-    * batch_id-partitioned logs, replay-idempotent via the dynamic-
-    * overwrite discipline, compactable with [[compactBatchLog]] (identity
-    * merge). Per-batch cost: one groupBy over the batch + a banded join
-    * against the kept-signature log — never a corpus rescan.
+    * [[BatchLog]]s. Per-batch cost: one groupBy over the batch + a banded
+    * join against the kept-signature log — never a corpus rescan.
     */
   def curateSink(spark: SparkSession, stateDir: String, k: Int = 4,
       bandRows: Int = 2, minSigSim: Double = 0.5, minQuality: Int = 4000)(
@@ -245,16 +210,6 @@ object Streams {
     val keptDir = s"$stateDir/kept"
     val fpsDir = s"$stateDir/fps"
     val sigsDir = s"$stateDir/sigs"
-    def prior(dir: String): Option[DataFrame] =
-      graft.sources.Sources.parquetIfExists(spark, dir)
-        .map { df =>
-          // Same corrupt≠absent discipline as nearDupSink/ivfIndexSink: a
-          // legacy layout without batch_id must fail loudly, not read empty.
-          require(df.columns.contains("batch_id"),
-            s"curation state at $dir lacks the batch_id partition column " +
-              "(legacy layout) — migrate before streaming resumes")
-          df.filter(col("batch_id") =!= batchId).drop("batch_id")
-        }
     // 1. quality gate (TF.qualityGrid — the ONE survivorship formula shared
     // with Curate.keepSet; batch/streaming parity depends on it)
     val gated = batch
@@ -267,13 +222,13 @@ object Streams {
       .agg(min(struct(col("doc_id"), col("_th"), col("text"))).as("_m"))
       .select(col("fp"), col("_m.doc_id").as("doc_id"),
         col("_m._th").as("_th"), col("_m.text").as("text"))
-    val exactKept = prior(fpsDir).fold(perFp)(old =>
+    val exactKept = BatchLog.prior(spark, fpsDir, batchId).fold(perFp)(old =>
       perFp.join(old.select(col("fp")), Seq("fp"), "left_anti")).cache()
     // 3. near-dup vs the kept-signature log and smaller-id batch survivors
     val sh = MinHash.withShingles(exactKept, "doc_id", "text")
     val sig = MinHash.signature(MinHash.shingleRows(sh, "doc_id"), "doc_id", k,
       inlineHashes = true) // no per-batch vocab cache (see nearDupSink)
-    val oldSigs = prior(sigsDir).getOrElse(sig.limit(0))
+    val oldSigs = BatchLog.prior(spark, sigsDir, batchId).getOrElse(sig.limit(0))
     val allSigs = oldSigs.unionByName(sig).cache()
     val newB = MinHash.bands(sig, "doc_id", k, bandRows)
       .withColumnRenamed("doc_id", "id_a")
@@ -292,28 +247,19 @@ object Streams {
       .filter(col("sig_sim") >= minSigSim)
       .select(col("id_a").as("doc_id")).distinct()
     val kept = exactKept.join(dropped, Seq("doc_id"), "left_anti").cache()
-    // 4. replay-idempotent state appends (each batch owns its partition).
-    // A batch keeping nothing writes nothing: an empty partitioned write
-    // would create a file-less directory that later schema inference
-    // cannot read (and replay of a deterministic empty batch re-derives
-    // empty, so skipping stays idempotent).
-    if (!kept.isEmpty) {
-      graft.sources.Sinks.dynamicOverwrite(
-        kept.select(col("doc_id"), (col("_th") / 10000d).as("quality_score"))
-          .withColumn("batch_id", lit(batchId)), keptDir, Seq("batch_id"))
-      graft.sources.Sinks.dynamicOverwrite(
-        kept.select(col("fp")).withColumn("batch_id", lit(batchId)),
-        fpsDir, Seq("batch_id"))
-      graft.sources.Sinks.dynamicOverwrite(
-        sig.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .withColumn("batch_id", lit(batchId)), sigsDir, Seq("batch_id"))
-    }
+    // 4. state appends (each batch owns its partition)
+    BatchLog.write(
+      kept.select(col("doc_id"), (col("_th") / 10000d).as("quality_score")),
+      keptDir, batchId)
+    BatchLog.write(kept.select(col("fp")), fpsDir, batchId)
+    BatchLog.write(sig.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+      sigsDir, batchId)
     kept.unpersist(); allSigs.unpersist(); sig.unpersist(); exactKept.unpersist()
   }
 
   /** Current kept set from the [[curateSink]] state log. */
   def readCurated(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/kept")
 
   /** foreachBatch incremental containment rejection — the streaming face
     * of [[graft.text.Containment]]: drop a batch document whose distinct
@@ -325,9 +271,8 @@ object Streams {
     * the earlier id wins even when a later wrapper covers it).
     *
     * State under `stateDir`: `shingles` — the kept docs' FLAT (doc_id, h)
-    * inverted index — and `kept` (doc_id), both batch_id-partitioned,
-    * replay-idempotent via the dynamic-overwrite discipline, compactable
-    * with [[compactBatchLog]]. Per-batch cost: one inverted-index probe
+    * inverted index — and `kept` (doc_id), both [[BatchLog]]s.
+    * Per-batch cost: one inverted-index probe
     * (batch shingles ⋈ kept index on the hash) + one exact per-pair
     * count — never a corpus rescan, nothing quadratic in the corpus.
     * Docs with no shingles (under two tokens) cannot be contained and
@@ -339,19 +284,12 @@ object Streams {
     import graft.text.{MinHash, TextFunctions => TF}
     val shDir = s"$stateDir/shingles"
     val keptDir = s"$stateDir/kept"
-    def prior(dir: String): Option[DataFrame] =
-      graft.sources.Sources.parquetIfExists(spark, dir).map { df =>
-        require(df.columns.contains("batch_id"),
-          s"containment state at $dir lacks the batch_id partition column " +
-            "(legacy layout) — migrate before streaming resumes")
-        df.filter(col("batch_id") =!= batchId).drop("batch_id")
-      }
     val rows = MinHash.withShingles(batch, "doc_id", "text")
       .select(col("doc_id"), explode(col("shingles")).as("_s"))
       .select(col("doc_id"), TF.hash60(col("_s")).as("h"))
       .cache()
     val sizes = rows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val idx = prior(shDir).getOrElse(rows.limit(0))
+    val idx = BatchLog.prior(spark, shDir, batchId).getOrElse(rows.limit(0))
       .select(col("doc_id").as("id_b"), col("h")).withColumn("_old", lit(true))
       .unionByName(rows.select(col("doc_id").as("id_b"), col("h"))
         .withColumn("_old", lit(false)))
@@ -365,23 +303,14 @@ object Streams {
       .select(col("id_a").as("doc_id")).distinct()
     val kept = batch.select(col("doc_id"))
       .join(dropped, Seq("doc_id"), "left_anti").cache()
-    // Empty-batch discipline as in curateSink: a batch keeping nothing
-    // writes nothing (file-less partition dirs break later reads; replay
-    // re-derives empty deterministically).
-    if (!kept.isEmpty) {
-      graft.sources.Sinks.dynamicOverwrite(
-        kept.withColumn("batch_id", lit(batchId)), keptDir, Seq("batch_id"))
-      val keptRows = rows.join(kept, Seq("doc_id"), "left_semi")
-      if (!keptRows.isEmpty)
-        graft.sources.Sinks.dynamicOverwrite(
-          keptRows.withColumn("batch_id", lit(batchId)), shDir, Seq("batch_id"))
-    }
+    BatchLog.write(kept, keptDir, batchId)
+    BatchLog.write(rows.join(kept, Seq("doc_id"), "left_semi"), shDir, batchId)
     kept.unpersist(); rows.unpersist()
   }
 
   /** Current kept set from the [[containmentSink]] state log. */
   def readContainmentKept(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/kept")
 
   /** foreachBatch streaming SemDeDup — the streaming face of q86
     * ([[graft.sim.Ann.semDedup]]) with FIRST-SEEN-WINS survivorship:
@@ -395,17 +324,15 @@ object Streams {
     *    covered-by-any-earlier rule, so a single batch over empty state
     *    reproduces q86's verdicts exactly — parity is spec-pinned).
     *
-    * State: `kept` (id, bucket, vec, nrm) as a batch_id-partitioned log —
-    * replay-idempotent via dynamic overwrite, compactable with
-    * [[compactBatchLog]] (identity merge). The PERSISTED norm is why the
+    * State: `kept` (id, bucket, vec, nrm) as a [[BatchLog]]. The
+    * PERSISTED norm is why the
     * per-pair arithmetic is one dot product, not three
     * ([[graft.sim.Ann.cosinePre]]): each kept vector's norm is computed
     * once when it enters the log, never re-derived per candidate pair.
     * Pre-r11 logs lacking the `nrm` column fail NAMED (migrate with one
-    * rewrite adding `sqrt(graft_dot(vec, vec))` — the batch_id-layout
-    * discipline). Per-batch cost: one hyperplane pass over the batch + a
-    * bucket equi-join against the kept log — never a corpus rescan, no
-    * window. Bucket granularity is the cost lever
+    * rewrite adding `sqrt(graft_dot(vec, vec))`). Per-batch cost: one
+    * hyperplane pass over the batch + a bucket equi-join against the kept
+    * log — never a corpus rescan, no window. Bucket granularity is the cost lever
     * ([[graft.sim.Ann.planesFor]]): a long-lived index should pick
     * `planes` for the CORPUS it will accumulate, not the batch size —
     * [[semDedupSinkAuto]] derives it from the expected corpus count.
@@ -416,15 +343,12 @@ object Streams {
     val keptDir = s"$stateDir/kept"
     val vecs = batch.select(col("id"), col("vec"), Ann.norm(col("vec")).as("nrm")).cache()
     val withB = vecs.join(Ann.hyperplaneBuckets(vecs, planes), "id")
-    val prior = graft.sources.Sources.parquetIfExists(spark, keptDir).map { df =>
-      require(df.columns.contains("batch_id"),
-        s"semdedup state at $keptDir lacks the batch_id partition column " +
-          "(legacy layout) — migrate before streaming resumes")
+    val prior = BatchLog.prior(spark, keptDir, batchId).map { df =>
       require(df.columns.contains("nrm"),
         s"semdedup state at $keptDir lacks the nrm (precomputed norm) column " +
           "(pre-r11 layout) — rewrite the log once adding nrm = sqrt(dot(vec, vec)) " +
           "before streaming resumes")
-      df.filter(col("batch_id") =!= batchId).drop("batch_id")
+      df
     }
     val covers = prior.getOrElse(withB.limit(0))
       .select(col("bucket"), col("id").as("cover_id"), col("vec").as("cvec"),
@@ -439,12 +363,7 @@ object Streams {
       .filter(Ann.cosinePre(Ann.dot(col("vec"), col("cvec")), col("nrm"), col("cn")) >= tau)
       .select(col("id")).distinct()
     val kept = withB.join(dropped, Seq("id"), "left_anti").cache()
-    // Empty-kept discipline as containmentSink: file-less partition dirs
-    // break later reads; replay re-derives empty deterministically.
-    // Replay idempotence even when the recomputation keeps NOTHING (tau /
-    // planes drift between run and replay, state compaction) — see
-    // writeBatchPartition.
-    writeBatchPartition(spark, kept, keptDir, batchId)
+    BatchLog.write(kept, keptDir, batchId)
     kept.unpersist(); vecs.unpersist()
   }
 
@@ -465,7 +384,7 @@ object Streams {
 
   /** Current kept set from the [[semDedupSink]] state log. */
   def readSemDedupKept(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/kept")
 
   /** foreachBatch benchmark decontamination — the streaming face of
     * [[graft.text.Decontaminate]]: every batch document sharing >= 1 word
@@ -479,9 +398,7 @@ object Streams {
     *
     * STATELESS across batches by design (each doc's verdict depends only
     * on the static eval set — no cross-batch interaction), so replay
-    * idempotence needs only the dynamic-overwrite partition discipline;
-    * both logs are batch_id-partitioned and compactable with
-    * [[compactBatchLog]].
+    * idempotence needs only the [[BatchLog]] partition replace.
     */
   def decontaminateSink(spark: SparkSession, stateDir: String,
       evalGrams: DataFrame, n: Int = 8)(batch: DataFrame, batchId: Long): Unit = {
@@ -493,20 +410,19 @@ object Streams {
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("gram")).as("n_hits"))
       .cache()
-    val clean = batch.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left_anti")
-    // Empty-batch discipline as in curateSink: a side keeping nothing
-    // writes nothing (file-less partition dirs break later reads; replay
-    // re-derives the same emptiness deterministically).
-    if (!clean.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        clean.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/clean", Seq("batch_id"))
-    if (!hits.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        hits.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/flagged", Seq("batch_id"))
+    writeVerdicts(stateDir, batch, hits, batchId)
     hits.unpersist()
+  }
+
+  /** The `clean`/`flagged` logs shared by [[decontaminateSink]] and
+    * [[bloomDecontaminateSink]]: `hits` (doc_id, n_hits) is flagged, the
+    * rest of the batch is clean.
+    */
+  private def writeVerdicts(stateDir: String, batch: DataFrame, hits: DataFrame,
+      batchId: Long): Unit = {
+    BatchLog.write(batch.select(col("doc_id")).join(hits, Seq("doc_id"), "left_anti"),
+      s"$stateDir/clean", batchId)
+    BatchLog.write(hits, s"$stateDir/flagged", batchId)
   }
 
   /** s20: streaming HTML main-content extraction — the streaming face of
@@ -516,24 +432,21 @@ object Streams {
     * batches by construction (extraction is a per-row projection — no
     * cross-document interaction at all), so streaming equals the batch
     * operator row-for-row on any batch split (parity-pinned), and replay
-    * idempotence needs only the dynamic-overwrite partition discipline.
-    * The log is batch_id-partitioned and compactable with
-    * [[compactBatchLog]].
+    * idempotence needs only the [[BatchLog]] partition replace.
     */
   def htmlExtractSink(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id", htmlCol: String = "html",
       minLen: Int = 10, maxLinkPct: Int = 20)(
       batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return // empty-batch discipline: write nothing
-    graft.sources.Sinks.dynamicOverwrite(
-      graft.text.HtmlExtract.mainText(batch, idCol, htmlCol, minLen, maxLinkPct)
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/extracted", Seq("batch_id"))
+    BatchLog.write(
+      graft.text.HtmlExtract.mainText(batch, idCol, htmlCol, minLen, maxLinkPct),
+      s"$stateDir/extracted", batchId)
   }
 
   /** Accumulated extractions from the [[htmlExtractSink]] log. */
   def readExtracted(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/extracted").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/extracted")
 
   /** One-time deployment step for [[bloomDecontaminateSink]] (s19):
     * persist the eval-gram set AND its Bloom filter into the sink's state
@@ -562,8 +475,8 @@ object Streams {
 
   /** s19: streaming decontamination through the persisted Bloom prefilter
     * — [[decontaminateSink]]'s contract (same `clean`/`flagged` logs, same
-    * n_hits semantics, stateless-across-batches, replay-idempotent via
-    * dynamic partition overwrite) with q88's scale path per batch: the
+    * n_hits semantics, stateless-across-batches, replay-idempotent
+    * [[BatchLog]]s) with q88's scale path per batch: the
     * batch's grams probe the ONE-ROW persisted filter (broadcast of
     * ~bits/8 bytes), and only bloom-HITTING candidates reach the exact
     * verify join against the persisted gram set — candidate volume is
@@ -597,16 +510,7 @@ object Streams {
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("gram")).as("n_hits"))
       .cache()
-    val clean = batch.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left_anti")
-    if (!clean.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        clean.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/clean", Seq("batch_id"))
-    if (!hits.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        hits.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/flagged", Seq("batch_id"))
+    writeVerdicts(stateDir, batch, hits, batchId)
     hits.unpersist()
   }
 
@@ -622,7 +526,7 @@ object Streams {
 
   /** Current clean set from the [[decontaminateSink]] log. */
   def readDecontaminated(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/clean").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/clean")
 
   /** s13: streaming dataset-mixture balancing — the streaming face of
     * q81's equalized-strata sampler, closing the sampling family
@@ -641,12 +545,9 @@ object Streams {
     * single-batch stream the thresholds equal the batch operator's and the
     * kept set is IDENTICAL to q81's (parity-pinned in StreamingSpec).
     *
-    * Replay-idempotent like [[decontaminateSink]]: the prior-counts read
-    * excludes the current batch_id and both logs dynamically overwrite
-    * their own batch_id partition, so a micro-batch retry reproduces its
-    * rows. Both logs are batch_id-partitioned and compactable with
-    * [[compactBatchLog]] (`kept/`) / [[compactGoldAgg]]-style refold
-    * (`counts/` partials are sum-mergeable).
+    * Replay-idempotent: the prior-counts read excludes the current batch
+    * and both logs are [[BatchLog]]s, so a micro-batch retry reproduces
+    * its rows. `counts/` partials compact with a re-sum merge.
     *
     * `temperature` selects the damping: 1 = full equalization (q81,
     * default — keep probability n_min/n_s), 2 = temperature sampling
@@ -666,13 +567,7 @@ object Streams {
     if (batch.isEmpty) return // empty-batch discipline: write nothing
     val batchCounts = batch.groupBy(col(stratumCol))
       .agg(count(lit(1)).as("n")).cache()
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/counts")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"mixture counts at $stateDir/counts lack the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
+    val prior = BatchLog.prior(spark, s"$stateDir/counts", batchId)
     val totals = prior match {
       case None => batchCounts
       case Some(p) =>
@@ -702,19 +597,14 @@ object Streams {
       .filter(pmod(graft.ops.Cdm.hash60(col(idCol).cast("string")),
         lit(1000000L)) < threshCol)
       .select(col(idCol), col(stratumCol))
-    if (!kept.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        kept.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/kept", Seq("batch_id"))
-    graft.sources.Sinks.dynamicOverwrite(
-      batchCounts.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/counts", Seq("batch_id"))
+    BatchLog.write(kept, s"$stateDir/kept", batchId)
+    BatchLog.write(batchCounts, s"$stateDir/counts", batchId)
     batchCounts.unpersist()
   }
 
   /** Kept rows accumulated by [[mixtureSink]]. */
   def readMixtureKept(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/kept")
 
   /** s16: streaming per-source adaptive quality cutoff — the streaming
     * face of q84, exact at any corpus scale because the state is a
@@ -742,10 +632,9 @@ object Streams {
     * including itself, earlier batches are not retro-gated (append-only
     * logs). Single-batch stream == q84 exactly (parity-pinned).
     * Replay-idempotent: the prior-histogram read excludes the current
-    * batch_id; both logs dynamically overwrite their own partition, and a
-    * replay whose recomputed kept set is EMPTY deletes the batch's stale
-    * kept partition (dynamic overwrite of an empty frame writes nothing).
-    * `hist/` partials are sum-mergeable and compactable.
+    * batch and both logs are [[BatchLog]]s (a replay whose recomputed kept
+    * set is EMPTY clears the batch's stale kept rows). `hist/` partials
+    * compact with a re-sum merge.
     */
   def qualityCutoffSink(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id", sourceCol: String = "source",
@@ -764,13 +653,7 @@ object Streams {
         .as("quality_grid"))
     val batchHist = scored.groupBy(col(sourceCol), col("quality_grid"))
       .agg(count(lit(1)).as("n")).cache()
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/hist")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"quality histogram at $stateDir/hist lacks the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
+    val prior = BatchLog.prior(spark, s"$stateDir/hist", batchId)
     val cumulative = prior match {
       case None => batchHist
       case Some(p) =>
@@ -792,38 +675,14 @@ object Streams {
       .join(broadcast(cutoffs), Seq(sourceCol))
       .filter(col("quality_grid") >= col("cutoff_grid"))
       .select(col(idCol), col(sourceCol), col("quality_grid"), col("cutoff_grid"))
-    // Replay idempotence even when the recomputation keeps NOTHING
-    // (cutoff drift after compaction, config change) — see
-    // writeBatchPartition.
-    writeBatchPartition(spark, kept, s"$stateDir/kept", batchId)
-    graft.sources.Sinks.dynamicOverwrite(
-      batchHist.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/hist", Seq("batch_id"))
+    BatchLog.write(kept, s"$stateDir/kept", batchId)
+    BatchLog.write(batchHist, s"$stateDir/hist", batchId)
     batchHist.unpersist()
   }
 
   /** Kept rows accumulated by [[qualityCutoffSink]]. */
   def readQualityKept(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
-
-  /** [[compactBatchLog]] for the [[mixtureSink]] stratum-count partials:
-    * the refold is the partials' own merge algebra (sum per stratum), so
-    * cumulative totals — and therefore future thresholds — are unchanged
-    * (spec-pinned).
-    */
-  def compactMixtureCounts(spark: SparkSession, stateDir: String,
-      stratumCol: String = "lang", keepLast: Int = 1): Boolean =
-    compactBatchLog(spark, s"$stateDir/counts", keepLast, df =>
-      df.groupBy(col(stratumCol)).agg(sum(col("n")).as("n")))
-
-  /** [[compactBatchLog]] for the [[qualityCutoffSink]] histogram partials:
-    * refold = sum per (source, grid) — cumulative histograms, and
-    * therefore future cutoffs, are unchanged (spec-pinned).
-    */
-  def compactQualityHist(spark: SparkSession, stateDir: String,
-      sourceCol: String = "source", keepLast: Int = 1): Boolean =
-    compactBatchLog(spark, s"$stateDir/hist", keepLast, df =>
-      df.groupBy(col(sourceCol), col("quality_grid")).agg(sum(col("n")).as("n")))
+    BatchLog.rows(spark, s"$stateDir/kept")
 
   /** s14: streaming line-level exact dedup — the streaming face of q82
     * ([[graft.text.LineDedup]]): corpus-wide FIRST-SEEN-WINS at line
@@ -842,10 +701,9 @@ object Streams {
     * (doc_id, line_idx) order whenever arrival order agrees with id
     * order (the s10 parity discipline — a streaming dedup cannot un-keep).
     *
-    * Replay-idempotent: the seen read excludes the current batch_id and
-    * both logs dynamic-overwrite their own partition, so a retry
-    * reproduces — not duplicates — its rows. Logs are batch_id-partitioned
-    * and compactable with [[compactBatchLog]].
+    * Replay-idempotent: the seen read excludes the current batch and
+    * both logs are [[BatchLog]]s, so a retry reproduces — not duplicates —
+    * its rows.
     */
   def lineDedupSink(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -854,13 +712,7 @@ object Streams {
     if (batch.isEmpty) return // empty-batch discipline: write nothing
     val m = LineDedup.markLines(batch, idCol, textCol, delimRegex)
       .withColumn("_lh", md5(col("line")))
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/seen")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"line-dedup seen log at $stateDir/seen lacks the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
+    val prior = BatchLog.prior(spark, s"$stateDir/seen", batchId)
     // LEFT-join marker, not an anti-join: the rollup needs EVERY line of
     // the doc with its final verdict, not just the survivors.
     val adjusted = (prior match {
@@ -873,20 +725,15 @@ object Streams {
     val docs = LineDedup.rollup(
       adjusted.select(col(idCol), col("line_idx"), col("line"), col("kept")),
       idCol)
-    graft.sources.Sinks.dynamicOverwrite(
-      docs.withColumn("batch_id", lit(batchId)), s"$stateDir/docs", Seq("batch_id"))
-    val newSeen = adjusted.filter(col("kept"))
-      .select(col("_lh").as("line_hash")).distinct()
-    if (!newSeen.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        newSeen.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/seen", Seq("batch_id"))
+    BatchLog.write(docs, s"$stateDir/docs", batchId)
+    BatchLog.write(adjusted.filter(col("kept")).select(col("_lh").as("line_hash")).distinct(),
+      s"$stateDir/seen", batchId)
     adjusted.unpersist()
   }
 
   /** Per-doc line-dedup rollups accumulated by [[lineDedupSink]]. */
   def readLineDedup(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/docs").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/docs")
 
   /** s18: streaming duplicate-substring span detection — the streaming
     * face of q87 ([[graft.text.SpanDedup]]): per arriving batch, the token
@@ -905,19 +752,17 @@ object Streams {
     * inverted log, never a corpus rescan), and the bounded per-doc window
     * — no doc pair is ever materialized, so there is nothing to cap.
     *
-    * State: `seen/` = distinct gram hashes, batch_id-partitioned,
-    * compactable with [[compactBatchLog]] (refold = distinct); only grams
-    * the batch INTRODUCES are appended, so the log is vocabulary-sized.
-    * Replay-idempotent FOR THE LATEST BATCH — the only batch structured
-    * streaming's foreachBatch contract ever replays: the seen read
-    * excludes the current batch_id, both outputs dynamic-overwrite their
-    * own partition, and a replay that produces NO spans deletes its stale
-    * spans partition (the qualityCutoffSink discipline). The `=!= batchId`
-    * filter deliberately does NOT mean replaying an OLDER batch is
+    * State: `seen/` = distinct gram hashes, a [[BatchLog]] (compaction
+    * merge = distinct); only grams the batch INTRODUCES are appended, so
+    * the log is vocabulary-sized. Replay-idempotent FOR THE LATEST BATCH —
+    * the only batch structured streaming's foreachBatch contract ever
+    * replays: the seen read excludes the current batch, and a replay that
+    * produces NO spans clears its stale spans. Excluding only the current
+    * batch deliberately does NOT make replaying an OLDER batch
     * first-seen-faithful (it would see grams later batches introduced);
-    * a `< batchId` filter can't offer that either once [[compactBatchLog]]
-    * has refolded the partitions, so the contract is stated at the
-    * foreachBatch guarantee, same as the repo's other sinks.
+    * excluding every later batch can't offer that either once compaction
+    * has refolded them, so the contract is stated at the foreachBatch
+    * guarantee, same as the other sinks.
     */
   def spanDedupSink(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 8)(
@@ -925,13 +770,7 @@ object Streams {
     import graft.text.SpanDedup
     if (batch.isEmpty) return // empty-batch discipline: write nothing
     val p = SpanDedup.postings(batch, idCol, textCol, n).cache()
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/seen")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"span-dedup seen log at $stateDir/seen lacks the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
+    val prior = BatchLog.prior(spark, s"$stateDir/seen", batchId)
     val batchDup = SpanDedup.dupGrams(p, idCol)
     val dupSrc = prior match {
       case None => batchDup
@@ -939,21 +778,19 @@ object Streams {
     }
     val spans = SpanDedup.mergeSpans(
       p.join(dupSrc, Seq("h"), "left_semi"), idCol, n)
-    writeBatchPartition(spark, spans, s"$stateDir/spans", batchId)
+    BatchLog.write(spans, s"$stateDir/spans", batchId)
     val distinctH = p.select(col("h")).distinct()
     val newSeen = prior match {
       case None => distinctH
       case Some(st) => distinctH.join(st.select(col("h")), Seq("h"), "left_anti")
     }
-    // Same discipline for the gram log: a replay that introduces nothing
-    // must not leave stale "seen" grams claiming coverage they lost.
-    writeBatchPartition(spark, newSeen, s"$stateDir/seen", batchId)
+    BatchLog.write(newSeen, s"$stateDir/seen", batchId)
     p.unpersist()
   }
 
   /** Duplicate spans accumulated by [[spanDedupSink]]. */
   def readSpans(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/spans").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/spans")
 
   /** s21: streaming first-occurrence gram novelty — the streaming face of
     * q99 ([[graft.text.SpanDedup.novelty]]): each arriving document is
@@ -970,9 +807,8 @@ object Streams {
     * Per-batch cost is q99's linear story: distinct batch postings, one
     * vocab-sized min agg, one anti-join against the seen log (inverted,
     * never a corpus rescan), one per-doc count. State = distinct gram
-    * hashes, batch_id-partitioned, compactable with [[compactBatchLog]];
-    * replay-idempotent via the `=!= batchId` read + dynamic overwrite of
-    * both logs (latest-batch contract, the spanDedupSink note).
+    * hashes in a [[BatchLog]]; replay-idempotent for the latest batch
+    * (the spanDedupSink note).
     */
   def noveltySink(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 8)(
@@ -982,13 +818,7 @@ object Streams {
     if (batch.isEmpty) return // empty-batch discipline: write nothing
     val p = SpanDedup.postings(batch, idCol, textCol, n)
       .select(col(idCol), col("h")).distinct().cache()
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/seen")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"novelty seen log at $stateDir/seen lacks the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
+    val prior = BatchLog.prior(spark, s"$stateDir/seen", batchId)
     val owners = p.groupBy(col("h")).agg(min(col(idCol)).as("_owner"))
     val withOwner = p.join(owners, Seq("h"))
     val scored = (prior match {
@@ -1004,22 +834,19 @@ object Streams {
       .select(col(idCol), col("n_grams"), col("n_novel"),
         (floor(col("n_novel") * lit(10000.0) / col("n_grams") + 0.5) / 10000.0)
           .as("novelty_frac"))
-    // writeBatchPartition for BOTH logs (the spanDedupSink discipline):
-    // a replay that scores nothing must delete its stale docs partition,
-    // not leave the failed attempt's rows readable.
-    writeBatchPartition(spark, scored, s"$stateDir/docs", batchId)
+    BatchLog.write(scored, s"$stateDir/docs", batchId)
     val distinctH = p.select(col("h")).distinct()
     val newSeen = prior match {
       case None => distinctH
       case Some(st) => distinctH.join(st.select(col("h")), Seq("h"), "left_anti")
     }
-    writeBatchPartition(spark, newSeen, s"$stateDir/seen", batchId)
+    BatchLog.write(newSeen, s"$stateDir/seen", batchId)
     p.unpersist()
   }
 
   /** Per-doc novelty rollups accumulated by [[noveltySink]]. */
   def readNovelty(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/docs").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/docs")
 
   /** s15: streaming token-budget shard packing — the streaming face of
     * q71 ([[graft.ops.ShardPack]]): a live training-data writer assigning
@@ -1036,39 +863,37 @@ object Streams {
     * agrees with id order (the s10 parity discipline; a streaming writer
     * cannot re-sort history).
     *
-    * Replay-idempotent: the totals read excludes the current batch_id and
-    * both logs dynamic-overwrite their own partition. Logs compact with
-    * [[compactBatchLog]] (`docs/`); `totals/` partials are sum-mergeable.
+    * Replay-idempotent: the totals read excludes the current batch and
+    * both logs are [[BatchLog]]s; `totals/` partials are sum-mergeable.
     */
   def shardPackSink(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id", weightCol: String = "n_tokens",
       budget: Long = 512, bucketSize: Long = 1L << 20)(
       batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return // empty-batch discipline: write nothing
-    val priorTotal = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/totals")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"shard-pack totals at $stateDir/totals lack the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
-      .map(_.agg(sum(col("total"))).head.getLong(0))
-      .getOrElse(0L)
+    val priorTotal = priorTotalOf(spark, s"$stateDir/totals", batchId)
     val assigned = graft.ops.ShardPack.assign(
       batch, idCol, weightCol, budget, bucketSize, offset = priorTotal).cache()
-    graft.sources.Sinks.dynamicOverwrite(
-      assigned.withColumn("batch_id", lit(batchId)), s"$stateDir/docs", Seq("batch_id"))
-    val batchTotal = assigned.agg(sum(col(weightCol))).head.getLong(0)
-    graft.sources.Sinks.dynamicOverwrite(
-      spark.range(1).select(lit(batchTotal).as("total"),
-        lit(batchId).as("batch_id")),
-      s"$stateDir/totals", Seq("batch_id"))
+    BatchLog.write(assigned, s"$stateDir/docs", batchId)
+    writeTotal(spark, s"$stateDir/totals", assigned.agg(sum(col(weightCol))).head.getLong(0),
+      batchId)
     assigned.unpersist()
   }
 
   /** Shard assignments accumulated by [[shardPackSink]]. */
   def readShardPack(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/docs").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/docs")
+
+  /** The running token offset of the s15/s31/s32 packers: the sum of
+    * every other batch's `totals` row (0 before the first batch).
+    */
+  private def priorTotalOf(spark: SparkSession, dir: String, batchId: Long): Long =
+    BatchLog.prior(spark, dir, batchId)
+      .map(_.agg(sum(col("total"))).head.getLong(0)).getOrElse(0L)
+
+  private def writeTotal(spark: SparkSession, dir: String, total: Long,
+      batchId: Long): Unit =
+    BatchLog.write(spark.range(1).select(lit(total).as("total")), dir, batchId)
 
   // --------------------------------------------------------------------
   // s31: streaming sequence packing (r16) — q113 at intake, the s15
@@ -1083,42 +908,29 @@ object Streams {
     * carried in a totals log ([[shardPackSink]]'s shape) — the
     * accumulated manifest EQUALS the batch q113 manifest over the
     * ordered union (spec-pinned), including the sequence that straddles
-    * the batch boundary. Replay-idempotent: docs/totals overwrite their
-    * own batch_id partition and the prior-total read excludes the
-    * current batch.
+    * the batch boundary. Replay-idempotent: docs/totals are
+    * [[BatchLog]]s and the prior-total read excludes the current batch.
     */
   def sequencePackSink(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id", weightCol: String = "n_tokens",
       seqLen: Long = 256, bucketSize: Long = 1L << 20)(
       batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return // empty-batch discipline: write nothing
-    val priorTotal = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/totals")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"sequence-pack totals at $stateDir/totals lack the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
-      .map(_.agg(sum(col("total"))).head.getLong(0))
-      .getOrElse(0L)
+    val priorTotal = priorTotalOf(spark, s"$stateDir/totals", batchId)
     batch.persist()
     try {
-      graft.sources.Sinks.dynamicOverwrite(
+      BatchLog.write(
         graft.ops.SequencePack.manifest(batch, idCol, weightCol, seqLen,
-            bucketSize, offset = priorTotal)
-          .withColumn("batch_id", lit(batchId)),
-        s"$stateDir/manifest", Seq("batch_id"))
-      val batchTotal = batch.agg(sum(col(weightCol))).head.getLong(0)
-      graft.sources.Sinks.dynamicOverwrite(
-        spark.range(1).select(lit(batchTotal).as("total"),
-          lit(batchId).as("batch_id")),
-        s"$stateDir/totals", Seq("batch_id"))
+          bucketSize, offset = priorTotal),
+        s"$stateDir/manifest", batchId)
+      writeTotal(spark, s"$stateDir/totals", batch.agg(sum(col(weightCol))).head.getLong(0),
+        batchId)
     } finally { batch.unpersist(); () }
   }
 
   /** The packing manifest accumulated by [[sequencePackSink]]. */
   def readSequencePack(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/manifest").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/manifest")
 
   // --------------------------------------------------------------------
   // s33: streaming revisit gate (r17) — the archive's own dedup signal
@@ -1131,9 +943,8 @@ object Streams {
   /** foreachBatch revisit logger over [[graft.sources.Warc.stream]]'s
     * unified frame (or a batch records frame — the in-band `reason`
     * column is filtered when present): batch N lands its
-    * [[graft.sources.Warc.revisitEdges]] under `edges/batch_id=N` and
-    * its `response` captures under `docs/batch_id=N` (both
-    * replay-idempotent partition overwrites). The GATE runs at READ time
+    * [[graft.sources.Warc.revisitEdges]] in the `edges` [[BatchLog]] and
+    * its `response` captures in `docs`. The GATE runs at READ time
     * ([[readRevisitGated]]), deliberately: a revisit record can arrive
     * batches after the capture it declares a duplicate (archives
     * interleave), and a gate-at-arrival would miss every such late
@@ -1149,20 +960,11 @@ object Streams {
       else batch
     recs.persist()
     try {
-      // a batch with no revisits (the common case) writes no edges
-      // partition — an all-empty parquet tree would be uninferable
-      val edges = graft.sources.Warc.revisitEdges(recs)
-      if (!edges.isEmpty)
-        graft.sources.Sinks.dynamicOverwrite(
-          edges.withColumn("batch_id", lit(batchId)),
-          s"$stateDir/edges", Seq("batch_id"))
-      val docs = recs.filter(col("warc_type") === "response")
-        .select(col("url"), col("fetch_ts"), col("content_type"),
-          col("payload"), col("warc_file"), col("rec_offset"))
-      if (!docs.isEmpty)
-        graft.sources.Sinks.dynamicOverwrite(
-          docs.withColumn("batch_id", lit(batchId)),
-          s"$stateDir/docs", Seq("batch_id"))
+      BatchLog.write(graft.sources.Warc.revisitEdges(recs), s"$stateDir/edges", batchId)
+      BatchLog.write(recs.filter(col("warc_type") === "response")
+          .select(col("url"), col("fetch_ts"), col("content_type"),
+            col("payload"), col("warc_file"), col("rec_offset")),
+        s"$stateDir/docs", batchId)
     } finally { recs.unpersist(); () }
   }
 
@@ -1171,28 +973,9 @@ object Streams {
     * log) — equals the batch composition over the ordered union
     * regardless of which batch each declaration arrived in.
     */
-  def readRevisitGated(spark: SparkSession, stateDir: String): DataFrame = {
-    // BOTH logs can legitimately not exist yet: a stream whose first
-    // batches carry only revisit/metadata records writes edges but no
-    // docs (archives interleave) — the read must return empty, not crash
-    val docs = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/docs")
-      .map(_.drop("batch_id"))
-      .getOrElse {
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("url", StringType),
-            StructField("fetch_ts", TimestampType),
-            StructField("content_type", StringType),
-            StructField("payload", BinaryType),
-            StructField("warc_file", StringType),
-            StructField("rec_offset", LongType))))
-      }
-    graft.sources.Sources.parquetIfExists(spark, s"$stateDir/edges") match {
-      case None => docs
-      case Some(e) =>
-        graft.sources.Warc.dropDeclaredDuplicates(docs, e.drop("batch_id"))
-    }
-  }
+  def readRevisitGated(spark: SparkSession, stateDir: String): DataFrame =
+    graft.sources.Warc.dropDeclaredDuplicates(
+      BatchLog.rows(spark, s"$stateDir/docs"), BatchLog.rows(spark, s"$stateDir/edges"))
 
   // --------------------------------------------------------------------
   // s32: streaming token-shard materialization (r17) — i22's writer at
@@ -1206,11 +989,12 @@ object Streams {
     * a virtual id−1 doc, the q113 manifest runs at the stream's carried
     * offset, and the batch's COMPLETE sequences write as
     * [[graft.sources.TokenShards]]-format files under
-    * `stateDir/shards/batch_id=N/` (replay = directory overwrite, the
-    * dynamicOverwrite discipline); the new partial tail becomes the next
-    * batch's carry. State: `totals` (per-batch additive token counts, the
-    * s15/s31 offset hook), `carry` (latest-wins open-sequence tokens —
-    * bounded at seqLen−1 ints, metadata-rate), `shards` (the artifact).
+    * `stateDir/shards/batch_id=N/` (replay = directory overwrite); the
+    * new partial tail becomes the next batch's carry. State: `totals`
+    * (per-batch additive token counts, the s15/s31 offset hook) and
+    * `carry` (latest-wins open-sequence tokens — bounded at seqLen−1
+    * ints, metadata-rate) are [[BatchLog]]s; `shards` is the artifact, a
+    * file tree, not a log.
     * Replay-idempotent: totals/carry reads EXCLUDE the current batch and
     * the batch's shard directory rewrites in place, so a retried batch
     * reproduces — not duplicates — its files. [[readTokenShards]] over
@@ -1223,20 +1007,10 @@ object Streams {
       bucketSize: Long = 1L << 20)(batch: DataFrame, batchId: Long): Unit = {
     import spark.implicits._
     if (batch.isEmpty) return // empty-batch discipline: write nothing
-    val priorTotal = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/totals")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"token-shard totals at $stateDir/totals lack the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
-      .map(_.agg(sum(col("total"))).head.getLong(0))
-      .getOrElse(0L)
-    val carry: Seq[Int] = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/carry")
-      .map(_.filter(col("batch_id") < batchId))
-      .filter(!_.isEmpty)
-      .map(_.orderBy(col("batch_id").desc).select(col("tokens"))
-        .as[Seq[Int]].head())
+    val priorTotal = priorTotalOf(spark, s"$stateDir/totals", batchId)
+    val carry: Seq[Int] = BatchLog.readIfExists(spark, s"$stateDir/carry")
+      .flatMap(_.filter(col("batch_id") < batchId).orderBy(col("batch_id").desc)
+        .select(col("tokens")).as[Seq[Int]].take(1).headOption)
       .getOrElse(Seq.empty)
     // the open sequence began at the last seqLen boundary; carry holds
     // exactly the tokens past it
@@ -1280,17 +1054,11 @@ object Streams {
           case many => sys.error(
             s"${many.size} partial sequences in one batch — manifest invariant broken")
         }
-        graft.sources.Sinks.dynamicOverwrite(
-          Seq((newCarry, batchId)).toDF("tokens", "batch_id"),
-          s"$stateDir/carry", Seq("batch_id"))
+        BatchLog.write(Seq(newCarry).toDF("tokens"), s"$stateDir/carry", batchId)
         // from the persisted frame, batch rows only — not a second
         // evaluation of the micro-batch source
-        val batchTotal = dt.filter(col("doc_id") >= 0)
-          .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
-        graft.sources.Sinks.dynamicOverwrite(
-          spark.range(1).select(lit(batchTotal).as("total"),
-            lit(batchId).as("batch_id")),
-          s"$stateDir/totals", Seq("batch_id"))
+        writeTotal(spark, s"$stateDir/totals", dt.filter(col("doc_id") >= 0)
+          .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0), batchId)
       } finally { seqs.unpersist(); () }
     } finally { dt.unpersist(); () }
   }
@@ -1340,9 +1108,8 @@ object Streams {
     * door. Each micro-batch of (doc_id, payload, media_type) rows decodes
     * with MEMBER-LEVEL quarantine (a corrupt payload costs one reason row,
     * never the batch — the i17/s30 discipline) and the q122 rules run as
-    * the same exact integer comparisons; three batch_id-partitioned logs
-    * land per batch (replay = partition overwrite, compactable with the
-    * identity merge):
+    * the same exact integer comparisons; three [[BatchLog]]s land per
+    * batch:
     *  - `kept`: stats rows that passed every rule — what flows downstream
     *    to s24's dHash dedup;
     *  - `dropped`: stats rows with `reasons` naming the FAILED rules
@@ -1361,12 +1128,8 @@ object Streams {
         .as(Encoders.product[graft.multimodal.Binary.MediaPayload]))
       .persist()
     try {
-      // writeBatchPartition, not raw dynamic overwrite: a replay under
-      // TIGHTENED thresholds can legitimately recompute an empty log for
-      // the batch, and the stale partition must die with it
-      writeBatchPartition(spark,
-        stats.filter(col("reason").isNotNull)
-          .select(col("doc_id"), col("reason")),
+      BatchLog.write(
+        stats.filter(col("reason").isNotNull).select(col("doc_id"), col("reason")),
         s"$stateDir/quarantine", batchId)
       val ok = stats.filter(col("reason").isNull)
         .withColumn("big_enough", col("width") * col("height") >= minPixels)
@@ -1379,11 +1142,11 @@ object Streams {
           col("width").cast("long") * col("height") * 3 * minMeanByte)
         .withColumn("keep",
           col("big_enough") && col("aspect_ok") && col("filled_enough"))
-      writeBatchPartition(spark,
+      BatchLog.write(
         ok.filter(col("keep"))
           .select(col("doc_id"), col("width"), col("height"), col("sum_bytes")),
         s"$stateDir/kept", batchId)
-      writeBatchPartition(spark,
+      BatchLog.write(
         ok.filter(!col("keep"))
           .select(col("doc_id"), col("width"), col("height"), col("sum_bytes"),
             concat_ws(",",
@@ -1394,27 +1157,11 @@ object Streams {
     } finally { stats.unpersist(); () }
   }
 
-  /** The gate's accumulated survivor stats — what feeds s24. A gate whose
-    * every batch dropped or quarantined all members never creates (or
-    * deletes) the `kept` directory, so absence means EMPTY, not error.
+  /** The gate's accumulated survivor stats — what feeds s24 (empty, not
+    * missing, when every member was dropped or quarantined).
     */
-  def readImageGate(spark: SparkSession, stateDir: String): DataFrame = {
-    val kept = new org.apache.hadoop.fs.Path(s"$stateDir/kept")
-    val fs = kept.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(kept))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("width",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("height",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("sum_bytes",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$stateDir/kept").drop("batch_id")
-  }
+  def readImageGate(spark: SparkSession, stateDir: String): DataFrame =
+    BatchLog.rows(spark, s"$stateDir/kept")
 
   /** foreachBatch streaming IVF index maintenance — the streaming face of
     * the [[graft.sim.Ann]] trained quantizer: each micro-batch of
@@ -1423,19 +1170,18 @@ object Streams {
     * and folded into those statistics. The first batch BOOTSTRAPS the
     * quantizer ([[graft.sim.Ann.kmeansCells]], deterministic).
     *
-    * State layout: `indexDir` holds (id, vec, label) partitioned by
-    * batch_id (the queryable corpus — [[graft.sim.Ann.ivfTopK]] runs
-    * directly over it); `statsDir` holds per-batch per-cell running sums
-    * (batch_id, label, pos, s, n) — k·d rows per batch, metadata-rate.
+    * State layout ([[BatchLog]]s): `indexDir` holds (id, vec, label) (the
+    * queryable corpus — [[graft.sim.Ann.ivfTopK]] runs directly over
+    * its rows); `statsDir` holds per-batch per-cell running sums
+    * (label, pos, s, n) — k·d rows per batch, metadata-rate.
     * Centroids are derived as Σs/Σn over the stats history, so they drift
     * WITH the stream (new points move their cell's mean) without ever
     * re-reading the corpus; a periodic full retrain (rerunning
     * kmeansCells over the index) is caller policy, as in any IVF system.
     *
-    * Replay-idempotent like [[nearDupSink]]: both outputs dynamically
-    * overwrite their own batch_id partition, and the stats read excludes
-    * the current batch, so a micro-batch retry reproduces — not
-    * duplicates — its rows.
+    * Replay-idempotent like [[nearDupSink]]: the stats read excludes the
+    * current batch, so a micro-batch retry reproduces — not duplicates —
+    * its rows.
     *
     * Scale: assignment is one broadcast-centroid pass over the batch;
     * stats aggregation is k·d rows; nothing touches the accumulated
@@ -1446,14 +1192,8 @@ object Streams {
     import spark.implicits._
     import graft.sim.Ann
     val vecs = batch.select(col("id"), col("vec"))
-    val prior =
-      graft.sources.Sources.parquetIfExists(spark, statsDir)
-        .map { st =>
-          require(st.columns.contains("batch_id"),
-            s"IVF stats at $statsDir lack the batch_id partition column")
-          st.filter(col("batch_id") =!= batchId)
-        }
-        .filter(!_.isEmpty) // replay of the bootstrap batch re-bootstraps
+    // replay of the bootstrap batch re-bootstraps
+    val prior = BatchLog.prior(spark, statsDir, batchId)
     // Per-(label, pos) prior sums feed assignment AND the drift signal —
     // k·d rows, cached for the three consumers below.
     val priorSums = prior.map(_.groupBy(col("label"), col("pos"))
@@ -1467,14 +1207,10 @@ object Streams {
             x => x.getField("c")).as("cvec"))
         Ann.assignCells(vecs, cent)
     }
-    val staged = assigned.withColumn("batch_id", lit(batchId)).cache()
-    graft.sources.Sinks.dynamicOverwrite(staged, indexDir, Seq("batch_id"))
-    val batchStats = staged
-      .select(col("label"), posexplode(col("vec")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n")).cache()
-    graft.sources.Sinks.dynamicOverwrite(
-      batchStats.withColumn("batch_id", lit(batchId)), statsDir, Seq("batch_id"))
+    val staged = assigned.cache()
+    BatchLog.write(staged, indexDir, batchId)
+    val batchStats = cellStats(staged).cache()
+    BatchLog.write(batchStats, statsDir, batchId)
     // Drift/retrain signal (metadata-rate, written to `<statsDir>_drift`):
     // mean L2 displacement of the stats-derived centroids caused by folding
     // THIS batch in. A stationary stream keeps it near zero; a drifting one
@@ -1497,43 +1233,35 @@ object Streams {
           .agg(avg(sqrt(col("d2"))))
           .head().getDouble(0)
     }
-    graft.sources.Sinks.dynamicOverwrite(
-      Seq((batchId, disp)).toDF("batch_id", "mean_displacement"),
-      s"${statsDir}_drift", Seq("batch_id"))
+    BatchLog.write(Seq(disp).toDF("mean_displacement"), s"${statsDir}_drift", batchId)
     priorSums.foreach(_.unpersist()); batchStats.unpersist(); staged.unpersist()
   }
 
+  /** Per-(label, pos) running sums of assigned vectors — the IVF stats rows. */
+  private def cellStats(assigned: DataFrame): DataFrame =
+    assigned.select(col("label"), posexplode(col("vec")).as(Seq("pos", "v")))
+      .groupBy(col("label"), col("pos"))
+      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
+
   /** Full retrain of the streamed IVF index — the caller policy the drift
     * signal triggers: re-run the deterministic quantizer over the whole
-    * accumulated corpus, atomically replace the index with the re-labeled
-    * assignment folded into ONE base partition, and collapse the stats
-    * history to the retrained cells' sums. Subsequent batches then assign
-    * against the re-centered centroids and the drift signal restarts near
-    * zero until the stream drifts again.
-    *
-    * Replay safety: the retrained layout keeps the batch_id partition
-    * column (base id [[BaseBatchId]]), so a later micro-batch replay still
-    * overwrites only its own partition. A crash between the two swaps
-    * leaves index/stats from different generations — re-running the
-    * retrain repairs it (kmeansCells is deterministic, both swaps are
-    * idempotent).
+    * accumulated corpus, replace the index with the re-labeled
+    * assignment as the ONE base batch ([[BaseBatchId]]), and collapse the
+    * stats history to the retrained cells' sums — one overwrite commit
+    * per log. Subsequent batches then assign against the re-centered
+    * centroids and the drift signal restarts near zero until the stream
+    * drifts again. A crash between the two commits leaves index/stats
+    * from different generations — re-running the retrain repairs it
+    * (kmeansCells is deterministic, both commits are idempotent).
     */
   def ivfRetrain(spark: SparkSession, indexDir: String, statsDir: String,
       k: Int = 4, trainIters: Int = 2): Unit = {
     import graft.sim.Ann
-    val corpus = spark.read.parquet(indexDir).select(col("id"), col("vec"))
-    // Materialized BEFORE the swap: the lazy plan reads the very files the
-    // overwrite replaces.
-    val retrained = Ann.kmeansCells(corpus, k, trainIters)
-      .withColumn("batch_id", lit(BaseBatchId)).localCheckpoint()
-    graft.sources.Sinks.overwriteAtomic(retrained, indexDir, Seq("batch_id"))
-    graft.sources.Sinks.overwriteAtomic(
-      retrained
-        .select(col("label"), posexplode(col("vec")).as(Seq("pos", "v")))
-        .groupBy(col("label"), col("pos"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .withColumn("batch_id", lit(BaseBatchId)),
-      statsDir, Seq("batch_id"))
+    val corpus = BatchLog.rows(spark, indexDir).select(col("id"), col("vec"))
+    // materialized once for both commits (k-means is iterative)
+    val retrained = Ann.kmeansCells(corpus, k, trainIters).localCheckpoint()
+    BatchLog.replace(retrained, indexDir, BaseBatchId)
+    BatchLog.replace(cellStats(retrained), statsDir, BaseBatchId)
   }
 
   /** foreachBatch incremental gold-aggregate sink — the streaming face of
@@ -1543,9 +1271,9 @@ object Streams {
     * the current aggregate. History is NEVER rescanned — per batch this
     * writes one groupBy over the batch, metadata-rate rows.
     *
-    * Replay-idempotent via the same batch_id dynamic-overwrite discipline
-    * as the other sinks. Compaction (merging many batch partitions into
-    * one) is caller policy, exactly like any log-structured store.
+    * A [[BatchLog]], replay-idempotent like the other sinks. Compaction
+    * ([[BatchLog.compact]] with the re-sum merge the reader applies) is
+    * caller policy, exactly like any log-structured store.
     *
     * `groupCols` must not include the reserved `_n`/`_s`/`batch_id`.
     */
@@ -1553,12 +1281,11 @@ object Streams {
       valueCol: String)(batch: DataFrame, batchId: Long): Unit = {
     val reserved = Seq("_n", "_s", "batch_id").intersect(groupCols)
     require(reserved.isEmpty, s"reserved group columns: ${reserved.mkString(", ")}")
-    graft.sources.Sinks.dynamicOverwrite(
+    BatchLog.write(
       batch.groupBy(groupCols.map(col): _*)
         .agg(count(lit(1)).as("_n"),
-          sum(col(valueCol).cast("decimal(28,6)")).as("_s"))
-        .withColumn("batch_id", lit(batchId)),
-      statsDir, Seq("batch_id"))
+          sum(col(valueCol).cast("decimal(28,6)")).as("_s")),
+      statsDir, batchId)
   }
 
   /** Current aggregate from the partial-state log written by
@@ -1566,79 +1293,24 @@ object Streams {
     */
   def readGoldAgg(spark: SparkSession, statsDir: String,
       groupCols: Seq[String]): DataFrame =
-    spark.read.parquet(statsDir)
+    BatchLog.rows(spark, statsDir)
       .groupBy(groupCols.map(col): _*)
       .agg(sum(col("_n")).as("n_rows"), sum(col("_s")).as("sum_value"))
 
-  /** Reserved batch_id for compacted/base partitions — real micro-batch
-    * ids are Spark-assigned and non-negative, so the base never collides
-    * with (or is overwritten by) a replayed batch.
+  /** Reserved batch id of compacted/retrained base rows
+    * ([[BatchLog.compact]], [[ivfRetrain]]) — real micro-batch ids are
+    * Spark-assigned and non-negative, so the base never collides with (or
+    * is overwritten by) a replayed batch.
     */
   val BaseBatchId: Long = -1L
-
-  /** Compact a batch_id-partitioned log (the [[nearDupSink]] signature
-    * index, [[goldAggSink]] partials): fold every partition EXCEPT the
-    * newest `keepLast` real batches into the single base partition
-    * ([[BaseBatchId]]), leaving read cost bounded by keepLast + 1
-    * partitions instead of growing with total batch count — the one
-    * unbounded term in the log-structured streaming story.
-    *
-    * `merge` re-aggregates the folded rows (identity for row logs like
-    * signature indexes; a groupBy re-sum for partial-aggregate logs — see
-    * [[compactGoldAgg]]).
-    *
-    * Replay safety: Structured Streaming only ever replays the LAST
-    * uncommitted micro-batch, and `keepLast >= 1` keeps at least that
-    * partition un-folded — a replay then dynamic-overwrites its own
-    * partition exactly as before compaction. The rewrite itself is one
-    * atomic whole-directory swap ([[graft.sources.Sinks.overwriteAtomic]]):
-    * the folded base + kept partitions are fully written to a temp dir
-    * (reading the live one) before the rename — a crash mid-compaction
-    * leaves the uncompacted log intact.
-    *
-    * Returns true when a fold happened, false when there was nothing to
-    * compact.
-    */
-  def compactBatchLog(spark: SparkSession, dir: String, keepLast: Int,
-      merge: DataFrame => DataFrame = identity): Boolean = {
-    require(keepLast >= 1,
-      s"keepLast must cover the micro-batch replay window (>= 1), got $keepLast")
-    // Partition-value inference may type batch_id int; normalize to long.
-    val df = spark.read.parquet(dir)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-    val ids = df.select(col("batch_id")).distinct().collect().map(_.getLong(0))
-    val foldable = ids.filter(_ != BaseBatchId).sorted.dropRight(keepLast)
-    if (foldable.isEmpty) return false
-    val keepIds = ids.filter(i => i != BaseBatchId && !foldable.contains(i))
-    val folded = merge(
-      df.filter(col("batch_id") === BaseBatchId ||
-        col("batch_id").isin(foldable.toSeq: _*)).drop("batch_id"))
-      .withColumn("batch_id", lit(BaseBatchId))
-    val kept = df.filter(col("batch_id").isin(keepIds.toSeq: _*))
-    graft.sources.Sinks.overwriteAtomic(
-      folded.unionByName(kept), dir, Seq("batch_id"))
-    true
-  }
-
-  /** [[compactBatchLog]] for the [[goldAggSink]] partial-aggregate log:
-    * folding re-applies the merge algebra (sum of counts, sum of exact
-    * decimal sums — cast back to the partials' decimal(28,6) so the base
-    * partition's schema matches freshly-written batch partitions).
-    */
-  def compactGoldAgg(spark: SparkSession, statsDir: String,
-      groupCols: Seq[String], keepLast: Int): Boolean =
-    compactBatchLog(spark, statsDir, keepLast, df =>
-      df.groupBy(groupCols.map(col): _*)
-        .agg(sum(col("_n")).as("_n"),
-          sum(col("_s")).cast("decimal(28,6)").as("_s")))
 
   /** s26: streaming LINK-GRAPH intake — q105's live face on the s09
     * partial-aggregate template. Each micro-batch of (id, html, base_url)
     * pages extracts outbound links ([[graft.text.HtmlExtract.links]]:
     * visible anchors, resolved + canonicalized, non-http filtered), drops
     * self-host edges, and lands host-pair edge PARTIALS
-    * (src_host, target_host, _n_links, _n_docs) in the batch's own
-    * batch_id partition — replay = partition overwrite. Per-batch doc
+    * (src_host, target_host, _n_links, _n_docs) as the batch's rows of a
+    * [[BatchLog]]. Per-batch doc
     * counts SUM across batches because a page arrives in exactly ONE
     * intake batch (the same invariant every batch_id log here leans on);
     * a re-crawled page is a NEW capture and counts again, matching what
@@ -1655,42 +1327,30 @@ object Streams {
       idCol: String = "doc_id", htmlCol: String = "html",
       baseCol: String = "base_url")(batch: DataFrame, batchId: Long): Unit = {
     val lk = graft.text.HtmlExtract.links(batch, idCol, htmlCol, baseCol)
-    graft.sources.Sinks.dynamicOverwrite(
+    BatchLog.write(
       lk.filter(col("target_host") =!= col("src_host"))
         .groupBy(col("src_host"), col("target_host"))
         .agg(count(lit(1)).as("_n_links"),
-          countDistinct(col(idCol)).as("_n_docs"))
-        .withColumn("batch_id", lit(batchId)),
-      edgesDir, Seq("batch_id"))
+          countDistinct(col(idCol)).as("_n_docs")),
+      edgesDir, batchId)
   }
 
   /** Current host-pair edge rollup from the [[linkGraphSink]] partial log
     * — the q105 output shape (src_host, target_host, n_links, n_docs).
     */
   def readLinkGraph(spark: SparkSession, edgesDir: String): DataFrame =
-    spark.read.parquet(edgesDir)
+    BatchLog.rows(spark, edgesDir)
       .groupBy(col("src_host"), col("target_host"))
       .agg(sum(col("_n_links")).as("n_links"), sum(col("_n_docs")).as("n_docs"))
 
-  /** [[compactBatchLog]] for the link-graph partial log: re-sum the edge
-    * partials into the base partition.
-    */
-  def compactLinkGraph(spark: SparkSession, edgesDir: String,
-      keepLast: Int): Boolean =
-    compactBatchLog(spark, edgesDir, keepLast, df =>
-      df.groupBy(col("src_host"), col("target_host"))
-        .agg(sum(col("_n_links")).as("_n_links"),
-          sum(col("_n_docs")).as("_n_docs")))
-
   /** s28: streaming crawl frontier — q107 at intake. Each micro-batch of
-    * (id, html, base_url) pages lands TWO batch_id-partitioned logs:
+    * (id, html, base_url) pages lands TWO [[BatchLog]]s:
     * citation partials per resolved+canonical target
     * (target_url, target_host, _n — per-batch distinct citing docs; a
     * page arrives in one batch, so partials SUM), and the crawled set as
     * hash60 of each page's canonical url (one long per page — the s14
     * seen-hash discipline, the cheapest corpus-rate state there is).
-    * Replay = partition overwrite on both logs; cites compact with a
-    * re-sum merge, crawled with the identity merge.
+    * Cites compact with a re-sum merge, crawled with the identity merge.
     *
     * [[readFrontier]] is the scheduling read: fold citations, anti-join
     * the crawled hashes, per-host top-k (the q107 politeness cap). The
@@ -1706,16 +1366,14 @@ object Streams {
     batch.persist()
     try {
       val lk = graft.text.HtmlExtract.links(batch, idCol, htmlCol, baseCol)
-      graft.sources.Sinks.dynamicOverwrite(
+      BatchLog.write(
         lk.groupBy(col("target_url"), col("target_host"))
-          .agg(countDistinct(col(idCol)).as("_n"))
-          .withColumn("batch_id", lit(batchId)),
-        s"$stateDir/cites", Seq("batch_id"))
-      graft.sources.Sinks.dynamicOverwrite(
+          .agg(countDistinct(col(idCol)).as("_n")),
+        s"$stateDir/cites", batchId)
+      BatchLog.write(
         batch.select(graft.text.TextFunctions.hash60(
-            graft.text.Urls.canonicalize(col(baseCol))).as("url_h")).distinct()
-          .withColumn("batch_id", lit(batchId)),
-        s"$stateDir/crawled", Seq("batch_id"))
+          graft.text.Urls.canonicalize(col(baseCol))).as("url_h")).distinct(),
+        s"$stateDir/crawled", batchId)
     } finally { batch.unpersist(); () }
   }
 
@@ -1724,9 +1382,8 @@ object Streams {
     * DECLARE): each micro-batch of sitemap bodies
     * ([[graft.sources.Warc.sitemapBodies]] shape) extracts page locs
     * ([[graft.text.Sitemaps.entries]], entity-decoded), canonicalizes,
-    * and lands distinct (target_url, target_host) rows in the batch's own
-    * batch_id partition under `stateDir/sitemap` — replay = partition
-    * overwrite, compactable with the identity merge. [[readFrontier]]
+    * and lands distinct (target_url, target_host) rows in the
+    * `stateDir/sitemap` [[BatchLog]]. [[readFrontier]]
     * unions these in as ZERO-citation candidates tagged
     * `source = sitemap`; a page both declared and cited ranks by its
     * citations (`source = both`). Child-sitemap refs (`kind = sitemap`)
@@ -1742,9 +1399,7 @@ object Streams {
       .select(col("target_url"),
         graft.text.Urls.domain(col("target_url")).as("target_host"))
       .distinct()
-    graft.sources.Sinks.dynamicOverwrite(
-      locs.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/sitemap", Seq("batch_id"))
+    BatchLog.write(locs, s"$stateDir/sitemap", batchId)
   }
 
   /** Current frontier from the [[frontierSink]] (+ optional
@@ -1765,11 +1420,10 @@ object Streams {
   def readFrontier(spark: SparkSession, stateDir: String, k: Int,
       crawlDelays: Option[DataFrame] = None,
       windowSec: Long = 60): DataFrame = {
-    val cites = spark.read.parquet(s"$stateDir/cites")
+    val cites = BatchLog.rows(spark, s"$stateDir/cites")
       .groupBy(col("target_url"), col("target_host"))
       .agg(sum(col("_n")).as("n_citations"))
-    val cand0 = graft.sources.Sources
-      .parquetIfExists(spark, s"$stateDir/sitemap") match {
+    val cand0 = BatchLog.readIfExists(spark, s"$stateDir/sitemap") match {
       case None => cites.withColumn("source", lit("anchor"))
       case Some(sm) =>
         val declared = sm.select(col("target_url"), col("target_host"))
@@ -1782,7 +1436,7 @@ object Streams {
               .when(col("_sm").isNotNull, "sitemap")
               .otherwise("anchor").as("source"))
     }
-    val crawled = spark.read.parquet(s"$stateDir/crawled")
+    val crawled = BatchLog.rows(spark, s"$stateDir/crawled")
       .select(col("url_h")).distinct()
     val cand = cand0.join(crawled,
       graft.text.TextFunctions.hash60(col("target_url")) === col("url_h"),
@@ -1794,13 +1448,12 @@ object Streams {
 
   /** s27: streaming PCA scatter accumulation — q110's FIT at intake.
     * Each micro-batch of embedding rows lands ONE partial row
-    * (batch_id, n, sums d, scatter d²) in its own batch_id partition —
+    * (n, sums d, scatter d²) as its batch's rows of a [[BatchLog]] —
     * the s09 partial-aggregate template where the "group" is the whole
     * model: the [n, Σv, Σvvᵀ] buffer is an exact merge algebra
-    * (element-wise sums), so the fold is lossless and replay = partition
-    * overwrite. State is MODEL-rate: one (1+d+d²)-double row per batch
-    * (33 KB at d=64), compactable with plain [[compactBatchLog]]
-    * (identity merge — the read-side fold re-sums anyway).
+    * (element-wise sums), so the fold is lossless. State is MODEL-rate:
+    * one (1+d+d²)-double row per batch (33 KB at d=64), compactable with
+    * the identity merge (the read-side fold re-sums anyway).
     *
     * [[readPcaModel]] folds the log and runs the same driver Jacobi as
     * the batch fit — the s08 recompute-from-accumulated-state retrain
@@ -1820,11 +1473,9 @@ object Streams {
     val agg = graft.sim.Pca.scatterOf(batch, vecCol)
     val d = graft.sim.Pca.dimOf(agg.length)
     import spark.implicits._
-    val row = Seq((agg(0), agg.slice(1, 1 + d).toSeq,
-      agg.slice(1 + d, agg.length).toSeq))
-      .toDF("n", "sums", "scatter")
-      .withColumn("batch_id", lit(batchId))
-    graft.sources.Sinks.dynamicOverwrite(row, statsDir, Seq("batch_id"))
+    BatchLog.write(Seq((agg(0), agg.slice(1, 1 + d).toSeq,
+        agg.slice(1 + d, agg.length).toSeq)).toDF("n", "sums", "scatter"),
+      statsDir, batchId)
   }
 
   /** Fold the [[pcaScatterSink]] partial log into a PCA model: exact
@@ -1833,7 +1484,7 @@ object Streams {
     */
   def readPcaModel(spark: SparkSession, statsDir: String,
       k: Int): graft.sim.Pca.Model = {
-    val rows = spark.read.parquet(statsDir)
+    val rows = BatchLog.rows(spark, statsDir)
       .select(col("n"), col("sums"), col("scatter")).collect()
     require(rows.nonEmpty, s"no PCA partials at $statsDir")
     val d = rows.head.getSeq[Double](1).length
@@ -1856,38 +1507,9 @@ object Streams {
     graft.sim.Pca.modelFromScatter(acc, k)
   }
 
-  /** foreachBatch SCD2 upsert sink: each micro-batch is deduped to its
-    * latest row per key and merged into the parquet dimension at `dimPath`
-    * with [[Scd2.merge]] semantics.
-    */
-  def scd2Sink(spark: SparkSession, dimPath: String, keys: Seq[String], attrs: Seq[String])(
-      batch: DataFrame, batchId: Long): Unit = {
-    val staged = Dedup.latestPerKey(batch, keys, Seq(col("ts").desc))
-      .select((keys ++ attrs).map(col): _*)
-    // Path-missing only (parquetIfExists): a CORRUPT dim must abort the
-    // batch, not be mistaken for "no dim yet" — the atomic overwrite
-    // below would replace the only (possibly recoverable) copy.
-    val existing = graft.sources.Sources.parquetIfExists(spark, dimPath) match {
-      case Some(dim) =>
-        // localCheckpoint, not cache(): an evicted cached partition would
-        // re-read the dim path mid-merge; the checkpoint is materialized
-        // (memory+disk) and never recomputes from the source path.
-        dim.localCheckpoint()
-      case None =>
-        staged.limit(0)
-          .withColumn("valid_from", lit(null).cast("timestamp"))
-          .withColumn("valid_to", lit(null).cast("timestamp"))
-          .withColumn("is_current", lit(true))
-    }
-    val merged = Scd2.merge(existing, staged, keys, attrs, current_timestamp())
-    // Atomic swap: a crash mid-write leaves the current dim readable —
-    // the self-overwrite would otherwise destroy the only copy
-    // (the reference gets this from Delta MERGE transactionality).
-    graft.sources.Sinks.overwriteAtomic(merged, dimPath)
-  }
-
-  /** [[scd2Sink]] riding the i23 transaction log (r18): each micro-batch
-    * upserts ROW-LEVEL via [[Scd2.mergeVersioned]] — only the files
+  /** foreachBatch SCD2 upsert sink on the i23 transaction log (r18): each
+    * micro-batch is deduped to its latest row per key and upserts
+    * ROW-LEVEL via [[Scd2.mergeVersioned]] — only the files
     * holding expired/inserted rows are rewritten (the reference's actual
     * Delta MERGE write path), the dimension's full history stays
     * time-travelable, and exactly-once replay comes from the log's (app,
@@ -1932,12 +1554,12 @@ object Streams {
     * oov_rate).
     */
   def readTokenizerDrift(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/drift")
+    BatchLog.read(spark, s"$stateDir/drift")
 
   /** foreachBatch tokenizer-drift monitor — the s08 drift/retrain template
     * for the DEPLOYED byte-level BPE merges (q92/q95/q96's tokenizer):
-    * each micro-batch of documents lands its word counts in its own
-    * batch_id partition, and two metadata-rate metrics are computed under
+    * each micro-batch of documents lands its word counts in a
+    * [[BatchLog]], and two metadata-rate metrics are computed under
     * the CURRENT merge table:
     *
     *  - `fertility`: average subwords per word OCCURRENCE — THE tokenizer
@@ -1956,9 +1578,9 @@ object Streams {
     * the ACCUMULATED word counts and atomically swaps the table (the s08
     * `ivfRetrain` shape; fertility then returns to baseline).
     *
-    * Replay-idempotent: words/drift overwrite their own batch_id
-    * partition; the bootstrap decision reads prior-batch state EXCLUDING
-    * the current batch id, so a replay of the first batch re-trains the
+    * Replay-idempotent: words/drift are [[BatchLog]]s; the bootstrap
+    * decision reads prior-batch state EXCLUDING the current batch id, so
+    * a replay of the first batch re-trains the
     * identical (deterministic) table. Scale: per batch, one
     * map-side-combined word count + one vocab-sized projection through
     * the native encode — never a corpus rescan; the encode's merge table
@@ -1979,11 +1601,8 @@ object Streams {
       .cache()
     // a non-empty batch of all-empty texts is the same degenerate case
     if (words.isEmpty) { words.unpersist(); return }
-    graft.sources.Sinks.dynamicOverwrite(
-      words.withColumn("batch_id", lit(batchId)), s"$stateDir/words", Seq("batch_id"))
-    val hasPrior = graft.sources.Sources
-      .parquetIfExists(spark, s"$stateDir/words")
-      .exists(!_.filter(col("batch_id") =!= batchId).isEmpty)
+    BatchLog.write(words, s"$stateDir/words", batchId)
+    val hasPrior = BatchLog.prior(spark, s"$stateDir/words", batchId).isDefined
     val merges: Seq[String] =
       if (!hasPrior) {
         // bootstrap (or bootstrap replay): deterministic train on THIS batch
@@ -2003,8 +1622,7 @@ object Streams {
         (sum(col("c") * col("t")).cast("double") / sum(col("c"))).as("fertility"),
         (sum(when(col("t") === col("base"), col("c")).otherwise(0L)).cast("double") /
           sum(col("c"))).as("oov_rate"))
-      .withColumn("batch_id", lit(batchId))
-    graft.sources.Sinks.dynamicOverwrite(drift, s"$stateDir/drift", Seq("batch_id"))
+    BatchLog.write(drift, s"$stateDir/drift", batchId)
     words.unpersist()
   }
 
@@ -2038,12 +1656,12 @@ object Streams {
   }
 
   /** foreachBatch streaming scoring under the DEPLOYED q100 weights:
-    * each micro-batch of (doc_id, text) lands (doc_id, logit, pass) in
-    * its own batch_id partition — single-batch output EQUAL to the batch
+    * each micro-batch of (doc_id, text) lands (doc_id, logit, pass) in a
+    * [[BatchLog]] — single-batch output EQUAL to the batch
     * [[graft.text.QualityClassifier.score]] under the same weights
     * (parity-pinned; the scoring face is a pure function of the batch, so
-    * the stream face is stateless-across-batches and replay-idempotent by
-    * partition overwrite, the s12 decontamination discipline). A missing
+    * the stream face is stateless-across-batches and replay-idempotent,
+    * the s12 decontamination discipline). A missing
     * deployment fails NAMED. Per batch: one explode + two map-side-
     * combined aggs + a broadcast join against the dim-row weights table —
     * scan-shaped on the intake.
@@ -2055,15 +1673,13 @@ object Streams {
       throw new IllegalArgumentException(
         s"no deployed weights at $stateDir/weights — run prepareClassifier first")
     val w = readClassifierWeights(spark, stateDir)
-    graft.sources.Sinks.dynamicOverwrite(
-      graft.text.QualityClassifier.score(batch, idCol, textCol, w)
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/scored", Seq("batch_id"))
+    BatchLog.write(graft.text.QualityClassifier.score(batch, idCol, textCol, w),
+      s"$stateDir/scored", batchId)
   }
 
   /** Accumulated scores from the [[classifierScoreSink]] log. */
   def readClassifierScores(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/scored").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/scored")
 
   // --------------------------------------------------------------------
   // s24: streaming perceptual image dedup (r15) — q101's live-intake face.
@@ -2082,11 +1698,9 @@ object Streams {
     * appends the batch's hashes to the index.
     *
     * All three outputs (`index`, `pairs`, `quarantine`) are
-    * batch_id-partitioned logs: replay = partition overwrite
-    * (idempotent), compactable with [[compactBatchLog]]. The index read
-    * drops any rows a half-finished attempt of THIS batch already landed
-    * — the [[nearDupSink]] self-pair guard. State is one 2-long row per
-    * doc — the cheapest index in the family.
+    * [[BatchLog]]s. The index read drops any rows a half-finished attempt
+    * of THIS batch already landed — the [[nearDupSink]] self-pair guard.
+    * State is one 2-long row per doc — the cheapest index in the family.
     */
   def imageDedupSink(spark: SparkSession, stateDir: String,
       maxHamming: Int = 16, idCol: String = "doc_id",
@@ -2100,22 +1714,12 @@ object Streams {
       batch.select(col(idCol).cast("long").as("doc_id"),
           col(payloadCol).as("payload"), lit("image/png").as("media_type"))
         .as[graft.multimodal.Binary.MediaPayload]).cache()
-    graft.sources.Sinks.dynamicOverwrite(
-      decoded.filter(col("decode_error").isNotNull)
-        .select(col("doc_id"), col("decode_error"))
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/quarantine", Seq("batch_id"))
+    BatchLog.write(
+      decoded.filter(col("decode_error").isNotNull).select(col("doc_id"), col("decode_error")),
+      s"$stateDir/quarantine", batchId)
     val fresh = decoded.filter(col("decode_error").isNull)
       .select(col("doc_id"), col("dhash"))
-    val existing =
-      graft.sources.Sources.parquetIfExists(spark, indexDir) match {
-        case None => fresh.limit(0)
-        case Some(idx) =>
-          require(idx.columns.contains("batch_id"),
-            s"image-dedup index at $indexDir lacks the batch_id partition " +
-              "column (legacy layout) — migrate before streaming resumes")
-          idx.filter(col("batch_id") =!= batchId).drop("batch_id")
-      }
+    val existing = BatchLog.prior(spark, indexDir, batchId).getOrElse(fresh.limit(0))
     val all = existing.unionByName(fresh).cache()
     val newBands = ImageHash.bandRows(fresh)
       .select(col("band"), col("band_val"), col("doc_id").as("id_new"))
@@ -2133,17 +1737,14 @@ object Streams {
       .withColumn("hamming", expr("bit_count(h_a ^ h_b)"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    graft.sources.Sinks.dynamicOverwrite(
-      verified.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/pairs", Seq("batch_id"))
-    graft.sources.Sinks.dynamicOverwrite(
-      fresh.withColumn("batch_id", lit(batchId)), indexDir, Seq("batch_id"))
+    BatchLog.write(verified, s"$stateDir/pairs", batchId)
+    BatchLog.write(fresh, indexDir, batchId)
     all.unpersist(); decoded.unpersist()
   }
 
   /** Accumulated near-dup image pairs from the [[imageDedupSink]] log. */
   def readImagePairs(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/pairs").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/pairs")
 
   // --------------------------------------------------------------------
   // s30: streaming perceptual audio dedup (r16) — q111's live-intake
@@ -2160,9 +1761,8 @@ object Streams {
     * [[graft.text.SimHash.BandBucketCap]] on the index side), Hamming-
     * verifies, appends to the index. A re-encoded (volume-scaled) upload
     * of an already-ingested clip pairs at Hamming 0 — the q111 invariance
-    * carried live. Index/pairs/quarantine are batch_id-partitioned logs:
-    * replay = partition overwrite, compactable; index state is one
-    * 2-long row per clip.
+    * carried live. Index/pairs/quarantine are [[BatchLog]]s; index state
+    * is one 2-long row per clip.
     */
   def audioDedupSink(spark: SparkSession, stateDir: String,
       maxHamming: Int = 8, idCol: String = "doc_id",
@@ -2176,18 +1776,12 @@ object Streams {
       batch.select(col(idCol).cast("long").as("doc_id"),
           col(payloadCol).as("payload"), lit("audio/wav").as("media_type"))
         .as[graft.multimodal.Binary.MediaPayload]).cache()
-    graft.sources.Sinks.dynamicOverwrite(
-      decoded.filter(col("decode_error").isNotNull)
-        .select(col("doc_id"), col("decode_error"))
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/quarantine", Seq("batch_id"))
+    BatchLog.write(
+      decoded.filter(col("decode_error").isNotNull).select(col("doc_id"), col("decode_error")),
+      s"$stateDir/quarantine", batchId)
     val fresh = decoded.filter(col("decode_error").isNull)
       .select(col("doc_id"), col("clip.fp").as("fp"))
-    val existing =
-      graft.sources.Sources.parquetIfExists(spark, indexDir) match {
-        case None => fresh.limit(0)
-        case Some(idx) => idx.filter(col("batch_id") =!= batchId).drop("batch_id")
-      }
+    val existing = BatchLog.prior(spark, indexDir, batchId).getOrElse(fresh.limit(0))
     val all = existing.unionByName(fresh).cache()
     val newBands = Audio.bandRows(fresh)
       .select(col("band"), col("band_val"), col("doc_id").as("id_new"))
@@ -2205,18 +1799,14 @@ object Streams {
       .withColumn("hamming", expr("bit_count(h_a ^ h_b)"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    graft.sources.Sinks.dynamicOverwrite(
-      verified.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/pairs", Seq("batch_id"))
-    graft.sources.Sinks.dynamicOverwrite(
-      fresh.withColumn("batch_id", lit(batchId)), indexDir, Seq("batch_id"))
+    BatchLog.write(verified, s"$stateDir/pairs", batchId)
+    BatchLog.write(fresh, indexDir, batchId)
     all.unpersist(); decoded.unpersist()
-    ()
   }
 
   /** Accumulated near-dup audio pairs from the [[audioDedupSink]] log. */
   def readAudioPairs(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/pairs").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/pairs")
 
   // --------------------------------------------------------------------
   // s25: streaming robots gate (r15) — i18 at intake.
@@ -2234,11 +1824,11 @@ object Streams {
       robots.select(col("domain"), col("robots_txt")), s"$stateDir/robots")
 
   /** foreachBatch robots verdicts under the DEPLOYED policy table: each
-    * micro-batch lands with a `robots_allowed` column in its own batch_id
-    * partition. Stateless-across-batches (a verdict is a pure function of
+    * micro-batch lands with a `robots_allowed` column in a [[BatchLog]].
+    * Stateless-across-batches (a verdict is a pure function of
     * the row and the deployed table), so streamed output EQUALS batch
     * [[graft.sources.Robots.verdicts]] under the same table
-    * (parity-pinned) and replay = partition overwrite. A missing
+    * (parity-pinned). A missing
     * deployment fails NAMED — an ungated crawl must never look gated.
     */
   def robotsGateSink(spark: SparkSession, stateDir: String, agent: String,
@@ -2247,15 +1837,13 @@ object Streams {
       throw new IllegalArgumentException(
         s"no deployed robots table at $stateDir/robots — run prepareRobots first")
     val robots = spark.read.parquet(s"$stateDir/robots")
-    graft.sources.Sinks.dynamicOverwrite(
-      graft.sources.Robots.verdicts(spark, batch, urlCol, robots, agent)
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/verdicts", Seq("batch_id"))
+    BatchLog.write(graft.sources.Robots.verdicts(spark, batch, urlCol, robots, agent),
+      s"$stateDir/verdicts", batchId)
   }
 
   /** Accumulated verdicts from the [[robotsGateSink]] log. */
   def readRobotsVerdicts(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/verdicts").drop("batch_id")
+    BatchLog.rows(spark, s"$stateDir/verdicts")
 
   /** Retrain the deployed merge table from the ACCUMULATED word counts and
     * swap it atomically — the caller policy [[tokenizerDriftSink]]'s drift
@@ -2270,7 +1858,7 @@ object Streams {
       maxWords: Int = 1 << 16): Seq[String] = {
     import spark.implicits._
     import graft.text.Bpe
-    val wc = spark.read.parquet(s"$stateDir/words")
+    val wc = BatchLog.rows(spark, s"$stateDir/words")
       .groupBy(col("w")).agg(sum(col("c")).as("c"))
       .orderBy(col("c").desc, col("w")).limit(maxWords)
       .as[(String, Long)].collect().toSeq
@@ -2310,11 +1898,11 @@ object Streams {
     * unk_rate).
     */
   def readUnigramDrift(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/drift")
+    BatchLog.read(spark, s"$stateDir/drift")
 
   /** foreachBatch unigram-tokenizer drift monitor — [[tokenizerDriftSink]]
     * verbatim for the q112 model: each micro-batch lands its word counts
-    * in its own batch_id partition and two metadata-rate metrics compute
+    * in a [[BatchLog]] and two metadata-rate metrics compute
     * under the CURRENTLY-DEPLOYED piece table:
     *
     *  - `fertility`: average pieces per word OCCURRENCE (the same
@@ -2328,8 +1916,8 @@ object Streams {
     * counts ([[graft.text.Unigram.trainOnCounts]]); subsequent batches
     * only MEASURE. Retraining is caller policy via [[unigramRetrain]]
     * (accumulated counts, atomic swap — the s08/s22 shape). Replay-
-    * idempotent: words/drift overwrite their own batch_id partition; the
-    * bootstrap decision excludes the current batch id. Per batch: one
+    * idempotent: words/drift are [[BatchLog]]s; the bootstrap decision
+    * excludes the current batch id. Per batch: one
     * map-side-combined word count + a vocab-sized projection through the
     * native codegen'd encode — never a corpus rescan.
     */
@@ -2346,11 +1934,8 @@ object Streams {
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .cache()
     if (words.isEmpty) { words.unpersist(); return }
-    graft.sources.Sinks.dynamicOverwrite(
-      words.withColumn("batch_id", lit(batchId)), s"$stateDir/words", Seq("batch_id"))
-    val hasPrior = graft.sources.Sources
-      .parquetIfExists(spark, s"$stateDir/words")
-      .exists(!_.filter(col("batch_id") =!= batchId).isEmpty)
+    BatchLog.write(words, s"$stateDir/words", batchId)
+    val hasPrior = BatchLog.prior(spark, s"$stateDir/words", batchId).isDefined
     val vocab: Seq[Unigram.Piece] =
       if (!hasPrior) {
         val wc = words.orderBy(col("c").desc, col("w")).limit(maxWords)
@@ -2371,8 +1956,7 @@ object Streams {
         count(lit(1)).as("n_distinct_words"),
         (sum(col("c") * col("t")).cast("double") / sum(col("c"))).as("fertility"),
         (sum(col("c") * col("unk")).cast("double") / sum(col("c"))).as("unk_rate"))
-      .withColumn("batch_id", lit(batchId))
-    graft.sources.Sinks.dynamicOverwrite(drift, s"$stateDir/drift", Seq("batch_id"))
+    BatchLog.write(drift, s"$stateDir/drift", batchId)
     words.unpersist()
     ()
   }
@@ -2385,7 +1969,7 @@ object Streams {
       vocabSize: Int = 192,
       maxWords: Int = 1 << 14): Seq[graft.text.Unigram.Piece] = {
     import spark.implicits._
-    val wc = spark.read.parquet(s"$stateDir/words")
+    val wc = BatchLog.rows(spark, s"$stateDir/words")
       .groupBy(col("w")).agg(sum(col("c")).as("c"))
       .orderBy(col("c").desc, col("w")).limit(maxWords)
       .as[(String, Long)].collect().toSeq

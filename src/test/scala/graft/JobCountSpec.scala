@@ -92,4 +92,22 @@ class JobCountSpec extends SparkSpec {
     }
     assert(v.isEmpty && noop == 3, s"no-op mergeVersioned ran $noop jobs")
   }
+
+  test("one decontaminateSink batch (two logs) runs a pinned number of jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("decon_jobs").toFile.getAbsolutePath
+    val evalGrams = graft.streaming.Streams.evalGramSet(
+      Seq((0L, "one two three four five six seven eight nine")).toDF("doc_id", "text"),
+      "text").cache()
+    val sink = graft.streaming.Streams.decontaminateSink(spark, s"$dir/state", evalGrams) _
+    def batch(id: Long) = Seq((id, "one two three four five six seven eight nine tail"),
+      (id + 1, "completely different words with no overlap at all here")).toDF("doc_id", "text")
+    evalGrams.count()
+    sink(batch(1L), 0L) // both logs exist from here on
+    // the hit count and the two log writes, nothing else: skipping empty
+    // writes behind clean/flagged emptiness checks cost this batch 11
+    val jobs = jobsOf(sink(batch(3L), 1L))
+    assert(jobs == 7, s"decontaminateSink ran $jobs jobs")
+    assert(graft.streaming.Streams.readDecontaminated(spark, s"$dir/state").count() == 2L)
+    evalGrams.unpersist()
+  }
 }

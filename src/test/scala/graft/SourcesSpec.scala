@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.{Sinks, Sources}
+import graft.sources.{Sinks, Sources, VersionedTable}
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -62,36 +62,19 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("compact folds small files into the target count atomically") {
-    val dir = tmp("compact")
-    val path = s"$dir/t"
-    (1L to 1000L).map(i => (i, s"row$i")).toDF("id", "v")
-      .repartition(40).write.parquet(path)
-    val (before, after) = Sinks.compact(spark, path, targetFileBytes = 1L << 30)
+    // compaction is one optimize commit on the versioned table
+    val path = s"${tmp("compact")}/t"
+    VersionedTable.create((1L to 1000L).map(i => (i, s"row$i")).toDF("id", "v")
+      .repartition(40), path)
+    val before = VersionedTable.snapshotAt(spark, path).files.size
     assert(before >= 40, s"fixture should start fragmented, had $before files")
+    assert(VersionedTable.optimize(spark, path, targetBytes = 1L << 30).isDefined)
+    val after = VersionedTable.snapshotAt(spark, path).files.size
     assert(after == 1, s"one target-sized file expected, got $after")
-    val back = spark.read.parquet(path)
+    val back = VersionedTable.read(spark, path)
     assert(back.count() == 1000 && back.agg(sum(col("id"))).head().getLong(0) == 500500L)
-    // no temp/old leftovers from the swap
-    val leftovers = new java.io.File(dir).list().filter(_.startsWith("t."))
-    assert(leftovers.isEmpty, s"swap leftovers: ${leftovers.mkString(", ")}")
-  }
-
-  test("compact fails fast on a partitioned table root, leaving it untouched") {
-    // Pointed at a partitioned ROOT, the unpartitioned rewrite would
-    // materialize partition columns as data columns and flatten the
-    // layout — the guard must make that a loud error, not a corruption.
-    val dir = tmp("compactpart")
-    val path = s"$dir/t"
-    Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("dt", "v")
-      .write.partitionBy("dt").parquet(path)
-    val e = intercept[IllegalArgumentException](Sinks.compact(spark, path))
-    assert(e.getMessage.contains("partition-style"))
-    // layout intact: partition dirs still present, data still readable
-    assert(new java.io.File(path).list().exists(_.startsWith("dt=")))
-    assert(spark.read.parquet(path).count() == 2)
-    // ...while ONE partition directory remains a valid compaction target
-    val (_, after) = Sinks.compact(spark, s"$path/dt=2024-01-01")
-    assert(after == 1)
+    // the fragmented version still reads: nothing was rewritten in place
+    assert(VersionedTable.readVersion(spark, path, 0).count() == 1000)
   }
 
   test("zorderWrite clusters both dimensions: thin slabs touch ~sqrt files, not all") {
@@ -205,13 +188,13 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("dynamicOverwrite replaces only the partitions present in the batch") {
-    val dir = tmp("dynpart")
+    val t = s"${tmp("dynpart")}/t"
     val day1 = Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("dt", "v")
-    Sinks.overwrite(day1, s"$dir/t", Seq("dt"))
+    VersionedTable.create(day1, t, partitionBy = Seq("dt"))
     // restate only 01-02; 01-01 must survive
     val restate = Seq(("2024-01-02", 99L)).toDF("dt", "v")
-    Sinks.dynamicOverwrite(restate, s"$dir/t", Seq("dt"))
-    val out = spark.read.parquet(s"$dir/t").select("dt", "v")
+    VersionedTable.overwritePartitions(restate, t)
+    val out = VersionedTable.read(spark, t).select("dt", "v")
       .as[(String, Long)].collect().sorted.toSeq
     assert(out == Seq(("2024-01-01", 1L), ("2024-01-02", 99L)))
   }

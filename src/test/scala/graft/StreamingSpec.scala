@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.Streams
+import graft.streaming.{BatchLog, Streams}
 import graft.streaming.Streams.Event
 
 class StreamingSpec extends SparkSpec {
@@ -116,35 +116,13 @@ class StreamingSpec extends SparkSpec {
         (5L, "red green blue yellow purple orange pink black"),
         (6L, "red green blue yellow purple orange pink black"))
       q.processAllAvailable()
-      val pairs = spark.read.parquet(s"$dir/pairs")
+      val pairs = BatchLog.read(spark, s"$dir/pairs")
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(pairs.contains((1L, 3L)), s"cross-batch near-dup missed: $pairs")
       assert(pairs.contains((5L, 6L)), s"in-batch dup missed: $pairs")
       assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L), s"false positive on 2: $pairs")
       // index accumulated one signature row per doc
-      assert(spark.read.parquet(s"$dir/index").count() == 5)
-    } finally q.stop()
-  }
-
-  test("scd2Sink upserts each micro-batch into the parquet dimension") {
-    val dir = Files.createTempDirectory("scd2sink").toFile.getAbsolutePath
-    val dimPath = s"$dir/dim"
-    val in = MemoryStream[Event]
-    val q = in.toDF()
-      .writeStream
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch(Streams.scd2Sink(spark, dimPath, Seq("user_id"), Seq("value")) _)
-      .start()
-    try {
-      in.addData(Event(1, ts(0), 1.0), Event(2, ts(0), 2.0))
-      q.processAllAvailable()
-      in.addData(Event(1, ts(10), 5.0)) // change user 1
-      q.processAllAvailable()
-      val dim = spark.read.parquet(dimPath)
-      assert(dim.filter(col("is_current")).count() == 2)
-      assert(dim.filter(!col("is_current")).count() == 1)
-      assert(dim.filter(col("is_current") && col("user_id") === 1)
-        .head().getAs[Double]("value") == 5.0)
+      assert(BatchLog.read(spark, s"$dir/index").count() == 5)
     } finally q.stop()
   }
 
@@ -207,29 +185,6 @@ class StreamingSpec extends SparkSpec {
     assert(total == Map(1L -> 11.0, 2L -> 2.0), total.toString)
   }
 
-  test("scd2Sink leaves the existing dimension intact when the merge write dies") {
-    val dir = Files.createTempDirectory("scd2atomic").toFile.getAbsolutePath
-    val dimPath = s"$dir/dim"
-    val sink = Streams.scd2Sink(spark, dimPath, Seq("user_id"), Seq("value")) _
-    // Seed the dimension with one good batch.
-    sink(Seq(Event(1, ts(0), 1.0), Event(2, ts(0), 2.0)).toDF(), 0L)
-    val before = spark.read.parquet(dimPath).orderBy("user_id", "valid_from")
-      .collect().toSeq
-    assert(before.length == 2)
-    // Poisoned batch: the value column throws DURING the merge write job —
-    // after the existing dim has been read, mid-write.
-    val poison = Seq(Event(1, ts(10), 5.0)).toDF()
-      .withColumn("value",
-        when(col("value") > 0, expr("raise_error('mid-write failure')").cast("double"))
-          .otherwise(col("value")))
-    intercept[Exception] { sink(poison, 1L) }
-    // The pre-failure dimension is still fully readable and unchanged —
-    // the non-atomic self-overwrite would have destroyed the only copy.
-    val after = spark.read.parquet(dimPath).orderBy("user_id", "valid_from")
-      .collect().toSeq
-    assert(after == before, s"dim changed after failed merge: $after vs $before")
-  }
-
   test("ivfIndexSink maintains a streamed IVF index: drifted centroids, idempotent replay") {
     val dir = Files.createTempDirectory("ivfsink").toFile.getAbsolutePath
     val sink = Streams.ivfIndexSink(spark, s"$dir/index", s"$dir/stats", k = 2) _
@@ -241,7 +196,7 @@ class StreamingSpec extends SparkSpec {
     val b2 = Seq(near(5, 0, 0), near(6, 10, 10)).toDF("id", "vec")
     sink(b1, 0L) // bootstraps the quantizer
     sink(b2, 1L) // assigns against stats-derived centroids
-    val idx = spark.read.parquet(s"$dir/index")
+    val idx = BatchLog.read(spark, s"$dir/index")
     assert(idx.count() == 6)
     val byLabel = idx.select("id", "label").as[(Long, Long)].collect()
       .groupBy(_._2).view.mapValues(_.map(_._1).toSet).toMap
@@ -250,7 +205,7 @@ class StreamingSpec extends SparkSpec {
 
     // Stats-derived centroids must equal the per-cell means of the indexed
     // corpus exactly (the stream-maintained stats ARE that aggregation).
-    val fromStats = spark.read.parquet(s"$dir/stats")
+    val fromStats = BatchLog.read(spark, s"$dir/stats")
       .groupBy(col("label"), col("pos"))
       .agg((sum(col("s")) / sum(col("n"))).as("c"))
       .as[(Long, Int, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
@@ -264,15 +219,15 @@ class StreamingSpec extends SparkSpec {
 
     // Replay after a simulated post-write failure: no duplicates, same state.
     sink(b2, 1L)
-    assert(spark.read.parquet(s"$dir/index").count() == 6)
+    assert(BatchLog.read(spark, s"$dir/index").count() == 6)
     // batch 2 = one vector per cell, two dims → four (label, pos) rows, n=1 each
-    assert(spark.read.parquet(s"$dir/stats").filter(col("batch_id") === 1L)
+    assert(BatchLog.read(spark, s"$dir/stats").filter(col("batch_id") === 1L)
       .select("n").as[Long].collect().sum == 4L)
 
     // The streamed index is directly queryable by the IVF prober
     // (re-read: the replay overwrote batch 1's files under the old listing).
     val q = Seq((100L, Seq(0.1, 0.1))).toDF("id", "vec")
-    val fresh = spark.read.parquet(s"$dir/index")
+    val fresh = BatchLog.read(spark, s"$dir/index")
     val top = graft.sim.Ann.ivfTopK(fresh.drop("batch_id"), q, 1, 1)
       .select("neighbor_id").as[Long].collect()
     assert(top.length == 1 && Set(1L, 2L, 5L).contains(top.head),
@@ -292,7 +247,7 @@ class StreamingSpec extends SparkSpec {
     sink(batch(5 to 8, 0, 10), 1L)   // stationary batch
     sink(batch(9 to 12, 4, 14), 2L)  // drifted batch: both clusters moved +4
 
-    def drift: Map[Long, Double] = spark.read.parquet(s"$dir/stats_drift")
+    def drift: Map[Long, Double] = BatchLog.read(spark, s"$dir/stats_drift")
       .select(col("batch_id").cast("long"), col("mean_displacement"))
       .as[(Long, Double)].collect().toMap
     val d = drift
@@ -304,10 +259,10 @@ class StreamingSpec extends SparkSpec {
     // Retrain re-centers the cells over the accumulated corpus and
     // collapses index + stats to the base partition ...
     Streams.ivfRetrain(spark, s"$dir/index", s"$dir/stats", k = 2)
-    assert(spark.read.parquet(s"$dir/stats")
+    assert(BatchLog.read(spark, s"$dir/stats")
       .select(col("batch_id").cast("long")).distinct()
       .as[Long].collect().toSeq == Seq(Streams.BaseBatchId))
-    assert(spark.read.parquet(s"$dir/index").count() == 12)
+    assert(BatchLog.read(spark, s"$dir/index").count() == 12)
 
     // ... so a batch at the retrained centers reads as stationary again.
     // Retrained centroids: mean of 4x(0,0)+2x(4,4) per cell = (4/3, 4/3).
@@ -315,7 +270,7 @@ class StreamingSpec extends SparkSpec {
     val d3 = drift(3L)
     assert(d3 < 0.1 && d3 < drift(2L) / 10,
       s"retrain must reset the drift signal, got $d3 (pre-retrain ${drift(2L)})")
-    assert(spark.read.parquet(s"$dir/index").count() == 16)
+    assert(BatchLog.read(spark, s"$dir/index").count() == 16)
   }
 
   test("compactBatchLog folds old near-dup index partitions, replay stays exact") {
@@ -327,22 +282,22 @@ class StreamingSpec extends SparkSpec {
       (4L, "unrelated words entirely different from others here now")).toDF("doc_id", "text")
     sink(b1, 1L)
 
-    assert(Streams.compactBatchLog(spark, s"$dir/index", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/index", keepLast = 1))
     // layout: folded base + the newest batch, nothing else
-    assert(spark.read.parquet(s"$dir/index")
+    assert(BatchLog.read(spark, s"$dir/index")
       .select(col("batch_id").cast("long")).distinct()
       .as[Long].collect().toSet == Set(Streams.BaseBatchId, 1L))
-    assert(spark.read.parquet(s"$dir/index").count() == 3)
+    assert(BatchLog.read(spark, s"$dir/index").count() == 3)
     // nothing left to fold -> no-op
-    assert(!Streams.compactBatchLog(spark, s"$dir/index", keepLast = 1))
+    assert(!BatchLog.compact(spark, s"$dir/index", keepLast = 1))
 
     // replay of the (kept) last batch after compaction: still idempotent,
     // still sees the folded base signatures
     sink(b1, 1L)
-    val pairs = spark.read.parquet(s"$dir/pairs")
+    val pairs = BatchLog.read(spark, s"$dir/pairs")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
     assert(pairs == Seq((1L, 3L)), s"replay after compaction broke pairs: $pairs")
-    assert(spark.read.parquet(s"$dir/index").count() == 3)
+    assert(BatchLog.read(spark, s"$dir/index").count() == 3)
   }
 
   test("compactGoldAgg preserves the aggregate and replay-exactness") {
@@ -358,10 +313,11 @@ class StreamingSpec extends SparkSpec {
         .select(col("event_type"), col("n_rows"), col("sum_value").cast("double"))
         .as[(String, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     val before = agg
-    assert(Streams.compactGoldAgg(spark, s"$dir/stats", Seq("event_type"), keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/stats", keepLast = 1,
+      _.groupBy(col("event_type")).agg(sum(col("_n")).as("_n"), sum(col("_s")).as("_s"))))
     assert(agg == before, s"compaction changed the aggregate: $agg vs $before")
     // folded base + newest batch; row count is groups, not history
-    assert(spark.read.parquet(s"$dir/stats")
+    assert(BatchLog.read(spark, s"$dir/stats")
       .select(col("batch_id").cast("long")).distinct()
       .as[Long].collect().toSet == Set(Streams.BaseBatchId, 2L))
     // replay of the kept batch after compaction: aggregate unchanged
@@ -385,7 +341,7 @@ class StreamingSpec extends SparkSpec {
       "click" -> ((3L, 11.50)), "view" -> ((1L, 2.50)), "purchase" -> ((1L, 5.75))), agg)
     // state is metadata-rate: one row per (batch, group), not per input row
     // (batch 0 has 3 input rows but 2 groups; batch 1 has 2 groups)
-    assert(spark.read.parquet(s"$dir/stats").count() == 4)
+    assert(BatchLog.read(spark, s"$dir/stats").count() == 4)
   }
 
   test("linkGraphSink: accumulated host graph equals the batch rollup on " +
@@ -426,7 +382,9 @@ class StreamingSpec extends SparkSpec {
     assert(hub == Map("site1.example" -> ((2L, 2L)), "site2.example" -> ((1L, 1L)),
       "site3.example" -> ((2L, 1L))), hub)
     // compaction folds batch 0 into the base; the read face is unchanged
-    assert(Streams.compactLinkGraph(spark, s"$dir/edges", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/edges", keepLast = 1,
+      _.groupBy(col("src_host"), col("target_host"))
+        .agg(sum(col("_n_links")).as("_n_links"), sum(col("_n_docs")).as("_n_docs"))))
     val after = Streams.readLinkGraph(spark, s"$dir/edges")
     assert(after.exceptAll(expected).isEmpty && expected.exceptAll(after).isEmpty)
     // the q106 composition: the accumulated graph ranks directly
@@ -464,10 +422,10 @@ class StreamingSpec extends SparkSpec {
       .select("target_url", "n_citations").as[(String, Long)].collect().toMap
     assert(after == Map("https://hub.example/x" -> 3L), after)
     // compaction: cites re-sum, crawled identity — frontier unchanged
-    assert(Streams.compactBatchLog(spark, s"$dir/state/cites", keepLast = 1,
+    assert(BatchLog.compact(spark, s"$dir/state/cites", keepLast = 1,
       df => df.groupBy(col("target_url"), col("target_host"))
         .agg(sum(col("_n")).as("_n"))))
-    assert(Streams.compactBatchLog(spark, s"$dir/state/crawled", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/crawled", keepLast = 1))
     val compacted = Streams.readFrontier(spark, s"$dir/state", 10)
       .select("target_url", "n_citations").as[(String, Long)].collect().toMap
     assert(compacted == after, compacted)
@@ -766,7 +724,7 @@ class StreamingSpec extends SparkSpec {
     sink(b2, 1L)
     sink(b2, 1L) // replay after a simulated post-write failure
     // one model-rate row per batch, no duplicates from the replay
-    assert(spark.read.parquet(s"$dir/stats").count() == 2)
+    assert(BatchLog.read(spark, s"$dir/stats").count() == 2)
     val streamed = Streams.readPcaModel(spark, s"$dir/stats", 3)
     val batch = graft.sim.Pca.fit(b1.unionByName(b2), "vec", 3)
     // fold vs partition-order summation: float tolerance, never bit
@@ -778,7 +736,7 @@ class StreamingSpec extends SparkSpec {
       assert(math.abs(cos - 1.0) < 1e-9, s"axis drifted: cos=$cos")
     }
     // compaction (identity merge — the read fold re-sums): model unchanged
-    assert(Streams.compactBatchLog(spark, s"$dir/stats", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/stats", keepLast = 1))
     val after = Streams.readPcaModel(spark, s"$dir/stats", 3)
     // (float tolerance: compaction reorders the folded rows, and double
     // addition is order-sensitive)
@@ -809,13 +767,13 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 5L), s"curated keep set wrong: $kept")
     // state logs hold only kept docs (dup/junk never claim state)
-    assert(spark.read.parquet(s"$dir/state/fps").count() == 2)
-    assert(spark.read.parquet(s"$dir/state/sigs").count() == 2)
+    assert(BatchLog.read(spark, s"$dir/state/fps").count() == 2)
+    assert(BatchLog.read(spark, s"$dir/state/sigs").count() == 2)
     // an all-junk batch writes nothing and breaks nothing downstream
     sink(Seq((6L, "@@@ ###")).toDF("doc_id", "text"), 2L)
     assert(Streams.readCurated(spark, s"$dir/state").count() == 2)
     // the state logs are compactable like every other batch log
-    assert(Streams.compactBatchLog(spark, s"$dir/state/sigs", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/sigs", keepLast = 1))
     sink(Seq((7L, goodB.replace("topaz", "topas"))).toDF("doc_id", "text"), 3L)
     assert(Streams.readCurated(spark, s"$dir/state")
       .select("doc_id").as[Long].collect().toSet == Set(1L, 5L),
@@ -871,7 +829,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sim.Ann
     val dir = Files.createTempDirectory("ivfe2e").toFile.getAbsolutePath
     val sink = Streams.ivfIndexSink(spark, s"$dir/index", s"$dir/stats", k = 3) _
-    def driftOf(b: Long): Double = spark.read.parquet(s"$dir/stats_drift")
+    def driftOf(b: Long): Double = BatchLog.read(spark, s"$dir/stats_drift")
       .filter(col("batch_id").cast("long") === b)
       .select("mean_displacement").as[Double].head()
     // The caller policy under spec: after each batch, poll the signal and
@@ -902,7 +860,7 @@ class StreamingSpec extends SparkSpec {
     val queries = Seq((101L, Seq(5.19, 5.21)), (102L, Seq(5.23, 5.17)))
       .toDF("id", "vec")
     def recallAt8: Double = {
-      val corpus = spark.read.parquet(s"$dir/index").drop("batch_id")
+      val corpus = BatchLog.read(spark, s"$dir/index").drop("batch_id")
       def sets(df: org.apache.spark.sql.DataFrame) =
         df.select("query_id", "neighbor_id").as[(Long, Long)].collect()
           .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -946,7 +904,7 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 2L, 4L), s"kept set wrong: $kept")
     // dropped docs never claim shingle state
-    assert(spark.read.parquet(s"$dir/state/shingles")
+    assert(BatchLog.read(spark, s"$dir/state/shingles")
       .select("doc_id").distinct().as[Long].collect().toSet == Set(1L, 2L, 4L))
 
     // Within a batch the earlier id wins: a LATER wrapper covering an
@@ -965,7 +923,7 @@ class StreamingSpec extends SparkSpec {
 
     // The shingle log is compactable like every other batch log, and a
     // fragment of a COMPACTED kept doc still drops.
-    assert(Streams.compactBatchLog(spark, s"$dir/state/shingles", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/shingles", keepLast = 1))
     sink(Seq((8L, quote)).toDF("doc_id", "text"), 4L)
     assert(!kept.contains(8L), "fragment of a compacted kept doc must still drop")
   }
@@ -994,20 +952,20 @@ class StreamingSpec extends SparkSpec {
     sink(b1, 1L) // replay after a simulated post-write failure
     assert(kept == Set(10L, 12L, 20L), s"first-seen-wins broken: $kept")
     // replay left exactly one state row per kept id
-    val rows = spark.read.parquet(s"$dir/state/kept").groupBy(col("id"))
+    val rows = BatchLog.read(spark, s"$dir/state/kept").groupBy(col("id"))
       .count().filter(col("count") > 1).count()
     assert(rows == 0L, "replay must not duplicate kept state")
 
     // the kept log compacts like every batch log; a near-dup of a
     // COMPACTED kept vector still drops
-    assert(Streams.compactBatchLog(spark, s"$dir/state/kept", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/kept", keepLast = 1))
     sink(Seq((30L, Seq(1.0, -0.005))).toDF("id", "vec"), 2L)
     assert(!kept.contains(30L), "near-dup of a compacted kept vector must still drop")
     assert(kept == Set(10L, 12L, 20L))
 
     // The kept log carries the PRECOMPUTED norm (the cosinePre shape):
     // norms are paid once per kept vector, never per candidate pair.
-    val cols = spark.read.parquet(s"$dir/state/kept").columns.toSet
+    val cols = BatchLog.read(spark, s"$dir/state/kept").columns.toSet
     assert(cols.contains("nrm"), s"kept log must persist norms: $cols")
   }
 
@@ -1027,16 +985,14 @@ class StreamingSpec extends SparkSpec {
     // silently resurrected (the qualityCutoffSink discipline).
     Streams.semDedupSink(spark, s"$dir/state", tau = 0.5)(b1, 1L)
     assert(kept == Set(1L), s"stale kept partition resurrected: $kept")
-    assert(!new java.io.File(s"$dir/state/kept/batch_id=1").exists(),
-      "stale batch_id=1 partition dir must be gone")
+    assert(BatchLog.read(spark, s"$dir/state/kept").filter(col("batch_id") === 1L).isEmpty,
+      "stale batch 1 rows must be gone")
   }
 
   test("semDedupSink: pre-r11 kept log without the nrm column fails named") {
     val dir = Files.createTempDirectory("semdedup_legacy").toFile.getAbsolutePath
-    graft.sources.Sinks.dynamicOverwrite(
-      Seq((1L, 3L, Seq(1.0, 0.0))).toDF("id", "bucket", "vec")
-        .withColumn("batch_id", lit(0L)),
-      s"$dir/state/kept", Seq("batch_id"))
+    BatchLog.write(Seq((1L, 3L, Seq(1.0, 0.0))).toDF("id", "bucket", "vec"),
+      s"$dir/state/kept", 0L)
     val e = intercept[IllegalArgumentException] {
       Streams.semDedupSink(spark, s"$dir/state")(
         Seq((2L, Seq(0.0, 1.0))).toDF("id", "vec"), 1L)
@@ -1114,7 +1070,7 @@ class StreamingSpec extends SparkSpec {
     def clean = Streams.readDecontaminated(spark, s"$dir/state")
       .select("doc_id").as[Long].collect().toSet
     assert(clean == Set(2L, 3L), s"clean set wrong: $clean")
-    val flagged = spark.read.parquet(s"$dir/state/flagged")
+    val flagged = BatchLog.read(spark, s"$dir/state/flagged")
       .select("doc_id", "n_hits").as[(Long, Long)].collect().toMap
     assert(flagged == Map(1L -> 2L), s"flagged wrong: $flagged")
     // STATELESS across batches: verdicts depend only on the static eval
@@ -1133,9 +1089,92 @@ class StreamingSpec extends SparkSpec {
     sink(Seq((6L, contaminated)).toDF("doc_id", "text"), 2L)
     assert(clean == batchClean)
     // the logs are compactable like every other batch log
-    assert(Streams.compactBatchLog(spark, s"$dir/state/clean", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/clean", keepLast = 1))
     assert(clean == batchClean, "compaction must not change the clean set")
     evalGrams.unpersist()
+  }
+
+  test("decontaminateSink: a stream whose every doc is flagged reads an EMPTY clean set") {
+    val dir = Files.createTempDirectory("decon_allflagged").toFile.getAbsolutePath
+    val evalGrams = Streams.evalGramSet(
+      Seq((0L, "one two three four five six seven eight nine")).toDF("doc_id", "text"),
+      "text")
+    Streams.decontaminateSink(spark, s"$dir/state", evalGrams)(
+      Seq((1L, "one two three four five six seven eight nine tail")).toDF("doc_id", "text"), 0L)
+    val clean = Streams.readDecontaminated(spark, s"$dir/state")
+    assert(clean.isEmpty)
+    assert(clean.columns.toSeq == Seq("doc_id"), clean.columns.mkString(","))
+  }
+
+  test("decontaminateSink: a replay under an eval set that flags nothing leaves " +
+      "no stale flagged row — no doc is both clean and flagged") {
+    val dir = Files.createTempDirectory("decon_replay").toFile.getAbsolutePath
+    def grams(text: String) =
+      Streams.evalGramSet(Seq((0L, text)).toDF("doc_id", "text"), "text")
+    val b0 = Seq((1L, "one two three four five six seven eight nine tail"),
+      (2L, "completely different words with no overlap at all here")).toDF("doc_id", "text")
+    Streams.decontaminateSink(spark, s"$dir/state",
+      grams("one two three four five six seven eight nine"))(b0, 0L)
+    // the replay runs after the eval suite changed: nothing is flagged now
+    Streams.decontaminateSink(spark, s"$dir/state",
+      grams("an eval suite sharing no eight word window with the batch at all"))(b0, 0L)
+    val clean = Streams.readDecontaminated(spark, s"$dir/state")
+      .select("doc_id").as[Long].collect().toSet
+    val flagged = BatchLog.rows(spark, s"$dir/state/flagged")
+      .select("doc_id").as[Long].collect().toSet
+    assert(clean == Set(1L, 2L), s"clean: $clean")
+    assert(flagged.isEmpty, s"stale flagged rows survived the replay: $flagged")
+  }
+
+  test("only BatchLog names the sink-state format: no other streaming file " +
+      "writes or reads a batch_id log by hand") {
+    val dir = new java.io.File("src/main/scala/graft/streaming")
+    assert(dir.isDirectory, s"run from the project root (cwd ${new java.io.File(".").getAbsolutePath})")
+    val handWritten = Seq("dynamicOverwrite", "writeBatchPartition", "compactBatchLog")
+    // the deployed artifacts (bloom filter, eval grams, weights, policy
+    // table, tokenizer tables) are plain tables, not logs
+    val artifact = "(bloom|eval_grams|weights|robots|merges|vocab)"
+    val plainRead = ("""(parquetIfExists\(spark, |spark\.read\.parquet\()s"\$stateDir/""" +
+      artifact + "\"").r
+    val offenders = dir.listFiles().filter(f =>
+        f.getName.endsWith(".scala") && f.getName != "BatchLog.scala")
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().toList.zipWithIndex.collect {
+          case (line, i) if handWritten.exists(line.contains) ||
+              ((line.contains("parquetIfExists") || line.contains("spark.read.parquet")) &&
+                plainRead.findFirstIn(line).isEmpty) ||
+              // the TokenShards .tok tree is a file format, not a log: the
+              // one batch directory built by hand
+              (line.contains("batch_id=") &&
+                !line.contains("s\"$stateDir/shards/batch_id=$batchId\"") &&
+                !line.trim.startsWith("*")) =>
+            s"${f.getName}:${i + 1}: ${line.trim}"
+        } finally src.close()
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("a plain-parquet batch_id log fails named; its one-time rewrite resumes the stream") {
+    val dir = Files.createTempDirectory("batchlog_legacy").toFile.getAbsolutePath
+    val sink = Streams.goldAggSink(spark, s"$dir/stats", Seq("event_type"), "value") _
+    // the layout sinks wrote before BatchLog: hive batch_id=<n> directories
+    Seq(("click", 2L, BigDecimal("1.50"), 0L)).toDF("event_type", "_n", "_s", "batch_id")
+      .withColumn("_s", col("_s").cast("decimal(38,6)"))
+      .write.partitionBy("batch_id").parquet(s"$dir/legacy")
+    val e = intercept[IllegalArgumentException](
+      Streams.goldAggSink(spark, s"$dir/legacy", Seq("event_type"), "value")(
+        Seq(("view", 1.0)).toDF("event_type", "value"), 1L))
+    assert(e.getMessage.contains("plain parquet") && e.getMessage.contains("VersionedTable.create"),
+      e.getMessage)
+    // the rewrite the message names, then the stream carries on
+    graft.sources.VersionedTable.create(spark.read.parquet(s"$dir/legacy")
+      .withColumn("batch_id", col("batch_id").cast("long")), s"$dir/stats", Seq("batch_id"))
+    sink(Seq(("view", 1.0), ("click", 0.5)).toDF("event_type", "value"), 1L)
+    val agg = Streams.readGoldAgg(spark, s"$dir/stats", Seq("event_type"))
+      .select(col("event_type"), col("n_rows"), col("sum_value").cast("double"))
+      .as[(String, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(agg == Map("click" -> ((3L, 2.0)), "view" -> ((1L, 1.0))), agg)
   }
 
   test("htmlExtractSink under a REAL StreamingQuery (MemoryStream + foreachBatch)") {
@@ -1178,7 +1217,7 @@ class StreamingSpec extends SparkSpec {
           t => size(graft.text.Bpe.encode(t, graft.text.Bpe.FixedMerges))),
           lit(0L), (a, x) => a + x).as("n_bpe_tokens"))
     sink(weighted, 0L)
-    val got = spark.read.parquet(s"$dir/state/docs")
+    val got = BatchLog.read(spark, s"$dir/state/docs")
       .select("doc_id", "shard_id").as[(Long, Long)].collect().toMap
     val want = SparkEntry.queries("q96_bpe_pack")(spark, sfDir)
       .select("doc_id", "shard_id").as[(Long, Long)].collect().toMap
@@ -1212,7 +1251,7 @@ class StreamingSpec extends SparkSpec {
     assert(got(3L)._4 > 0.0 && got(3L)._4 < 1.0 && got(5L)._4 == 1.0)
     // compaction must preserve gram COVERAGE, not just the rollup: a
     // post-compaction batch repeating the block must still score 0.0
-    assert(Streams.compactBatchLog(spark, s"$dir/state/seen", keepLast = 1,
+    assert(BatchLog.compact(spark, s"$dir/state/seen", keepLast = 1,
       merge = _.distinct()))
     sink(Seq((6L, block)).toDF("doc_id", "text"), 2L)
     assert(got(6L)._4 == 0.0, s"compacted seen log lost coverage: ${got(6L)}")
@@ -1251,7 +1290,7 @@ class StreamingSpec extends SparkSpec {
       id == 1L && k == 1L && t.contains("first long-enough") && !t.contains("Home") })
     assert(got.exists { case (id, _, k, _, t) => id == 3L && k == 0L && t == "" })
     // the log compacts like every other batch log
-    assert(Streams.compactBatchLog(spark, s"$dir/state/extracted", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/extracted", keepLast = 1))
     assert(got == want, "compaction must not change the extracted set")
   }
 
@@ -1281,7 +1320,7 @@ class StreamingSpec extends SparkSpec {
     def clean = Streams.readDecontaminated(spark, s"$dir/state")
       .select("doc_id").as[Long].collect().toSet
     assert(clean == Set(2L, 3L), s"clean set wrong: $clean")
-    val flagged = spark.read.parquet(s"$dir/state/flagged")
+    val flagged = BatchLog.read(spark, s"$dir/state/flagged")
       .select("doc_id", "n_hits").as[(Long, Long)].collect().toMap
     assert(flagged == Map(1L -> 2L), s"flagged wrong: $flagged")
     // row-for-row parity with the broadcast sink on the same batches
@@ -1295,14 +1334,14 @@ class StreamingSpec extends SparkSpec {
     val refClean = Streams.readDecontaminated(spark, s"$dir2/state")
       .select("doc_id").as[Long].collect().toSet
     assert(clean == refClean, s"bloom $clean != broadcast $refClean")
-    val refFlagged = spark.read.parquet(s"$dir2/state/flagged")
+    val refFlagged = BatchLog.read(spark, s"$dir2/state/flagged")
       .select("doc_id", "n_hits").as[(Long, Long)].collect().toMap
-    val bloomFlagged = spark.read.parquet(s"$dir/state/flagged")
+    val bloomFlagged = BatchLog.read(spark, s"$dir/state/flagged")
       .select("doc_id", "n_hits").as[(Long, Long)].collect().toMap
     assert(bloomFlagged == refFlagged, s"$bloomFlagged != $refFlagged")
     evalGrams.unpersist()
     // logs compact like every other batch log
-    assert(Streams.compactBatchLog(spark, s"$dir/state/clean", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/clean", keepLast = 1))
     assert(clean == refClean, "compaction must not change the clean set")
   }
 
@@ -1335,7 +1374,7 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(kept == batchKept, s"stream ${kept.size} != batch ${batchKept.size}")
     // replay must not double-fold the counts partials
-    val totals = spark.read.parquet(s"$dir/state/counts")
+    val totals = BatchLog.read(spark, s"$dir/state/counts")
       .groupBy("lang").agg(sum("n").as("n"))
       .as[(String, Long)].collect().toMap
     val direct = docs.groupBy("lang").count().as[(String, Long)].collect().toMap
@@ -1351,17 +1390,18 @@ class StreamingSpec extends SparkSpec {
       .filter(pmod(graft.ops.Cdm.hash60(col("doc_id").cast("string")), lit(1000000L))
         < lit(nMin * 1000000L / cum("en")))
       .select("doc_id").as[Long].collect().toSet
-    val b1Kept = spark.read.parquet(s"$dir/state/kept")
+    val b1Kept = BatchLog.read(spark, s"$dir/state/kept")
       .filter(col("batch_id") === 1L).select("doc_id").as[Long].collect().toSet
     assert(b1Kept == expectB1, s"batch-1 gate wrong: $b1Kept vs $expectB1")
     assert(kept == batchKept ++ b1Kept, "earlier batches were retro-resampled")
     // kept log compacts like every other batch log
-    assert(Streams.compactBatchLog(spark, s"$dir/state/kept", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/kept", keepLast = 1))
     assert(kept == batchKept ++ b1Kept, "compaction must not change the kept set")
     // ...and the counts log refolds by its own merge algebra: cumulative
     // totals (the threshold inputs) are identical after compaction.
-    assert(Streams.compactMixtureCounts(spark, s"$dir/state", keepLast = 1))
-    val refolded = spark.read.parquet(s"$dir/state/counts")
+    assert(BatchLog.compact(spark, s"$dir/state/counts", keepLast = 1,
+      _.groupBy(col("lang")).agg(sum(col("n")).as("n"))))
+    val refolded = BatchLog.read(spark, s"$dir/state/counts")
       .groupBy("lang").agg(sum("n").as("n")).as[(String, Long)].collect().toMap
     assert(refolded == cum, s"counts refold drifted: $refolded vs $cum")
     // A NULL stratum fails fast instead of silently tightening every
@@ -1395,7 +1435,7 @@ class StreamingSpec extends SparkSpec {
       .as[(String, Long)].collect().toMap
     assert(streamCuts == batchCuts, s"cutoffs diverge: $streamCuts vs $batchCuts")
     // replay must not double-fold the histogram partials
-    val total = spark.read.parquet(s"$dir/state/hist")
+    val total = BatchLog.read(spark, s"$dir/state/hist")
       .agg(sum("n")).as[Long].head()
     assert(total == docs.count(), s"hist log double-folded: $total")
     // Batch 1 gates by the CUMULATIVE distribution (batch 0 + itself):
@@ -1416,20 +1456,21 @@ class StreamingSpec extends SparkSpec {
     val expectB1 = scored(b1).join(cumCuts, Seq("source"))
       .filter(col("quality_grid") >= col("cutoff_grid"))
       .select("doc_id").as[Long].collect().toSet
-    val b1Kept = spark.read.parquet(s"$dir/state/kept")
+    val b1Kept = BatchLog.read(spark, s"$dir/state/kept")
       .filter(col("batch_id") === 1L).select("doc_id").as[Long].collect().toSet
     assert(b1Kept == expectB1, s"batch-1 gate wrong: ${b1Kept.size} vs ${expectB1.size}")
     assert(kept == batchKept ++ b1Kept, "earlier batches were retro-gated")
     // kept log compacts like every other batch log
-    assert(Streams.compactBatchLog(spark, s"$dir/state/kept", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/kept", keepLast = 1))
     assert(kept == batchKept ++ b1Kept, "compaction must not change the kept set")
     // ...and the histogram log refolds by its own merge algebra: the
     // cumulative histogram (the cutoff input) is identical after.
-    val histBefore = spark.read.parquet(s"$dir/state/hist")
+    val histBefore = BatchLog.read(spark, s"$dir/state/hist")
       .groupBy("source", "quality_grid").agg(sum("n").as("n"))
       .as[(String, Long, Long)].collect().toSet
-    assert(Streams.compactQualityHist(spark, s"$dir/state", keepLast = 1))
-    val histAfter = spark.read.parquet(s"$dir/state/hist")
+    assert(BatchLog.compact(spark, s"$dir/state/hist", keepLast = 1,
+      _.groupBy(col("source"), col("quality_grid")).agg(sum(col("n")).as("n"))))
+    val histAfter = BatchLog.read(spark, s"$dir/state/hist")
       .groupBy("source", "quality_grid").agg(sum("n").as("n"))
       .as[(String, Long, Long)].collect().toSet
     assert(histAfter == histBefore, "hist refold drifted")
@@ -1458,16 +1499,15 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "source", "text")
     sink(good, 0L)
     // stale pre-drift state: batch 7 once kept a row
-    graft.sources.Sinks.dynamicOverwrite(
-      Seq((777L, "s", 9999L, 1L, 7L))
-        .toDF("doc_id", "source", "quality_grid", "cutoff_grid", "batch_id"),
-      s"$dir/state/kept", Seq("batch_id"))
+    BatchLog.write(
+      Seq((777L, "s", 9999L, 1L)).toDF("doc_id", "source", "quality_grid", "cutoff_grid"),
+      s"$dir/state/kept", 7L)
     // replayed batch 7: pure-punctuation junk scores far below the
     // cumulative cutoff set by the 90 good docs → kept set is EMPTY
     val junk = (1 to 20).map(i => (1000L + i, "s", "!!!! ???? ;;;; ####"))
       .toDF("doc_id", "source", "text")
     sink(junk, 7L)
-    val keptLog = spark.read.parquet(s"$dir/state/kept")
+    val keptLog = BatchLog.read(spark, s"$dir/state/kept")
     assert(keptLog.filter(col("batch_id") === 7L).count() == 0,
       "stale batch-7 kept partition survived an empty replay")
     assert(keptLog.filter(col("batch_id") === 0L).count() > 0,
@@ -1499,7 +1539,7 @@ class StreamingSpec extends SparkSpec {
     assert(d3 == ((3L, 2L, 1L, 0.5, Some(fp("epsilon")))), s"cross-batch verdict wrong: $d3")
     assert(out.filter(_._1 <= 2L) == batchOut, "earlier rollups were rewritten")
     // the seen log compacts; dedup still holds afterwards
-    assert(Streams.compactBatchLog(spark, s"$dir/state/seen", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/seen", keepLast = 1))
     sink(Seq((4L, "epsilon")).toDF("doc_id", "text"), 2L)
     val d4 = out.find(_._1 == 4L).get
     assert(d4 == ((4L, 1L, 0L, 0.0, None)),
@@ -1537,7 +1577,7 @@ class StreamingSpec extends SparkSpec {
     assert(d10 == Seq((10L, 3, 15, 12)), s"cross-batch span wrong: $d10")
     assert(!spans.exists(_._1 == 11L), "novel doc falsely flagged")
     // gram log compacts; coverage survives
-    assert(Streams.compactBatchLog(spark, s"$dir/state/seen", keepLast = 1))
+    assert(BatchLog.compact(spark, s"$dir/state/seen", keepLast = 1))
     sink(Seq((20L, s"$shared again appended here")).toDF("doc_id", "text"), 2L)
     assert(spans.exists(_._1 == 20L), "compacted seen log lost gram coverage")
     // a replay that no longer produces spans deletes its stale partitions
@@ -1571,20 +1611,6 @@ class StreamingSpec extends SparkSpec {
     assert(got == batchOp, "replay shifted the running offset")
   }
 
-  test("scd2Sink aborts on a corrupt dimension instead of overwriting it") {
-    val dir = Files.createTempDirectory("scd2_corrupt").toFile.getAbsolutePath
-    val dim = s"$dir/dim"
-    Files.createDirectories(java.nio.file.Paths.get(dim))
-    Files.write(java.nio.file.Paths.get(s"$dim/garbage.bin"), "not parquet".getBytes)
-    val batch = Seq((1L, "a", ts(1))).toDF("id", "attr", "ts")
-    intercept[Exception] {
-      Streams.scd2Sink(spark, dim, Seq("id"), Seq("attr"))(batch, 0L)
-    }
-    // the (possibly recoverable) corrupt copy must still be there
-    assert(new java.io.File(s"$dim/garbage.bin").exists(),
-      "sink replaced the only copy of a corrupt dimension")
-  }
-
   test("nearDupSink replays of the same batch are idempotent (no duplicate pairs)") {
     val dir = Files.createTempDirectory("neardup_replay").toFile.getAbsolutePath
     val sink = Streams.nearDupSink(spark, s"$dir/index", s"$dir/pairs") _
@@ -1594,11 +1620,11 @@ class StreamingSpec extends SparkSpec {
       (4L, "unrelated words entirely different from others here now")).toDF("doc_id", "text")
     sink(b1, 1L)
     sink(b1, 1L) // replay after a simulated post-write failure
-    val pairs = spark.read.parquet(s"$dir/pairs")
+    val pairs = BatchLog.read(spark, s"$dir/pairs")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
     assert(pairs == Seq((1L, 3L)), s"replay duplicated or corrupted pairs: $pairs")
     // index holds exactly one signature row per doc, not one per attempt
-    assert(spark.read.parquet(s"$dir/index").count() == 3)
+    assert(BatchLog.read(spark, s"$dir/index").count() == 3)
   }
 
   test("classifierScoreSink: batch parity under deployed weights, replay, named missing-deploy (s23)") {
@@ -1659,7 +1685,7 @@ class StreamingSpec extends SparkSpec {
       .collect().head.payload.dropRight(20)
     sink(pngs(b1docs).unionByName(
       Seq((99L, corrupt)).toDF("doc_id", "payload")), 0L)
-    val quarantined = spark.read.parquet(s"$state/quarantine")
+    val quarantined = BatchLog.read(spark, s"$state/quarantine")
       .select(col("doc_id"), col("decode_error")).as[(Long, String)].collect()
     assert(quarantined.map(_._1).toSeq == Seq(99L) && quarantined.head._2.nonEmpty,
       quarantined.mkString(","))
@@ -1676,7 +1702,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs == expected, s"stream $pairs vs batch $expected")
     // the index holds only clean members
-    assert(spark.read.parquet(s"$state/index").select("doc_id")
+    assert(BatchLog.read(spark, s"$state/index").select("doc_id")
       .as[Long].collect().toSet == Set(1L, 2L, 3L, 4L, 5L))
     // replay of the LATEST batch (the replay contract): identical state,
     // no duplicate pairs — count-strict, not just set-equal
@@ -1685,12 +1711,12 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect()
     assert(replayed.toSet == expected && replayed.length == expected.size,
       "replay must not duplicate or drift")
-    assert(spark.read.parquet(s"$state/quarantine").count() == 1)
+    assert(BatchLog.read(spark, s"$state/quarantine").count() == 1)
     // the index is an identity-merge batch log: compaction preserves it
-    val preCompact = spark.read.parquet(s"$state/index")
+    val preCompact = BatchLog.read(spark, s"$state/index")
       .select(col("doc_id"), col("dhash")).as[(Long, Long)].collect().toSet
-    assert(Streams.compactBatchLog(spark, s"$state/index", keepLast = 1))
-    val postCompact = spark.read.parquet(s"$state/index")
+    assert(BatchLog.compact(spark, s"$state/index", keepLast = 1))
+    val postCompact = BatchLog.read(spark, s"$state/index")
       .select(col("doc_id"), col("dhash")).as[(Long, Long)].collect().toSet
     assert(postCompact == preCompact, "compaction must preserve the index")
   }
@@ -1709,7 +1735,7 @@ class StreamingSpec extends SparkSpec {
     sink(Seq((1L, wav(base)), (2L, wav(other)),
         (99L, "not audio".getBytes("UTF-8")))
       .toDF("doc_id", "payload"), 0L)
-    val quarantined = spark.read.parquet(s"$state/quarantine")
+    val quarantined = BatchLog.read(spark, s"$state/quarantine")
       .select(col("doc_id"), col("decode_error")).as[(Long, String)].collect()
     assert(quarantined.map(_._1).toSeq == Seq(99L) &&
       quarantined.head._2.contains("RIFF"), quarantined.mkString(","))
@@ -1735,7 +1761,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs == expected, s"stream $pairs vs batch $expected")
     // index holds only clean clips; replay is count-strict idempotent
-    assert(spark.read.parquet(s"$state/index").select("doc_id")
+    assert(BatchLog.read(spark, s"$state/index").select("doc_id")
       .as[Long].collect().toSet == Set(1L, 2L, 4L, 5L))
     sink(Seq((4L, wav(base.map(_ / 2), rate = 16000)), (5L, wav(third)))
       .toDF("doc_id", "payload"), 1L)
@@ -1804,7 +1830,7 @@ class StreamingSpec extends SparkSpec {
     sink(Seq((0L, "   ")).toDF("doc_id", "text"), 0L)
     assert(!new java.io.File(s"$state/merges").exists(),
       "empty batches must not deploy a tokenizer")
-    assert(graft.sources.Sources.parquetIfExists(spark, s"$state/drift").isEmpty,
+    assert(BatchLog.readIfExists(spark, s"$state/drift").isEmpty,
       "empty batches must not log drift rows")
     sink(docs(vocabA, 1 to 8), 0L) // bootstrap: trains the deployed table on A
     sink(docs(vocabA, 9 to 16), 1L) // stationary
@@ -1815,10 +1841,10 @@ class StreamingSpec extends SparkSpec {
     // words partition and drift row must come out identical
     val fixed = docs(vocabA, 17 to 20)
     sink(fixed, 2L)
-    val snap1 = (spark.read.parquet(s"$state/words").filter(col("batch_id") === 2L)
+    val snap1 = (BatchLog.read(spark, s"$state/words").filter(col("batch_id") === 2L)
       .orderBy("w").collect().toSeq, drift(2L))
     sink(fixed, 2L)
-    val snap2 = (spark.read.parquet(s"$state/words").filter(col("batch_id") === 2L)
+    val snap2 = (BatchLog.read(spark, s"$state/words").filter(col("batch_id") === 2L)
       .orderBy("w").collect().toSeq, drift(2L))
     assert(snap1 == snap2, "replaying the same batch must reproduce identical state")
     // vocabulary shift: fertility jumps, oov → 1 (no A-merge applies to B)
@@ -1892,13 +1918,13 @@ class StreamingSpec extends SparkSpec {
     val kept = Streams.readImageGate(spark, state).collect()
     assert(kept.map(_.getLong(0)).toSeq == Seq(1L), kept.mkString(", "))
     // drops carry the NAMED failed rules
-    val dropped = spark.read.parquet(s"$state/dropped")
+    val dropped = BatchLog.read(spark, s"$state/dropped")
       .select("doc_id", "reasons").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(dropped(2L) == "too_small,bad_aspect", dropped(2L))
     assert(dropped(3L) == "too_small,under_filled", dropped(3L))
     // the corrupt member cost ONE quarantine row, not the batch
-    val q = spark.read.parquet(s"$state/quarantine")
+    val q = BatchLog.read(spark, s"$state/quarantine")
       .select("doc_id", "reason").collect()
     assert(q.length == 1 && q(0).getLong(0) == 4L &&
       q(0).getString(1).contains("ppm"), q.mkString(", "))
@@ -1932,7 +1958,7 @@ class StreamingSpec extends SparkSpec {
     val kept = Streams.readImageGate(spark, state)
     assert(kept.isEmpty)
     assert(kept.columns.toSeq == Seq("doc_id", "width", "height", "sum_bytes"))
-    val dropped = spark.read.parquet(s"$state/dropped")
+    val dropped = BatchLog.read(spark, s"$state/dropped")
       .select("doc_id", "reasons").collect()
     assert(dropped.length == 1 && dropped(0).getLong(0) == 7L &&
       dropped(0).getString(1).contains("bad_aspect"),
