@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * `splits.length` at/above the last — `splits.length + 1` bins total.
   *
   * Contract: `splits` must be sorted ascending with no duplicates — the
-  * caller ([[graft.sources.Sinks.zorderWriteRanked]]) builds it from
-  * deduplicated approx-quantiles and this expression does NOT re-verify
-  * per row. NaN values sort above every split (Java compare semantics) →
-  * the top bin; null propagates.
+  * caller (the z-order key of [[graft.sources.VersionedTable.optimize]])
+  * builds it from deduplicated approx-quantiles and this expression does
+  * NOT re-verify per row. NaN values sort above every split (Java compare
+  * semantics) → the top bin; null propagates.
   *
   * Binary search = log2(|splits|) array probes per row inside whole-stage
   * codegen — the `splits` side is a constant array literal in every graft

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -1468,7 +1468,8 @@ object VersionedTable {
 
   /** Schema enforcement (the Delta contract the reference relies on —
     * gold notebooks never re-declare their table): same column SET, same
-    * types, any order; a drifted frame fails NAMED, never silently casts.
+    * types up to nullability ([[sameType]]), any order; a drifted frame
+    * fails NAMED, never silently casts.
     */
   private[sources] def align(df: DataFrame, schema: StructType): DataFrame = {
     val want = schema.fields.map(f => f.name -> f.dataType).toMap
@@ -1478,11 +1479,24 @@ object VersionedTable {
         s"frame columns ${got.keySet.toSeq.sorted.mkString(", ")} — missing " +
         s"${(want.keySet -- got.keySet).toSeq.sorted.mkString(", ")}; unexpected " +
         s"${(got.keySet -- want.keySet).toSeq.sorted.mkString(", ")}")
-    val drifted = want.keys.filter(k => got(k) != want(k)).toSeq.sorted
+    val drifted = want.keys.filter(k => !sameType(got(k), want(k))).toSeq.sorted
     require(drifted.isEmpty,
       s"schema drift: columns ${drifted.mkString(", ")} changed type " +
         s"(${drifted.map(k => s"$k: ${want(k).simpleString} -> ${got(k).simpleString}").mkString("; ")})")
     df.select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
+  }
+
+  /** `a` and `b` are the same type up to nullability, nested levels
+    * included: every read of a table comes back nullable, so a table
+    * created from non-null columns (a Scala `Seq[Double]`) must still take
+    * a rewrite of its own rows.
+    */
+  private[graft] def sameType(a: DataType, b: DataType): Boolean = (a, b) match {
+    case (ArrayType(x, _), ArrayType(y, _)) => sameType(x, y)
+    case (MapType(xk, xv, _), MapType(yk, yv, _)) => sameType(xk, yk) && sameType(xv, yv)
+    case (StructType(xs), StructType(ys)) => xs.length == ys.length &&
+      xs.zip(ys).forall { case (x, y) => x.name == y.name && sameType(x.dataType, y.dataType) }
+    case _ => a == b
   }
 
   // --------------------------------------------------- orphan discipline
@@ -1827,7 +1841,7 @@ object VersionedTable {
   private def evolvedSchema(base: StructType, incoming: StructType): StructType = {
     val baseTypes = base.fields.map(f => f.name -> f.dataType).toMap
     val retyped = incoming.fields.filter(f =>
-      baseTypes.get(f.name).exists(_ != f.dataType))
+      baseTypes.get(f.name).exists(!sameType(_, f.dataType)))
     require(retyped.isEmpty,
       s"schema drift: columns ${retyped.map(_.name).mkString(", ")} changed type " +
         s"(${retyped.map(f => s"${f.name}: ${baseTypes(f.name).simpleString} -> ${f.dataType.simpleString}").mkString("; ")}) — " +
@@ -2203,51 +2217,178 @@ object VersionedTable {
   }
 
   /** Row-level DELETE (the Delta `DELETE FROM t WHERE pred` primitive,
-    * the GDPR-erasure shape): rewrite ONLY the files that actually hold a
-    * matching row, as one remove+add commit. File discovery is the merge
-    * discipline — i25 stats prune the candidates through the predicate,
-    * then a DV-aware candidate scan with per-row file metadata finds the exact hit
-    * list; files the predicate provably misses are untouched bytes.
-    * NULL-predicate rows survive (SQL DELETE semantics: only TRUE
-    * deletes). Same conflict rule as [[merge]]: the delete decided
-    * against a snapshot, so any concurrent non-vacuum commit fails NAMED.
-    * Returns (version, rowsDeleted) — None when nothing matched (no
-    * commit, the reconsume-free no-op).
+    * the GDPR-erasure shape), copy-on-write: rewrite ONLY the files that
+    * actually hold a matching row, without those rows, as one remove+add
+    * commit. NULL-predicate rows survive (SQL DELETE semantics: only TRUE
+    * deletes). Returns (version, rowsDeleted) — None when nothing matched
+    * (no commit, the reconsume-free no-op). Discovery and conflicts:
+    * [[rowLevel]].
     */
   def delete(spark: SparkSession, table: String,
-      pred: org.apache.spark.sql.Column): Option[(Long, Long)] = {
-    import org.apache.spark.sql.functions.{coalesce => cls, col => c, lit => l}
+      pred: org.apache.spark.sql.Column): Option[(Long, Long)] =
+    rowLevel(spark, table, pred, set = None, vectors = false)
+
+  /** Merge-on-read DELETE (i30): instead of rewriting every file holding
+    * a matching row ([[delete]]'s copy-on-write — a 1-row GDPR delete in
+    * a 1 GB file rewrites 1 GB), mark the matched row POSITIONS in a
+    * deletion-vector sidecar and re-point the files at it: the write cost
+    * is O(deleted positions), not O(touched bytes). Reads anti-join the
+    * DV ([[scanFiles]]); [[optimize]] folds DVs back into clean files.
+    * The commit carries the `deletion-vectors` protocol feature, so an
+    * old reader that would silently resurrect the rows fails named
+    * instead ([[SupportedReaderFeatures]]). A re-delete on an already
+    * DV'd file unions the old pairs into the new sidecar, so each file
+    * points at exactly one dir; a file whose every row is deleted DROPS
+    * from the snapshot outright ([[dvSplit]]). Semantics are [[delete]]'s
+    * exactly. Returns (version, rowsDeleted).
+    */
+  def deleteVectors(spark: SparkSession, table: String,
+      pred: org.apache.spark.sql.Column): Option[(Long, Long)] =
+    rowLevel(spark, table, pred, set = None, vectors = true)
+
+  /** Row-level UPDATE (Delta's `UPDATE t SET col = expr WHERE pred`) —
+    * the DML triple completed (merge/delete/update), copy-on-write:
+    * rewrite ONLY the files holding a matching row, applying `set` to
+    * matched rows and passing the rest through byte-equal. The rewritten
+    * files carry `dataChange=true`; like a delete, the UPDATE commit
+    * BREAKS the append feed named (it removes old row states). `set` must
+    * name existing columns with expressions of exactly their types.
+    * Returns (version, rowsUpdated), None when nothing matched.
+    */
+  def update(spark: SparkSession, table: String,
+      pred: org.apache.spark.sql.Column,
+      set: Map[String, org.apache.spark.sql.Column]): Option[(Long, Long)] =
+    rowLevel(spark, table, pred, Some(set), vectors = false)
+
+  /** Merge-on-read UPDATE (i30): [[update]]'s semantics at
+    * [[deleteVectors]]' write cost — matched row POSITIONS go into a
+    * deletion vector on their files (the pre-update states vanish from
+    * reads) and the UPDATED row states append as new data files, so a
+    * 1-row update in a 1 GB file writes O(positions) + O(updated rows),
+    * never O(file). A SET that moves a partition column lands the row in
+    * its new partition; the DV removal of the old state makes the move
+    * atomic. Returns (version, rowsUpdated).
+    */
+  def updateVectors(spark: SparkSession, table: String,
+      pred: org.apache.spark.sql.Column,
+      set: Map[String, org.apache.spark.sql.Column]): Option[(Long, Long)] =
+    rowLevel(spark, table, pred, Some(set), vectors = true)
+
+  /** The one row-level DML core under [[delete]], [[update]] and their
+    * deletion-vector faces. It asks two questions of the operation:
+    * does a matched row leave a post-image (`set`: update) or none
+    * (delete), and do the hit files lose their matched rows by a rewrite
+    * (copy-on-write) or by a deletion vector (`vectors`: merge-on-read)?
+    *
+    * File discovery is the merge discipline — i25 stats prune the
+    * candidates through the predicate, then ONE DV-aware candidate scan
+    * with per-row file metadata yields both the exact hit list and the
+    * matched count (a match inside a deleted row is no match); files the
+    * predicate provably misses are untouched bytes. NULL-predicate rows
+    * never match. With the change feed on, the matched rows are logged
+    * as `delete` or `update_preimage`/`update_postimage` sidecars in the
+    * same commit (i29). Same conflict rule as [[merge]]: the DML decided
+    * against a snapshot, so any concurrent non-vacuum commit fails NAMED;
+    * every abandoned path sweeps what it wrote ([[OrphanTracker]]).
+    */
+  private def rowLevel(spark: SparkSession, table: String,
+      pred: org.apache.spark.sql.Column,
+      set: Option[Map[String, org.apache.spark.sql.Column]],
+      vectors: Boolean): Option[(Long, Long)] = {
+    import org.apache.spark.sql.functions.{coalesce => cls, col => c, lit => l, when => whn}
+    val op = if (set.isEmpty) "delete" else "update"
     val base = snapshotAt(spark, table)
+    set.foreach { s =>
+      require(s.nonEmpty,
+        "update with an empty SET map would commit a version while changing " +
+          "no row — name the columns")
+      val bad = s.keys.filterNot(base.schema.fieldNames.contains)
+      require(bad.isEmpty, s"update targets absent columns: ${bad.mkString(", ")}")
+      // the column's own type required (up to nullability), BEFORE the
+      // candidates-empty early return: When-branch coercion is
+      // config-dependent (legacy non-ANSI casts land silent NULLs; ANSI
+      // throws mid-write), and a misconfigured SET must fail named even
+      // when pruning empties the match — passing on small/pruned data and
+      // blowing up in production is the worst ordering
+      val probe = emptyFrame(spark, base.schema)
+      s.foreach { case (f, e) =>
+        val got = probe.select(e.as(f)).schema.head.dataType
+        val want = base.schema(f).dataType
+        require(sameType(got, want),
+          s"schema drift: update SET expression for '$f' has type " +
+            s"${got.simpleString}, column is ${want.simpleString} — cast explicitly")
+      }
+    }
     val candidates = pruneByPred(spark, base, pred)
     if (candidates.isEmpty) return None
     val hitPred = cls(pred, l(false))
-    val cand = scanFiles(spark, table, candidates, base.schema, keepMeta = true)
-    val hit = cand.filter(hitPred).select(c(MetaRelCol))
-      .distinct().collect().map(_.getString(0)).toSet
-    val hitFiles = candidates.filter(f => hit.contains(f.path))
-    if (hitFiles.isEmpty) return None
-    val lives = scanFiles(spark, table, hitFiles, base.schema)
-    val survivors = lives.filter(!hitPred)
-    val orphans = new OrphanTracker(spark, table)
-    val adds = orphans.track(
-      writeData(survivors, table, base.schema, base.partitionBy))
-      .map(_.copy(dataChange = false))
-    val deleted = hitFiles.map(_.effRows).sum - adds.map(_.rows).sum
-    // change data (i29): the erased rows, served as 'delete' preimages
-    val v = orphans.guarded {
-      val cdcAdds = if (!base.changeFeed) Nil else
-        orphans.trackCdc(writeCdc(
-          lives.filter(hitPred).withColumn(ChangeTypeCol, l("delete")), table))
-      testHookBeforeCommit()
-      commitLoop(spark, table, "delete") {
-        case None => sys.error(s"no versioned table at $table — create() it first")
-        case Some(snap) =>
-          conflictGuard(spark, table, base.version, snap.version, "delete")
-          Some(hitFiles.map(f => removeLine(f.path)) ++ adds.map(addLine) ++
-            cdcAdds.map { case (p, r) => cdcLine(p, r) })
+    // a deletion vector is written from the matched rows' positions and
+    // a post-image from their values, so that face materializes them once
+    val scanned = scanFiles(spark, table, candidates, base.schema, keepMeta = true)
+      .filter(hitPred)
+    val matched = if (vectors) scanned.localCheckpoint() else scanned
+    try {
+      val perFile = matched.groupBy(c(MetaRelCol)).count().collect()
+        .map(r => (r.getString(0), r.getLong(1))).toMap
+      if (perFile.isEmpty) return None
+      val hitFiles = candidates.filter(f => perFile.contains(f.path))
+      def postImage(rows: DataFrame, s: Map[String, org.apache.spark.sql.Column]) =
+        rows.select(base.schema.fieldNames.map(f => s.get(f).map(_.as(f)).getOrElse(c(f))).toSeq: _*)
+      val (totals, dvved) = if (vectors) dvSplit(hitFiles, perFile) else (Map.empty[String, Long], Nil)
+      val orphans = new OrphanTracker(spark, table)
+      val v = orphans.guarded {
+        // (the matched rows, the adds that replace the hit files)
+        val (pre, adds) =
+          if (vectors) {
+            val dvRel =
+              if (dvved.isEmpty) ""
+              else orphans.trackDir(writeDvSidecar(spark, table, matched, hitFiles, perFile))
+            val pre = matched.drop(MetaRelCol, MetaPosCol)
+            val postAdds = set.toSeq.flatMap(s => orphans.track(writeDataEnforced(
+              postImage(pre, s), table, base.schema, base.partitionBy, base.constraints)))
+            (pre, dvved.map(f => f.copy(dataChange = false,
+              dv = Some(DvDesc(dvRel, totals(f.path))))) ++ postAdds)
+          } else {
+            val lives = scanFiles(spark, table, hitFiles, base.schema)
+            val rewritten = set match {
+              case None => lives.filter(!hitPred)
+              case Some(s) => lives.select(base.schema.fieldNames.map(f =>
+                s.get(f).map(whn(hitPred, _).otherwise(c(f)).as(f)).getOrElse(c(f))).toSeq: _*)
+            }
+            // a delete's survivors are rows the table already held: every
+            // CHECK holds on them, and their re-add is no data change
+            val written = orphans.track(writeDataEnforced(rewritten, table, base.schema,
+              base.partitionBy, if (set.isEmpty) Map.empty else base.constraints))
+            (lives.filter(hitPred),
+              if (set.isEmpty) written.map(_.copy(dataChange = false)) else written)
+          }
+        // change data (i29): the pre-images, and the post-images after
+        // them; the copy-on-write face checkpoints its pre-images once
+        // when they feed both union branches
+        val cdcAdds = if (!base.changeFeed) Nil else {
+          val once = if (set.isDefined && !vectors) pre.localCheckpoint() else pre
+          try orphans.trackCdc(writeCdc(set match {
+            case None => once.withColumn(ChangeTypeCol, l("delete"))
+            case Some(s) => once.withColumn(ChangeTypeCol, l("update_preimage"))
+              .unionByName(postImage(once, s).withColumn(ChangeTypeCol, l("update_postimage")))
+          }, table)) finally { if (once ne pre) once.unpersist(); () }
+        }
+        testHookBeforeCommit()
+        commitLoop(spark, table, op) {
+          case None => sys.error(s"no versioned table at $table — create() it first")
+          case Some(snap) =>
+            conflictGuard(spark, table, base.version, snap.version, op)
+            val protocol =
+              if (dvved.isEmpty ||
+                  (snap.readerFeatures.contains("deletion-vectors") &&
+                    snap.writerFeatures.contains("deletion-vectors"))) Nil
+              else Seq(protocolLine(Set("deletion-vectors"), Set("deletion-vectors")))
+            Some(protocol ++ hitFiles.map(f => removeLine(f.path)) ++ adds.map(addLine) ++
+              cdcAdds.map { case (p, r) => cdcLine(p, r) })
+        }
       }
-    }
-    Some((v.get, deleted))
+      Some((v.get, perFile.values.sum))
+    } finally { matched.unpersist(); () }
   }
 
   /** Write one deletion-vector sidecar dir holding `matched`'s (file,
@@ -2286,21 +2427,6 @@ object VersionedTable {
     dvRel
   }
 
-  /** Merge-on-read DELETE (i30): instead of rewriting every file holding
-    * a matching row ([[delete]]'s copy-on-write — a 1-row GDPR delete in
-    * a 1 GB file rewrites 1 GB), mark the matched row POSITIONS in a
-    * deletion-vector sidecar and re-point the files at it: the write cost
-    * is O(deleted positions), not O(touched bytes). Reads anti-join the
-    * DV ([[scanFiles]]); [[optimize]] folds DVs back into clean files.
-    * The commit carries the `deletion-vectors` protocol feature, so an
-    * old reader that would silently resurrect the rows fails named
-    * instead ([[SupportedReaderFeatures]]). A re-delete on an already
-    * DV'd file unions the old pairs into the new sidecar, so each file
-    * points at exactly one dir; a file whose every row is deleted DROPS
-    * from the snapshot outright. Discovery, NULL-predicate, no-op and
-    * conflict semantics are [[delete]]'s exactly. Returns
-    * (version, rowsDeleted).
-    */
   /** (per-file TOTAL deleted cardinality, files that still need a DV):
     * a file whose every row is now deleted drops from the snapshot
     * outright (remove, no re-add — a zero-effective-row anti-join would
@@ -2312,223 +2438,6 @@ object VersionedTable {
     val totals = hitFiles.map(f =>
       f.path -> (perFile(f.path) + f.dv.map(_.rows).getOrElse(0L))).toMap
     (totals, hitFiles.filterNot(f => totals(f.path) >= f.rows))
-  }
-
-  def deleteVectors(spark: SparkSession, table: String,
-      pred: org.apache.spark.sql.Column): Option[(Long, Long)] = {
-    import org.apache.spark.sql.functions.{coalesce => cls, col => c, lit => l}
-    val base = snapshotAt(spark, table)
-    val candidates = pruneByPred(spark, base, pred)
-    if (candidates.isEmpty) return None
-    val hitPred = cls(pred, l(false))
-    val matched = scanFiles(spark, table, candidates, base.schema, keepMeta = true)
-      .filter(hitPred).localCheckpoint()
-    try {
-      val perFile = matched.groupBy(c(MetaRelCol)).count().collect()
-        .map(r => (r.getString(0), r.getLong(1))).toMap
-      if (perFile.isEmpty) return None
-      val hitFiles = candidates.filter(f => perFile.contains(f.path))
-      val nDeleted = perFile.values.sum
-      // a file whose EVERY row is now deleted drops from the snapshot
-      // outright (remove, no re-add): re-adding it would make every later
-      // scan anti-join a file that serves nothing until optimize folds it.
-      // The sidecar is written only when some file still needs one.
-      val (totals, dvved) = dvSplit(hitFiles, perFile)
-      val orphans = new OrphanTracker(spark, table)
-      val v = orphans.guarded {
-        val dvRel =
-          if (dvved.isEmpty) None
-          else Some(orphans.trackDir(
-            writeDvSidecar(spark, table, matched, hitFiles, perFile)))
-        // change data (i29): same 'delete' preimages as the COW face
-        val cdcAdds = if (!base.changeFeed) Nil else
-          orphans.trackCdc(writeCdc(matched.drop(MetaRelCol, MetaPosCol)
-            .withColumn(ChangeTypeCol, l("delete")), table))
-        testHookBeforeCommit()
-        commitLoop(spark, table, "delete") {
-          case None => sys.error(s"no versioned table at $table — create() it first")
-          case Some(snap) =>
-            conflictGuard(spark, table, base.version, snap.version, "delete")
-            val protocol =
-              if (dvved.isEmpty ||
-                  (snap.readerFeatures.contains("deletion-vectors") &&
-                    snap.writerFeatures.contains("deletion-vectors"))) Nil
-              else Seq(protocolLine(Set("deletion-vectors"), Set("deletion-vectors")))
-            Some(protocol ++ hitFiles.map(f => removeLine(f.path)) ++
-              dvved.map(f => addLine(f.copy(dataChange = false,
-                dv = Some(DvDesc(dvRel.get, totals(f.path)))))) ++
-              cdcAdds.map { case (p, r) => cdcLine(p, r) })
-        }
-      }
-      Some((v.get, nDeleted))
-    } finally { matched.unpersist(); () }
-  }
-
-  /** Row-level UPDATE (Delta's `UPDATE t SET col = expr WHERE pred`) —
-    * the DML triple completed (merge/delete/update): rewrite ONLY the
-    * files holding a matching row, applying `set` to matched rows and
-    * passing the rest through byte-equal. Discovery, NULL-predicate, and
-    * conflict semantics are [[delete]]'s exactly. The rewritten files
-    * carry `dataChange=true` — updated rows ARE new row states the change
-    * feed must serve... but unchanged neighbor rows in the same file
-    * would double-serve, so like Delta without CDF the UPDATE commit
-    * BREAKS the append feed named (op check in [[readChangesSince]] is
-    * not needed: updates remove old row states too, same class as
-    * delete). Returns (version, rowsUpdated), None when nothing matched.
-    */
-  def update(spark: SparkSession, table: String,
-      pred: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): Option[(Long, Long)] = {
-    import org.apache.spark.sql.functions.{coalesce => cls, lit => l, when => whn, col => c}
-    val base = snapshotAt(spark, table)
-    require(set.nonEmpty,
-      "update with an empty SET map would rewrite files, commit a version, " +
-        "and break the change feed while changing no row — name the columns")
-    val bad = set.keys.filterNot(base.schema.fieldNames.contains)
-    require(bad.isEmpty, s"update targets absent columns: ${bad.mkString(", ")}")
-    // EXACT type match required, BEFORE the candidates-empty early return:
-    // When-branch coercion is config-dependent (legacy non-ANSI casts land
-    // silent NULLs; ANSI throws mid-write), and a misconfigured SET must
-    // fail named even when pruning empties the match — passing on small/
-    // pruned data and blowing up in production is the worst ordering
-    val probe = emptyFrame(spark, base.schema)
-    set.foreach { case (f, expr) =>
-      val got = probe.select(expr.as(f)).schema.head.dataType
-      val want = base.schema(f).dataType
-      require(got == want,
-        s"schema drift: update SET expression for '$f' has type " +
-          s"${got.simpleString}, column is ${want.simpleString} — cast explicitly")
-    }
-    val candidates = pruneByPred(spark, base, pred)
-    if (candidates.isEmpty) return None
-    val hitPred = cls(pred, l(false))
-    // one discovery scan yields BOTH the hit-file list and the matched
-    // row count (a separate count() would re-read every hit file);
-    // DV-aware: a match inside a deleted row is no match
-    val hitCounts = scanFiles(spark, table, candidates, base.schema, keepMeta = true)
-      .filter(hitPred).groupBy(c(MetaRelCol)).count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val hitFiles = candidates.filter(f => hitCounts.contains(f.path))
-    if (hitFiles.isEmpty) return None
-    val nUpdated = hitCounts.values.sum
-    val lives = scanFiles(spark, table, hitFiles, base.schema)
-    val updated = lives.select(base.schema.fieldNames.map { f =>
-      set.get(f) match {
-        case Some(expr) => whn(hitPred, expr).otherwise(c(f)).as(f)
-        case None => c(f)
-      }
-    }.toSeq: _*)
-    val orphans = new OrphanTracker(spark, table)
-    val v = orphans.guarded {
-      val adds = orphans.track(writeDataEnforced(updated, table, base.schema,
-        base.partitionBy, base.constraints))
-      // change data (i29): matched rows before and after the SET — the
-      // preimages checkpoint ONCE (merge's CDF discipline: pre feeds both
-      // union branches, and an uncached plan would rescan the hit files
-      // plus their DV anti-join per branch)
-      val cdcAdds = if (!base.changeFeed) Nil else {
-        val pre = lives.filter(hitPred).localCheckpoint()
-        try {
-          val post = pre.select(base.schema.fieldNames.map { f =>
-            set.get(f).map(_.as(f)).getOrElse(c(f)) }.toSeq: _*)
-          orphans.trackCdc(writeCdc(
-            pre.withColumn(ChangeTypeCol, l("update_preimage"))
-              .unionByName(post.withColumn(ChangeTypeCol, l("update_postimage"))),
-            table))
-        } finally { pre.unpersist(); () }
-      }
-      testHookBeforeCommit()
-      commitLoop(spark, table, "update") {
-        case None => sys.error(s"no versioned table at $table — create() it first")
-        case Some(snap) =>
-          conflictGuard(spark, table, base.version, snap.version, "update")
-          Some(hitFiles.map(f => removeLine(f.path)) ++ adds.map(addLine) ++
-            cdcAdds.map { case (p, r) => cdcLine(p, r) })
-      }
-    }
-    Some((v.get, nUpdated))
-  }
-
-  /** Merge-on-read UPDATE (i30): [[update]]'s semantics at
-    * [[deleteVectors]]' write cost — matched row POSITIONS go into a
-    * deletion vector on their files (the pre-update states vanish from
-    * reads) and the UPDATED row states append as new data files, so a
-    * 1-row update in a 1 GB file writes O(positions) + O(updated rows),
-    * never O(file). Same SET typing rules, discovery, NULL-predicate,
-    * no-op and conflict semantics as [[update]]; CDF pre/postimages when
-    * enabled; the `deletion-vectors` protocol feature rides the commit;
-    * [[optimize]] folds the DVs later. Returns (version, rowsUpdated).
-    */
-  def updateVectors(spark: SparkSession, table: String,
-      pred: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): Option[(Long, Long)] = {
-    import org.apache.spark.sql.functions.{coalesce => cls, lit => l, col => c}
-    val base = snapshotAt(spark, table)
-    require(set.nonEmpty,
-      "update with an empty SET map would commit a version while changing " +
-        "no row — name the columns")
-    val bad = set.keys.filterNot(base.schema.fieldNames.contains)
-    require(bad.isEmpty, s"update targets absent columns: ${bad.mkString(", ")}")
-    val probe = emptyFrame(spark, base.schema)
-    set.foreach { case (f, e) =>
-      val got = probe.select(e.as(f)).schema.head.dataType
-      val want = base.schema(f).dataType
-      require(got == want,
-        s"schema drift: update SET expression for '$f' has type " +
-          s"${got.simpleString}, column is ${want.simpleString} — cast explicitly")
-    }
-    val candidates = pruneByPred(spark, base, pred)
-    if (candidates.isEmpty) return None
-    val hitPred = cls(pred, l(false))
-    val matched = scanFiles(spark, table, candidates, base.schema, keepMeta = true)
-      .filter(hitPred).localCheckpoint()
-    try {
-      val perFile = matched.groupBy(c(MetaRelCol)).count().collect()
-        .map(r => (r.getString(0), r.getLong(1))).toMap
-      if (perFile.isEmpty) return None
-      val hitFiles = candidates.filter(f => perFile.contains(f.path))
-      val nUpdated = perFile.values.sum
-      // fully-updated files drop outright (their every live row state was
-      // replaced by a post-image append) — dvSplit, the shared MoR rule
-      val (totals, dvved) = dvSplit(hitFiles, perFile)
-      val orphans = new OrphanTracker(spark, table)
-      val v = orphans.guarded {
-        val dvRel =
-          if (dvved.isEmpty) None
-          else Some(orphans.trackDir(
-            writeDvSidecar(spark, table, matched, hitFiles, perFile)))
-        val pre = matched.drop(MetaRelCol, MetaPosCol)
-        // post states append as fresh files — a SET that moves a partition
-        // column lands the row in its new partition via writeData's own
-        // layout; the DV removal of the old state makes the move atomic
-        val post = pre.select(base.schema.fieldNames.map { f =>
-          set.get(f).map(_.as(f)).getOrElse(c(f)) }.toSeq: _*)
-        val postAdds = orphans.track(writeDataEnforced(post, table,
-          base.schema, base.partitionBy, base.constraints))
-        val cdcAdds = if (!base.changeFeed) Nil else
-          orphans.trackCdc(writeCdc(
-            pre.withColumn(ChangeTypeCol, l("update_preimage"))
-              .unionByName(post.withColumn(ChangeTypeCol, l("update_postimage"))),
-            table))
-        testHookBeforeCommit()
-        commitLoop(spark, table, "update") {
-          case None => sys.error(s"no versioned table at $table — create() it first")
-          case Some(snap) =>
-            conflictGuard(spark, table, base.version, snap.version, "update")
-            val protocol =
-              if (dvved.isEmpty ||
-                  (snap.readerFeatures.contains("deletion-vectors") &&
-                    snap.writerFeatures.contains("deletion-vectors"))) Nil
-              else Seq(protocolLine(Set("deletion-vectors"), Set("deletion-vectors")))
-            Some(protocol ++ hitFiles.map(f => removeLine(f.path)) ++
-              dvved.map(f => addLine(f.copy(dataChange = false,
-                dv = Some(DvDesc(dvRel.get, totals(f.path)))))) ++
-              postAdds.map(addLine) ++
-              cdcAdds.map { case (p, r) => cdcLine(p, r) })
-        }
-      }
-      Some((v.get, nUpdated))
-    } finally { matched.unpersist(); () }
   }
 
   // ----------------------------------------------------- optimize (i28)
@@ -2547,10 +2456,11 @@ object VersionedTable {
     *
     * `zorderBy` is Delta's `OPTIMIZE … ZORDER BY (a, b)`: the compacted
     * rewrite range-partitions + sorts on the i14 Morton curve over the
-    * two columns, so each output file covers a compact 2-D region and the
-    * i25 per-file stats PRUNE on both columns afterwards — compaction and
-    * clustering in the same commit, data still identical. A group whose
-    * z-columns are all-null/degenerate falls back to the plain rewrite
+    * two columns' rank bins ([[zorderValue]]), so each output file covers
+    * a compact 2-D region and the i25 per-file stats PRUNE on both
+    * columns afterwards — compaction and clustering in the same commit,
+    * data still identical. A group with nothing to cluster on (a z-column
+    * all-null or single-valued) falls back to the plain rewrite
     * (clustering is an optimization, never a failure).
     */
   def optimize(spark: SparkSession, table: String,
@@ -2606,28 +2516,19 @@ object VersionedTable {
       val tasks = groups.map { case (smalls, nOut) =>
         new java.util.concurrent.Callable[Seq[AddFile]] {
           override def call(): Seq[AddFile] = {
-            import org.apache.spark.sql.functions.{col, min => mn, max => mx}
+            import org.apache.spark.sql.functions.col
             // DV-aware: the compacted rewrite folds deletion vectors out
             val df = scanFiles(spark, table, smalls, base.schema)
-            val laidOut = zorderBy match {
+            val laidOut = zorderBy.flatMap { case (a, b) => zorderValue(df, a, b) } match {
               case None => df.repartition(nOut)
-              case Some((a, b)) =>
-                val r = df.agg(mn(col(a)).cast("double"), mx(col(a)).cast("double"),
-                  mn(col(b)).cast("double"), mx(col(b)).cast("double")).head()
-                if (r.anyNull || r.getDouble(0) >= r.getDouble(1) ||
-                    r.getDouble(2) >= r.getDouble(3))
-                  df.repartition(nOut) // degenerate/all-null: plain rewrite
-                else {
-                  val z = Sinks.zorderValue(col(a), col(b),
-                    r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-                  // range-partition + in-task sort on the curve, then drop
-                  // the working column (a projection keeps the order) so
-                  // align() sees exactly the table schema
-                  df.withColumn("_graft_z", z)
-                    .repartitionByRange(nOut, col("_graft_z"))
-                    .sortWithinPartitions(col("_graft_z"))
-                    .drop("_graft_z")
-                }
+              case Some(z) =>
+                // range-partition + in-task sort on the curve, then drop
+                // the working column (a projection keeps the order) so
+                // align() sees exactly the table schema
+                df.withColumn("_graft_z", z)
+                  .repartitionByRange(nOut, col("_graft_z"))
+                  .sortWithinPartitions(col("_graft_z"))
+                  .drop("_graft_z")
             }
             writeData(laidOut, table, base.schema, base.partitionBy)
           }
@@ -2667,6 +2568,60 @@ object VersionedTable {
             "while optimize was folding them — re-run optimize on the new snapshot")
         Some(smalls.map(f => removeLine(f.path)) ++ addsMarked.map(addLine))
     }.get))
+  }
+
+  // z-order rank space per column: 2^12 equi-depth bins, cut at this
+  // relative error
+  private val ZorderBits = 12
+  private val ZorderRelErr = 1e-4
+
+  /** The rank-binned Morton value of `a` and `b` over `df`, the z-order
+    * key of [[optimize]]. Each column's cuts come from one
+    * `approxQuantile` pass (bounded driver state, the GK sketch), sorted
+    * and deduplicated (heavy ties collapse cuts); a row's bin is
+    * #{cuts <= v}, a binary search in codegen
+    * ([[graft.functions.BinBySplits]]), scaled to the same 2^12 rank
+    * range for both columns so the one with fewer distinct values is not
+    * squeezed into the curve's low bits; the two interleave
+    * ([[interleaveBits]]). Equal-depth bins hold ~equal ROW counts, so
+    * the curve stays uniform in rank space whatever the value
+    * distribution — linear scaling would fold a zipf column's dense mass
+    * into one bucket and lose the locality exactly where the data lives.
+    * None when a column has fewer than two distinct cuts (all-null or a
+    * single value): its bins would not separate any rows.
+    */
+  private def zorderValue(df: DataFrame, a: String,
+      b: String): Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{call_function, col, floor, lit}
+    val nBins = 1 << ZorderBits
+    val probs = (1 until nBins).map(_.toDouble / nBins).toArray
+    val Array(cutsA, cutsB) = df
+      .select(col(a).cast("double").as("a"), col(b).cast("double").as("b"))
+      .stat.approxQuantile(Array("a", "b"), probs, ZorderRelErr)
+      .map(_.distinct.sorted)
+    if (cutsA.length < 2 || cutsB.length < 2) return None
+    def rank(c: String, cuts: Array[Double]) =
+      floor(call_function("graft_bin", col(c).cast("double"), lit(cuts)) *
+        nBins / (cuts.length + 1))
+    Some(interleaveBits(rank(a, cutsA), rank(b, cutsB), ZorderBits))
+  }
+
+  /** Morton interleave of two bin values in `[0, 2^bits)`: `sa`'s bit i
+    * lands at position 2i, `sb`'s at 2i+1, so rows close in BOTH
+    * dimensions land close on the curve. Pure integer arithmetic — one
+    * codegen'd expression, no UDF.
+    */
+  private[graft] def interleaveBits(sa: org.apache.spark.sql.Column,
+      sb: org.apache.spark.sql.Column, bits: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{lit, shiftleft}
+    require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
+    (0 until bits).foldLeft(lit(0L)) { case (acc, i) =>
+      acc
+        .bitwiseOR(shiftleft(sa.bitwiseAND(lit(1L << i)).cast("long"), i)
+          .cast("long"))
+        .bitwiseOR(shiftleft(sb.bitwiseAND(lit(1L << i)).cast("long"), i + 1)
+          .cast("long"))
+    }
   }
 
   // ------------------------------------------------- change feed (i27)

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.sources.VersionedTable
 
 /** The one storage format of stream-sink state. Every log a foreachBatch
@@ -42,7 +41,7 @@ object BatchLog {
     */
   def write(df: DataFrame, dir: String, batchId: Long): Unit = {
     val spark = df.sparkSession
-    val rows = staged(df, batchId)
+    val rows = df.withColumn("batch_id", lit(batchId))
     snapshot(spark, dir) match {
       case None => VersionedTable.create(rows, dir, Seq("batch_id"))
       case Some(before) =>
@@ -58,7 +57,7 @@ object BatchLog {
     * overwrite commit) — a retrain that re-derives every row.
     */
   def replace(df: DataFrame, dir: String, batchId: Long): Unit = {
-    VersionedTable.overwrite(staged(df, batchId), dir)
+    VersionedTable.overwrite(df.withColumn("batch_id", lit(batchId)), dir)
     ()
   }
 
@@ -110,32 +109,11 @@ object BatchLog {
     val folded = merge(log.filter(col("batch_id") <= cut).drop("batch_id"))
       .withColumn("batch_id", lit(Streams.BaseBatchId))
     val typed = snap.schema.fields.map(f =>
-      if (folded.schema(f.name).dataType == f.dataType) col(f.name)
+      if (VersionedTable.sameType(folded.schema(f.name).dataType, f.dataType)) col(f.name)
       else col(f.name).cast(f.dataType).as(f.name))
     VersionedTable.overwrite(
       folded.select(typed.toSeq: _*).unionByName(log.filter(col("batch_id") > cut)), dir)
     true
-  }
-
-  /** `df` with its `batch_id`, every column in its nullable form: reads of
-    * a table come back nullable, so a log stores that form and a rewrite
-    * of its own rows (compaction, a replay's clearing delete, a retrain)
-    * matches the schema the log was created with.
-    */
-  private def staged(df: DataFrame, batchId: Long): DataFrame = {
-    val rows = df.withColumn("batch_id", lit(batchId))
-    rows.select(rows.schema.fields.map { f =>
-      val t = nullable(f.dataType)
-      if (t == f.dataType) col(f.name) else col(f.name).cast(t).as(f.name)
-    }.toSeq: _*)
-  }
-
-  private def nullable(t: DataType): DataType = t match {
-    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
-    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
-    case StructType(fs) =>
-      StructType(fs.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case other => other
   }
 
   private def inBatch(f: VersionedTable.AddFile, batchId: Long): Boolean =

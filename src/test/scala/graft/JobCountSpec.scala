@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
 import graft.meta.Audit
 import graft.sources.VersionedTable
 
-/** Spark jobs per call of the medallion's bookkeeping paths, counted the
-  * way a user reads them: a `SparkListener` keeping the jobs of one job
-  * group. Metadata-rate work (an audit row, a merge's counts and key
-  * ranges) must not cost jobs of its own; a reintroduced one fails here.
+/** Spark jobs per call of the medallion's bookkeeping paths and the table
+  * writes, counted the way a user reads them: a `SparkListener` keeping
+  * the jobs of one job group. Metadata-rate work (an audit row, a merge's
+  * counts and key ranges) must not cost jobs of its own; a reintroduced
+  * one fails here.
   */
 class JobCountSpec extends SparkSpec {
   import spark.implicits._
@@ -109,5 +110,48 @@ class JobCountSpec extends SparkSpec {
     assert(jobs == 7, s"decontaminateSink ran $jobs jobs")
     assert(graft.streaming.Streams.readDecontaminated(spark, s"$dir/state").count() == 2L)
     evalGrams.unpersist()
+  }
+
+  test("one row-level DML call and one optimize(zorderBy) run pinned numbers of jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("dml_jobs").toFile.getAbsolutePath
+    // 24 rows in 8 small files; a fresh table per call
+    def fixture(name: String, changeFeed: Boolean): String = {
+      val t = s"$dir/$name"
+      VersionedTable.create((1L to 24L).map(i => (i, (i * 7L) % 24L, s"v$i"))
+        .toDF("id", "score", "v").repartition(8, col("id")), t)
+      if (changeFeed) VersionedTable.enableChangeFeed(spark, t)
+      t
+    }
+    val hit = col("id") === 5L
+    val set = Map("v" -> lit("x"))
+    def dml(changeFeed: Boolean): Map[String, Int] = {
+      val cdf = if (changeFeed) "+cdf" else ""
+      def run(op: String)(call: String => Option[(Long, Long)]): (String, Int) = {
+        val t = fixture(s"$op$cdf", changeFeed)
+        var out: Option[(Long, Long)] = None
+        val jobs = jobsOf { out = call(t) }
+        assert(out.map(_._2).contains(1L), s"$op$cdf changed ${out.map(_._2)} rows")
+        s"$op$cdf" -> jobs
+      }
+      Map(
+        run("delete")(VersionedTable.delete(spark, _, hit)),
+        run("deleteVectors")(VersionedTable.deleteVectors(spark, _, hit)),
+        run("update")(VersionedTable.update(spark, _, hit, set)),
+        run("updateVectors")(VersionedTable.updateVectors(spark, _, hit, set)))
+    }
+    val t = fixture("optimize", changeFeed = false)
+    val bytes = VersionedTable.snapshotAt(spark, t).files.map(_.bytes).sum
+    val optimizeJobs = jobsOf(assert(VersionedTable.optimize(spark, t,
+      targetBytes = bytes / 2 + 1, zorderBy = Some(("id", "score"))).isDefined))
+    assert(VersionedTable.snapshotAt(spark, t).files.size == 2)
+    val got = dml(changeFeed = false) ++ dml(changeFeed = true) +
+      ("optimize(zorderBy)" -> optimizeJobs)
+    // the discovery scan, the rewrite or the deletion vector (plus a
+    // post-image append), the change-data sidecar when the feed is on
+    assert(got == Map("delete" -> 4, "delete+cdf" -> 5,
+      "deleteVectors" -> 6, "deleteVectors+cdf" -> 7,
+      "update" -> 4, "update+cdf" -> 6,
+      "updateVectors" -> 7, "updateVectors+cdf" -> 8,
+      "optimize(zorderBy)" -> 5), got.toSeq.sortBy(_._1).mkString(", "))
   }
 }

@@ -77,6 +77,22 @@ class SourcesSpec extends SparkSpec {
     assert(VersionedTable.readVersion(spark, path, 0).count() == 1000)
   }
 
+  /** `data` as a versioned table of 64 small files, compacted into 16 by
+    * `optimize(zorderBy = (x, y))` — the one z-order writer.
+    */
+  private def zordered(data: org.apache.spark.sql.DataFrame, t: String): String = {
+    VersionedTable.create(data.repartition(64), t)
+    val bytes = VersionedTable.snapshotAt(spark, t).files.map(_.bytes).sum
+    assert(VersionedTable.optimize(spark, t, targetBytes = bytes / 16 + 1,
+      zorderBy = Some(("x", "y"))).isDefined)
+    assert(VersionedTable.snapshotAt(spark, t).files.size == 16)
+    t
+  }
+
+  /** Files a predicate cannot rule out by the log's per-file stats. */
+  private def filesTouched(t: String, pred: org.apache.spark.sql.Column): Int =
+    VersionedTable.survivingFiles(spark, t, pred).size
+
   test("zorderWrite clusters both dimensions: thin slabs touch ~sqrt files, not all") {
     val dir = tmp("zorder")
     // 256×256 uniform grid, 16 files → each z-ordered file should cover a
@@ -85,21 +101,18 @@ class SourcesSpec extends SparkSpec {
     // column and touches EVERY file for the other.
     val data = spark.range(1L << 16).select(
       (col("id") % 256).as("x"), (col("id") / 256).as("y"))
-    Sinks.zorderWrite(data, s"$dir/z", "x", "y", nFiles = 16, bits = 8)
-    data.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.parquet(s"$dir/xsort")
-    def filesTouched(path: String, pred: org.apache.spark.sql.Column): Long =
-      spark.read.parquet(path).filter(pred)
-        .select(col("_metadata.file_name")).distinct().count()
+    val z = zordered(data, s"$dir/z")
+    VersionedTable.create(data.repartitionByRange(16, col("x")).sortWithinPartitions("x"),
+      s"$dir/xsort")
     val xSlab = col("x") >= 100 && col("x") < 105
     val ySlab = col("y") >= 100 && col("y") < 105
     assert(filesTouched(s"$dir/xsort", xSlab) <= 2) // perfect on its sort column
     assert(filesTouched(s"$dir/xsort", ySlab) == 16) // blind on the other
-    val (zx, zy) = (filesTouched(s"$dir/z", xSlab), filesTouched(s"$dir/z", ySlab))
+    val (zx, zy) = (filesTouched(z, xSlab), filesTouched(z, ySlab))
     assert(zx <= 8 && zy <= 8, s"z-order locality too weak: x-slab=$zx y-slab=$zy of 16")
     // layout move only — the data itself is intact
-    assert(spark.read.parquet(s"$dir/z").count() == (1L << 16))
-    assert(spark.read.parquet(s"$dir/z").agg(sum(col("x"))).head().getLong(0) ==
+    assert(VersionedTable.read(spark, z).count() == (1L << 16))
+    assert(VersionedTable.read(spark, z).agg(sum(col("x"))).head().getLong(0) ==
       data.agg(sum(col("x"))).head().getLong(0))
   }
 
@@ -107,68 +120,34 @@ class SourcesSpec extends SparkSpec {
     val dir = tmp("zorder-rank")
     // Zipf-ish x: 256 distinct values v(k)=1e6/k — half the distinct
     // values (and half the ROWS) live below ~78e3, i.e. inside 0.4% of the
-    // value range. Linear binning at 8 bits maps that entire dense mass to
-    // bin 0-1, so the curve cannot separate it and a selective predicate
-    // there degenerates to most files. Rank bins are equi-DEPTH, so the
-    // same predicate covers ~2% of rank space and locality survives.
+    // value range. Linear binning maps that entire dense mass to one or two
+    // buckets, so the curve cannot separate it and a selective predicate
+    // there degenerates to most files (it failed this bound). Rank bins
+    // are equi-DEPTH, so the same predicate covers ~2% of rank space and
+    // locality survives.
     val data = spark.range(1L << 16).select(
       floor(lit(1000000.0) / ((col("id") % 256) + 1)).cast("double").as("x"),
       (col("id") / 256).cast("double").as("y"))
-    Sinks.zorderWriteRanked(data, s"$dir/zr", "x", "y", nFiles = 16, nBins = 256,
-      relErr = 1e-3)
-    Sinks.zorderWrite(data, s"$dir/zl", "x", "y", nFiles = 16, bits = 8)
-    def filesTouched(path: String, pred: org.apache.spark.sql.Column): Long =
-      spark.read.parquet(path).filter(pred)
-        .select(col("_metadata.file_name")).distinct().count()
+    val z = zordered(data, s"$dir/zr")
     // thin slab in the DENSE region: k in (100..105] ≈ 2% of rows
     val denseSlab = col("x") >= 1000000.0 / 105 && col("x") < 1000000.0 / 100
     // thin slab in the uniform dimension
     val ySlab = col("y") >= 100 && col("y") < 105
-    val (rx, ry) = (filesTouched(s"$dir/zr", denseSlab), filesTouched(s"$dir/zr", ySlab))
-    val lx = filesTouched(s"$dir/zl", denseSlab)
+    val (rx, ry) = (filesTouched(z, denseSlab), filesTouched(z, ySlab))
     assert(rx <= 8 && ry <= 8,
       s"rank-binned locality too weak on zipf data: dense-slab=$rx y-slab=$ry of 16")
-    assert(rx < lx, s"rank binning should beat linear on the dense slab: rank=$rx linear=$lx")
     // layout move only — the data itself is intact
-    assert(spark.read.parquet(s"$dir/zr").count() == (1L << 16))
-    assert(spark.read.parquet(s"$dir/zr").agg(sum(col("x"))).head().getDouble(0) ==
+    assert(VersionedTable.read(spark, z).count() == (1L << 16))
+    assert(VersionedTable.read(spark, z).agg(sum(col("x"))).head().getDouble(0) ==
       data.agg(sum(col("x"))).head().getDouble(0))
   }
 
-  test("zorderWrite with precomputed ranges eliminates the min/max pass over the input") {
-    val dir = tmp("zorder-once")
-    val acc = spark.sparkContext.longAccumulator("zorder-once-rows")
-    val base = spark.range(0, 1024, 1, 4)
-    val instrumented = spark.createDataFrame(
-      base.rdd.map { r => acc.add(1); org.apache.spark.sql.Row(r % 32, r / 32) },
-      new org.apache.spark.sql.types.StructType()
-        .add("a", org.apache.spark.sql.types.LongType)
-        .add("b", org.apache.spark.sql.types.LongType))
-    Sinks.zorderWrite(instrumented, s"$dir/z", "a", "b", nFiles = 2, bits = 5,
-      ranges = Some((0.0, 31.0, 0.0, 31.0)))
-    val withRanges = acc.value
-    assert(spark.read.parquet(s"$dir/z").count() == 1024)
-    acc.reset()
-    Sinks.zorderWrite(instrumented, s"$dir/z2", "a", "b", nFiles = 2, bits = 5)
-    val withoutRanges = acc.value
-    // The overload's claim: the 4-scalar min/max aggregation pass is GONE —
-    // the default runs exactly one more full evaluation of the upstream.
-    // (repartitionByRange's range-partitioner sampling is a pass of its
-    // own in BOTH variants — inherent to the layout write, not the agg.)
-    assert(withoutRanges - withRanges == 1024L,
-      s"expected the default to cost exactly one extra upstream pass: " +
-        s"with=$withRanges without=$withoutRanges")
-    assert(withRanges <= 2048L,
-      s"ranges variant must run at most write + partitioner sample: $withRanges")
-  }
-
   test("zorderValue interleaves bits and rejects bad knobs") {
-    // Morton property on exact small values: z(1,0)=1 (a bit 0 → pos 0),
-    // z(0,1)=2 (b bit 0 → pos 1), z(3,3)=15, z(2,1)=... a=10₂→pos{2}=4?
-    // spell out: a bits at even positions, b bits at odd.
+    // Morton property on exact small values: a's bits at even positions,
+    // b's at odd — z(1,0)=1, z(0,1)=2, z(3,3)=15.
     val df = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 3L), (255L, 0L), (0L, 255L))
       .toDF("a", "b")
-    val z = Sinks.zorderValue(col("a"), col("b"), 0, 255, 0, 255, bits = 8)
+    val z = VersionedTable.interleaveBits(col("a"), col("b"), bits = 8)
     val m = df.select(col("a"), col("b"), z.as("z"))
       .as[(Long, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
     assert(m((0L, 0L)) == 0L)
@@ -178,13 +157,34 @@ class SourcesSpec extends SparkSpec {
     assert(m((255L, 0L)) == 0x5555L) // a fills even positions
     assert(m((0L, 255L)) == 0xAAAAL) // b fills odd positions
     intercept[IllegalArgumentException](
-      Sinks.zorderValue(col("a"), col("b"), 0, 255, 0, 255, bits = 40))
-    intercept[IllegalArgumentException](
-      Sinks.zorderValue(col("a"), col("b"), 5, 5, 0, 255))
-    // a pre-existing working column fails fast instead of being clobbered
-    val clash = Seq((1L, 2L, 3L)).toDF("a", "b", "_graft_z")
-    intercept[IllegalArgumentException](
-      Sinks.zorderWrite(clash, "/tmp/never-written", "a", "b", nFiles = 1))
+      VersionedTable.interleaveBits(col("a"), col("b"), bits = 40))
+    // a z-column with nothing to bin on (all-null, or one value) falls
+    // back to the plain compaction instead of failing
+    val t = s"${tmp("zorder-degenerate")}/t"
+    VersionedTable.create((1L to 40L).map(i => (i, 7L)).toDF("a", "b")
+      .withColumn("n", lit(null).cast("double")).repartition(4), t)
+    assert(VersionedTable.optimize(spark, t, zorderBy = Some(("a", "n"))).isDefined)
+    assert(VersionedTable.optimize(spark, t, zorderBy = Some(("a", "b"))).isEmpty)
+    VersionedTable.append((41L to 80L).map(i => (i, 7L)).toDF("a", "b")
+      .withColumn("n", lit(null).cast("double")).repartition(4), t)
+    assert(VersionedTable.optimize(spark, t, zorderBy = Some(("a", "b"))).isDefined)
+    assert(VersionedTable.read(spark, t).agg(sum(col("a"))).head().getLong(0) == 3240L)
+  }
+
+  test("only VersionedTable writes a z-order: no other main source names _graft_z " +
+      "or builds a Morton interleave") {
+    val src = new java.io.File("src/main")
+    assert(src.isDirectory, s"run from the project root (cwd ${new java.io.File(".").getAbsolutePath})")
+    // the working column, and the interleave's fold step (a shifted bit
+    // OR-ed into the accumulating curve value)
+    val zorder = """_graft_z|interleaveBits|bitwiseOR\(\s*shiftleft""".r
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val writers = files(src).filter { f =>
+      zorder.findFirstIn(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).isDefined
+    }.map(_.getPath.replace('\\', '/')).sorted
+    assert(writers == Seq("src/main/scala/graft/sources/VersionedTable.scala"))
   }
 
   test("dynamicOverwrite replaces only the partitions present in the batch") {

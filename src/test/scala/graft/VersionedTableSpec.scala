@@ -1053,11 +1053,14 @@ class VersionedTableSpec extends SparkSpec {
       "converted z-ordered layout") {
     val dir = Files.createTempDirectory("vt_zconv").resolve("li").toString
     // 128×128 grid in 16 z-ordered files: each covers a compact region,
-    // so a thin 2-D box crosses a few files, not all 16
+    // so a thin 2-D box crosses a few files, not all 16. The layout is
+    // optimize(zorderBy)'s: 64 small files compacted into 16.
     val grid = spark.range(1L << 14).select(
       (col("id") % 128).as("x"), (col("id") / 128).cast("long").as("y"))
-    graft.sources.Sinks.zorderWrite(grid, dir, "x", "y", nFiles = 16, bits = 7)
-    VersionedTable.convert(spark, dir)
+    VersionedTable.create(grid.repartition(64), dir)
+    val bytes = VersionedTable.snapshotAt(spark, dir).files.map(_.bytes).sum
+    assert(VersionedTable.optimize(spark, dir, targetBytes = bytes / 16 + 1,
+      zorderBy = Some(("x", "y"))).isDefined)
     assert(VersionedTable.snapshotAt(spark, dir).files.size == 16)
     val box = col("x").between(40L, 60L) && col("y").between(40L, 60L)
     val hit = VersionedTable.readWhere(spark, dir, box)
@@ -1065,6 +1068,34 @@ class VersionedTableSpec extends SparkSpec {
     def xy(df: org.apache.spark.sql.DataFrame) =
       df.select("x", "y").as[(Long, Long)].collect().toSet
     assert(xy(hit) == xy(VersionedTable.read(spark, dir).filter(box)) && xy(hit).size == 21 * 21)
+  }
+
+  test("a table created from non-null array elements takes rewrites of its own " +
+      "rows: overwrite, delete, update, updateVectors, optimize(zorderBy), appendEvolve") {
+    val t = tmpTable("nonnull")
+    // a Scala Seq[Double] column: array<double> with containsNull = false,
+    // while every read of the table comes back nullable
+    val df = (1L to 12L).map(i => (i, s"v$i", Seq(i.toDouble, 0.5))).toDF("id", "v", "vec")
+    assert(!df.schema("vec").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .containsNull, "fixture must carry non-null elements")
+    VersionedTable.create(df.repartition(4), t)
+    VersionedTable.overwrite(VersionedTable.read(spark, t).repartition(4), t)
+    assert(VersionedTable.delete(spark, t, col("id") === 1L).map(_._2).contains(1L))
+    assert(VersionedTable.update(spark, t, col("id") === 2L, Map("v" -> lit("u")))
+      .map(_._2).contains(1L))
+    assert(VersionedTable.updateVectors(spark, t, col("id") === 3L, Map("v" -> lit("w")))
+      .map(_._2).contains(1L))
+    assert(VersionedTable.optimize(spark, t, zorderBy = Some(("id", "id"))).isDefined)
+    // a real type change still fails by name
+    val e = intercept[IllegalArgumentException](VersionedTable.append(
+      df.withColumn("vec", col("vec").cast("array<float>")), t))
+    assert(e.getMessage.contains("changed type") && e.getMessage.contains("vec"), e.getMessage)
+    VersionedTable.appendEvolve(VersionedTable.read(spark, t).filter(col("id") === 12L)
+      .withColumn("id", lit(13L)).withColumn("v", lit("v13")).withColumn("extra", lit(1L)), t)
+    assert(rows(VersionedTable.read(spark, t)) ==
+      (2L to 13L).map(i => i -> (if (i == 2L) "u" else if (i == 3L) "w" else s"v$i")).toSet)
+    assert(VersionedTable.read(spark, t).filter(col("id") === 12L)
+      .select("vec").as[Seq[Double]].head() == Seq(12.0, 0.5))
   }
 
   test("supplementary-plane keys: readWhere (=, range) and Warc.lookupAtMany " +
