@@ -122,7 +122,6 @@ object Graph {
       prevSum = s
       iter += 1
     }
-    if (sys.props.contains("graft.debug.cc")) println(s"[cc] rounds=$iter p=$p")
     labels
   }
 
@@ -289,7 +288,6 @@ object Graph {
       it += 1
     }
     lastPageRankIters = it
-    if (sys.props.contains("graft.debug.pr")) println(s"[pr] rounds=$it")
     ranks
   }
 }

@@ -61,15 +61,11 @@ object Scd2 {
       keys: Seq[String],
       attrs: Seq[String],
       asOf: Column): DataFrame = {
-    val keyCols = keys.map(col)
-    val changed = attrs.map(a => !(col(a) <=> col(s"_stg_$a"))).reduce(_ || _)
-
-    val stg = staged.select(
-      (keys.map(k => col(k).as(s"_stg_$k")) ++ attrs.map(a => col(a).as(s"_stg_$a"))): _*)
-    val joinCond = keys.map(k => col(k) === col(s"_stg_$k")).reduce(_ && _)
-
     val current = existing.filter(col("is_current"))
     val historic = existing.filter(!col("is_current"))
+    val (stg, changed, inserts) =
+      stagedSide(staged, current, keys, attrs, asOf, existing.columns.toSeq)
+    val joinCond = keys.map(k => col(k) === col(s"_stg_$k")).reduce(_ && _)
 
     // Current rows, left-joined to the staged batch: expire on change.
     val currentMerged = current
@@ -79,21 +75,32 @@ object Scd2 {
       .withColumn("valid_to", when(col("_changed"), asOf).otherwise(col("valid_to")))
       .select(existing.columns.map(col): _*)
 
-    // Staged rows that are brand new, or differ from the current version.
+    historic.unionByName(currentMerged).unionByName(inserts)
+  }
+
+  /** What both merges derive from the staged batch: its `_stg_`-prefixed
+    * projection, the NULL-safe change predicate between a current row and
+    * its staged match, and the inserts — staged rows that are brand new
+    * or differ from the current version, as the fresh current version
+    * (`valid_from = asOf`) in `cols` order.
+    */
+  private def stagedSide(staged: DataFrame, current: DataFrame, keys: Seq[String],
+      attrs: Seq[String], asOf: Column, cols: Seq[String]): (DataFrame, Column, DataFrame) = {
+    val changed = attrs.map(a => !(col(a) <=> col(s"_stg_$a"))).reduce(_ || _)
+    val stg = staged.select(
+      (keys.map(k => col(k).as(s"_stg_$k")) ++ attrs.map(a => col(a).as(s"_stg_$a"))): _*)
     val inserts = stg
       .join(
-        current.select((keyCols :+ lit(true).as("_cur_exists")) ++ attrs.map(col): _*),
-        keys.map(k => col(s"_stg_$k") === col(k)).reduce(_ && _),
-        "left")
+        current.select((keys.map(col) :+ lit(true).as("_cur_exists")) ++ attrs.map(col): _*),
+        keys.map(k => col(s"_stg_$k") === col(k)).reduce(_ && _), "left")
       .filter(col("_cur_exists").isNull || changed)
       .select(
         (keys.map(k => col(s"_stg_$k").as(k)) ++ attrs.map(a => col(s"_stg_$a").as(a))): _*)
       .withColumn("valid_from", asOf)
       .withColumn("valid_to", lit(null).cast("timestamp"))
       .withColumn("is_current", lit(true))
-      .select(existing.columns.map(col): _*)
-
-    historic.unionByName(currentMerged).unionByName(inserts)
+      .select(cols.map(col): _*)
+    (stg, changed, inserts)
   }
 
   /** [[merge]] committed ROW-LEVEL against an i23 versioned table — the
@@ -143,28 +150,14 @@ object Scd2 {
     // the one job that needs them is the merge's staged checkpoint.
     val live = VT.readVersion(spark, table, baseSnap.version)
     val existingCols = live.columns.toSeq
-    val changed = attrs.map(a => !(col(a) <=> col(s"_stg_$a"))).reduce(_ || _)
-    val stg = staged.select(
-      (keys.map(k => col(k).as(s"_stg_$k")) ++ attrs.map(a => col(a).as(s"_stg_$a"))): _*)
     val current = live.filter(col("is_current"))
+    val (stg, changed, inserts) = stagedSide(staged, current, keys, attrs, asOf, existingCols)
     // expire: current rows with a CHANGED staged match, closed out at asOf
     val expired = current
       .join(stg, keys.map(k => col(k) === col(s"_stg_$k")).reduce(_ && _), "inner")
       .filter(changed)
       .withColumn("is_current", lit(false))
       .withColumn("valid_to", asOf)
-      .select(existingCols.map(col): _*)
-    // insert: new-or-changed staged rows as the fresh current version
-    val inserts = stg
-      .join(
-        current.select((keys.map(col) :+ lit(true).as("_cur_exists")) ++ attrs.map(col): _*),
-        keys.map(k => col(s"_stg_$k") === col(k)).reduce(_ && _), "left")
-      .filter(col("_cur_exists").isNull || changed)
-      .select(
-        (keys.map(k => col(s"_stg_$k").as(k)) ++ attrs.map(a => col(s"_stg_$a").as(a))): _*)
-      .withColumn("valid_from", asOf)
-      .withColumn("valid_to", lit(null).cast("timestamp"))
-      .withColumn("is_current", lit(true))
       .select(existingCols.map(col): _*)
     // handed over lazily: the merge materializes it once and reads its
     // row count from that same job, committing nothing when it is empty

@@ -43,10 +43,15 @@ object Runner {
   private def lastWatermarks(spark: SparkSession,
       auditDir: String): Map[(String, String), String] =
     try {
-      // Completed runs only: a `running` row left by a crashed load is a
-      // diagnostic marker, not state — carry-forward reads through it.
-      Audit.latestCompletedRuns(spark, auditDir)
-        .filter(col("status") === "succeeded" && col("watermark_value").isNotNull)
+      // Succeeded runs only: a `running` row (a crashed load's marker) and
+      // a `failed` row carry no new watermark — carry-forward reads through
+      // them to the last load that landed, so a failed run never drops the
+      // watermark and re-bootstraps the table.
+      graft.ops.Dedup.latestPerKey(
+        spark.read.parquet(auditDir).filter(col("status") === "succeeded"),
+        Seq("source_system", "source_object"),
+        Seq(col("end_time").desc, col("run_id").desc))
+        .filter(col("watermark_value").isNotNull)
         .select(col("source_system"), col("source_object"), col("watermark_value"))
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     } catch {

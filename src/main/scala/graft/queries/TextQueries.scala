@@ -348,13 +348,10 @@ object TextQueries {
 
     // ---- q26: document fingerprinting (norm md5 + min 8-gram hash) ----
     "q26_fingerprint" -> { (s, d) =>
-      // `_norm` bound first: charNgrams' substr lambda would otherwise
-      // re-run the regexp normalization once per ngram.
       Tables.documents(s, d)
-        .withColumn("_norm", TF.normalizeText(col("text")))
         .select(col("doc_id"),
-          md5(col("_norm")).as("fp_md5"),
-          array_min(transform(TF.charNgrams(col("_norm"), 8), g => TF.hash60(g))).as("fp_min_ngram"))
+          md5(TF.normalizeText(col("text"))).as("fp_md5"),
+          array_min(TF.gramHashes(col("text"), 8)).as("fp_min_ngram"))
         .orderBy(col("doc_id"))
     },
 

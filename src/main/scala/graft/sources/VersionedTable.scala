@@ -47,9 +47,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * 10⁶-file table costs one log replay (driver, metadata-rate) instead of
   * an object-store LIST storm, and time travel is replay-to-V. Replay
   * cost is bounded by [[checkpointInterval]]: writers roll a full-state
-  * `.checkpoint.parquet` every N commits (JSON read fallback for
-  * pre-r20 tables) and readers start from the latest
-  * checkpoint ≤ target, so steady-state planning reads ≤ N commit files
+  * `.checkpoint.parquet` every N commits and readers start from the
+  * latest checkpoint ≤ target, so steady-state planning reads ≤ N commit files
   * regardless of table age. [[vacuum]] deletes data files no retained
   * version references and records the horizon in the log; a time travel
   * below the horizon fails NAMED rather than half-reading.
@@ -99,8 +98,8 @@ object VersionedTable {
     */
   private[graft] var clock: () => Long = () => System.currentTimeMillis()
 
-  /** Test seam: runs between a [[merge]]/[[optimize]] decision (snapshot +
-    * data files written) and its commit attempt — the window where a
+  /** Test seam: runs between an append's, a DML's or an [[optimize]]'s
+    * decision (its snapshot) and its commit step — the window where a
     * concurrent commit must be DETECTED. Production value is a no-op;
     * specs inject an interleaved writer here to pin conflict semantics
     * deterministically instead of racing threads.
@@ -164,13 +163,15 @@ object VersionedTable {
 
   // ---------------------------------------------------------------- paths
 
+  /** The state before version 0: what a replay starts from and what the
+    * two creating commits decide against.
+    */
+  private val Genesis = Snapshot(-1L, null, Nil, Map.empty, 0L)
+
   private def logDir(table: String) = new Path(table, LogDirName)
 
   private def commitPath(table: String, v: Long) =
     new Path(logDir(table), f"$v%020d.json")
-
-  private def checkpointJsonPath(table: String, v: Long) =
-    new Path(logDir(table), f"$v%020d.checkpoint.json")
 
   private def checkpointParquetPath(table: String, v: Long) =
     new Path(logDir(table), f"$v%020d.checkpoint.parquet")
@@ -209,24 +210,29 @@ object VersionedTable {
     val names = fs.listStatus(dir).map(_.getPath.getName)
     val commits = names.collect { case n if n.matches("\\d{20}\\.json") =>
       n.stripSuffix(".json").toLong }.sorted.toSeq
-    // both checkpoint spellings: parquet (r20 writers) and the JSON
-    // legacy format older tables carry — readCheckpoint dispatches per file
+    // only parquet checkpoints: a table whose checkpoints are all in the
+    // pre-r20 JSON format replays from its commits (graft never deletes a
+    // commit file) until its next checkpoint-interval commit rolls one
     val checkpoints = names.collect {
-      case n if n.matches("\\d{20}\\.checkpoint\\.json") =>
-        n.stripSuffix(".checkpoint.json").toLong
       case n if n.matches("\\d{20}\\.checkpoint\\.parquet") =>
         n.stripSuffix(".checkpoint.parquet").toLong
-    }.distinct.sorted.toSeq
+    }.sorted.toSeq
     (commits, checkpoints)
   }
 
   def exists(spark: SparkSession, table: String): Boolean =
     commitVersions(fsOf(spark, table), table).nonEmpty
 
+  /** The one missing-table error, for readers and every commit but the
+    * two that create a table.
+    */
+  private def requireTable(present: Boolean, table: String): Unit =
+    require(present, s"no versioned table at $table — create() it first")
+
   /** Latest committed version; fails named on a non-table path. */
   def latestVersion(spark: SparkSession, table: String): Long = {
     val vs = commitVersions(fsOf(spark, table), table)
-    require(vs.nonEmpty, s"no versioned table at $table — create() it first")
+    requireTable(vs.nonEmpty, table)
     vs.last
   }
 
@@ -332,7 +338,7 @@ object VersionedTable {
     }
   }
 
-  private[sources] def addLine(f: AddFile) = obj("add")(fillAdd(_, f))
+  private def addLine(f: AddFile) = obj("add")(fillAdd(_, f))
 
   private def parseAdd(a: JsonNode): AddFile = {
     val bytes = if (a.has("bytes")) a.get("bytes").asLong() else 0L
@@ -365,7 +371,7 @@ object VersionedTable {
       dv = dv)
   }
 
-  private[sources] def removeLine(path: String) = obj("remove")(_.put("path", path))
+  private def removeLine(path: String) = obj("remove")(_.put("path", path))
   private def metaLine(schemaJson: String, partitionBy: Seq[String] = Nil,
       changeFeed: Boolean = false,
       constraints: Option[Map[String, String]] = None) =
@@ -382,7 +388,7 @@ object VersionedTable {
         cs.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
       }
     }
-  private[sources] def txnLine(app: String, batch: Long) =
+  private def txnLine(app: String, batch: Long) =
     obj("txn") { n => n.put("app", app); n.put("batch", batch) }
   private def vacuumLine(horizon: Long) = obj("vacuum")(_.put("horizon", horizon))
   private def protocolLine(features: Set[String],
@@ -395,7 +401,7 @@ object VersionedTable {
         val a = n.putArray("writerFeatures")
         writerFeatures.toSeq.sorted.foreach(a.add) }
     }
-  private[sources] def cdcLine(path: String, rows: Long) =
+  private def cdcLine(path: String, rows: Long) =
     obj("cdc") { n => n.put("path", path); n.put("rows", rows) }
   private def commitLine(op: String, token: String) =
     obj("commit") { n =>
@@ -505,9 +511,9 @@ object VersionedTable {
     * the SAME add-action JSON the commit lines use — one encoding for
     * adds everywhere (parseAdd reads both), and the parse cost is
     * row-streamed (Jackson on one small string per file) instead of one
-    * monolithic tree: at 10⁵–10⁶ files the JSON checkpoint's single-tree
-    * parse dominates snapshot construction (the public Delta protocol
-    * made the same JSON→parquet move for the same reason).
+    * monolithic tree, which at 10⁵–10⁶ files would dominate snapshot
+    * construction (the public Delta protocol made the same JSON→parquet
+    * move for the same reason).
     */
   private val CheckpointSchema =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
@@ -593,67 +599,23 @@ object VersionedTable {
     if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
   }
 
-  /** The LEGACY JSON checkpoint writer — kept (not wired to any write
-    * path) so the fallback reader's contract stays spec-testable against
-    * genuinely old-format files.
-    */
-  private[sources] def writeCheckpointJson(fs: FileSystem, table: String,
-      s: Snapshot): Unit = {
-    val root = mapper.createObjectNode()
-    root.put("version", s.version)
-    root.put("schema", s.schemaJson)
-    root.put("horizon", s.vacuumHorizon)
-    if (s.partitionBy.nonEmpty) {
-      val pa = root.putArray("partitionBy"); s.partitionBy.foreach(pa.add) }
-    if (s.readerFeatures.nonEmpty) {
-      val fa = root.putArray("readerFeatures")
-      s.readerFeatures.toSeq.sorted.foreach(fa.add) }
-    if (s.changeFeed) root.put("changeFeed", true)
-    if (s.constraints.nonEmpty) {
-      val co = root.putObject("constraints")
-      s.constraints.toSeq.sortBy(_._1).foreach { case (k, v) => co.put(k, v) }
-    }
-    val fa = root.putArray("files")
-    s.files.foreach(f => fillAdd(fa.addObject(), f))
-    val ta = root.putObject("txns")
-    s.txns.foreach { case (app, b) => ta.put(app, b) }
-    val dst = checkpointJsonPath(table, s.version)
-    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writeValueAsString(root)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-  }
-
   /** [[readCheckpoint]] tolerating the no-overwrite refresh window (the
     * checkpoint is briefly absent between delete and rename) AND any
     * decode failure: checkpoints are DERIVED state, so None — "use an
     * older checkpoint or replay the raw commits" — is always correct and
     * self-healing, where surfacing a corrupt-checkpoint crash would brick
     * reads the commit log can still serve. NonFatal, not just
-    * IOException: the JSON reader's parse failures were IOExceptions but
-    * parquet decode errors are RuntimeExceptions, and the fallback
-    * contract must not depend on the format's exception taxonomy.
+    * IOException: parquet decode errors are RuntimeExceptions.
     */
   private def readCheckpointOpt(fs: FileSystem, table: String, v: Long): Option[Snapshot] =
     try Some(readCheckpoint(fs, table, v))
     catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Dispatch on the file actually present: parquet (r20 writers) first,
-    * JSON legacy second — old tables keep reading with zero migration.
-    */
-  private[sources] def readCheckpoint(fs: FileSystem, table: String, v: Long): Snapshot =
-    if (fs.exists(checkpointParquetPath(table, v)))
-      readCheckpointParquet(fs, table, v)
-    else readCheckpointJson(fs, table, v)
-
   /** HEADER-ONLY maxTs probe for [[versionAtTimestamp]]'s binary search:
     * reads the first (header) row and stops — each probe costs the first
     * page of each column chunk, never the 10⁵ add rows a full
-    * [[readCheckpoint]] would stream and discard. None = legacy JSON
-    * checkpoint or unreadable (refresh window) — never trusted.
+    * [[readCheckpoint]] would stream and discard. None = a checkpoint
+    * without the field, or unreadable (refresh window) — never trusted.
     */
   private def checkpointMaxTs(fs: FileSystem, table: String, v: Long): Option[Long] =
     try {
@@ -671,7 +633,7 @@ object VersionedTable {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def readCheckpointParquet(fs: FileSystem, table: String, v: Long): Snapshot = {
+  private[sources] def readCheckpoint(fs: FileSystem, table: String, v: Long): Snapshot = {
     import org.apache.parquet.example.data.Group
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
@@ -737,44 +699,6 @@ object VersionedTable {
     } finally reader.close()
   }
 
-  private def readCheckpointJson(fs: FileSystem, table: String, v: Long): Snapshot = {
-    val n = mapper.readTree(readText(fs, checkpointJsonPath(table, v)))
-    val files = {
-      val it = n.get("files").elements()
-      val buf = Seq.newBuilder[AddFile]
-      while (it.hasNext) buf += parseAdd(it.next())
-      buf.result()
-    }
-    val txns = {
-      val it = n.get("txns").fields()
-      val buf = Map.newBuilder[String, Long]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue.asLong()) }
-      buf.result()
-    }
-    val partitionBy = if (!n.has("partitionBy")) Nil else {
-      val it = n.get("partitionBy").elements()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }
-    val features = if (!n.has("readerFeatures")) Set.empty[String] else {
-      val it = n.get("readerFeatures").elements()
-      val b = Set.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }
-    val constraints =
-      if (!n.has("constraints")) Map.empty[String, String]
-      else parseStringMap(n.get("constraints"))
-    Snapshot(n.get("version").asLong(), n.get("schema").asText(), files, txns,
-      n.get("horizon").asLong(), partitionBy, features,
-      changeFeed = n.has("changeFeed") && n.get("changeFeed").asBoolean(),
-      constraints = constraints,
-      // legacy format never recorded the running-max commit time: UNKNOWN
-      // (None) — a replay from here must not claim a timestamp bound
-      maxCommitTs = None)
-  }
-
   /** Replay the log to `version` (latest when negative). Starts from the
     * newest checkpoint ≤ target so planning cost is bounded by
     * [[checkpointInterval]], not table age.
@@ -782,7 +706,7 @@ object VersionedTable {
   def snapshotAt(spark: SparkSession, table: String, version: Long = -1L): Snapshot = {
     val fs = fsOf(spark, table)
     val (commits, checkpoints) = listLog(fs, table)
-    require(commits.nonEmpty, s"no versioned table at $table — create() it first")
+    requireTable(commits.nonEmpty, table)
     val target = if (version < 0) commits.last else version
     require(commits.contains(target),
       s"versioned table $table has no version $target (versions ${commits.head}..${commits.last})")
@@ -793,7 +717,7 @@ object VersionedTable {
     var s = checkpoints.filter(_ <= target).sorted.reverseIterator
       .map(v => readCheckpointOpt(fs, table, v))
       .collectFirst { case Some(snap) => snap }
-      .getOrElse(Snapshot(-1L, null, Nil, Map.empty, 0L))
+      .getOrElse(Genesis)
     // the fallback must not SILENTLY serve a partial table: replay is only
     // valid when every commit in (base, target] survives (pre-checkpoint
     // commits may legitimately be pruned — but then a readable checkpoint
@@ -964,7 +888,7 @@ object VersionedTable {
   def versionAtTimestamp(spark: SparkSession, table: String, tsMillis: Long): Long = {
     val fs = fsOf(spark, table)
     val (vs, checkpoints) = listLog(fs, table)
-    require(vs.nonEmpty, s"no versioned table at $table — create() it first")
+    requireTable(vs.nonEmpty, table)
     // MONOTONIZED timestamps (the public Delta discipline): commit wall
     // times come from each WRITER's clock, so a slow-clock writer can
     // stamp version N+1 earlier than version N — resolving against raw
@@ -980,7 +904,7 @@ object VersionedTable {
     // maxTs <= t, whose entire prefix is eligible by construction, and
     // walk only the commits after it: O(log checkpoints) checkpoint reads
     // + checkpointInterval-bounded commit parses, not O(table age).
-    // A checkpoint without the field (legacy JSON) probes as +infinity —
+    // A checkpoint without the field probes as +infinity —
     // never trusted, at worst a longer walk, never a wrong prefix claim.
     val cps = checkpoints.toIndexedSeq
     def maxTsOf(cv: Long): Long =
@@ -1030,38 +954,36 @@ object VersionedTable {
     */
   def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
     val target = snapshotAt(spark, table, toVersion)
-    commitLoop(spark, table, "restore") {
-      case None => sys.error(s"no versioned table at $table — create() it first")
-      case Some(snap) =>
-        // diff on the FULL add state, not the path: a deletion vector swap
-        // keeps the path but changes which rows the file serves — restoring
-        // across it must remove the DV'd add and re-add the target's state
-        val targetByPath = target.files.map(f => f.path -> f).toMap
-        val liveByPath = snap.files.map(f => f.path -> f).toMap
-        val removes = snap.files
-          .filter(f => !targetByPath.get(f.path).contains(f))
-          .map(f => removeLine(f.path))
-        val adds = target.files
-          .filter(f => !liveByPath.get(f.path).contains(f))
-          .map(addLine)
-        // restore restores SCHEMA and CONSTRAINTS too (an evolved-then-
-        // restored table must serve the old shape, and a constraint on an
-        // evolved-away column would otherwise brick every later write
-        // with an unresolvable-column error); changeFeed enablement stays
-        // CURRENT — it is operational state, not data state
-        val meta =
-          if (snap.schemaJson == target.schemaJson &&
-              snap.partitionBy == target.partitionBy &&
-              snap.constraints == target.constraints) Nil
-          else Seq(metaLine(target.schemaJson, target.partitionBy,
-            snap.changeFeed, Some(target.constraints)))
-        // restoring to the CURRENT state is a NO-OP — committing an empty
-        // 'restore' version would permanently break every append-face
-        // consumer while changing nothing (the overwritePartitions
-        // empty-frame discipline; an idempotent recovery-script re-run
-        // must be free)
-        if (meta.isEmpty && removes.isEmpty && adds.isEmpty) None
-        else Some(meta ++ removes ++ adds)
+    commitLoop(spark, table, "restore") { snap =>
+      // diff on the FULL add state, not the path: a deletion vector swap
+      // keeps the path but changes which rows the file serves — restoring
+      // across it must remove the DV'd add and re-add the target's state
+      val targetByPath = target.files.map(f => f.path -> f).toMap
+      val liveByPath = snap.files.map(f => f.path -> f).toMap
+      val removes = snap.files
+        .filter(f => !targetByPath.get(f.path).contains(f))
+        .map(f => removeLine(f.path))
+      val adds = target.files
+        .filter(f => !liveByPath.get(f.path).contains(f))
+        .map(addLine)
+      // restore restores SCHEMA and CONSTRAINTS too (an evolved-then-
+      // restored table must serve the old shape, and a constraint on an
+      // evolved-away column would otherwise brick every later write
+      // with an unresolvable-column error); changeFeed enablement stays
+      // CURRENT — it is operational state, not data state
+      val meta =
+        if (snap.schemaJson == target.schemaJson &&
+            snap.partitionBy == target.partitionBy &&
+            snap.constraints == target.constraints) Nil
+        else Seq(metaLine(target.schemaJson, target.partitionBy,
+          snap.changeFeed, Some(target.constraints)))
+      // restoring to the CURRENT state is a NO-OP — committing an empty
+      // 'restore' version would permanently break every append-face
+      // consumer while changing nothing (the overwritePartitions
+      // empty-frame discipline; an idempotent recovery-script re-run
+      // must be free)
+      if (meta.isEmpty && removes.isEmpty && adds.isEmpty) None
+      else Some(meta ++ removes ++ adds)
     }.getOrElse(latestVersion(spark, table))
   }
 
@@ -1501,14 +1423,12 @@ object VersionedTable {
 
   // --------------------------------------------------- orphan discipline
 
-  /** THE single sweep discipline for eagerly-materialized DML artifacts
-    * (data files, DV sidecars, CDC sidecars): every write registers its
-    * `data/<dir>/` as it happens, and any abandoned path — an exception
-    * anywhere after the first artifact, or a commit loop that returns
-    * None — sweeps exactly what was materialized so far. One
-    * implementation instead of a per-op copy that drifts (and, unlike a
-    * lazy-val re-force, sweeping NEVER re-runs a write job: only dirs
-    * already registered are touched).
+  /** The files a writer materialized for one commit (data files, DV
+    * sidecars, CDC sidecars): every write registers its `data/<dir>/` as
+    * it happens, and [[commitLoop]] sweeps exactly what was registered
+    * when the commit throws or is abandoned. Writers that materialize
+    * inside the commit step's first attempt are covered from their first
+    * artifact on; sweeping never re-runs a write job.
     */
   private[sources] final class OrphanTracker(spark: SparkSession, table: String) {
     private val dirs = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -1523,9 +1443,6 @@ object VersionedTable {
       val fs = fsOf(spark, table)
       dirs.foreach(d => fs.delete(new Path(s"$table/$DataDirName/$d"), true))
     }
-    /** Run `body`, sweeping everything registered on ANY throw. */
-    def guarded[T](body: => T): T =
-      try body catch { case e: Throwable => sweep(); throw e }
   }
 
   // ---------------------------------------------- CHECK constraints (i33)
@@ -1533,37 +1450,33 @@ object VersionedTable {
   /** Write `df` under `constraints` enforcement (Delta's CHECK
     * constraints, i33): violation counting rides the WRITE ITSELF via the
     * public Observation API — ONE pass, no pre-validation scan — and a
-    * violating batch sweeps its (never-referenced) files and fails NAMED
-    * before any commit references them, so enforcement is transactional
+    * violating batch fails NAMED before any commit references its files
+    * (tracked in `orphans`, so the commit step sweeps them), so enforcement is transactional
     * by the same invisibility rule every writer relies on. A NULL check
     * result counts as a violation (a CHECK must HOLD, not merely
     * not-fail — the Delta semantics).
     */
   private[sources] def writeDataEnforced(df: DataFrame, table: String, schema: StructType,
-      partitionBy: Seq[String], constraints: Map[String, String]): Seq[AddFile] = {
+      partitionBy: Seq[String], constraints: Map[String, String],
+      orphans: OrphanTracker): Seq[AddFile] = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when, not}
-    if (constraints.isEmpty) return writeData(df, table, schema, partitionBy)
+    if (constraints.isEmpty) return orphans.track(writeData(df, table, schema, partitionBy))
     val names = constraints.keys.toSeq.sorted
     val obs = org.apache.spark.sql.Observation()
     val aggs = names.map(n => sum(
       when(not(coalesce(expr(constraints(n)), lit(false))), 1L).otherwise(0L)).as(n))
     val observed = df.observe(obs, aggs.head, aggs.tail: _*)
-    val adds = writeData(observed, table, schema, partitionBy)
+    val adds = orphans.track(writeData(observed, table, schema, partitionBy))
     val row = graft.ops.Observations.of(obs, s"versioned table $table: CHECK constraint counts")
     def violations(n: String): Long =
       row.get(n).flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
     val violated = names.filter(violations(_) > 0L)
-    if (violated.nonEmpty) {
-      // the ONE sweep implementation (r19 advice): route the violating
-      // batch's never-referenced files through OrphanTracker, not an
-      // inline per-op copy that drifts
-      val sweeper = new OrphanTracker(df.sparkSession, table)
-      sweeper.track(adds)
-      sweeper.sweep()
+    // the violating batch's files are tracked: the commit step that runs
+    // this write sweeps them when the error aborts it
+    if (violated.nonEmpty)
       sys.error(s"versioned table $table: write violates CHECK constraint(s) " +
         violated.map(n => s"$n [${constraints(n)}] (${violations(n)} rows)")
           .mkString(", ") + " — nothing was committed")
-    }
     adds
   }
 
@@ -1580,95 +1493,148 @@ object VersionedTable {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name '$name' must be an identifier")
-    commitLoop(spark, table, "constraint") {
-      case None => sys.error(s"no versioned table at $table — create() it first")
-      case Some(snap) =>
-        require(!snap.constraints.contains(name),
-          s"versioned table $table already has constraint $name " +
-            s"[${snap.constraints(name)}] — drop it first")
-        // validate INSIDE the loop against the snapshot the commit will
-        // publish over: a concurrent write racing a pre-loop validation
-        // could land violating rows under a just-committed constraint
-        // (retries are rare; the rescan is the price of the guarantee)
-        val bad = scanFiles(spark, table, snap.files, snap.schema)
-          .filter(not(coalesce(expr(checkSql), lit(false)))).limit(1).collect()
-        require(bad.isEmpty,
-          s"versioned table $table: existing data violates CHECK $name " +
-            s"[$checkSql] — e.g. ${bad.headOption.map(_.toString).getOrElse("")}; " +
-            "clean the data before constraining it")
-        Some(
-          // writer feature rides the constraining commit: a writer that
-          // wouldn't evaluate CHECKs would land silent violations
-          (if (snap.writerFeatures.contains("check-constraints")) Nil
-           else Seq(protocolLine(Set.empty, Set("check-constraints")))) :+
-            metaLine(snap.schemaJson, snap.partitionBy, snap.changeFeed,
-              Some(snap.constraints + (name -> checkSql))))
+    commitLoop(spark, table, "constraint") { snap =>
+      require(!snap.constraints.contains(name),
+        s"versioned table $table already has constraint $name " +
+          s"[${snap.constraints(name)}] — drop it first")
+      // validate INSIDE the loop against the snapshot the commit will
+      // publish over: a concurrent write racing a pre-loop validation
+      // could land violating rows under a just-committed constraint
+      // (retries are rare; the rescan is the price of the guarantee)
+      val bad = scanFiles(spark, table, snap.files, snap.schema)
+        .filter(not(coalesce(expr(checkSql), lit(false)))).limit(1).collect()
+      require(bad.isEmpty,
+        s"versioned table $table: existing data violates CHECK $name " +
+          s"[$checkSql] — e.g. ${bad.headOption.map(_.toString).getOrElse("")}; " +
+          "clean the data before constraining it")
+      Some(
+        // writer feature rides the constraining commit: a writer that
+        // wouldn't evaluate CHECKs would land silent violations
+        (if (snap.writerFeatures.contains("check-constraints")) Nil
+         else Seq(protocolLine(Set.empty, Set("check-constraints")))) :+
+          metaLine(snap.schemaJson, snap.partitionBy, snap.changeFeed,
+            Some(snap.constraints + (name -> checkSql))))
     }.get
   }
 
   /** DROP CONSTRAINT: removes the named CHECK; fails named when absent. */
   def dropConstraint(spark: SparkSession, table: String, name: String): Long =
-    commitLoop(spark, table, "constraint") {
-      case None => sys.error(s"no versioned table at $table — create() it first")
-      case Some(snap) =>
-        require(snap.constraints.contains(name),
-          s"versioned table $table has no constraint $name " +
-            s"(has: ${snap.constraints.keys.toSeq.sorted.mkString(", ")})")
-        Some(Seq(metaLine(snap.schemaJson, snap.partitionBy, snap.changeFeed,
-          Some(snap.constraints - name))))
+    commitLoop(spark, table, "constraint") { snap =>
+      require(snap.constraints.contains(name),
+        s"versioned table $table has no constraint $name " +
+          s"(has: ${snap.constraints.keys.toSeq.sorted.mkString(", ")})")
+      Some(Seq(metaLine(snap.schemaJson, snap.partitionBy, snap.changeFeed,
+        Some(snap.constraints - name))))
     }.get
 
-  /** The optimistic-concurrency commit loop: re-snapshot, build actions,
-    * publish exclusively, retry on loss. `actions` may return None to
-    * abandon the commit (the txn-already-committed case).
+  /** The one commit step every writer publishes through: re-snapshot,
+    * check, build actions, publish exclusively, retry on loss. It owns
+    * the rules every writer shares:
+    *  - a missing table fails named, except for the two ops that create
+    *    one (`create`, `convert`), which fail on an existing table and
+    *    decide against the empty [[Genesis]] state;
+    *  - the writer-features guard;
+    *  - `txn`: an (app, batch) pair already in the log abandons the
+    *    commit (the foreachBatch replay contract); otherwise its `txn`
+    *    line rides the commit;
+    *  - `rule`: the writer's conflict rule ([[conflictGuard]],
+    *    [[constraintsUnchanged]], optimize's rewrite rule), checked
+    *    against every attempt's snapshot before `actions` runs, so a
+    *    writer that materializes its files inside `actions` writes
+    *    nothing on a replay or a conflict;
+    *  - `orphans`: when the commit throws or is abandoned (`actions` or
+    *    the replay check answers None), every file the writer tracked is
+    *    swept. `convert` passes none: its files are the user's own.
     */
-  private[sources] def commitLoop(spark: SparkSession, table: String, op: String)(
-      actions: Option[Snapshot] => Option[Seq[String]]): Option[Long] = {
+  private def commitLoop(spark: SparkSession, table: String, op: String,
+      orphans: Option[OrphanTracker] = None, txn: Option[(String, Long)] = None,
+      rule: Snapshot => Unit = _ => ())(
+      actions: Snapshot => Option[Seq[String]]): Option[Long] = {
     val fs = fsOf(spark, table)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val vs = commitVersions(fs, table)
-      val snap = if (vs.isEmpty) None else Some(snapshotAt(spark, table))
-      // the writer-features guard (r20): ONE enforcement point every
-      // writer passes through — a build that doesn't understand table
-      // state it would silently corrupt (DVs it wouldn't fold, cdc
-      // sidecars it wouldn't write, CHECKs it wouldn't evaluate) refuses
-      // to commit ANYTHING, including vacuum (which would sweep sidecars
-      // it can't see as referenced). Reads stay served.
-      snap.foreach { s =>
-        val unsupported = s.writerFeatures -- SupportedWriterFeatures
+    val creates = op == "create" || op == "convert"
+    def publish(): Option[Long] = {
+      var attempt = 0
+      while (attempt < MaxCommitAttempts) {
+        val vs = commitVersions(fs, table)
+        if (creates) require(vs.isEmpty,
+          s"versioned table $table was created concurrently — $op needs a path without one")
+        else requireTable(vs.nonEmpty, table)
+        val snap = if (vs.isEmpty) Genesis else snapshotAt(spark, table)
+        // the writer-features guard (r20): a build that doesn't understand
+        // table state it would silently corrupt (DVs it wouldn't fold, cdc
+        // sidecars it wouldn't write, CHECKs it wouldn't evaluate) refuses
+        // to commit ANYTHING, including vacuum (which would sweep sidecars
+        // it can't see as referenced). Reads stay served.
+        val unsupported = snap.writerFeatures -- SupportedWriterFeatures
         require(unsupported.isEmpty,
           s"versioned table $table requires writer features " +
             s"${unsupported.toSeq.sorted.mkString(", ")} this build does not " +
             s"support (supported: ${SupportedWriterFeatures.toSeq.sorted.mkString(", ")}) — " +
             "refusing to commit state this writer could silently corrupt; " +
             "upgrade the writer (reads are unaffected)")
+        if (txn.exists { case (app, batch) => snap.txns.get(app).exists(_ >= batch) })
+          return None
+        rule(snap)
+        actions(snap) match {
+          case None => return None
+          case Some(lines) =>
+            val v = snap.version + 1
+            val token = java.util.UUID.randomUUID().toString
+            val body = (txn.map { case (app, batch) => txnLine(app, batch) }.toSeq ++
+              lines :+ commitLine(op, token)).mkString("", "\n", "\n")
+            if (tryPublish(fs, commitPath(table, v), body, token)) {
+              // the commit is durably published from here; the checkpoint
+              // is DERIVED, last-writer-wins state — a failure writing it
+              // (a concurrent vacuum racing the horizon past v, transient
+              // IO) must never surface as a failed commit, or a plain
+              // append() caller would retry and double-append (only
+              // txnAppend is idempotent). A later writer at the next
+              // interval re-covers replay bounding.
+              if (v > 0 && v % checkpointInterval == 0)
+                try writeCheckpoint(fs, table, snapshotAt(spark, table, v))
+                catch { case scala.util.control.NonFatal(_) => () }
+              return Some(v)
+            }
+        }
+        attempt += 1
       }
-      actions(snap) match {
-        case None => return None
-        case Some(lines) =>
-          val v = snap.map(_.version + 1).getOrElse(0L)
-          val token = java.util.UUID.randomUUID().toString
-          val body = (lines :+ commitLine(op, token)).mkString("", "\n", "\n")
-          if (tryPublish(fs, commitPath(table, v), body, token)) {
-            // the commit is durably published from here; the checkpoint is
-            // DERIVED, last-writer-wins state — a failure writing it (a
-            // concurrent vacuum racing the horizon past v, transient IO)
-            // must never surface as a failed commit, or a plain append()
-            // caller would retry and double-append (only txnAppend is
-            // idempotent). A later writer at the next interval re-covers
-            // replay bounding.
-            if (v > 0 && v % checkpointInterval == 0)
-              try writeCheckpoint(fs, table, snapshotAt(spark, table, v))
-              catch { case scala.util.control.NonFatal(_) => () }
-            return Some(v)
-          }
-      }
-      attempt += 1
+      sys.error(s"versioned table $table: lost the commit race $MaxCommitAttempts times — " +
+        "a writer storm needs external coordination")
     }
-    sys.error(s"versioned table $table: lost the commit race $MaxCommitAttempts times — " +
-      "a writer storm needs external coordination")
+    var out: Option[Long] = None
+    try out = publish()
+    finally if (out.isEmpty) orphans.foreach(_.sweep())
+    out
   }
+
+  /** The DML conflict rule: a merge, MERGE INTO, delete or update DECIDED
+    * against the table at `baseVersion`; any non-vacuum commit landing
+    * before its publish does not commute and fails NAMED.
+    */
+  private def conflictGuard(spark: SparkSession, table: String,
+      baseVersion: Long, opName: String)(snap: Snapshot): Unit =
+    if (snap.version != baseVersion) {
+      val fs = fsOf(spark, table)
+      ((baseVersion + 1) to snap.version).foreach { v =>
+        val op = parseCommit(fs, table, v)._2
+        if (op != "vacuum") sys.error(
+          s"versioned table $table: concurrent commit $v (op=$op) conflicts " +
+            s"with a $opName begun at version $baseVersion — $opName does not " +
+            s"commute with concurrent writes; re-run the $opName on the new snapshot")
+      }
+    }
+
+  /** The blind writers' conflict rule (append, overwrite,
+    * overwritePartitions): their rows were enforced against `base`'s
+    * CHECK constraints, and a blind write has no other read to anchor on,
+    * so a concurrent constraint change fails them named instead of
+    * publishing rows the new rule never checked.
+    */
+  private def constraintsUnchanged(table: String, base: Snapshot, op: String)(
+      snap: Snapshot): Unit =
+    if (snap.constraints != base.constraints) sys.error(
+      s"versioned table $table: constraints changed concurrently while an $op " +
+        "was in flight — re-run it so it is enforced against the new constraint set")
 
   /** Create the table at version 0; fails named if it already exists.
     * `partitionBy` declares hive-style partition columns (i26): every
@@ -1685,11 +1651,8 @@ object VersionedTable {
       s"partition columns absent from the frame: ${missing.mkString(", ")}")
     val schema = df.schema
     val adds = writeData(df, table, schema, partitionBy)
-    commitLoop(spark, table, "create") {
-      case Some(_) => sys.error(
-        s"versioned table $table was created concurrently — append() or overwrite() it")
-      case None =>
-        Some(metaLine(schema.json, partitionBy, changeFeed) +: adds.map(addLine))
+    commitLoop(spark, table, "create") { _ =>
+      Some(metaLine(schema.json, partitionBy, changeFeed) +: adds.map(addLine))
     }.get
   }
 
@@ -1764,11 +1727,7 @@ object VersionedTable {
       val (rows, stats) = footerStats(f.getPath, conf, schema)
       AddFile(rel, rows, f.getLen, Map.empty, stats)
     }
-    commitLoop(spark, dir, "convert") {
-      case Some(_) => sys.error(
-        s"$dir was converted/created concurrently — read it instead")
-      case None => Some(metaLine(schema.json) +: adds.map(addLine))
-    }.get
+    commitLoop(spark, dir, "convert")(_ => Some(metaLine(schema.json) +: adds.map(addLine))).get
   }
 
   /** DESCRIBE DETAIL (Delta's observability face): one row of table
@@ -1807,17 +1766,15 @@ object VersionedTable {
     // dedicated op (r19 advice): a table-property change must stay
     // distinguishable from a data append in history() and the feed-face
     // op dispatch — "property" is a no-op for both faces, like "constraint"
-    commitLoop(spark, table, "property") {
-      case None => sys.error(s"no versioned table at $table — create() it first")
-      case Some(snap) =>
-        if (snap.changeFeed) None
-        else Some(
-          // writer feature rides the enabling commit: from here every DML
-          // must write cdc sidecars, and a writer that wouldn't breaks
-          // the feed — refuse it at commitLoop's guard instead
-          (if (snap.writerFeatures.contains("change-data-feed")) Nil
-           else Seq(protocolLine(Set.empty, Set("change-data-feed")))) :+
-            metaLine(snap.schemaJson, snap.partitionBy, changeFeed = true))
+    commitLoop(spark, table, "property") { snap =>
+      if (snap.changeFeed) None
+      else Some(
+        // writer feature rides the enabling commit: from here every DML
+        // must write cdc sidecars, and a writer that wouldn't breaks
+        // the feed — refuse it at commitLoop's guard instead
+        (if (snap.writerFeatures.contains("change-data-feed")) Nil
+         else Seq(protocolLine(Set.empty, Set("change-data-feed")))) :+
+          metaLine(snap.schemaJson, snap.partitionBy, changeFeed = true))
     }.getOrElse(latestVersion(spark, table))
 
   /** Append `df` (schema-enforced) as one commit; returns the version. */
@@ -1869,40 +1826,21 @@ object VersionedTable {
         else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
     } else df
     val orphans = new OrphanTracker(spark, table)
-    // lazy so a cheap-pre-check replay never writes; tracked on SUCCESS
-    // only, so an abandoned path sweeps exactly what was materialized and
-    // never re-forces a failed write job
-    lazy val adds = orphans.track(writeDataEnforced(prepared, table,
-      writeSchema, baseSnap.partitionBy, baseSnap.constraints))
+    // written on the first attempt, so a replayed batch never writes
+    lazy val adds = writeDataEnforced(prepared, table, writeSchema,
+      baseSnap.partitionBy, baseSnap.constraints, orphans)
     testHookBeforeCommit()
-    val out =
-      orphans.guarded(commitLoop(spark, table, "append") {
-        case None => sys.error(s"no versioned table at $table — create() it first")
-        case Some(snap) =>
-          if (app != null && snap.txns.get(app).exists(_ >= batch)) None
-          else {
-            // the data was enforced against baseSnap's constraints; a
-            // CONCURRENT constraint change would let this retry publish
-            // unchecked rows under the new rule — fail named instead
-            // (merge/delete/update get this from conflictGuard; blind
-            // appends have no other read to anchor on)
-            if (snap.constraints != baseSnap.constraints) sys.error(
-              s"versioned table $table: constraints changed concurrently " +
-                s"while an append was in flight — re-run the append so it " +
-                "is enforced against the new constraint set")
-            val txn = if (app == null) Nil else Seq(txnLine(app, batch))
-            // on a retry after losing the race, merge any CONCURRENT
-            // widening into ours — the commit's meta must never narrow
-            val meta = if (!evolve) Nil else {
-              val merged = evolvedSchema(snap.schema, writeSchema)
-              if (merged == snap.schema) Nil
-              else Seq(metaLine(merged.json, snap.partitionBy))
-            }
-            Some(meta ++ txn ++ adds.map(addLine))
-          }
-      })
-    if (out.isEmpty) orphans.sweep()
-    out
+    commitLoop(spark, table, "append", Some(orphans), Option(app).map(_ -> batch),
+        constraintsUnchanged(table, baseSnap, "append")) { snap =>
+      // on a retry after losing the race, merge any CONCURRENT widening
+      // into ours — the commit's meta must never narrow
+      val meta = if (!evolve) Nil else {
+        val merged = evolvedSchema(snap.schema, writeSchema)
+        if (merged == snap.schema) Nil
+        else Seq(metaLine(merged.json, snap.partitionBy))
+      }
+      Some(meta ++ adds.map(addLine))
+    }
   }
 
   /** Full refresh as one commit: remove every live file, add the new ones.
@@ -1913,16 +1851,12 @@ object VersionedTable {
     val spark = df.sparkSession
     val base = snapshotAt(spark, table)
     val orphans = new OrphanTracker(spark, table)
-    val adds = orphans.track(writeDataEnforced(df, table, base.schema,
-      base.partitionBy, base.constraints))
-    orphans.guarded(commitLoop(spark, table, "overwrite") {
-      case None => sys.error(s"no versioned table at $table — create() it first")
-      case Some(snap) =>
-        if (snap.constraints != base.constraints) sys.error(
-          s"versioned table $table: constraints changed concurrently while " +
-            "an overwrite was in flight — re-run it against the new set")
-        Some(snap.files.map(f => removeLine(f.path)) ++ adds.map(addLine))
-    }.get)
+    lazy val adds = writeDataEnforced(df, table, base.schema, base.partitionBy,
+      base.constraints, orphans)
+    commitLoop(spark, table, "overwrite", Some(orphans),
+        rule = constraintsUnchanged(table, base, "overwrite")) { snap =>
+      Some(snap.files.map(f => removeLine(f.path)) ++ adds.map(addLine))
+    }.get
   }
 
   /** Dynamic-partition overwrite as one commit (i26): remove every live
@@ -1941,25 +1875,21 @@ object VersionedTable {
     require(base.partitionBy.nonEmpty,
       s"versioned table $table is unpartitioned — use overwrite()")
     val orphans = new OrphanTracker(spark, table)
-    val adds = orphans.track(writeDataEnforced(df, table, base.schema,
-      base.partitionBy, base.constraints))
+    lazy val adds = writeDataEnforced(df, table, base.schema, base.partitionBy,
+      base.constraints, orphans)
     // an empty frame touches NO partition: dynamic-overwrite semantics make
     // it a no-op, and committing an empty overwrite_partitions version
     // would permanently break every change-feed/feedInto consumer (the op
     // fails named there) while changing nothing — mirror merge/delete/
     // update's no-op-means-no-commit contract and return the current
     // version uncommitted
-    if (adds.isEmpty) return base.version
-    val touched = adds.map(_.partitions).toSet
-    orphans.guarded(commitLoop(spark, table, "overwrite_partitions") {
-      case None => sys.error(s"no versioned table at $table — create() it first")
-      case Some(snap) =>
-        if (snap.constraints != base.constraints) sys.error(
-          s"versioned table $table: constraints changed concurrently while " +
-            "a dynamic overwrite was in flight — re-run it against the new set")
-        Some(snap.files.filter(f => touched.contains(f.partitions))
-          .map(f => removeLine(f.path)) ++ adds.map(addLine))
-    }.get)
+    commitLoop(spark, table, "overwrite_partitions", Some(orphans),
+        rule = constraintsUnchanged(table, base, "overwrite_partitions")) { snap =>
+      val touched = adds.map(_.partitions).toSet
+      if (adds.isEmpty) None
+      else Some(snap.files.filter(f => touched.contains(f.partitions))
+        .map(f => removeLine(f.path)) ++ adds.map(addLine))
+    }.getOrElse(base.version)
   }
 
   // ------------------------------------------------- change data (i29)
@@ -2000,24 +1930,6 @@ object VersionedTable {
   }
 
   // -------------------------------------------------------- merge (i24)
-
-  /** The shared DML conflict rule: a merge/delete/update DECIDED against
-    * the snapshot at `baseVersion`; any non-vacuum commit landing before
-    * its publish does not commute and fails NAMED (one definition —
-    * per-op copies would silently diverge).
-    */
-  private[sources] def conflictGuard(spark: SparkSession, table: String,
-      baseVersion: Long, snapVersion: Long, opName: String): Unit =
-    if (snapVersion != baseVersion) {
-      val fs = fsOf(spark, table)
-      ((baseVersion + 1) to snapVersion).foreach { v =>
-        val op = parseCommit(fs, table, v)._2
-        if (op != "vacuum") sys.error(
-          s"versioned table $table: concurrent commit $v (op=$op) conflicts " +
-            s"with a $opName begun at version $baseVersion — $opName does not " +
-            s"commute with concurrent writes; re-run the $opName on the new snapshot")
-      }
-    }
 
   /** Row-level copy-on-write upsert — the reference's central write
     * primitive (two `MERGE INTO` per silver table,
@@ -2078,10 +1990,10 @@ object VersionedTable {
     mergeStaged(staged, table, keys, app, batch, readVersion, emptyIsNoop = false)
 
   /** [[txnMerge]]'s body. The staged batch is materialized ONCE, by the
-    * checkpoint below, and that job also yields, through `observe()`, the
-    * batch's row count and per-key [min,max]: no separate range
-    * aggregation or emptiness job. With `emptyIsNoop` an empty batch
-    * commits nothing and returns None — the SCD2 no-op contract of
+    * checkpoint of [[stage]], and that job also yields the batch's row
+    * count and per-key [min,max]: no separate range aggregation or
+    * emptiness job. With `emptyIsNoop` an empty batch commits nothing and
+    * returns None — the SCD2 no-op contract of
     * [[graft.ops.Scd2.mergeVersioned]], which can then hand over its
     * upsert unmaterialized; [[merge]] and [[txnMerge]] commit an empty
     * version, as they always did.
@@ -2091,22 +2003,13 @@ object VersionedTable {
     import org.apache.spark.sql.functions._
     val spark = staged.sparkSession
     val base = snapshotAt(spark, table)
-    if (readVersion >= 0)
-      conflictGuard(spark, table, readVersion, base.version, "merge")
     require(keys.nonEmpty, "merge needs at least one key column")
     val missing = keys.filterNot(base.schema.fieldNames.contains)
     require(missing.isEmpty,
       s"merge keys absent from table schema: ${missing.mkString(", ")}")
-    // cheap pre-check: a replayed batch must not even write data files
-    if (app != null && base.txns.get(app).exists(_ >= batch)) return None
-    val stats = org.apache.spark.sql.Observation()
-    val stagedAligned = align(staged, base.schema)
-      .observe(stats, count(lit(1)).as("__n"),
-        keys.flatMap(k => Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k"))): _*)
-      .localCheckpoint()
+    val (stagedAligned, stagedRows, ranges) = stage(align(staged, base.schema), keys,
+      s"merge into $table: staged batch statistics")
     try {
-      val observed = graft.ops.Observations.of(stats, s"merge into $table: staged batch statistics")
-      val stagedRows = observed("__n").asInstanceOf[Long]
       if (stagedRows == 0L && emptyIsNoop) return None
       // multiple staged rows per key would make the upsert ambiguous —
       // the Delta MERGE multiple-match error, named. Null-key rows are
@@ -2123,52 +2026,35 @@ object VersionedTable {
         s"merge staged batch has multiple rows for key ${dup.headOption.map(_.toString).getOrElse("")} — " +
           "dedupe upstream (Dedup.latestPerKey), exactly as the reference does")
 
-      // stage 1: staged key ranges prune the live file list via log stats
-      val rangePruners = keys.flatMap { k =>
-        (statCarrier(observed(s"__mn_$k")), statCarrier(observed(s"__mx_$k"))) match {
-          case (Some(mn), Some(mx)) =>
-            Seq(Pruner(k, "ge", Seq(mn)), Pruner(k, "le", Seq(mx)))
-          case _ => Nil // all-null or unprunable key type: no stage-1 pruning
-        }
-      }
-      val candidates =
-        base.files.filter(f => rangePruners.forall(c => mayMatch(f, c)))
-
-      // stage 2: exact matched-file list — key-columns-plus-metadata scan
-      // of the candidates (DV-aware: a key present only in deleted rows is
-      // NOT a match), joined to the distinct staged keys
-      val matchedFiles: Seq[AddFile] =
-        if (candidates.isEmpty || stagedRows == 0L) Nil
-        else {
-          val cand = scanFiles(spark, table, candidates, base.schema, keepMeta = true)
-            .select((keys.map(col) :+ col(MetaRelCol)): _*)
-          val stagedKeys = stagedAligned.select(keys.map(col): _*).distinct()
-          val hit = cand.join(stagedKeys, keys, "left_semi")
-            .select(col(MetaRelCol)).distinct().collect().map(_.getString(0)).toSet
-          candidates.filter(f => hit.contains(f.path))
-        }
+      val stagedKeysDf = stagedAligned.select(keys.map(col): _*).distinct()
+      val candidates = inKeyRanges(base.files, keys.zip(ranges))
+      val matchedFiles =
+        if (stagedRows == 0L) Nil
+        else filesHit(spark, table, base.schema, candidates)(
+          _.select((keys.map(col) :+ col(MetaRelCol)): _*).join(stagedKeysDf, keys, "left_semi"))
 
       // copy-on-write: matched files are rewritten WITHOUT the matched
       // rows; the staged batch lands whole (updates replace, rest insert).
       // Survivor files are REWRITES of already-served rows — marked
       // dataChange=false (the Delta protocol flag) so the change feed
       // serves each row once; only the staged files are changes.
-      val stagedKeysDf = stagedAligned.select(keys.map(col): _*).distinct()
       val lives: Option[DataFrame] =
         if (matchedFiles.isEmpty) None
         else Some(scanFiles(spark, table, matchedFiles, base.schema))
-      // survivor/staged/cdc files materialize EAGERLY below: the tracker
-      // sweeps whatever landed so far on ANY abandoned path — a staged
-      // batch violating a CHECK after the survivor rewrite, the txn
-      // replay detected inside the loop, a conflictGuard throw
-      val orphans = new OrphanTracker(spark, table)
-      val out = orphans.guarded {
+      // op records whether existing rows were REPLACED (merge_update) or
+      // the upsert purely inserted (merge) — history's observability
+      // face; the append feed serves both as exactly the staged batch
+      // (dataChange adds), see readChangesSince. A caller that derived
+      // `staged` from an earlier read anchors the conflict rule there.
+      commitRewrite(spark, table, if (matchedFiles.nonEmpty) "merge_update" else "merge",
+          if (readVersion >= 0) readVersion else base.version, "merge",
+          Option(app).map(_ -> batch)) { orphans =>
         val survivorAdds = orphans.track(lives.toSeq.flatMap { lv =>
           writeData(lv.join(stagedKeysDf, keys, "left_anti"),
             table, base.schema, base.partitionBy)
         }).map(_.copy(dataChange = false))
-        val stagedAdds = orphans.track(writeDataEnforced(stagedAligned, table,
-          base.schema, base.partitionBy, base.constraints))
+        val stagedAdds = writeDataEnforced(stagedAligned, table,
+          base.schema, base.partitionBy, base.constraints, orphans)
         // change data (i29): matched live rows are update preimages, their
         // staged replacements postimages, unmatched staged rows inserts —
         // written as a commit-owned sidecar so the feed survives the merge
@@ -2191,29 +2077,93 @@ object VersionedTable {
                 table))
             } finally { pre.unpersist(); () }
           }
-
-        testHookBeforeCommit()
-        // op records whether existing rows were REPLACED (merge_update)
-        // or the upsert purely inserted (merge) — history's observability
-        // face; the append feed serves both as exactly the staged batch
-        // (dataChange adds), see readChangesSince
-        commitLoop(spark, table,
-          if (matchedFiles.nonEmpty) "merge_update" else "merge") {
-          case None => sys.error(s"no versioned table at $table — create() it first")
-          case Some(snap) =>
-            if (app != null && snap.txns.get(app).exists(_ >= batch)) None
-            else {
-              conflictGuard(spark, table, base.version, snap.version, "merge")
-              val txn = if (app == null) Nil else Seq(txnLine(app, batch))
-              Some(txn ++ matchedFiles.map(f => removeLine(f.path)) ++
-                (survivorAdds ++ stagedAdds).map(addLine) ++
-                cdcAdds.map { case (p, r) => cdcLine(p, r) })
-            }
-        }
+        Some(Rewrite(matchedFiles, survivorAdds ++ stagedAdds, cdcAdds))
       }
-      if (out.isEmpty) orphans.sweep()
-      out
     } finally { stagedAligned.unpersist(); () }
+  }
+
+  /** Materialize `df` once, a local checkpoint, and observe on that same
+    * job its row count and each of `cols`' [min,max] as stats carriers
+    * ([[statCarrier]]; None = all-null or a type the stats don't carry):
+    * stage 1 of both merges — [[mergeStaged]]'s staged batch and
+    * [[MergeIntoBuilder]]'s source — with no aggregation job of its own.
+    * The caller unpersists the checkpoint.
+    */
+  private[sources] def stage(df: DataFrame, cols: Seq[String], what: String)
+      : (DataFrame, Long, Seq[(Option[Any], Option[Any])]) = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val obs = org.apache.spark.sql.Observation()
+    val staged = df.observe(obs, count(lit(1)).as("__n"), cols.indices.flatMap(i =>
+      Seq(min(col(cols(i))).as(s"__mn_$i"), max(col(cols(i))).as(s"__mx_$i"))): _*)
+      .localCheckpoint()
+    val m = try graft.ops.Observations.of(obs, what)
+      catch { case e: Throwable => staged.unpersist(); throw e }
+    (staged, m("__n").asInstanceOf[Long],
+      cols.indices.map(i => (statCarrier(m(s"__mn_$i")), statCarrier(m(s"__mx_$i")))))
+  }
+
+  /** The files whose log stats may hold a key inside a source's observed
+    * range, per (table column, [min,max]); an unknown range prunes
+    * nothing. A merge of one day's keys into a year's table plans ~one
+    * day's files.
+    */
+  private[sources] def inKeyRanges(files: Seq[AddFile],
+      ranges: Seq[(String, (Option[Any], Option[Any]))]): Seq[AddFile] = {
+    val pruners = ranges.flatMap {
+      case (c, (Some(mn), Some(mx))) => Seq(Pruner(c, "ge", Seq(mn)), Pruner(c, "le", Seq(mx)))
+      case _ => Nil
+    }
+    files.filter(f => pruners.forall(mayMatch(f, _)))
+  }
+
+  /** Stage 2 of both merges: the `candidates` holding a row `semi`
+    * keeps — one DV-aware scan with per-row file metadata (a key present
+    * only in deleted rows is no match), semi-joined to the source side,
+    * collected as the exact matched-file list.
+    */
+  private[sources] def filesHit(spark: SparkSession, table: String, schema: StructType,
+      candidates: Seq[AddFile])(semi: DataFrame => DataFrame): Seq[AddFile] =
+    if (candidates.isEmpty) Nil
+    else {
+      val hit = semi(scanFiles(spark, table, candidates, schema, keepMeta = true))
+        .select(org.apache.spark.sql.functions.col(MetaRelCol)).distinct()
+        .collect().map(_.getString(0)).toSet
+      candidates.filter(f => hit.contains(f.path))
+    }
+
+  /** A row-level change as materialized: the live files it retires, the
+    * files it adds, and its change-data sidecars.
+    */
+  private[sources] final case class Rewrite(removes: Seq[AddFile], adds: Seq[AddFile],
+      cdc: Seq[(String, Long)])
+
+  /** The commit of a row-level change decided against the table at
+    * `readVersion` — [[mergeStaged]], [[MergeIntoBuilder]], and
+    * [[rowLevel]] under delete/update and their deletion-vector faces —
+    * under [[conflictGuard]]. `write` materializes the change on the
+    * first attempt, once the replay check and the conflict rule passed,
+    * registering every artifact with the tracker it is given; None
+    * commits nothing. A change that adds the table's first deletion
+    * vector carries the `deletion-vectors` protocol line.
+    */
+  private[sources] def commitRewrite(spark: SparkSession, table: String, op: String,
+      readVersion: Long, opName: String, txn: Option[(String, Long)] = None)(
+      write: OrphanTracker => Option[Rewrite]): Option[Long] = {
+    val orphans = new OrphanTracker(spark, table)
+    lazy val rewrite = write(orphans)
+    testHookBeforeCommit()
+    commitLoop(spark, table, op, Some(orphans), txn,
+        conflictGuard(spark, table, readVersion, opName)) { snap =>
+      rewrite.map { r =>
+        val protocol =
+          if (!r.adds.exists(_.dv.isDefined) ||
+              (snap.readerFeatures.contains("deletion-vectors") &&
+                snap.writerFeatures.contains("deletion-vectors"))) Nil
+          else Seq(protocolLine(Set("deletion-vectors"), Set("deletion-vectors")))
+        protocol ++ r.removes.map(f => removeLine(f.path)) ++ r.adds.map(addLine) ++
+          r.cdc.map { case (p, n) => cdcLine(p, n) }
+      }
+    }
   }
 
   /** Row-level DELETE (the Delta `DELETE FROM t WHERE pred` primitive,
@@ -2335,8 +2285,7 @@ object VersionedTable {
       def postImage(rows: DataFrame, s: Map[String, org.apache.spark.sql.Column]) =
         rows.select(base.schema.fieldNames.map(f => s.get(f).map(_.as(f)).getOrElse(c(f))).toSeq: _*)
       val (totals, dvved) = if (vectors) dvSplit(hitFiles, perFile) else (Map.empty[String, Long], Nil)
-      val orphans = new OrphanTracker(spark, table)
-      val v = orphans.guarded {
+      val v = commitRewrite(spark, table, op, base.version, op) { orphans =>
         // (the matched rows, the adds that replace the hit files)
         val (pre, adds) =
           if (vectors) {
@@ -2344,8 +2293,8 @@ object VersionedTable {
               if (dvved.isEmpty) ""
               else orphans.trackDir(writeDvSidecar(spark, table, matched, hitFiles, perFile))
             val pre = matched.drop(MetaRelCol, MetaPosCol)
-            val postAdds = set.toSeq.flatMap(s => orphans.track(writeDataEnforced(
-              postImage(pre, s), table, base.schema, base.partitionBy, base.constraints)))
+            val postAdds = set.toSeq.flatMap(s => writeDataEnforced(postImage(pre, s),
+              table, base.schema, base.partitionBy, base.constraints, orphans))
             (pre, dvved.map(f => f.copy(dataChange = false,
               dv = Some(DvDesc(dvRel, totals(f.path))))) ++ postAdds)
           } else {
@@ -2357,8 +2306,8 @@ object VersionedTable {
             }
             // a delete's survivors are rows the table already held: every
             // CHECK holds on them, and their re-add is no data change
-            val written = orphans.track(writeDataEnforced(rewritten, table, base.schema,
-              base.partitionBy, if (set.isEmpty) Map.empty else base.constraints))
+            val written = writeDataEnforced(rewritten, table, base.schema,
+              base.partitionBy, if (set.isEmpty) Map.empty else base.constraints, orphans)
             (lives.filter(hitPred),
               if (set.isEmpty) written.map(_.copy(dataChange = false)) else written)
           }
@@ -2373,19 +2322,7 @@ object VersionedTable {
               .unionByName(postImage(once, s).withColumn(ChangeTypeCol, l("update_postimage")))
           }, table)) finally { if (once ne pre) once.unpersist(); () }
         }
-        testHookBeforeCommit()
-        commitLoop(spark, table, op) {
-          case None => sys.error(s"no versioned table at $table — create() it first")
-          case Some(snap) =>
-            conflictGuard(spark, table, base.version, snap.version, op)
-            val protocol =
-              if (dvved.isEmpty ||
-                  (snap.readerFeatures.contains("deletion-vectors") &&
-                    snap.writerFeatures.contains("deletion-vectors"))) Nil
-              else Seq(protocolLine(Set("deletion-vectors"), Set("deletion-vectors")))
-            Some(protocol ++ hitFiles.map(f => removeLine(f.path)) ++ adds.map(addLine) ++
-              cdcAdds.map { case (p, r) => cdcLine(p, r) })
-        }
+        Some(Rewrite(hitFiles, adds, cdcAdds))
       }
       Some((v.get, perFile.values.sum))
     } finally { matched.unpersist(); () }
@@ -2516,19 +2453,38 @@ object VersionedTable {
       val tasks = groups.map { case (smalls, nOut) =>
         new java.util.concurrent.Callable[Seq[AddFile]] {
           override def call(): Seq[AddFile] = {
-            import org.apache.spark.sql.functions.col
+            import org.apache.spark.sql.functions.{call_function, coalesce, col, element_at, lit}
             // DV-aware: the compacted rewrite folds deletion vectors out
             val df = scanFiles(spark, table, smalls, base.schema)
             val laidOut = zorderBy.flatMap { case (a, b) => zorderValue(df, a, b) } match {
               case None => df.repartition(nOut)
               case Some(z) =>
-                // range-partition + in-task sort on the curve, then drop
-                // the working column (a projection keeps the order) so
-                // align() sees exactly the table schema
-                df.withColumn("_graft_z", z)
-                  .repartitionByRange(nOut, col("_graft_z"))
+                // a row's file is its bin among equal-count cuts of the
+                // curve, taken from a seeded sample of at most
+                // ZorderSampleRows curve values (every value of a smaller
+                // group), and the shuffle key is the one whose hash
+                // partition IS that file. A range partitioner's sample
+                // (~100 values per file, seeded by the RDD id) cuts files
+                // hundreds of rows off the Morton blocks, widening their
+                // stats by a different amount on every run. Then an
+                // in-task sort on the curve; the working columns drop (a
+                // projection keeps the order) so align() sees the schema
+                val withZ = df.withColumn("_graft_z", z)
+                val zs = withZ.select(col("_graft_z")).filter(col("_graft_z").isNotNull)
+                  .sample(math.min(1.0,
+                    ZorderSampleRows.toDouble / math.max(1L, smalls.map(_.effRows).sum)), 0L)
+                  .collect().map(_.getLong(0)).sorted
+                val cuts =
+                  if (zs.isEmpty) Array.empty[Double]
+                  else (1 until nOut).map(k => zs((k.toLong * zs.length / nOut).toInt).toDouble)
+                    .distinct.toArray
+                val file = coalesce(
+                  call_function("graft_bin", col("_graft_z").cast("double"), lit(cuts)), lit(0L))
+                withZ.withColumn("_graft_z_file",
+                    element_at(lit(hashPartitionKeys(nOut)), (file + 1).cast("int")))
+                  .repartition(nOut, col("_graft_z_file"))
                   .sortWithinPartitions(col("_graft_z"))
-                  .drop("_graft_z")
+                  .drop("_graft_z", "_graft_z_file")
             }
             writeData(laidOut, table, base.schema, base.partitionBy)
           }
@@ -2536,44 +2492,46 @@ object VersionedTable {
       }
       pool.invokeAll(tasks.asJava).asScala.toSeq.flatMap(_.get())
     } finally pool.shutdown()
-    val addsMarked = adds.map(_.copy(dataChange = false))
     val smalls = groups.flatMap(_._1)
     val smallPaths = smalls.map(_.path).toSet
     val expectedDv = smalls.map(f => f.path -> f.dv).toMap
     testHookBeforeCommit()
     // the rewrite output (potentially most of the table's bytes) is
-    // materialized EAGERLY above; the conflict errors below are the most
-    // likely aborts under concurrent writers, so sweep on every abandoned
-    // path rather than orphaning a full rewrite until vacuum (the same
-    // discipline append/merge/delete/update carry)
+    // materialized EAGERLY above; the conflict errors of the rule below
+    // are the most likely aborts under concurrent writers, and the
+    // commit step sweeps the tracked output on every one of them
     val orphans = new OrphanTracker(spark, table)
     orphans.track(adds)
-    orphans.guarded(Some(commitLoop(spark, table, "optimize") {
-      case None => sys.error(s"no versioned table at $table — create() it first")
-      case Some(snap) =>
-        val live = snap.files.map(_.path).toSet
-        val gone = smallPaths.filterNot(live.contains)
-        if (gone.nonEmpty) sys.error(
-          s"versioned table $table: files ${gone.take(3).mkString(", ")} were removed " +
-            s"concurrently while optimize was rewriting them — re-run optimize on the " +
-            "new snapshot (concurrent appends are fine; concurrent rewrites are not)")
-        // a concurrent deleteVectors keeps the path live but GROWS its DV —
-        // committing our pre-DV rewrite would resurrect the newly deleted
-        // rows; same non-commuting class as a removed source file
-        val dvChanged = snap.files.filter(f =>
-          expectedDv.contains(f.path) && expectedDv(f.path) != f.dv)
-        if (dvChanged.nonEmpty) sys.error(
-          s"versioned table $table: deletion vectors on " +
-            s"${dvChanged.take(3).map(_.path).mkString(", ")} changed concurrently " +
-            "while optimize was folding them — re-run optimize on the new snapshot")
-        Some(smalls.map(f => removeLine(f.path)) ++ addsMarked.map(addLine))
-    }.get))
+    // the rewrite rule: compaction reads only the files it removes
+    def sourcesUnchanged(snap: Snapshot): Unit = {
+      val live = snap.files.map(_.path).toSet
+      val gone = smallPaths.filterNot(live.contains)
+      if (gone.nonEmpty) sys.error(
+        s"versioned table $table: files ${gone.take(3).mkString(", ")} were removed " +
+          s"concurrently while optimize was rewriting them — re-run optimize on the " +
+          "new snapshot (concurrent appends are fine; concurrent rewrites are not)")
+      // a concurrent deleteVectors keeps the path live but GROWS its DV —
+      // committing our pre-DV rewrite would resurrect the newly deleted
+      // rows; same non-commuting class as a removed source file
+      val dvChanged = snap.files.filter(f =>
+        expectedDv.contains(f.path) && expectedDv(f.path) != f.dv)
+      if (dvChanged.nonEmpty) sys.error(
+        s"versioned table $table: deletion vectors on " +
+          s"${dvChanged.take(3).map(_.path).mkString(", ")} changed concurrently " +
+          "while optimize was folding them — re-run optimize on the new snapshot")
+    }
+    commitLoop(spark, table, "optimize", Some(orphans), rule = sourcesUnchanged) { _ =>
+      Some(smalls.map(f => removeLine(f.path)) ++
+        adds.map(f => addLine(f.copy(dataChange = false))))
+    }
   }
 
   // z-order rank space per column: 2^12 equi-depth bins, cut at this
   // relative error
   private val ZorderBits = 12
   private val ZorderRelErr = 1e-4
+  // curve values sampled to cut one compacted group into its files
+  private val ZorderSampleRows = 100000
 
   /** The rank-binned Morton value of `a` and `b` over `df`, the z-order
     * key of [[optimize]]. Each column's cuts come from one
@@ -2604,6 +2562,24 @@ object VersionedTable {
       floor(call_function("graft_bin", col(c).cast("double"), lit(cuts)) *
         nBins / (cuts.length + 1))
     Some(interleaveBits(rank(a, cutsA), rank(b, cutsB), ZorderBits))
+  }
+
+  /** For each partition j of `repartition(n, key)` on a long key, the
+    * smallest non-negative key Spark's hash partitioning (Murmur3 with
+    * seed 42, then pmod n) sends to j, so a row keyed `keys(j)` lands in
+    * partition j.
+    */
+  private def hashPartitionKeys(n: Int): Array[Long] = {
+    val keys = Array.fill(n)(-1L)
+    var k = 0L
+    var found = 0
+    while (found < n) {
+      val j = java.lang.Math.floorMod(
+        org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(k, 42), n)
+      if (keys(j) < 0) { keys(j) = k; found += 1 }
+      k += 1
+    }
+    keys
   }
 
   /** Morton interleave of two bin values in `[0, 2^bits)`: `sa`'s bit i
@@ -2668,7 +2644,7 @@ object VersionedTable {
   def history(spark: SparkSession, table: String): DataFrame = {
     val fs = fsOf(spark, table)
     val vs = commitVersions(fs, table)
-    require(vs.nonEmpty, s"no versioned table at $table — create() it first")
+    requireTable(vs.nonEmpty, table)
     val rows = vs.map { v =>
       val (nodes, op) = parseCommit(fs, table, v)
       val txn = nodes.find(_.has("txn")).map(_.get("txn"))
@@ -2704,7 +2680,7 @@ object VersionedTable {
       untilVersion: Long = -1L): DataFrame = {
     val fs = fsOf(spark, table)
     val vs = commitVersions(fs, table)
-    require(vs.nonEmpty, s"no versioned table at $table — create() it first")
+    requireTable(vs.nonEmpty, table)
     // sinceVersion = -1 is GENESIS: serve every commit from version 0
     // inclusive (the face the inclusive `startingVersion` option needs for
     // startingVersion = 0); valid only when the full history survives.
@@ -2788,7 +2764,7 @@ object VersionedTable {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, table)
     val vs = commitVersions(fs, table)
-    require(vs.nonEmpty, s"no versioned table at $table — create() it first")
+    requireTable(vs.nonEmpty, table)
     val latest = snapshotAt(spark, table)
     // sinceVersion = -1 is GENESIS: serve every commit's changes from
     // version 0 inclusive (the face the inclusive `startingVersion` option

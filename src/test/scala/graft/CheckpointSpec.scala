@@ -69,8 +69,8 @@ class CheckpointSpec extends SparkSpec {
     assert(e2.getMessage.contains("no version 5"), e2.getMessage)
   }
 
-  test("10^5-add checkpoint round-trips exactly; parquet read is measured " +
-      "against the legacy JSON read (PR-description numbers)") {
+  test("10^5-add checkpoint round-trips exactly through the parquet format " +
+      "(write and read timed)") {
     val VT = VersionedTable
     val schemaJson = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
@@ -92,27 +92,17 @@ class CheckpointSpec extends SparkSpec {
       maxCommitTs = Some(1700000000123L),
       writerFeatures = Set("deletion-vectors", "change-data-feed"))
 
-    val tP = tmpTable("pq"); val tJ = tmpTable("js")
+    val tP = tmpTable("pq")
     fs.mkdirs(new Path(s"$tP/${VT.LogDirName}"))
-    fs.mkdirs(new Path(s"$tJ/${VT.LogDirName}"))
     def timed[T](body: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = body
       (r, (System.nanoTime() - t0) / 1e6)
     }
     val (_, wP) = timed(VT.writeCheckpoint(fs, tP, snap))
-    val (_, wJ) = timed(VT.writeCheckpointJson(fs, tJ, snap))
     val (backP, rP) = timed(VT.readCheckpoint(fs, tP, 100L))
-    val (backJ, rJ) = timed(VT.readCheckpoint(fs, tJ, 100L))
-    info(f"100k-add checkpoint: parquet write $wP%.0f ms read $rP%.0f ms; " +
-      f"JSON write $wJ%.0f ms read $rJ%.0f ms")
+    info(f"100k-add checkpoint: parquet write $wP%.0f ms read $rP%.0f ms")
     // parquet round-trip is EXACT, including every add field
     assert(backP == snap, "parquet checkpoint must round-trip exactly")
-    // the JSON fallback reader still serves old-format files — identical
-    // except the fields the legacy format never recorded (maxCommitTs,
-    // writerFeatures), which read back as unknown/empty
-    assert(backJ == snap.copy(maxCommitTs = None, writerFeatures = Set.empty),
-      s"JSON fallback drifted: ${backJ.files.size} files, " +
-        s"maxTs=${backJ.maxCommitTs}")
   }
 
   test("a CORRUPT checkpoint is skipped, never a crash: reads fall back " +
@@ -137,8 +127,8 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("versionAtTimestamp is checkpoint-bounded (A4) and stays exact " +
-      "across stamped commits, checkpoint boundaries, and a legacy " +
-      "JSON checkpoint without the maxTs field") {
+      "across stamped commits, checkpoint boundaries, and a checkpoint " +
+      "without the maxTs field") {
     val VT = VersionedTable
     val t = tmpTable("ts")
     val c0 = 1700000000000L
@@ -163,14 +153,56 @@ class CheckpointSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         VT.versionAtTimestamp(spark, t, c0 - 1L) }
 
-      // legacy shape: replace checkpoint 20 with the JSON format (no
-      // maxTs) — resolution falls back without trusting an absent bound
-      val snap20 = VT.snapshotAt(spark, t, 20L)
-      fs.delete(new Path(
-        s"$t/${VT.LogDirName}/${"%020d".format(20)}.checkpoint.parquet"), false)
-      VT.writeCheckpointJson(fs, t, snap20)
+      // a checkpoint without maxTs (its prefix's running max unknown):
+      // resolution falls back without trusting an absent bound
+      VT.writeCheckpoint(fs, t, VT.snapshotAt(spark, t, 20L).copy(maxCommitTs = None))
       assert(VT.versionAtTimestamp(spark, t, c0 + 20000L) == 20L)
       assert(VT.versionAtTimestamp(spark, t, c0 + 9500L) == 9L)
+    } finally VT.clock = () => System.currentTimeMillis()
+  }
+
+  test("a table whose only checkpoint is a legacy .checkpoint.json reads " +
+      "exactly from its commits and resolves versionAtTimestamp") {
+    val VT = VersionedTable
+    val t = tmpTable("legacy")
+    val c0 = 1700000000000L
+    try {
+      var now = c0
+      VT.clock = () => now
+      VT.create(Seq((0L, "s")).toDF("id", "v"), t)
+      (1 to 12).foreach { i =>
+        now = c0 + i * 1000L
+        VT.append(Seq((i.toLong, s"v$i")).toDF("id", "v"), t)
+      }
+      val want = VT.read(spark, t).collect().map(_.toSeq).toSet
+      val want5 = VT.readVersion(spark, t, 5L).collect().map(_.toSeq).toSet
+      // what a pre-parquet writer left at version 10: the JSON checkpoint
+      // format, hand-written, in place of the parquet one
+      val log = s"$t/${VT.LogDirName}"
+      val pq = new Path(s"$log/${"%020d".format(10)}.checkpoint.parquet")
+      fs.delete(new Path(pq.getParent, s".${pq.getName}.crc"), false)
+      fs.delete(pq, false)
+      val snap10 = VT.snapshotAt(spark, t, 10L)
+      val files = snap10.files.map(f => s"""{"path":"${f.path}","rows":${f.rows}}""")
+      val json = s"""{"version":10,"schema":${new com.fasterxml.jackson.databind
+        .ObjectMapper().writeValueAsString(snap10.schemaJson)},"horizon":0,""" +
+        s""""files":[${files.mkString(",")}],"txns":{}}"""
+      Files.write(java.nio.file.Paths.get(s"$log/${"%020d".format(10)}.checkpoint.json"),
+        json.getBytes("UTF-8"))
+      assert(!fs.exists(pq))
+      assert(VT.read(spark, t).collect().map(_.toSeq).toSet == want)
+      assert(VT.readVersion(spark, t, 5L).collect().map(_.toSeq).toSet == want5)
+      assert(VT.versionAtTimestamp(spark, t, c0 + 10000L) == 10L)
+      assert(VT.versionAtTimestamp(spark, t, c0 + 11500L) == 11L)
+      assert(VT.versionAtTimestamp(spark, t, c0 + 999999L) == 12L)
+      // the next checkpoint-interval commit rolls a parquet checkpoint
+      (13 to 20).foreach { i =>
+        now = c0 + i * 1000L
+        VT.append(Seq((i.toLong, s"v$i")).toDF("id", "v"), t)
+      }
+      assert(fs.exists(new Path(s"$log/${"%020d".format(20)}.checkpoint.parquet")))
+      assert(VT.read(spark, t).count() == 21L)
+      assert(VT.versionAtTimestamp(spark, t, c0 + 15500L) == 15L)
     } finally VT.clock = () => System.currentTimeMillis()
   }
 

@@ -154,4 +154,26 @@ class JobCountSpec extends SparkSpec {
       "updateVectors" -> 7, "updateVectors+cdf" -> 8,
       "optimize(zorderBy)" -> 5), got.toSeq.sortBy(_._1).mkString(", "))
   }
+
+  test("one MERGE INTO (equi ON, matched update plus not-matched insert) runs a pinned number of jobs") {
+    val t = java.nio.file.Files.createTempDirectory("mergeinto_jobs").toFile.getAbsolutePath + "/t"
+    // 24 rows in 8 small files; one source row updates id 5, one inserts id 99
+    VersionedTable.create((1L to 24L).map(i => (i, s"v$i"))
+      .toDF("id", "v").repartition(8, col("id")), t)
+    val source = Seq((5L, "x"), (99L, "new")).toDF("id", "v")
+    var m: graft.sources.MergeIntoBuilder.MergeMetrics = null
+    val jobs = jobsOf {
+      m = VersionedTable.mergeInto(spark, t, source, expr("t.id = s.id"), "t", "s")
+        .whenMatchedUpdate(Map("v" -> col("s.v")))
+        .whenNotMatchedInsertAll()
+        .execute()
+    }
+    assert(m.committed && m.rowsUpdated == 1L && m.rowsInserted == 1L, m.toString)
+    assert(VersionedTable.read(spark, t).count() == 25L)
+    // the source checkpoint (its key ranges observed on the same job),
+    // the match discovery, the checkpointed join and its checks, and the
+    // survivor, update and insert writes; a separate key-range
+    // aggregation over the source would add two jobs
+    assert(jobs == 25, s"MERGE INTO ran $jobs jobs")
+  }
 }

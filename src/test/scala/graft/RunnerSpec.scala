@@ -172,6 +172,30 @@ class RunnerSpec extends SparkSpec {
       "re-bootstrap duplicated the table")
   }
 
+  test("Runner carries the last SUCCEEDED watermark past a failed run: no re-bootstrap") {
+    val dir = Files.createTempDirectory("runner_failwm").toFile.getAbsolutePath
+    val cfg = s"$dir/load_config.csv"
+    Files.write(java.nio.file.Paths.get(cfg),
+      ("source_type,table_name,is_active,load_mode,watermark_column\n" +
+        "sql,tx,1,incremental,ts\n").getBytes)
+    val tx1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0), (2L, ts("2024-01-02 10:00:00"), 20.0))
+      .toDF("id", "ts", "amt")
+    val r1 = Runner.run(spark, cfg, s"$dir/out", s"$dir/audit", "run1", Map("tx" -> tx1).apply)
+    assert(r1.map(_.status) == Seq("succeeded"))
+    // run 2: the source is down; the load fails and is audited `failed`
+    val r2 = Runner.run(spark, cfg, s"$dir/out", s"$dir/audit", "run2",
+      _ => sys.error("source unreachable"))
+    assert(r2.map(_.status) == Seq("failed"))
+    // run 3: the source now keeps only rows newer than run 1's watermark.
+    // A lost watermark would re-bootstrap and overwrite bronze with them.
+    val tx3 = Seq((3L, ts("2024-01-03 10:00:00"), 30.0)).toDF("id", "ts", "amt")
+    val r3 = Runner.run(spark, cfg, s"$dir/out", s"$dir/audit", "run3", Map("tx" -> tx3).apply)
+    assert(r3.map(r => (r.status, r.rows)) == Seq(("succeeded", 1L)))
+    assert(r3.head.newWatermark.contains("2024-01-03 10:00:00.0"))
+    assert(spark.read.parquet(s"$dir/out/tx").select("id").as[Long].collect().sorted
+      .toSeq == Seq(1L, 2L, 3L), "run 3 must append to run 1's rows, not replace them")
+  }
+
   test("Runner keys watermarks by (source_system, table): two banks, same table name") {
     val dir = Files.createTempDirectory("runner_banks").toFile.getAbsolutePath
     val cfg = s"$dir/load_config.csv"

@@ -187,6 +187,21 @@ class SourcesSpec extends SparkSpec {
     assert(writers == Seq("src/main/scala/graft/sources/VersionedTable.scala"))
   }
 
+  test("only VersionedTable writes a commit: no other main source names a log-line " +
+      "builder or the commit loop") {
+    val src = new java.io.File("src/main")
+    assert(src.isDirectory, s"run from the project root (cwd ${new java.io.File(".").getAbsolutePath})")
+    val commitInternals = """\b(addLine|removeLine|cdcLine|txnLine|commitLoop)\b""".r
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val writers = files(src).filter { f =>
+      commitInternals.findFirstIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).isDefined
+    }.map(_.getPath.replace('\\', '/')).sorted
+    assert(writers == Seq("src/main/scala/graft/sources/VersionedTable.scala"))
+  }
+
   test("dynamicOverwrite replaces only the partitions present in the batch") {
     val t = s"${tmp("dynpart")}/t"
     val day1 = Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("dt", "v")
