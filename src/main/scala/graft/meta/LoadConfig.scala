@@ -30,7 +30,8 @@ object LoadConfig {
       if (sourceSystem.isEmpty) tableName else s"$sourceSystem.$tableName"
   }
 
-  /** Read a load-config CSV (header row, reference column names). The
+  /** Read a load-config CSV (header row, reference column names), its
+    * columns as written (`is_active` still a string). The
     * `source_system` column is optional — single-system configs omit it.
     *
     * FAIL-FAST contract (reference: pl_ingestion_bronze.json guards the
@@ -39,10 +40,6 @@ object LoadConfig {
     * at the orchestration boundary — not whatever Spark happens to throw
     * three operators later.
     */
-  def read(spark: SparkSession, path: String): DataFrame =
-    readRaw(spark, path).withColumn("is_active", col("is_active") === "1")
-
-  /** The config's columns as written, `is_active` still a string. */
   private def readRaw(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -655,33 +655,11 @@ object Binary {
     hist
   }
 
-  /** Real per-image pixel statistics for PNG payloads, in the
-    * partition-batched decode shape: (doc_id, width, height, channels,
-    * mean_luma, luma histogram). Non-PNG payloads fail NAMED — this is
-    * the pixel path; header-level metadata for the other formats stays
-    * [[decodeMeta]].
+  /** Per-image pixel statistics from [[decodeImageStats]]: (doc_id,
+    * width, height, channels, mean_luma, luma histogram).
     */
   final case class PngStats(doc_id: Long, width: Int, height: Int,
       channels: Int, mean_luma: Double, luma_hist: Array[Long])
-
-  def decodePngStats(payloads: Dataset[MediaPayload], bins: Int = 16): Dataset[PngStats] = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.map { mp =>
-        // ONE decode per payload; histogram and mean share the single
-        // luma pass (inflate+defilter dominates this path's cost).
-        val px = decodePngPixels(mp.payload)
-        val hist = lumaHistogram(px, bins)
-        var lumaSum = 0L
-        var i = 0
-        while (i < px.samples.length) { lumaSum += lumaAt(px, i); i += px.channels }
-        val n = px.width.toLong * px.height
-        PngStats(mp.doc_id, px.width, px.height, px.channels,
-          lumaSum.toDouble / n, hist)
-      }
-    }
-  }
 
   // ---------------------------------------------------------------------
   // ImageIO seam (r15): pixel decode for the formats whose rasters need a
@@ -771,11 +749,12 @@ object Binary {
     PngPixels(w, h, channels, out)
   }
 
-  /** [[decodePngStats]] widened to every decodable image format (r15):
-    * same output shape, same single luma pass, dispatch via
-    * [[decodeImagePixels]]. The q30 catalog path stays on
-    * [[decodePngStats]] — its oracle is pinned to the pure-JVM decode of
-    * the self-rendered PNGs and does not change.
+  /** Real per-image pixel statistics for every decodable image format,
+    * in the partition-batched decode shape: ONE decode per payload via
+    * [[decodeImagePixels]] (PNG on the pure-JVM decoder, the rest through
+    * ImageIO), and the histogram and mean share a single luma pass.
+    * Undecodable payloads fail NAMED; header-level metadata stays
+    * [[decodeMeta]], which is what the q30 catalog query runs.
     */
   def decodeImageStats(payloads: Dataset[MediaPayload], bins: Int = 16): Dataset[PngStats] = {
     val spark = payloads.sparkSession

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit, when}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min, when}
 
 import VersionedTable.{AddFile, MetaPosCol, MetaRelCol}
 
@@ -291,6 +291,17 @@ final class MergeIntoBuilder private[sources] (
         var nUpdated = 0L; var nDeleted = 0L
         var removeFiles = Seq.empty[AddFile]
         marked.foreach { m =>
+          // ONE collect decides the rewrite: acted rows per physical row
+          // (file, pos), then one row per (file, action) carrying its
+          // distinct-row count and the row's largest acted-row count.
+          // Partitioned by file, both groupings ride one shuffle.
+          val perFileAct = m.filter(col(ActCol) =!= Keep)
+            .repartition(col(MetaRelCol))
+            .groupBy(col(MetaRelCol), col(MetaPosCol))
+            .agg(min(col(ActCol)).as(ActCol), count(lit(1)).as("n"))
+            .groupBy(col(MetaRelCol), col(ActCol))
+            .agg(count(lit(1)).as("rows"), max(col("n")).as("n"))
+            .collect().map(r => FileAct(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
           // Delta's multiple-match error — on rows multiple source rows
           // would actually MODIFY (update/delete), not on mere join
           // fan-out: a fanned-out row every clause leaves alone is legal
@@ -304,29 +315,20 @@ final class MergeIntoBuilder private[sources] (
           val soleUnconditionalDelete = matched.size == 1 &&
             matched.head.isDelete && matched.head.condition.isEmpty
           if (!soleUnconditionalDelete) {
-            val dup = m.filter(col(ActCol) =!= Keep)
-              .groupBy(col(MetaRelCol), col(MetaPosCol)).count()
-              .filter(col("count") > 1).limit(1).collect()
-            require(dup.isEmpty,
-              s"MERGE into $table: a target row is modified by multiple " +
-                s"source rows (${dup.headOption.map(_.toString).getOrElse("")}) — " +
-                "the update/delete is ambiguous; dedupe the source on the join keys")
+            perFileAct.find(_.maxMatches > 1).foreach(d => throw new IllegalArgumentException(
+              s"MERGE into $table: a target row of ${d.file} is modified by " +
+                s"multiple source rows (${d.maxMatches}) — " +
+                "the update/delete is ambiguous; dedupe the source on the join keys"))
           }
           // counts over DISTINCT physical rows: a fan-out-tolerated
           // delete must report each deleted row once
-          val counts = m.filter(col(ActCol) =!= Keep)
-            .select(col(ActCol), col(MetaRelCol), col(MetaPosCol)).distinct()
-            .groupBy(col(ActCol)).count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          nUpdated = updActs.map(counts.getOrElse(_, 0L)).sum
-          nDeleted = delActs.map(counts.getOrElse(_, 0L)).sum
-          if (nUpdated + nDeleted > 0) {
-            // only files where some row ACTS rewrite; the rest stay bytes
-            val rewrite = m.filter(col(ActCol) =!= Keep)
-              .select(col(MetaRelCol)).distinct()
-              .collect().map(_.getString(0)).toSet
-            removeFiles = hitFiles.filter(f => rewrite.contains(f.path))
-          }
+          def rowsOf(acts: Seq[String]) =
+            perFileAct.filter(r => acts.contains(r.act)).map(_.rows).sum
+          nUpdated = rowsOf(updActs)
+          nDeleted = rowsOf(delActs)
+          // only files where some row ACTS rewrite; the rest stay bytes
+          val rewrite = perFileAct.map(_.file).toSet
+          removeFiles = hitFiles.filter(f => rewrite.contains(f.path))
         }
 
         // op records what the merge did: deletes break append-only
@@ -441,6 +443,12 @@ object MergeIntoBuilder {
   }
   private[sources] final case class InsertClause(condition: Option[Column],
       values: Option[Map[String, Column]])
+
+  /** One (file, action) group of a merge's acted rows: its distinct rows
+    * and the most source rows acting on any one of them.
+    */
+  private final case class FileAct(file: String, act: String, rows: Long,
+      maxMatches: Long)
 
   private def actName(c: MatchedClause, i: Int): String =
     if (c.isDelete) s"d$i" else s"u$i"

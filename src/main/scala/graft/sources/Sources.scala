@@ -14,32 +14,16 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  /** `mergeSchema` = schema evolution on read: reconcile column sets
-    * across files written at different schema versions (the reference's
-    * evolving bronze drops lean on unionByName + Delta schema merging).
-    * Off by default — merging footers costs a pre-pass over file metadata.
-    */
-  def parquet(spark: SparkSession, path: String, mergeSchema: Boolean = false): DataFrame =
-    (if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read)
-      .parquet(path)
-
-  /** Read a parquet dataset treating ONLY a missing path as absent
-    * (None). Every state-accumulating component needs the "first run, no
-    * state yet" branch, and the tempting catch-all is a trap: a CORRUPT
-    * or unreadable state directory must fail loudly, because answering
-    * "no state" to it silently resets watermarks, drops dedup indexes, or
-    * (worst) lets a sink overwrite the only — possibly recoverable —
-    * copy of a dimension.
-    */
-  /** Round-robin widen a NARROW input (fewer partitions than the session's
-    * shuffle width) before per-row-heavy work. A small parquet table is
-    * often one row group = ONE Spark task, which serializes downstream
-    * per-character/per-element compute onto a single core (measured: the
-    * q66 fingerprint hash stream ran 2.2s single-threaded from a
-    * one-row-group documents scan). At scale the scan already has enough
-    * splits and this is a no-op — the partition check, not the shuffle,
-    * is the contract, so a 100 TB input never pays a blind full-text
-    * reshuffle.
+  /** Widen a NARROW input (fewer partitions than the session's shuffle
+    * width) before per-row-heavy work by hash-partitioning it on the
+    * caller's row key `by` (round-robin only when no key is given). A
+    * small parquet table is often one row group = ONE Spark task, which
+    * serializes downstream per-character/per-element compute onto a
+    * single core (measured: the q66 fingerprint hash stream ran 2.2s
+    * single-threaded from a one-row-group documents scan). At scale the
+    * scan already has enough splits and this is a no-op — the partition
+    * check, not the shuffle, is the contract, so a 100 TB input never
+    * pays a blind full-text reshuffle.
     */
   def widen(df: DataFrame, by: Column*): DataFrame = {
     // Streaming frames can't be inspected via .rdd (and micro-batches are
@@ -60,6 +44,14 @@ object Sources {
     else df.repartition(width)
   }
 
+  /** Read a parquet dataset treating ONLY a missing path as absent
+    * (None). Every state-accumulating component needs the "first run, no
+    * state yet" branch, and the tempting catch-all is a trap: a CORRUPT
+    * or unreadable state directory must fail loudly, because answering
+    * "no state" to it silently resets watermarks, drops dedup indexes, or
+    * (worst) lets a sink overwrite the only — possibly recoverable —
+    * copy of a dimension.
+    */
   def parquetIfExists(spark: SparkSession, path: String): Option[DataFrame] =
     try Some(spark.read.parquet(path))
     catch {
@@ -224,7 +216,7 @@ object Sources {
       failOnNewColumns: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val actual =
-      try parquet(spark, path, mergeSchema = true)
+      try spark.read.option("mergeSchema", "true").parquet(path)
       catch {
         case e: org.apache.spark.SparkException =>
           throw new IllegalStateException(

@@ -778,17 +778,6 @@ object VersionedTable {
   private[graft] val MetaRelCol = "__gf_rel"
   private[graft] val MetaPosCol = "__gf_pos"
 
-  /** Scan `files` honoring deletion vectors: files carrying a `dv`
-    * anti-join their (file, pos) sidecar pairs on the parquet row index
-    * (declarative — Catalyst broadcasts the pair set when small, shuffles
-    * when not); clean files read plain, no metadata overhead. With
-    * `keepMeta` every row keeps [[MetaRelCol]]/[[MetaPosCol]]. Pair dirs
-    * are unioned across the scanned files: per-file deleted-position sets
-    * only GROW (a re-delete unions the old pairs into the new dir), so a
-    * pair from any referenced dir is deleted in every state that
-    * references it — the union can never over-delete for the files that
-    * point at those dirs.
-    */
   /** Strip `scheme:[//authority]` from a file URI, leaving its RAW
     * (percent-encoded) path — the `_metadata.file_path` side of the
     * raw-path join below.
@@ -804,6 +793,17 @@ object VersionedTable {
   private def rawPathOf(fs: FileSystem, table: String, rel: String): String =
     fs.makeQualified(new Path(s"$table/$rel")).toUri.getRawPath
 
+  /** Scan `files` honoring deletion vectors: files carrying a `dv`
+    * anti-join their (file, pos) sidecar pairs on the parquet row index
+    * (declarative — Catalyst broadcasts the pair set when small, shuffles
+    * when not); clean files read plain, no metadata overhead. With
+    * `keepMeta` every row keeps [[MetaRelCol]]/[[MetaPosCol]]. Pair dirs
+    * are unioned across the scanned files: per-file deleted-position sets
+    * only GROW (a re-delete unions the old pairs into the new dir), so a
+    * pair from any referenced dir is deleted in every state that
+    * references it — the union can never over-delete for the files that
+    * point at those dirs.
+    */
   private[sources] def scanFiles(spark: SparkSession, table: String, files: Seq[AddFile],
       schema: StructType, keepMeta: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}

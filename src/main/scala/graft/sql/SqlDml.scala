@@ -1,7 +1,11 @@
 package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction,
+  DeleteFromTable, InsertAction, InsertStarAction, LogicalPlan, MergeAction,
+  MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.graft.StreamShim
 
 import graft.sources.VersionedTable
 
@@ -20,22 +24,27 @@ import graft.sources.VersionedTable
   * semantics, same conflict rules, same log — spec-pinned lockstep with
   * the Scala API in SqlSurfaceSpec); anything else falls through to plain
   * `spark.sql`, so a notebook can feed it every statement it has.
-  * Open-source Spark's parser has no transactional-table DML target to
-  * hook these onto (the reference gets that from the Delta runtime), so
-  * the dialect is interpreted here rather than injected into the parser —
-  * the statement TEXT is Delta's public spelling.
+  * `MERGE INTO` (the conditional form), `UPDATE` and `DELETE FROM` are
+  * read by Spark's own SQL parser; only the graft spellings around them
+  * (a `'<dir>'` target, the `USING DELETION VECTORS` suffix, `ON KEYS`)
+  * and the graft-only statements are matched here. Spark's parser has no
+  * transactional-table target to EXECUTE these on, so the parsed plan is
+  * mapped onto the [[VersionedTable]] calls.
   *
   * Grammar (keywords case-insensitive; `<target>` is either a quoted
   * path literal `'<dir>'` or a [[GraftCatalog]] table name; predicates /
-  * expressions are Spark SQL fragments, parsed by Spark itself via
-  * `expr`):
+  * expressions are Spark SQL). MERGE clauses follow Spark's grammar,
+  * which is also Delta's: every WHEN MATCHED clause, then every WHEN NOT
+  * MATCHED [BY TARGET], then every WHEN NOT MATCHED BY SOURCE; within a
+  * kind, only the last clause may omit its condition. A statement out of
+  * that order fails with Spark's `ParseException`.
   * {{{
   *   MERGE INTO <target> [AS] t USING <tempView> [AS] s ON <cond>
   *     WHEN MATCHED [AND <cond>] THEN UPDATE SET c1 = <e1>[, …] | UPDATE SET * | DELETE
-  *     WHEN NOT MATCHED [AND <cond>] THEN INSERT (c1, …) VALUES (<e1>, …) | INSERT *
+  *     WHEN NOT MATCHED [BY TARGET] [AND <cond>] THEN INSERT (c1, …) VALUES (<e1>, …) | INSERT *
   *     WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN UPDATE SET … | DELETE
   *   MERGE INTO <target> USING <tempView> ON KEYS (k1[, k2…])   -- unconditional upsert
-  *   DELETE FROM <target> WHERE <pred> [USING DELETION VECTORS]
+  *   DELETE FROM <target> [WHERE <pred>] [USING DELETION VECTORS]   -- no WHERE: every row
   *   UPDATE <target> SET c1 = <e1>[, c2 = <e2>…] WHERE <pred> [USING DELETION VECTORS]
   *   OPTIMIZE <target> [ZORDER BY (a, b)]
   *   VACUUM <target> [RETAIN <n> VERSIONS | RETAIN <n> HOURS]
@@ -71,15 +80,8 @@ object SqlDml {
   private val MergeKeysRe =
     ("""(?is)\s*MERGE\s+INTO\s+""" + Tgt +
       """\s+USING\s+(\S+)\s+ON\s+KEYS\s*\(([^)]+)\)\s*""").r
-  private val MergeHeadRe =
-    ("""(?is)\s*MERGE\s+INTO\s+""" + Tgt +
-      """\s+(?:(?:AS\s+)?(?!USING\b)([A-Za-z_]\w*)\s+)?USING\s+([A-Za-z_][\w.]*)""" +
-      """\s+(?:(?:AS\s+)?(?!ON\b)([A-Za-z_]\w*)\s+)?ON\s+(.+)""").r
-  private val MergeAnyRe = """(?is)\s*MERGE\s+INTO\s+.*""".r
-  private val DeleteRe =
-    ("""(?is)\s*DELETE\s+FROM\s+""" + Tgt + """\s+WHERE\s+(.+)""").r
-  private val UpdateRe =
-    ("""(?is)\s*UPDATE\s+""" + Tgt + """\s+SET\s+(.+)""").r
+  private val DmlRe =
+    ("""(?is)(\s*(?:MERGE\s+INTO|UPDATE|DELETE\s+FROM)\s+)""" + Tgt + """(.*)""").r
   private val OptimizeRe =
     ("""(?is)\s*OPTIMIZE\s+""" + Tgt +
       """(\s+ZORDER\s+BY\s*\(\s*(\w+)\s*,\s*(\w+)\s*\))?\s*""").r
@@ -132,191 +134,107 @@ object SqlDml {
       values.indices.map(i => s"value[$i] AS `${names(i)}`"): _*)
   }
 
-  /** First TOP-LEVEL, token-bounded occurrence of keyword `kw` at or
-    * after `from` — outside string literals (single- AND double-quoted:
-    * Spark's default dialect takes both spellings), parens, and
-    * `CASE … END` expressions (whose embedded WHEN/THEN would otherwise
-    * split a MERGE clause mid-CASE); -1 when absent. The scan always
-    * starts at 0 so the string/paren/CASE state at `from` is correct. A
-    * regex split would backtrack to the LAST occurrence and mis-parse a
-    * predicate whose string literal contains the keyword.
-    */
-  private[sql] def topLevelKeyword(s: String, kw: String, from: Int = 0): Int = {
-    val upper = s.toUpperCase(java.util.Locale.ROOT)
-    var depth = 0
-    var caseDepth = 0
-    var quote = '\u0000' // the open string delimiter, NUL = not in string
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (quote != '\u0000') {
-        // Spark's default literals accept backslash escapes: \' must not
-        // toggle the string state (or the REAL closing quote re-opens it
-        // and a genuine top-level keyword scans as in-string)
-        if (ch == '\\') i += 1
-        else if (ch == quote) quote = '\u0000'
-      }
-      else ch match {
-        case '\'' | '"' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          // '_' is a WORD character in SQL identifiers: tax_where_applied
-          // must not split at its embedded 'where'
-          def word(c: Char) = c == '_' || Character.isLetterOrDigit(c)
-          def tokenAt(t: String): Boolean =
-            upper.startsWith(t, i) && (i == 0 || !word(s.charAt(i - 1))) &&
-              (i + t.length >= s.length || !word(s.charAt(i + t.length)))
-          if (tokenAt("CASE")) caseDepth += 1
-          else if (caseDepth > 0 && tokenAt("END")) caseDepth -= 1
-          else if (i >= from && depth == 0 && caseDepth == 0 && tokenAt(kw))
-            return i
-      }
-      i += 1
-    }
-    -1
-  }
+  // ------------------------------------- MERGE INTO / UPDATE / DELETE FROM
 
-  /** Split a SET clause / column list / VALUES list on top-level commas
-    * (commas inside parens or string literals belong to the expressions).
-    */
-  private[sql] def splitSet(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var quote = '\u0000'
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (quote != '\u0000') {
-        if (ch == '\\') i += 1 // escaped char (incl. \') stays in-string
-        else if (ch == quote) quote = '\u0000'
-      }
-      else ch match {
-        case '\'' | '"' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  private val DvSuffixRe = """(?is)(.*?)\s+USING\s+DELETION\s+VECTORS\s*""".r
 
-  /** Strip the trailing `USING DELETION VECTORS` from a predicate, if
-    * present — via the same string/paren-aware scanner as every other
-    * keyword (r19 verdict: one discipline, not a per-statement regex). A
-    * top-level USING followed by anything else is malformed, named.
+  /** Spark's own parser reads the statement; its unresolved plan maps
+    * onto the [[VersionedTable]] calls. The target goes in as a
+    * backquoted identifier (Spark's grammar has no path-literal table
+    * spelling), and a malformed statement fails with Spark's
+    * `ParseException`.
     */
-  private[sql] def splitDvSuffix(pred: String): (String, Boolean) = {
-    val i = topLevelKeyword(pred, "USING")
-    if (i < 0) (pred.trim, false)
-    else {
-      val tail = pred.substring(i + "USING".length)
-      require(tail.matches("""(?is)\s+DELETION\s+VECTORS\s*"""),
-        s"malformed suffix after top-level USING: '${tail.trim}' " +
-          "(expected DELETION VECTORS)")
-      (pred.substring(0, i).trim, true)
+  private def runDml(spark: SparkSession, head: String, tgt: String,
+      rest: String): DataFrame = {
+    val (body, dv) = rest match {
+      case DvSuffixRe(b) => (b, true)
+      case _ => (rest, false)
+    }
+    val ident = "`" + tgt.stripPrefix("'").stripSuffix("'").replace("`", "``") + "`"
+    spark.sessionState.sqlParser.parsePlan(head + ident + body) match {
+      case m: MergeIntoTable =>
+        require(!dv, "MERGE INTO takes no USING DELETION VECTORS")
+        runMerge(spark, pathOf(spark, tgt), m)
+      case d: DeleteFromTable =>
+        val path = pathOf(spark, tgt)
+        val pred = StreamShim.column(d.condition)
+        val result =
+          if (dv) VersionedTable.deleteVectors(spark, path, pred)
+          else VersionedTable.delete(spark, path, pred)
+        val (v, n) = result.getOrElse(
+          (VersionedTable.latestVersion(spark, path), 0L))
+        metrics(spark, Seq("version", "rows_deleted"), Seq(v, n))
+      case u: UpdateTable =>
+        require(u.condition.isDefined, s"UPDATE needs a WHERE clause: $head$tgt$rest")
+        val path = pathOf(spark, tgt)
+        val pred = StreamShim.column(u.condition.get)
+        val set = assignments(u.assignments, targetAlias = None)
+        val result =
+          if (dv) VersionedTable.updateVectors(spark, path, pred, set)
+          else VersionedTable.update(spark, path, pred, set)
+        val (v, n) = result
+          .getOrElse((VersionedTable.latestVersion(spark, path), 0L))
+        metrics(spark, Seq("version", "rows_updated"), Seq(v, n))
     }
   }
 
-  /** SET assignments text → (column → expression); LHS may carry the
-    * target alias (None = no alias in scope, plain UPDATE) or backticks.
+  /** Each WHEN clause becomes its [[graft.sources.MergeIntoBuilder]] call,
+    * in declaration order; unaliased sides are `target` / `source`.
     */
-  private def parseAssignments(setClause: String, targetAlias: Option[String])
-      : Map[String, Column] =
-    splitSet(setClause).map { kv =>
-      val eq = kv.indexOf('=')
-      require(eq > 0, s"malformed SET assignment: $kv")
-      val lhs = kv.substring(0, eq).trim
-        .stripPrefix("`").stripSuffix("`")
-      val stripped = targetAlias match {
-        case Some(a) if lhs.toLowerCase.startsWith(a.toLowerCase + ".") =>
-          lhs.substring(a.length + 1)
-        case _ => lhs
-      }
-      stripped.stripPrefix("`").stripSuffix("`") -> expr(kv.substring(eq + 1).trim)
-    }.toMap
-
-  // ------------------------------------------- Delta MERGE grammar (i34)
-
-  private val ClauseHeadRe =
-    """(?is)\s*(NOT\s+)?MATCHED(?:\s+BY\s+(SOURCE|TARGET))?(?:\s+AND\s+(.+?))?\s*""".r
-  private val UpdateAllRe = """(?is)\s*UPDATE\s+SET\s+\*\s*""".r
-  private val UpdateSetRe = """(?is)\s*UPDATE\s+SET\s+(.+)""".r
-  private val DeleteActRe = """(?is)\s*DELETE\s*""".r
-  private val InsertAllRe = """(?is)\s*INSERT\s+\*\s*""".r
-  private val InsertRe =
-    """(?is)\s*INSERT\s*\(([^)]*)\)\s*VALUES\s*\((.*)\)\s*""".r
-
-  private def runDeltaMerge(spark: SparkSession, stmt: String): DataFrame = {
-    val (tgtTok, tAliasOpt, view, sAliasOpt, tail) = stmt match {
-      case MergeHeadRe(t, ta, v, sa, rest) => (t, Option(ta), v, Option(sa), rest)
-      case _ => sys.error(
-        s"malformed MERGE INTO (expected: MERGE INTO <target> [AS] t USING " +
-          s"<view> [AS] s ON <cond> WHEN …): $stmt")
+  private def runMerge(spark: SparkSession, path: String,
+      m: MergeIntoTable): DataFrame = {
+    def aliased(p: LogicalPlan, default: String): (String, LogicalPlan) = p match {
+      case a: SubqueryAlias => (a.alias, a.child)
+      case other => (default, other)
     }
-    val tAlias = tAliasOpt.getOrElse("target")
-    val sAlias = sAliasOpt.getOrElse("source")
-    val firstWhen = topLevelKeyword(tail, "WHEN")
-    require(firstWhen > 0, s"MERGE needs at least one WHEN clause: $stmt")
-    val onCond = tail.substring(0, firstWhen).trim
-    // split the clause list on successive top-level WHENs
-    val whenStarts = Iterator.iterate(firstWhen)(i =>
-      topLevelKeyword(tail, "WHEN", i + 4)).takeWhile(_ >= 0).toSeq
-    val clauseTexts = whenStarts.zipAll(whenStarts.drop(1), -1, tail.length)
-      .map { case (a, b) => tail.substring(a + "WHEN".length, b) }
-
-    val path = pathOf(spark, tgtTok)
-    val source = spark.table(view)
-    var b = VersionedTable.mergeInto(spark, path, source, expr(onCond),
-      tAlias, sAlias)
-    clauseTexts.foreach { c =>
-      val thenIdx = topLevelKeyword(c, "THEN")
-      require(thenIdx > 0, s"MERGE clause needs THEN: WHEN $c")
-      val (isNot, byTok, cond) = c.substring(0, thenIdx) match {
-        case ClauseHeadRe(not, by, andCond) =>
-          (not != null, Option(by).map(_.toUpperCase(java.util.Locale.ROOT)),
-            Option(andCond).map(s => expr(s.trim)).orNull)
-        case other => sys.error(s"malformed MERGE clause head: WHEN $other")
-      }
-      require(isNot || byTok.isEmpty,
-        s"BY ${byTok.getOrElse("")} is only valid after NOT MATCHED: WHEN $c")
-      val bySrc = isNot && byTok.contains("SOURCE")
-      val action = c.substring(thenIdx + "THEN".length)
-      (isNot, bySrc, action) match {
-        case (false, _, UpdateAllRe()) => b = b.whenMatchedUpdateAll(cond)
-        case (false, _, UpdateSetRe(assigns)) =>
-          b = b.whenMatchedUpdate(parseAssignments(assigns, Some(tAlias)), cond)
-        case (false, _, DeleteActRe()) => b = b.whenMatchedDelete(cond)
-        case (true, true, UpdateSetRe(assigns)) =>
-          b = b.whenNotMatchedBySourceUpdate(
-            parseAssignments(assigns, Some(tAlias)), cond)
-        case (true, true, DeleteActRe()) => b = b.whenNotMatchedBySourceDelete(cond)
-        case (true, false, InsertAllRe()) => b = b.whenNotMatchedInsertAll(cond)
-        case (true, false, InsertRe(cols, vals)) =>
-          val names = splitSet(cols).map(_.stripPrefix("`").stripSuffix("`"))
-          val exprs = splitSet(vals)
-          require(names.length == exprs.length,
-            s"INSERT column/value count mismatch (${names.length} vs " +
-              s"${exprs.length}): WHEN $c")
-          b = b.whenNotMatchedInsert(
-            names.zip(exprs.map(e => expr(e))).toMap, cond)
-        case (false, _, other) => sys.error(
-          s"WHEN MATCHED supports UPDATE SET …/UPDATE SET */DELETE, got: ${other.trim}")
-        case (true, true, other) => sys.error(
-          s"WHEN NOT MATCHED BY SOURCE supports UPDATE SET …/DELETE, got: ${other.trim}")
-        case (true, false, other) => sys.error(
-          s"WHEN NOT MATCHED supports INSERT (…) VALUES (…)/INSERT *, got: ${other.trim}")
-      }
+    val (tAlias, _) = aliased(m.targetTable, "target")
+    val (sAlias, sPlan) = aliased(m.sourceTable, "source")
+    val source = sPlan match {
+      case r: UnresolvedRelation => spark.table(r.tableName)
+      case _ => throw new IllegalArgumentException(
+        "MERGE INTO reads its source from a table or view name, not a subquery")
+    }
+    val b = VersionedTable.mergeInto(spark, path, source,
+      StreamShim.column(m.mergeCondition), tAlias, sAlias)
+    def cond(a: MergeAction): Column = a.condition.map(StreamShim.column).orNull
+    def set(a: Seq[Assignment]) = assignments(a, Some(tAlias))
+    def unsupported(a: MergeAction): Nothing =
+      throw new IllegalArgumentException(s"unsupported MERGE action ${a.nodeName}")
+    m.matchedActions.foreach {
+      case a: UpdateAction => b.whenMatchedUpdate(set(a.assignments), cond(a))
+      case a: UpdateStarAction => b.whenMatchedUpdateAll(cond(a))
+      case a: DeleteAction => b.whenMatchedDelete(cond(a))
+      case a => unsupported(a)
+    }
+    m.notMatchedActions.foreach {
+      case a: InsertAction => b.whenNotMatchedInsert(set(a.assignments), cond(a))
+      case a: InsertStarAction => b.whenNotMatchedInsertAll(cond(a))
+      case a => unsupported(a)
+    }
+    m.notMatchedBySourceActions.foreach {
+      case a: UpdateAction => b.whenNotMatchedBySourceUpdate(set(a.assignments), cond(a))
+      case a: DeleteAction => b.whenNotMatchedBySourceDelete(cond(a))
+      case a => unsupported(a)
     }
     val r = b.execute()
     metrics(spark, Seq("version", "rows_updated", "rows_deleted", "rows_inserted"),
       Seq(r.version, r.rowsUpdated, r.rowsDeleted, r.rowsInserted))
   }
+
+  /** Assignment keys → target column names (a leading target alias
+    * stripped); values → Columns.
+    */
+  private def assignments(as: Seq[Assignment], targetAlias: Option[String])
+      : Map[String, Column] =
+    as.map { a =>
+      val name = a.key match {
+        case UnresolvedAttribute(Seq(c)) => c
+        case UnresolvedAttribute(Seq(q, c)) if targetAlias.exists(_.equalsIgnoreCase(q)) => c
+        case k => throw new IllegalArgumentException(
+          s"assignment target ${k.sql} is not a column of the target table")
+      }
+      name -> StreamShim.column(a.value)
+    }.toMap
 
   // -------------------------------------------------------------- entry
 
@@ -330,30 +248,8 @@ object SqlDml {
       val nStaged = staged.count()
       val v = VersionedTable.merge(staged, path, keys)
       metrics(spark, Seq("version", "rows_staged"), Seq(v, nStaged))
-    case m if MergeAnyRe.pattern.matcher(m).matches() =>
-      runDeltaMerge(spark, m)
-    case DeleteRe(tgt, predAndSuffix) =>
-      val path = pathOf(spark, tgt)
-      val (pred, dv) = splitDvSuffix(predAndSuffix)
-      val result =
-        if (dv) VersionedTable.deleteVectors(spark, path, expr(pred))
-        else VersionedTable.delete(spark, path, expr(pred))
-      val (v, n) = result.getOrElse(
-        (VersionedTable.latestVersion(spark, path), 0L))
-      metrics(spark, Seq("version", "rows_deleted"), Seq(v, n))
-    case UpdateRe(tgt, tail) =>
-      val path = pathOf(spark, tgt)
-      val wi = topLevelKeyword(tail, "WHERE")
-      require(wi > 0, s"UPDATE needs a top-level WHERE clause: $stmt")
-      val setClause = tail.substring(0, wi).trim
-      val (pred, dv) = splitDvSuffix(tail.substring(wi + "WHERE".length))
-      val set = parseAssignments(setClause, targetAlias = None)
-      val result =
-        if (dv) VersionedTable.updateVectors(spark, path, expr(pred), set)
-        else VersionedTable.update(spark, path, expr(pred), set)
-      val (v, n) = result
-        .getOrElse((VersionedTable.latestVersion(spark, path), 0L))
-      metrics(spark, Seq("version", "rows_updated"), Seq(v, n))
+    case DmlRe(head, tgt, rest) =>
+      runDml(spark, head, tgt, rest)
     case OptimizeRe(tgt, z, za, zb) =>
       val path = pathOf(spark, tgt)
       val v = VersionedTable.optimize(spark, path,
@@ -450,7 +346,7 @@ object SqlDml {
         s"CREATE TABLE $name: no versioned table at $path and no column " +
           "list to create one — declare (col type, …) or point LOCATION " +
           "at an existing table"))
-      val parts = partBy.map(splitSet(_).map(_.trim)).getOrElse(Nil)
+      val parts = partBy.toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       VersionedTable.create(empty, path, partitionBy = parts)

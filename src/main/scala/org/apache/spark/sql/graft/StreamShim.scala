@@ -1,16 +1,23 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** The one-and-only Spark-internal seam graft uses: a DSv1 streaming
-  * `Source.getBatch` must return a DataFrame whose logical plan carries
-  * `isStreaming = true` (MicroBatchExecution asserts it), and the only
-  * constructor for such a frame — `internalCreateDataFrame(rdd, schema,
-  * isStreaming = true)` — is `private[sql]`. This shim lives in the
-  * `org.apache.spark.sql` namespace purely to reach it at compile time,
-  * the standard public-connector pattern for DSv1 sources (Spark's own
-  * FileStreamSource builds its batches exactly this way). No other Spark
-  * internals are touched; everything else in graft is public API.
+/** The two Spark-internal seams graft uses, each a `private[sql]` member
+  * this object lives in the `org.apache.spark.sql` namespace to reach at
+  * compile time. No other Spark internals are touched; everything else
+  * in graft is public API (or, for `graft.sql.SqlDml`, the unresolved
+  * plan Spark's own parser returns).
+  *
+  *  - [[asStreamingFrame]]: a DSv1 streaming `Source.getBatch` must return
+  *    a DataFrame whose logical plan carries `isStreaming = true`
+  *    (MicroBatchExecution asserts it), and the only constructor for such
+  *    a frame — `internalCreateDataFrame(rdd, schema, isStreaming = true)`
+  *    — is `private[sql]`. This is the standard public-connector pattern
+  *    for DSv1 sources (Spark's own FileStreamSource builds its batches
+  *    exactly this way).
+  *  - [[column]]: the expressions of a parsed MERGE/UPDATE/DELETE plan
+  *    become Columns through `classic.ExpressionUtils.column`.
   */
 object StreamShim {
 
@@ -22,4 +29,10 @@ object StreamShim {
     classic.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
+
+  /** A catalyst expression — resolved or not — as a Column; the frame it
+    * is used on resolves it, as it would an `expr` string.
+    */
+  def column(e: Expression): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
 }

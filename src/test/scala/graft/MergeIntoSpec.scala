@@ -267,7 +267,7 @@ class MergeIntoSpec extends SparkSpec {
     assert(r2.columns.toSeq == Seq("version", "rows_staged"))
 
     // an UNPARENTHESIZED CASE expression in a SET / clause condition:
-    // the scanner must not split at the CASE's embedded WHEN/THEN
+    // the clause must not end at the CASE's embedded WHEN/THEN
     val r3 = SqlDml.run(spark,
       s"""MERGE INTO '$t' AS t USING mi_stg AS s ON t.id = s.id
          |WHEN MATCHED AND CASE WHEN s.amt > 4.0 THEN true ELSE false END
@@ -283,6 +283,45 @@ class MergeIntoSpec extends SparkSpec {
       s"""UPDATE '$t' SET v = "x WHERE USING y" WHERE id = 2""")
     assert(VersionedTable.read(spark, t).filter(col("id") === 2L)
       .select("v").head().getString(0) == "x WHERE USING y")
+  }
+
+  test("malformed DML fails NAMED (Spark's ParseException or a named " +
+      "require) and commits nothing; BY TARGET and alias-qualified SET parse") {
+    import org.apache.spark.sql.catalyst.parser.ParseException
+    val t = tmpTable("malformed")
+    VersionedTable.create(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "v", "amt"), t)
+    Seq((1L, "A", 10.0), (3L, "c", 3.0)).toDF("id", "v", "amt")
+      .createOrReplaceTempView("malformed_src")
+    val head = s"MERGE INTO '$t' AS t USING malformed_src AS s ON t.id = s.id"
+    val cases = Seq[(String, String, Class[_ <: Throwable], String)](
+      ("clause without THEN", s"$head WHEN MATCHED UPDATE SET v = s.v",
+        classOf[ParseException], ""),
+      ("unbalanced parenthesis", s"$head WHEN MATCHED AND (s.amt > 1.0 THEN DELETE",
+        classOf[ParseException], ""),
+      ("NOT MATCHED after BY SOURCE", s"$head WHEN NOT MATCHED BY SOURCE THEN " +
+        "DELETE WHEN NOT MATCHED THEN INSERT *", classOf[ParseException], ""),
+      ("MERGE without WHEN", head, classOf[ParseException], ""),
+      ("UPDATE without WHERE", s"UPDATE '$t' SET v = 'z'",
+        classOf[IllegalArgumentException], "UPDATE needs a WHERE clause"),
+      ("DELETE with a foreign USING suffix", s"DELETE FROM '$t' WHERE id = 1 USING FOO",
+        classOf[ParseException], ""))
+    cases.foreach { case (label, stmt, named, fragment) =>
+      val e = intercept[Throwable](SqlDml.run(spark, stmt))
+      assert(named.isInstance(e), s"$label: ${e.getClass.getName}: ${e.getMessage}")
+      assert(e.getMessage.contains(fragment), s"$label: ${e.getMessage}")
+    }
+    assert(VersionedTable.latestVersion(spark, t) == 0L, "nothing committed")
+    assert(state(t) == Set((1L, "a", 1.0), (2L, "b", 2.0)))
+
+    // WHEN NOT MATCHED BY TARGET is the NOT MATCHED clause, and a SET
+    // target may carry the target alias
+    val r = SqlDml.run(spark,
+      s"""$head
+         |WHEN MATCHED THEN UPDATE SET t.v = s.v, T.amt = s.amt
+         |WHEN NOT MATCHED BY TARGET THEN INSERT (id, v, amt) VALUES (s.id, s.v, s.amt)
+         |""".stripMargin).head()
+    assert(r.getLong(1) == 1L && r.getLong(3) == 1L, r)
+    assert(state(t) == Set((1L, "A", 10.0), (2L, "b", 2.0), (3L, "c", 3.0)))
   }
 
   test("WHEN NOT MATCHED BY SOURCE: the sync-to-source idiom — update, " +

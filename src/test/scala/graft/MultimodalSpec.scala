@@ -280,7 +280,7 @@ class MultimodalSpec extends SparkSpec {
     assert(ref != null && ref.getWidth == 32 && ref.getHeight == 1)
     assert(ref.getRaster.getSample(0, 0, 0) == 'h'.toInt, "pixel 0 is 'h'")
     // and the batched stats face agrees with the closed form
-    val stats = Binary.decodePngStats(Binary.toPngPayloads(spark, docs))
+    val stats = Binary.decodeImageStats(Binary.toPngPayloads(spark, docs))
       .collect().map(s => s.doc_id -> s).toMap
     assert(math.abs(stats(1L).mean_luma - text.map(_ & 0xff).sum.toDouble / 32) < 1e-9)
     assert(stats(3L).mean_luma == 0.0 && stats(3L).luma_hist(0) == 32L)

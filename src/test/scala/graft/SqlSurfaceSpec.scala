@@ -843,10 +843,9 @@ class SqlSurfaceSpec extends SparkSpec {
     // fall-through: a plain statement goes to spark.sql untouched
     assert(SqlDml.run(spark, "SELECT 1 AS one").head().getInt(0) == 1)
 
-    // parser robustness (r19 review): the WHERE split is token-bounded
-    // (snake_case identifiers containing 'where' don't split) and
-    // string-literal aware (a predicate literal containing ' WHERE '
-    // doesn't either)
+    // parser robustness (r19 review): WHERE is a token (snake_case
+    // identifiers containing 'where' don't end the SET list), and a
+    // predicate literal containing ' WHERE ' doesn't either
     val tR = s"$dir/t_robust"
     VersionedTable.create(
       Seq((1L, "x where y", 1.0), (2L, "z", 2.0)).toDF("id", "note", "amt_where_applied"),
@@ -857,8 +856,8 @@ class SqlSurfaceSpec extends SparkSpec {
     val rob = VersionedTable.read(spark, tR).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSet
     assert(rob == Set((1L, 2.0), (2L, 2.0)), s"got $rob")
-    // backslash-escaped quote inside a literal: \' must not toggle the
-    // scanner's string state (the real WHERE would scan as in-string)
+    // backslash-escaped quote inside a literal: \' must not end the
+    // string (the real WHERE would then read as in-string)
     SqlDml.run(spark,
       s"UPDATE '$tR' SET note = 'don\\'t panic' WHERE id = 2")
     assert(VersionedTable.read(spark, tR).filter(col("id") === 2L)

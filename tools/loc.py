@@ -62,4 +62,10 @@ def main(argv):
 
 
 if __name__ == "__main__":
-    main(sys.argv)
+    try:
+        main(sys.argv)
+    except BrokenPipeError:
+        # the reader closed the pipe (`loc.py | head`): stop quietly, and
+        # point stdout at devnull so the interpreter's exit flush cannot
+        # raise a second time
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
