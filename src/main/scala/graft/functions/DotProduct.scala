@@ -68,7 +68,8 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override def prettyName: String = "graft_dot"
 }
 
-/** Session extension registering graft's native functions.
+/** Session extension registering graft's native functions and its table
+  * functions ([[graft.sql.TableFunctions]]).
   * Enable with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -137,5 +138,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_charset_decode"),
       new ExpressionInfo(classOf[CharsetDecode].getName, "graft_charset_decode"),
       (children: Seq[Expression]) => CharsetDecode(children.head, children(1))))
+    graft.sql.TableFunctions.registerWith((id, info, builder) =>
+      ext.injectTableFunction((id, info, builder)))
   }
 }

@@ -61,6 +61,19 @@ object SequencePack {
       "_gs", hashBucketWidth, offset), idCol, weightCol, seqLen)
   }
 
+  /** The per-sequence composition report of a manifest (q118): (seq_id,
+    * n_docs, n_boundaries, max_span, min_span, full) — how many document
+    * spans share each sequence (every boundary is an attention-mask
+    * break). A pure rollup of the manifest.
+    */
+  def stats(manifest: DataFrame, seqLen: Long): DataFrame =
+    manifest.groupBy(col("seq_id"))
+      .agg(count(lit(1)).as("n_docs"),
+        (count(lit(1)) - 1).as("n_boundaries"),
+        max(col("len")).as("max_span"),
+        min(col("len")).as("min_span"),
+        (sum(col("len")) === seqLen).as("full"))
+
   private def checkCols(df: DataFrame, idCol: String, seqLen: Long,
       extraReserved: Seq[String] = Nil): Unit = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")

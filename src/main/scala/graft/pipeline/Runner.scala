@@ -42,26 +42,21 @@ object Runner {
     */
   private def lastWatermarks(spark: SparkSession,
       auditDir: String): Map[(String, String), String] =
-    try {
+    // ONLY a missing log means "first run"; a corrupt or wrong-schema
+    // audit log fails loudly (see Sources.parquetIfExists).
+    graft.sources.Sources.parquetIfExists(spark, auditDir).fold(
+        Map.empty[(String, String), String]) { audit =>
       // Succeeded runs only: a `running` row (a crashed load's marker) and
       // a `failed` row carry no new watermark — carry-forward reads through
       // them to the last load that landed, so a failed run never drops the
       // watermark and re-bootstraps the table.
       graft.ops.Dedup.latestPerKey(
-        spark.read.parquet(auditDir).filter(col("status") === "succeeded"),
+        audit.filter(col("status") === "succeeded"),
         Seq("source_system", "source_object"),
         Seq(col("end_time").desc, col("run_id").desc))
         .filter(col("watermark_value").isNotNull)
         .select(col("source_system"), col("source_object"), col("watermark_value"))
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    } catch {
-      // ONLY path-missing means "first run, no log yet". A corrupt or
-      // wrong-schema audit log must fail loudly — silently answering
-      // "no watermarks" would quietly re-bootstrap every incremental
-      // table and mask the corruption.
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null && e.getCondition.startsWith("PATH_NOT_FOUND") =>
-        Map.empty
     }
 
   /** Run every active config entry: read via `source` (called with the

@@ -435,15 +435,7 @@ object TextQueries {
     // corpus, no explode/shuffle; zero-token docs are non-repetitive by
     // definition (0 > 0 is false on both sides).
     "q70_repetition" -> { (s, d) =>
-      val toks = TF.tokens(col("text"))
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          size(toks).cast("long").as("n_tokens"),
-          size(array_distinct(toks)).cast("long").as("n_types"),
-          TF.maxRunCount(TF.wordBigrams(toks)).as("top_bigram_cnt"))
-        .withColumn("repetitive",
-          when((col("n_tokens") - col("n_types")) * 20 > col("n_tokens") * 13
-            || col("top_bigram_cnt") * 25 > col("n_tokens") * 2, 1L).otherwise(0L))
+      graft.text.Gopher.repetition(Tables.documents(s, d), "doc_id", "text")
         .orderBy(col("doc_id"))
     },
 
@@ -557,23 +549,7 @@ object TextQueries {
     // yields EXPECTED stratum sizes (±binomial noise), which is the
     // standard trade for a corpus-parallel sampler.
     "q81_mixture_sample" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      // NULL-stratum fail-fast mirrors streaming mixtureSink: a null lang
-      // would tighten every threshold via nMin while its rows silently
-      // drop (null never equality-matches).
-      val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
-        .collect().map { r =>
-          require(!r.isNullAt(0),
-            "mixture stratum is NULL — assign or quarantine upstream before balancing")
-          r.getString(0) -> r.getLong(1)
-        }.toMap
-      val nMin = counts.values.min
-      val thresh = counts.map { case (l, n) => l -> nMin * 1000000L / n }
-      val threshCol = thresh.foldLeft(lit(0L)) { case (acc, (l, t)) =>
-        when(col("lang") === l, lit(t)).otherwise(acc)
-      }
-      docs.filter(pmod(graft.ops.Cdm.hash60(col("doc_id").cast("string")), lit(1000000L))
-          < threshCol)
+      graft.ops.Sampling.mixture(Tables.documents(s, d), "doc_id", "lang")
         .select(col("doc_id"), col("lang"))
         .orderBy(col("doc_id"))
     },
@@ -591,24 +567,8 @@ object TextQueries {
     // Same driver-side bounded counts + hash-threshold filter as q81:
     // shuffle-free per row.
     "q98_temperature_sample" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
-        .collect().map { r =>
-          require(!r.isNullAt(0),
-            "mixture stratum is NULL — assign or quarantine upstream before balancing")
-          r.getString(0) -> r.getLong(1)
-        }.toMap
-      val nMin = counts.values.min
-      val thresh = counts.map { case (l, n) =>
-        // BigInt keeps the product exact at any corpus size; the quotient
-        // is <= 10^12 by construction, so toDouble is lossless.
-        l -> math.sqrt((BigInt(nMin) * BigInt(1000000000000L) / BigInt(n)).toDouble).toLong
-      }
-      val threshCol = thresh.foldLeft(lit(0L)) { case (acc, (l, t)) =>
-        when(col("lang") === l, lit(t)).otherwise(acc)
-      }
-      docs.filter(pmod(graft.ops.Cdm.hash60(col("doc_id").cast("string")), lit(1000000L))
-          < threshCol)
+      graft.ops.Sampling.mixture(Tables.documents(s, d), "doc_id", "lang",
+          temperature = 2)
         .select(col("doc_id"), col("lang"))
         .orderBy(col("doc_id"))
     },
@@ -658,18 +618,7 @@ object TextQueries {
     // full deterministic tiebreak, planned as TakeOrderedAndProject (no
     // global sort).
     "q85_boilerplate_grams" -> { (s, d) =>
-      // explode_outer + null filter: the shingleRows dodge (see q83).
-      // widen: per-doc tokenize+8-grams before the first exchange (r22
-      // re-A/B, driver-shaped subset: 0.64 s widened vs 1.50 s without).
-      graft.sources.Sources.widen(Tables.documents(s, d), col("doc_id"))
-        .select(col("doc_id"),
-          explode_outer(TF.wordNgrams(TF.tokens(col("text")), 8)).as("gram"))
-        .filter(col("gram").isNotNull)
-        .distinct()
-        .groupBy(col("gram")).agg(count(lit(1)).as("doc_freq"))
-        .filter(col("doc_freq") >= 2)
-        .orderBy(col("doc_freq").desc, col("gram"))
-        .limit(25)
+      graft.text.CorpusReport.boilerplateGrams(Tables.documents(s, d), "doc_id", "text")
     },
 
     // ---- q84: per-source adaptive quality cutoff ----
@@ -837,16 +786,8 @@ object TextQueries {
     // TRAINED path is q95 (rows-only — DuckDB cannot train) + the
     // replay-equivalence property specs.
     "q92_bpe_encode" -> { (s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), TF.tokens(col("text")).as("_toks"))
-        .withColumn("_enc", transform(col("_toks"),
-          t => graft.text.Bpe.encode(t, graft.text.Bpe.FixedMerges)))
-        .select(col("doc_id"),
-          size(col("_toks")).cast("long").as("n_words"),
-          aggregate(transform(col("_enc"), e => size(e)),
-            lit(0L), (a, x) => a + x).as("n_bpe_tokens"),
-          md5(concat_ws(" ",
-            transform(col("_enc"), e => array_join(e, "+")))).as("bpe_fp"))
+      graft.text.Bpe.docStats(Tables.documents(s, d), "doc_id", "text",
+          graft.text.Bpe.FixedMerges)
         .orderBy(col("doc_id"))
     },
 
@@ -890,16 +831,10 @@ object TextQueries {
     // rollup of the manifest: (seq_id, n_docs, n_boundaries, longest and
     // shortest span, full flag). Scan-shaped on top of q113's prefix sum.
     "q118_pack_stats" -> { (s, d) =>
-      graft.ops.SequencePack.manifest(
+      graft.ops.SequencePack.stats(graft.ops.SequencePack.manifest(
           Tables.documents(s, d)
             .select(col("doc_id"), size(TF.tokens(col("text"))).cast("long").as("n_tokens")),
-          "doc_id", "n_tokens", seqLen = 256, bucketSize = 64)
-        .groupBy(col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          (count(lit(1)) - 1).as("n_boundaries"),
-          max(col("len")).as("max_span"),
-          min(col("len")).as("min_span"),
-          (sum(col("len")) === 256L).as("full"))
+          "doc_id", "n_tokens", seqLen = 256, bucketSize = 64), 256L)
         .orderBy(col("seq_id"))
     },
 
@@ -922,13 +857,10 @@ object TextQueries {
         TS.docSubwords(docs, "doc_id", "text", merges))
       val ids = TS.tokenIdMap(TS.vocabOf(subs))
       val dt = TS.docTokensOf(subs, "doc_id", ids)
-      val manifest = graft.ops.SequencePack.manifest(
-        dt.select(col("doc_id"), col("n_tokens")), "doc_id", "n_tokens",
-        seqLen = 128, bucketSize = 64)
       val out = new java.io.File(System.getProperty("java.io.tmpdir"),
         "graft_q116_" + java.util.UUID.nameUUIDFromBytes(
           d.getBytes("UTF-8")).toString.take(8)).getAbsolutePath
-      TS.writeShards(TS.fullSequences(TS.assemble(dt, manifest), 128),
+      TS.writeShards(TS.packFull(dt, 128, bucketSize = 64),
         out, seqLen = 128, seqsPerShard = 128)
       TS.readShards(s, out)
         .select(col("seq_id"),
@@ -956,11 +888,8 @@ object TextQueries {
         TS.docSubwords(docs, "doc_id", "text", merges))
       val ids = TS.tokenIdMap(TS.vocabOf(subs))
       val eos = ids.size
-      val dt = TS.withEos(TS.docTokensOf(subs, "doc_id", ids), eos)
-      val manifest = graft.ops.SequencePack.manifest(
-        dt.select(col("doc_id"), col("n_tokens")), "doc_id", "n_tokens",
-        seqLen = 128, bucketSize = 64)
-      TS.fullSequences(TS.assemble(dt, manifest), 128)
+      TS.packFull(TS.withEos(TS.docTokensOf(subs, "doc_id", ids), eos), 128,
+          bucketSize = 64)
         .select(col("seq_id"),
           size(filter(col("tokens"), t => t === eos)).cast("long").as("n_eos"),
           aggregate(col("tokens"), lit(0L), (a, x) => a + x).as("token_sum"),
@@ -1107,16 +1036,10 @@ object TextQueries {
     // top-N-per-group (domain-partitioned window — domains are many and
     // bounded, never a corpus-wide key).
     "q102_url_curate" -> { (s, d) =>
-      import s.implicits._
-      val canon = Tables.documents(s, d)
-        .select(col("doc_id"), col("n_chars"),
-          Urls.canonicalize(syntheticRawUrl).as("url"))
-        .withColumn("domain", Urls.domain(col("url")))
-      val blocked = Seq("src3.example.com", "src7.example.com").toDF("domain")
-      val kept = canon.join(broadcast(blocked), Seq("domain"), "left_anti")
-      graft.ops.Windows.topNPerGroup(kept, Seq("domain"),
-          Seq(col("n_chars").desc, col("doc_id").asc), 15)
-        .select(col("doc_id"), col("domain"), col("url"), col("rn"))
+      Urls.curate(Tables.documents(s, d)
+          .select(col("doc_id"), col("n_chars"), syntheticRawUrl.as("raw_url")),
+          "doc_id", "raw_url", Seq(col("n_chars").desc, col("doc_id").asc),
+          Seq("src3.example.com", "src7.example.com"), 15)
         .orderBy(col("doc_id"))
     },
 
@@ -1184,11 +1107,7 @@ object TextQueries {
     // so one mis-resolved href anywhere shifts a count); UrlSpec pins
     // resolve rule-by-rule on shapes beyond the synthesis.
     "q105_link_graph" -> { (s, d) =>
-      val lk = syntheticLinkFrame(s, d)
-      lk.filter(col("target_host") =!= col("src_host"))
-        .groupBy(col("src_host"), col("target_host"))
-        .agg(count(lit(1)).as("n_links"),
-          countDistinct(col("doc_id")).as("n_docs"))
+      graft.text.HtmlExtract.hostEdges(syntheticLinkFrame(s, d), "doc_id")
         .orderBy(col("src_host"), col("target_host"))
     },
 

@@ -466,42 +466,59 @@ object MergeIntoBuilder {
       rowsUpdated: Long, rowsDeleted: Long, rowsInserted: Long,
       targetFilesScanned: Int)
 
-  /** Equi-conjunct pairs (targetCol, sourceCol) of the ANALYZED `on` —
-    * resolved against zero-row probes of both schemas so attribute
-    * ownership is decided by expression id, never by name guessing.
-    * Null-safe equality (`<=>`) is deliberately NOT extracted: it matches
-    * null keys, which min/max stats cannot bound.
+  /** Equi-conjunct pairs (targetCol, sourceCol) of `on`, each side's
+    * column found BY NAME in its schema: `alias.col`, or a bare `col` that
+    * only one side has. A pair needs the same type on both sides (no
+    * implicit cast between the key and its stats). Null-safe equality
+    * (`<=>`) is deliberately NOT extracted: it matches null keys, which
+    * min/max stats cannot bound.
     */
   private def extractEquiPairs(spark: SparkSession,
       targetSchema: org.apache.spark.sql.types.StructType,
       sourceSchema: org.apache.spark.sql.types.StructType,
       on: Column, targetAlias: String, sourceAlias: String): Seq[(String, String)] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.Row
-    def empty(s: org.apache.spark.sql.types.StructType) =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-    val pt = empty(targetSchema).alias(targetAlias)
-    val ps = empty(sourceSchema).alias(sourceAlias)
-    val tIds = pt.queryExecution.analyzed.output.map(_.exprId).toSet
-    val sIds = ps.queryExecution.analyzed.output.map(_.exprId).toSet
-    val analyzed =
-      try pt.join(ps, on, "inner").queryExecution.analyzed
-      catch { case scala.util.control.NonFatal(_) => return Nil }
-    val cond = analyzed.collectFirst { case j: Join => j.condition }.flatten
-    def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+    val same = spark.sessionState.conf.resolver
+    // (isTarget, field) of a one- or two-part column name
+    def side(parts: Seq[String]): Option[(Boolean, org.apache.spark.sql.types.StructField)] = {
+      def in(s: org.apache.spark.sql.types.StructType, n: String) =
+        s.fields.find(f => same(f.name, n))
+      parts match {
+        case Seq(a, c) if same(a, targetAlias) => in(targetSchema, c).map(true -> _)
+        case Seq(a, c) if same(a, sourceAlias) => in(sourceSchema, c).map(false -> _)
+        case Seq(c) => (in(targetSchema, c), in(sourceSchema, c)) match {
+          case (Some(t), None) => Some(true -> t)
+          case (None, Some(s)) => Some(false -> s)
+          case _ => None
+        }
+        case _ => None
+      }
     }
-    cond.toSeq.flatMap(conjuncts).flatMap {
-      case EqualTo(a: AttributeReference, b: AttributeReference)
-        if tIds.contains(a.exprId) && sIds.contains(b.exprId) =>
-        Some((a.name, b.name))
-      case EqualTo(a: AttributeReference, b: AttributeReference)
-        if sIds.contains(a.exprId) && tIds.contains(b.exprId) =>
-        Some((b.name, a.name))
+    // `expr` strings parse to And/EqualTo; Column operators (`&&`, `===`)
+    // arrive as the unresolved functions `and` and `=`
+    def call(e: Expression, name: String): Option[Seq[Expression]] = e match {
+      case f: UnresolvedFunction if f.nameParts == Seq(name) && f.arguments.size == 2 =>
+        Some(f.arguments)
+      case _ => None
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case _ => call(e, "and").fold(Seq(e))(_.flatMap(conjuncts))
+    }
+    def operands(e: Expression): Option[Seq[Expression]] = e match {
+      case EqualTo(l, r) => Some(Seq(l, r))
+      case _ => call(e, "=")
+    }
+    conjuncts(org.apache.spark.sql.graft.StreamShim.expression(spark, on)).flatMap(operands).flatMap {
+      case Seq(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
+        (side(a.nameParts), side(b.nameParts)) match {
+          case (Some((true, t)), Some((false, s))) if VersionedTable.sameType(t.dataType, s.dataType) =>
+            Some((t.name, s.name))
+          case (Some((false, s)), Some((true, t))) if VersionedTable.sameType(t.dataType, s.dataType) =>
+            Some((t.name, s.name))
+          case _ => None
+        }
       case _ => None
     }
   }

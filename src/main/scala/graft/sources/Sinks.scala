@@ -58,10 +58,6 @@ object Sinks {
     } finally fs.delete(tmp, true)
   }
 
-  /** ORC writer (see Sources.orc). */
-  def orc(df: DataFrame, path: String, mode: String = "overwrite"): Unit =
-    df.write.mode(mode).orc(path)
-
   /** Bucketed + sorted catalog table (i05): co-locates and pre-sorts rows by
     * the join key at WRITE time, so repeated large-fact joins on that key
     * run shuffle-free (SortMergeJoin with no Exchange under it) — the

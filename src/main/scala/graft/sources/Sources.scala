@@ -50,15 +50,15 @@ object Sources {
     * or unreadable state directory must fail loudly, because answering
     * "no state" to it silently resets watermarks, drops dedup indexes, or
     * (worst) lets a sink overwrite the only — possibly recoverable —
-    * copy of a dimension.
+    * copy of a dimension. The path is asked of its file system first, so
+    * a first run raises (and logs) no error at all.
     */
-  def parquetIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null && e.getCondition.startsWith("PATH_NOT_FOUND") =>
-        None
-    }
+  def parquetIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(spark.read.parquet(path))
+    else None
+  }
 
   def csv(spark: SparkSession, path: String, schema: Option[StructType] = None,
       header: Boolean = true): DataFrame = {

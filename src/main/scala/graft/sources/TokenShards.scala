@@ -177,6 +177,19 @@ object TokenShards {
   def fullSequences(seqs: DataFrame, seqLen: Int): DataFrame =
     seqs.filter(size(col("tokens")) === seqLen)
 
+  /** Concat-and-chunk per-doc token arrays (`idCol`, tokens, n_tokens)
+    * into their FULL sequences (seq_id, tokens): the q113 manifest over
+    * `n_tokens`, [[assemble]], then [[fullSequences]] — the loader step
+    * q116 and q120 share.
+    */
+  def packFull(docToks: DataFrame, seqLen: Int, bucketSize: Long = 1L << 20,
+      idCol: String = "doc_id"): DataFrame = {
+    val manifest = graft.ops.SequencePack.manifest(
+      docToks.select(col(idCol), col("n_tokens")), idCol, "n_tokens",
+      seqLen = seqLen, bucketSize = bucketSize)
+    fullSequences(assemble(docToks, manifest, idCol), seqLen)
+  }
+
   /** The loader's EPOCH PLAN (q121): for each training epoch, a seeded
     * deterministic permutation of the full sequences, each mapped to its
     * PHYSICAL address in the [[writeShards]] layout — (epoch, position,

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.StreamShim
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -1035,24 +1036,37 @@ object VersionedTable {
   }
 
   /** Prunable conjuncts of `cond` when it references ONLY columns of
-    * `schema` (resolved against a zero-row frame under `alias`, so both
-    * `alias.col` and bare `col` spellings resolve); Nil when the
-    * condition references anything else (the other merge side, a missing
-    * column) or carries no prunable conjunct — the caller cannot bound
-    * its scan then. The stats-pruning half of MERGE's conditional
-    * `WHEN NOT MATCHED BY SOURCE` (r22): a target-only conjunct like a
-    * partition bound means unmatched rows OUTSIDE it can never act, so
-    * files failing every clause's pruners need not be scanned at all.
+    * `schema` (`alias.col` or bare `col`, decided by name before anything
+    * is analyzed); Nil when the condition references anything else (the
+    * other merge side, a missing column) or carries no prunable conjunct
+    * — the caller cannot bound its scan then. The stats-pruning half of
+    * MERGE's conditional `WHEN NOT MATCHED BY SOURCE` (r22): a target-only
+    * conjunct like a partition bound means unmatched rows OUTSIDE it can
+    * never act, so files failing every clause's pruners need not be
+    * scanned at all.
     */
   private[sources] def targetOnlyPruners(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, alias: String,
-      cond: org.apache.spark.sql.Column): Seq[Pruner] =
-    try {
-      val probe = emptyFrame(spark, schema).alias(alias).filter(cond)
-      probe.queryExecution.analyzed.collectFirst {
+      schema: StructType, alias: String,
+      cond: org.apache.spark.sql.Column): Seq[Pruner] = {
+    val same = spark.sessionState.conf.resolver
+    // `alias.col` or a bare `col` (a longer name reads into a struct column)
+    def isTargetColumn(parts: Seq[String]): Boolean = {
+      val name = if (parts.length > 1 && same(parts.head, alias)) parts(1) else parts.head
+      schema.fieldNames.exists(same(_, name))
+    }
+    val targetOnly = StreamShim.expression(spark, cond).collect {
+      case a: org.apache.spark.sql.catalyst.expressions.Attribute => a
+    }.forall {
+      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+        isTargetColumn(u.nameParts)
+      case _ => false // bound to another plan's output
+    }
+    if (!targetOnly) Nil
+    else emptyFrame(spark, schema).alias(alias).filter(cond)
+      .queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.fold(Seq.empty[Pruner])(e => splitConjuncts(e).flatMap(translate(_)))
-    } catch { case scala.util.control.NonFatal(_) => Nil }
+  }
 
   /** One prunable conjunct: op ∈ eq/lt/le/gt/ge/in/isnull/isnotnull;
     * `values` are normalized literal carriers (Long/Double/String).

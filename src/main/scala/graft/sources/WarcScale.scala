@@ -33,6 +33,17 @@ object WarcScale {
     bos.toByteArray
   }
 
+  /** `f`'s result and its best (minimum) wall over two runs, timed by
+    * [[graft.Measure.timePasses]]; a failing run fails the probe.
+    */
+  private def bestOf2[T](f: => T): (T, Double) = {
+    var out: Option[T] = None
+    val best = graft.Measure.timePasses[Unit](Seq.fill(2)(Seq(())), _ => out = Some(f),
+      onTiming = (_: Unit, t: graft.Measure.Timing, _: Option[graft.Measure.Timing]) =>
+        t.error.foreach(e => throw e))
+    (out.get, best(()).sec)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nFiles = sys.env.get("SPARK_GRAFT_WARC_FILES").map(_.toInt).getOrElse(16)
@@ -51,12 +62,7 @@ object WarcScale {
           col("text"))
       val nDocs = docsE.count()
       val dir = s"$outRoot/wet"
-      var best = Double.MaxValue
-      (1 to 2).foreach { _ =>
-        val t0 = System.nanoTime()
-        Warc.writeWarcGz(docsE, dir, shards = nFiles)
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
+      val (_, best) = bestOf2(Warc.writeWarcGz(docsE, dir, shards = nFiles))
       val bytes = new java.io.File(dir).listFiles().map(_.length()).sum
       val readBack = Warc.read(spark, s"$dir/*.warc.gz")._1.count()
       def f2(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
@@ -98,14 +104,6 @@ object WarcScale {
     val (bytesMany, _) = writeShards(s"$outRoot/many", nFiles)
     val (bytesOne, _) = writeShards(s"$outRoot/one", 1)
 
-    def bestOf2(f: => Long): (Long, Double) = {
-      var best = Double.MaxValue; var rows = 0L
-      (1 to 2).foreach { _ =>
-        val t0 = System.nanoTime(); rows = f
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      (rows, best)
-    }
     // warm the code paths once on the sharded copy
     Warc.read(spark, s"$outRoot/many/*.warc.gz", persist = false)._1.count()
 

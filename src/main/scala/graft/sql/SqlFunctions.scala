@@ -258,10 +258,16 @@ object SqlFunctions {
         |     * sqrt(aggregate(transform(b, x -> x * x), 0.0d, (acc, x) -> acc + x)))""".stripMargin
   )
 
-  /** Create (or replace) the graft SQL functions in `spark`'s session. */
-  def register(spark: SparkSession): Unit =
+  /** Create (or replace) the graft SQL functions in `spark`'s session,
+    * and register the [[TableFunctions]] in its table-function registry
+    * (a session built with `GraftExtensions` already has them).
+    */
+  def register(spark: SparkSession): Unit = {
     ddl(nativeDot = spark.catalog.functionExists("graft_dot"),
       nativeHash = spark.catalog.functionExists("graft_hash60")).foreach(spark.sql(_))
+    TableFunctions.registerWith((id, info, builder) =>
+      spark.sessionState.tableFunctionRegistry.registerFunction(id, info, builder))
+  }
 
   /** Temp views over an sf-dir's tables so the whole catalog is plain-SQL
     * queryable (`SELECT graft_langid(text) FROM documents`). Uses

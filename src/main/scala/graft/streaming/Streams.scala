@@ -574,28 +574,9 @@ object Streams {
         batchCounts.unionByName(p.select(col(stratumCol), col("n")))
           .groupBy(col(stratumCol)).agg(sum(col("n")).as("n"))
     }
-    // Stratum counts are bounded driver metadata (q81's discipline — one
-    // row per stratum, never per doc). A NULL stratum fails fast: it
-    // would silently tighten every named stratum's threshold via nMin
-    // while its own rows never match an equality compare — assign or
-    // quarantine upstream (q03's job). Keyed on the RAW value, not a
-    // String rendering, so a stratum literally named "null" can't
-    // collide with anything.
-    val counts = totals.collect().map { r =>
-      require(!r.isNullAt(0),
-        "mixture stratum is NULL — assign or quarantine upstream before balancing")
-      r.get(0) -> r.getLong(1)
-    }.toMap
-    val nMin = counts.values.min
-    def thr(n: Long): Long =
-      if (temperature == 1) nMin * 1000000L / n
-      else math.sqrt((BigInt(nMin) * BigInt(1000000000000L) / BigInt(n)).toDouble).toLong
-    val threshCol = counts.foldLeft(lit(0L)) { case (acc, (s, n)) =>
-      when(col(stratumCol) === lit(s), lit(thr(n))).otherwise(acc)
-    }
-    val kept = batch
-      .filter(pmod(graft.ops.Cdm.hash60(col(idCol).cast("string")),
-        lit(1000000L)) < threshCol)
+    // the cumulative counts gate this batch with q81/q98's thresholds
+    val kept = graft.ops.Sampling.mixtureGate(batch, idCol, stratumCol,
+        graft.ops.Sampling.stratumCounts(totals), temperature)
       .select(col(idCol), col(stratumCol))
     BatchLog.write(kept, s"$stateDir/kept", batchId)
     BatchLog.write(batchCounts, s"$stateDir/counts", batchId)

@@ -46,6 +46,22 @@ object Bpe {
   def encode(tok: Column, merges: Seq[String]): Column =
     call_function("graft_bpe_encode", tok, typedLit(merges))
 
+  /** Per-document encode stats (q92): (`idCol`, n_words, n_bpe_tokens,
+    * bpe_fp) — word and subword-token counts under `merges`, and an md5
+    * of the whole subword stream ('+' joins subwords within a word, ' '
+    * joins words). One projection, no shuffle.
+    */
+  def docStats(docs: DataFrame, idCol: String, textCol: String,
+      merges: Seq[String]): DataFrame =
+    docs.select(col(idCol), TextFunctions.tokens(col(textCol)).as("_toks"))
+      .withColumn("_enc", transform(col("_toks"), t => encode(t, merges)))
+      .select(col(idCol),
+        size(col("_toks")).cast("long").as("n_words"),
+        aggregate(transform(col("_enc"), e => size(e)),
+          lit(0L), (a, x) => a + x).as("n_bpe_tokens"),
+        md5(concat_ws(" ",
+          transform(col("_enc"), e => array_join(e, "+")))).as("bpe_fp"))
+
   /** BYTE-LEVEL subword array of `tok` (r15): 256-byte base alphabet via
     * the GPT-2 byte↔unicode bijection + an end-of-word symbol — no OOV by
     * construction, and [[decodeBytes]] inverts it EXACTLY for arbitrary

@@ -28,6 +28,26 @@ object Gopher {
   val indicatorWords: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
+  /** q70's Gopher-style repetition signals per document: (`idCol`,
+    * n_tokens, n_types, top_bigram_cnt, repetitive). `repetitive` = 1 when
+    * the duplicate-word fraction exceeds 13/20 (~p80 on the test corpus)
+    * or the most-repeated bigram covers more than 2/25 of the tokens
+    * (~p95) — both INTEGER cross-multiplications, so the verdict is
+    * bit-identical across engines. All three stats come from the token
+    * array itself: a pure map, no explode, no shuffle; a zero-token doc is
+    * non-repetitive (0 > 0 is false).
+    */
+  def repetition(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val toks = TF.tokens(col(textCol))
+    docs.select(col(idCol),
+        size(toks).cast("long").as("n_tokens"),
+        size(array_distinct(toks)).cast("long").as("n_types"),
+        TF.maxRunCount(TF.wordBigrams(toks)).as("top_bigram_cnt"))
+      .withColumn("repetitive",
+        when((col("n_tokens") - col("n_types")) * 20 > col("n_tokens") * 13
+          || col("top_bigram_cnt") * 25 > col("n_tokens") * 2, 1L).otherwise(0L))
+  }
+
   /** Per-document named rule verdicts + the combined `keep`.
     * Output: (`idCol`, n_tokens, words_ok, word_len_ok, symbol_ok,
     * bullet_ok, ellipsis_ok, alpha_ok, stopword_ok, keep).

@@ -50,9 +50,9 @@ object HtmlExtract {
   // HTML character references (entities). Undecoded entities glue words
   // (`a&nbsp;b` is one token), inflate symbol ratios (q89), and perturb
   // every downstream gram — so extracted text decodes them BEFORE the
-  // density read. Three spellings stay in lockstep off the shared table +
-  // pattern below: the Column API ([[decodeEntities]]), the Spark SQL twin
-  // ([[decodeEntitiesSql]]), and the DuckDB oracle ([[decodeEntitiesDuck]]).
+  // density read. Two spellings stay in lockstep off the shared table +
+  // pattern below: the Column API ([[decodeEntities]]) and the DuckDB
+  // oracle ([[decodeEntitiesDuck]]).
   // -----------------------------------------------------------------------
 
   /** Common named character references (HTML5 subset; uppercase variants
@@ -125,32 +125,6 @@ object HtmlExtract {
       })
     when(c.contains("&"), translate(array_join(decoded, ""), NbspShy, " "))
       .otherwise(c)
-  }
-
-  /** [[decodeEntities]] as Spark SQL text over the fragment `inner` — the
-    * i11 twin spelling, row-identical by construction (same table, same
-    * pattern, same built-ins).
-    */
-  def decodeEntitiesSql(inner: String): String = {
-    val whens = Entities.map { case (k, v) =>
-      s"WHEN '&$k;' THEN '${v.replace("'", "''")}'" }.mkString(" ")
-    val dec = "CAST(substr(p, 3, length(p) - 3) AS BIGINT)"
-    val hx = "CAST(conv(substr(p, 4, length(p) - 4), 16, 10) AS BIGINT)"
-    def valid(cp: String) =
-      s"($cp BETWEEN 1 AND 1114111 AND $cp NOT BETWEEN 55296 AND 57343)"
-    def charOf(cp: String) =
-      s"decode(unhex(lpad(hex($cp), 8, '0')), 'UTF-32')"
-    val d = "$"
-    s"""CASE WHEN contains($inner, '&') THEN translate(array_join(transform(
-       |    regexp_extract_all($inner, '$EntityPattern', 0),
-       |    p -> CASE
-       |      WHEN p rlike '^&#[0-9]+;$d' THEN
-       |        CASE WHEN ${valid(dec)} THEN ${charOf(dec)} ELSE p END
-       |      WHEN p rlike '^&#[xX][0-9a-fA-F]+;$d' THEN
-       |        CASE WHEN ${valid(hx)} THEN ${charOf(hx)} ELSE p END
-       |      ELSE coalesce(CASE p $whens END, p) END),
-       |  ''), '$NbspShy', ' ')
-       |ELSE $inner END""".stripMargin
   }
 
   /** [[decodeEntities]] as DuckDB SQL over the fragment `inner` — the
@@ -263,6 +237,16 @@ object HtmlExtract {
       .select(col(idCol), col("src_host"), col("href"), col("target_url"),
         graft.text.Urls.domain(col("target_url")).as("target_host"))
   }
+
+  /** The host-level link graph (q105) of a [[links]] frame: one row per
+    * cross-host edge (src_host, target_host, n_links, n_docs). Self-host
+    * links (intra-site navigation) drop; the rollup is one bounded
+    * groupBy over host pairs, never doc pairs.
+    */
+  def hostEdges(links: DataFrame, idCol: String): DataFrame =
+    links.filter(col("target_host") =!= col("src_host"))
+      .groupBy(col("src_host"), col("target_host"))
+      .agg(count(lit(1)).as("n_links"), countDistinct(col(idCol)).as("n_docs"))
 
   /** Anchor TEXT per link — the label signal [[links]] drops: what other
     * pages CALL a target is a classic retrieval-training / host-quality

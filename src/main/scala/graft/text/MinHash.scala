@@ -119,6 +119,13 @@ object MinHash {
       .select(col(id), col("bb.band").as("band"), col("bb.band_val").as("band_val"))
   }
 
+  /** [[bands]] straight from documents: shingles → `k`-row signature →
+    * `k / rows` band values per doc.
+    */
+  def docBands(docs: DataFrame, id: String, text: String, k: Int,
+      rows: Int): DataFrame =
+    bands(signature(shingleRows(withShingles(docs, id, text), id), id, k), id, k, rows)
+
   /** Band-bucket cap, ON by default (round 10). A degenerate bucket of B
     * docs (a stop-shingle that lands in most documents) contributes B²/2
     * candidate pairs — at corpus scale that one bucket IS a cross join, and

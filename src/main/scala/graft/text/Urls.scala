@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** URL canonicalization for crawl-intake curation — the step between the
@@ -170,5 +170,26 @@ object Urls {
       .otherwise(concat(origin,
         removeDotSegments(concat(dirPath, regexp_replace(h, "[?#].*$", ""))),
         regexp_extract(h, "([?#].*)$", 1)))
+  }
+
+  /** URL-level crawl curation (q102) over a raw URL column: canonicalize,
+    * drop the `blocklist` domains (a broadcast anti-join; none when
+    * empty), then keep the first `k` rows per domain under `order` (q08's
+    * top-N-per-group — domains are many and bounded, never a corpus-wide
+    * key). Output: (`idCol`, domain, url, rn).
+    */
+  def curate(docs: DataFrame, idCol: String, urlCol: String,
+      order: Seq[Column], blocklist: Seq[String], k: Int): DataFrame = {
+    val canon = docs.withColumn("url", canonicalize(col(urlCol)))
+      .withColumn("domain", domain(col("url")))
+    val kept =
+      if (blocklist.isEmpty) canon
+      else {
+        val spark = docs.sparkSession
+        import spark.implicits._
+        canon.join(broadcast(blocklist.toDF("domain")), Seq("domain"), "left_anti")
+      }
+    graft.ops.Windows.topNPerGroup(kept, Seq("domain"), order, k)
+      .select(col(idCol), col("domain"), col("url"), col("rn"))
   }
 }

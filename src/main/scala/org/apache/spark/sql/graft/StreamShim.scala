@@ -2,12 +2,14 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The two Spark-internal seams graft uses, each a `private[sql]` member
+/** The Spark-internal seams graft uses, each a `private[sql]` member
   * this object lives in the `org.apache.spark.sql` namespace to reach at
   * compile time. No other Spark internals are touched; everything else
-  * in graft is public API (or, for `graft.sql.SqlDml`, the unresolved
-  * plan Spark's own parser returns).
+  * in graft is public API (or, for `graft.sql.SqlDml` and
+  * `graft.sql.TableFunctions`, the unresolved plans and expressions
+  * Spark's own parser and analyzer hand over).
   *
   *  - [[asStreamingFrame]]: a DSv1 streaming `Source.getBatch` must return
   *    a DataFrame whose logical plan carries `isStreaming = true`
@@ -16,8 +18,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *    — is `private[sql]`. This is the standard public-connector pattern
   *    for DSv1 sources (Spark's own FileStreamSource builds its batches
   *    exactly this way).
-  *  - [[column]]: the expressions of a parsed MERGE/UPDATE/DELETE plan
-  *    become Columns through `classic.ExpressionUtils.column`.
+  *  - [[column]] / [[expression]]: the expressions of a parsed
+  *    MERGE/UPDATE/DELETE plan become Columns through
+  *    `classic.ExpressionUtils.column`, and a MERGE condition's Column
+  *    goes back to its unresolved expression to read its column names.
+  *  - [[frame]]: a table function's `TABLE(…)` argument arrives as a
+  *    logical plan; `classic.Dataset.ofRows` makes it a DataFrame.
   */
 object StreamShim {
 
@@ -35,4 +41,15 @@ object StreamShim {
     */
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The catalyst expression behind a Column, unresolved as written
+    * (an `expr` string parsed by `spark`'s parser).
+    */
+  def expression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
+
+  /** A logical plan — resolved or not — as a DataFrame of `spark`. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -1,9 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.meta.Audit
 import graft.sources.VersionedTable
@@ -16,35 +13,6 @@ import graft.sources.VersionedTable
   */
 class JobCountSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Jobs started under a fresh job group while `body` runs. Listener
-    * events arrive in order, so once a sentinel job started after `body`
-    * is seen, every job of `body` has been counted.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    val sentinelGroup = s"$group-sentinel"
-    val jobs = new AtomicInteger(0)
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case `sentinelGroup` => sentinel.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinelGroup, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never seen")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("the job counter sees jobs: one count() is at least one job") {
     assert(jobsOf(spark.range(10).count()) >= 1)

@@ -91,6 +91,22 @@ class MergeIntoSpec extends SparkSpec {
     assert(VersionedTable.latestVersion(spark, t) == v1 + 1)
   }
 
+  test("ON's equi keys stats-prune the planned scan whether ON is an expr " +
+      "string or built from Column operators") {
+    val t = tmpTable("equiprune")
+    // three files with disjoint id ranges
+    VersionedTable.create(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "v", "amt"), t)
+    VersionedTable.append(Seq((11L, "x", 1.0), (12L, "y", 2.0)).toDF("id", "v", "amt"), t)
+    VersionedTable.append(Seq((21L, "p", 1.0), (22L, "q", 2.0)).toDF("id", "v", "amt"), t)
+    val src = Seq((1L, "a", 1.0)).toDF("id", "v", "amt")
+    for (on <- Seq(expr("t.id = s.id"),
+        col("t.id") === col("s.id") && col("t.v") === col("s.v"))) {
+      val r = VersionedTable.mergeInto(spark, t, src, on, "t", "s")
+        .whenMatchedUpdate(Map("amt" -> expr("s.amt + 1.0"))).execute()
+      assert(r.targetFilesScanned == 1, s"ON $on planned ${r.targetFilesScanned} of 3 files")
+    }
+  }
+
   test("a target row MODIFIED by multiple source rows fails NAMED; " +
       "fan-out no clause claims is legal (row survives once); insert-only " +
       "merges tolerate fan-out") {

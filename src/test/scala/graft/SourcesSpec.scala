@@ -24,7 +24,7 @@ class SourcesSpec extends SparkSpec {
 
   test("orc round-trips and pushes filters to the scan") {
     val dir = tmp("orc")
-    Sinks.orc((1L to 100L).map(i => (i, i * 2.0)).toDF("id", "v"), s"$dir/t")
+    (1L to 100L).map(i => (i, i * 2.0)).toDF("id", "v").write.orc(s"$dir/t")
     val back = Sources.orc(spark, s"$dir/t").filter(col("id") > 90)
     assert(back.count() == 10)
     val plan = back.queryExecution.executedPlan.toString

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sql.{SqlFunctions, SqlOps}
+import graft.sql.{SqlFunctions, TableFunctions}
 import graft.text.{TextFunctions => TF}
 
 /** The SQL surface must be indistinguishable from the Column API: every
@@ -11,6 +12,7 @@ import graft.text.{TextFunctions => TF}
   * expressions — any mismatch is a spelling divergence, not noise).
   */
 class SqlSurfaceSpec extends SparkSpec {
+  import SqlSurfaceSpec.Row
 
   private lazy val registered: Unit = {
     SqlFunctions.register(spark)
@@ -114,24 +116,6 @@ class SqlSurfaceSpec extends SparkSpec {
       "SQL surt surface diverges from the Column API")
   }
 
-  test("SqlOps.linkGraphSql == q105's link-graph plan (rows)") {
-    registered
-    import org.apache.spark.sql.functions.col
-    // the q105 synthesis, registered as a plain (id, html, base) view —
-    // the twin must reproduce extraction, resolution, canonicalization,
-    // and the edge rollup from SQL alone
-    graft.Tables.documents(spark, sfDir)
-      .withColumn("base_url", graft.queries.TextQueries.syntheticBaseUrl)
-      .withColumn("html", graft.queries.TextQueries.syntheticLinkHtml)
-      .select("doc_id", "html", "base_url")
-      .createOrReplaceTempView("linkgraph_docs")
-    val viaSql = spark.sql(graft.sql.SqlOps.linkGraphSql(
-      "linkgraph_docs", "doc_id", "html", "base_url"))
-    val q105 = SparkEntry.queries("q105_link_graph")(spark, sfDir)
-    assert(viaSql.exceptAll(q105).isEmpty && q105.exceptAll(viaSql).isEmpty,
-      "SQL link-graph twin diverges from the Column plan")
-  }
-
   test("graft_quality == q24's quality_score column") {
     registered
     val viaSql = spark.sql(
@@ -188,451 +172,6 @@ class SqlSurfaceSpec extends SparkSpec {
       "SQL winnow spelling diverges from the Column API")
   }
 
-  // ---- relational ops: the SQL spelling must equal the Column API ----
-
-  /** Optimized plan with expression ids (#123) and per-run scan identities
-    * stripped — "same plan" for two reads of the same parquet path.
-    */
-  private def normPlan(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.optimizedPlan.treeString
-      .replaceAll("#\\d+L?", "#x")
-      .replaceAll("\\[file:[^\\]]*\\]", "[path]")
-
-  private def assertSame(
-      viaSql: org.apache.spark.sql.DataFrame,
-      viaCol: org.apache.spark.sql.DataFrame,
-      what: String,
-      samePlan: Boolean = true): Unit = {
-    if (samePlan)
-      assert(normPlan(viaSql) == normPlan(viaCol),
-        s"$what: SQL plan diverges from Column plan\nSQL:\n${normPlan(viaSql)}\nCol:\n${normPlan(viaCol)}")
-    assert(viaSql.exceptAll(viaCol).isEmpty && viaCol.exceptAll(viaSql).isEmpty,
-      s"$what: SQL rows diverge from Column rows")
-  }
-
-  test("SqlOps.dedupLatestSql == Dedup.latestPerKey (rows AND plan)") {
-    registered
-    val viaSql = spark.sql(SqlOps.dedupLatestSql(
-      "events", Seq("user_id"), "ts DESC, event_id DESC"))
-    val viaCol = graft.ops.Dedup.latestPerKey(
-      Tables.events(spark, sfDir), Seq("user_id"),
-      Seq(col("ts").desc, col("event_id").desc))
-    assertSame(viaSql, viaCol, "dedup-latest")
-  }
-
-  private val sqlRules = Seq(
-    SqlOps.SqlRule("null_custkey", "o_custkey IS NULL"),
-    SqlOps.SqlRule("bad_price", "o_totalprice IS NULL OR o_totalprice <= 0"),
-    SqlOps.SqlRule("bad_status", "o_orderstatus NOT IN ('O','F','P')"))
-  private val colRules = Seq(
-    graft.ops.Quality.Rule("null_custkey", col("o_custkey").isNull),
-    graft.ops.Quality.Rule("bad_price", col("o_totalprice").isNull || col("o_totalprice") <= 0),
-    graft.ops.Quality.Rule("bad_status", !col("o_orderstatus").isin("O", "F", "P")))
-
-  test("SqlOps.quarantineSql == Quality.quarantine (rows AND plan)") {
-    registered
-    val viaSql = spark.sql(SqlOps.quarantineSql("orders", sqlRules))
-    val viaCol = graft.ops.Quality.quarantine(Tables.orders(spark, sfDir), colRules)
-    assertSame(viaSql, viaCol, "quarantine")
-  }
-
-  test("SqlOps.quarantineSplitSql == Quality.split (both sides)") {
-    registered
-    val (clean, bad) = graft.ops.Quality.split(Tables.orders(spark, sfDir), colRules)
-    assertSame(spark.sql(SqlOps.quarantineSplitSql("orders", sqlRules, quarantined = false)),
-      clean, "quarantine split (clean)")
-    assertSame(spark.sql(SqlOps.quarantineSplitSql("orders", sqlRules, quarantined = true)),
-      bad, "quarantine split (quarantined)")
-  }
-
-  test("SqlOps.scd2MergeSql == Scd2.merge (rows; one-statement upsert)") {
-    registered
-    val base = Tables.customer(spark, sfDir)
-      .select(col("c_custkey"), round(col("c_acctbal"), 2).as("acctbal"),
-        col("c_mktsegment").as("segment"))
-    val existing = base
-      .withColumn("valid_from", lit("2020-01-01").cast("timestamp"))
-      .withColumn("valid_to", lit(null).cast("timestamp"))
-      .withColumn("is_current", lit(true))
-    val staged = base.filter(col("c_custkey") % 10 === 0)
-        .withColumn("acctbal", round(col("acctbal") + 100, 2))
-      .unionByName(base.filter(col("c_custkey") % 10 === 1))
-    existing.createOrReplaceTempView("scd2_existing")
-    staged.createOrReplaceTempView("scd2_staged")
-
-    val outCols = Seq("c_custkey", "acctbal", "segment", "valid_from", "valid_to", "is_current")
-    val viaSql = spark.sql(SqlOps.scd2MergeSql(
-      "scd2_existing", "scd2_staged", Seq("c_custkey"), Seq("acctbal", "segment"),
-      "'2024-01-01'"))
-    val viaCol = graft.ops.Scd2.merge(existing, staged, Seq("c_custkey"),
-        Seq("acctbal", "segment"), lit("2024-01-01").cast("timestamp"))
-      .select(outCols.map(col): _*)
-    // The insert branches detect "no current row" differently (key-null vs a
-    // lit(true) marker), so plans agree in shape but not expression-for-
-    // expression — rows are the contract here.
-    assertSame(viaSql, viaCol, "scd2 merge", samePlan = false)
-    // Same heavy operators (joins/unions/aggregates/windows) — Project/
-    // Filter counts may differ by trivia like the output reorder select.
-    val heavy = Set("Join", "Union", "Aggregate", "Window")
-    val shape = (df: org.apache.spark.sql.DataFrame) =>
-      df.queryExecution.optimizedPlan.collect {
-        case n if heavy(n.nodeName) => n.nodeName
-      }.sorted
-    assert(shape(viaSql) == shape(viaCol),
-      s"scd2 merge: plan shapes diverge\nSQL: ${shape(viaSql)}\nCol: ${shape(viaCol)}")
-  }
-
-  test("SqlOps.decontaminateSql == Decontaminate.hits (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.decontaminateSql(
-      "documents", "doc_id", "text", "source = 'src0'", 8))
-    val viaCol = graft.text.Decontaminate.hits(
-      Tables.documents(spark, sfDir), "doc_id", "text",
-      col("source") === "src0", 8)
-    assertSame(viaSql, viaCol, "decontaminate", samePlan = false)
-    // same heavy shape: two aggregates (distinct grams, per-doc agg) + the
-    // broadcast collision join
-    val heavy = Set("Join", "Aggregate")
-    def shape(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.collect {
-        case n if heavy(n.nodeName) => n.nodeName
-      }.sorted
-    assert(shape(viaSql) == shape(viaCol),
-      s"decontaminate plan shapes diverge\nSQL: ${shape(viaSql)}\nCol: ${shape(viaCol)}")
-  }
-
-  test("SqlOps.repetitionSql == q70's repetition columns (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.repetitionSql("documents", "doc_id", "text"))
-    val viaCol = SparkEntry.queries("q70_repetition")(spark, sfDir)
-    assertSame(viaSql, viaCol, "repetition", samePlan = false)
-  }
-
-  test("SqlOps.shardPackSql == ShardPack.assign (rows; SQL is the definitional window)") {
-    registered
-    spark.sql("SELECT doc_id, graft_token_count(text) AS n_tokens FROM documents")
-      .withColumn("n_tokens", col("n_tokens").cast("long"))
-      .createOrReplaceTempView("shard_in")
-    val viaSql = spark.sql(SqlOps.shardPackSql("shard_in", "doc_id", "n_tokens", 512L))
-    val viaCol = graft.ops.ShardPack.assign(
-        spark.table("shard_in"), "doc_id", "n_tokens",
-        budget = 512, bucketSize = 64)
-      .select("doc_id", "n_tokens", "shard_id")
-    assertSame(viaSql, viaCol, "shard pack", samePlan = false)
-  }
-
-  test("SqlOps.sequencePackSql == SequencePack.manifest (rows; SQL is the " +
-      "definitional window)") {
-    registered
-    spark.sql("SELECT doc_id, graft_token_count(text) AS n_tokens FROM documents")
-      .withColumn("n_tokens", col("n_tokens").cast("long"))
-      .createOrReplaceTempView("seq_in")
-    val viaSql = spark.sql(SqlOps.sequencePackSql("seq_in", "doc_id", "n_tokens", 256L))
-    val viaCol = graft.ops.SequencePack.manifest(
-        spark.table("seq_in"), "doc_id", "n_tokens",
-        seqLen = 256, bucketSize = 64)
-      .select("seq_id", "doc_id", "doc_offset", "seq_offset", "len")
-    assertSame(viaSql, viaCol, "sequence pack", samePlan = false)
-  }
-
-  test("SqlOps.corpusShuffleSql == SequencePack.shuffled (rows; same seeded " +
-      "hash, definitional window vs distributed hash-space prefix sum)") {
-    registered
-    spark.sql("SELECT doc_id, graft_token_count(text) AS n_tokens FROM documents")
-      .withColumn("n_tokens", col("n_tokens").cast("long"))
-      .createOrReplaceTempView("shuf_in")
-    val viaSql = spark.sql(SqlOps.corpusShuffleSql(
-      "shuf_in", "doc_id", "n_tokens", 256L, "graft-r17"))
-    val viaCol = graft.ops.SequencePack.shuffled(
-        spark.table("shuf_in"), "doc_id", "n_tokens",
-        seqLen = 256, seed = "graft-r17")
-      .select("seq_id", "doc_id", "doc_offset", "seq_offset", "len")
-    assertSame(viaSql, viaCol, "corpus shuffle", samePlan = false)
-  }
-
-  test("SqlOps.packStatsSql == the q118 rollup (rows)") {
-    registered
-    spark.sql("SELECT doc_id, graft_token_count(text) AS n_tokens FROM documents")
-      .withColumn("n_tokens", col("n_tokens").cast("long"))
-      .createOrReplaceTempView("ps_in")
-    val viaSql = spark.sql(SqlOps.packStatsSql("ps_in", "doc_id", "n_tokens", 256L))
-    val viaCol = graft.ops.SequencePack.manifest(
-        spark.table("ps_in"), "doc_id", "n_tokens", seqLen = 256, bucketSize = 64)
-      .groupBy(col("seq_id"))
-      .agg(count(lit(1)).as("n_docs"), (count(lit(1)) - 1).as("n_boundaries"),
-        max(col("len")).as("max_span"), min(col("len")).as("min_span"),
-        (sum(col("len")) === 256L).as("full"))
-    assertSame(viaSql, viaCol, "pack stats", samePlan = false)
-  }
-
-  test("SqlOps.eosPackSql == fullSequences(assemble(withEos)) — the whole " +
-      "assembly in one statement, empty doc's EOS included (rows)") {
-    registered
-    val TS = graft.sources.TokenShards
-    import spark.implicits._
-    // hand token arrays incl. an EMPTY doc: with the separator it still
-    // contributes its boundary token (weight 1), never drops from the pack
-    val toks = Seq(
-      (0L, Seq(5, 6, 7)), (1L, Seq.empty[Int]), (2L, (0 until 11).toSeq),
-      (3L, Seq(1)), (4L, (20 until 29).toSeq))
-      .toDF("doc_id", "tokens")
-    toks.createOrReplaceTempView("eos_in")
-    val viaSql = spark.sql(SqlOps.eosPackSql("eos_in", "doc_id", "tokens",
-      eosId = 99, seqLen = 8L))
-    val dt = TS.withEos(toks, 99)
-    val manifest = graft.ops.SequencePack.manifest(
-      dt.select(col("doc_id"), col("n_tokens")), "doc_id", "n_tokens",
-      seqLen = 8, bucketSize = 4)
-    val viaCol = TS.fullSequences(TS.assemble(dt, manifest), 8)
-    assertSame(viaSql, viaCol, "eos pack", samePlan = false)
-    // the empty doc's EOS is genuinely in the stream: weights with the
-    // separator are 4+1+12+2+10 = 29 tokens → 3 full sequences whose 24
-    // tokens hold docs 0–3's separators (doc 4's EOS is in the dropped tail)
-    val seqs = viaCol.as[(Long, Seq[Int])].collect().toMap
-    assert(seqs.keySet == Set(0L, 1L, 2L))
-    assert(seqs.values.flatten.count(_ == 99) == 4)
-  }
-
-  test("SqlOps.lineDedupSql == LineDedup.dedupRollup (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.lineDedupSql("documents", "doc_id", "text", " the "))
-    val viaCol = graft.text.LineDedup.dedupRollup(
-      Tables.documents(spark, sfDir), "doc_id", "text", " the ")
-    assertSame(viaSql, viaCol, "line dedup", samePlan = false)
-  }
-
-  test("SqlOps.urlCurateSql == q102's url curation (rows)") {
-    registered
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("n_chars"),
-        graft.queries.TextQueries.syntheticRawUrl.as("raw_url"))
-      .createOrReplaceTempView("docs_urls")
-    val viaSql = spark.sql(SqlOps.urlCurateSql("docs_urls", "doc_id", "raw_url",
-      "n_chars DESC, doc_id", Seq("src3.example.com", "src7.example.com"), 15))
-    val viaCol = SparkEntry.queries("q102_url_curate")(spark, sfDir)
-    assertSame(viaSql, viaCol, "url curate", samePlan = false)
-  }
-
-  test("SqlOps.urlCurateSql: empty blocklist parses (no NOT IN ()); quoted " +
-      "domains don't break the statement") {
-    registered
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("n_chars"),
-        graft.queries.TextQueries.syntheticRawUrl.as("raw_url"))
-      .createOrReplaceTempView("docs_urls_g")
-    // empty blocklist = curate without the domain filter — must parse and run
-    val noBl = spark.sql(SqlOps.urlCurateSql("docs_urls_g", "doc_id", "raw_url",
-      "n_chars DESC, doc_id", Seq.empty, 15))
-    assert(noBl.count() > 0)
-    // a domain containing a single quote must be escaped, not a parse error
-    val quoted = spark.sql(SqlOps.urlCurateSql("docs_urls_g", "doc_id", "raw_url",
-      "n_chars DESC, doc_id", Seq("o'brien.example.com"), 15))
-    assert(quoted.count() == noBl.count(), "non-matching blocklist filters nothing")
-  }
-
-  test("SqlOps.langidScoreSql == q104's scoring face (rows)") {
-    registered
-    val classes = Tables.documents(spark, sfDir)
-      .select(col("lang").cast("string")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    val viaSql = spark.sql(SqlOps.langidScoreSql("documents", "doc_id", "text",
-      classes, dim = 1024))
-    val viaCol = SparkEntry.queries("q104_langid_learned")(spark, sfDir)
-    assertSame(viaSql, viaCol, "langid score", samePlan = false)
-  }
-
-  test("SqlOps.mixtureSampleSql == q81's mixture balancing (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.mixtureSampleSql("documents", "doc_id", "lang"))
-      .select("doc_id", "lang")
-    val viaCol = SparkEntry.queries("q81_mixture_sample")(spark, sfDir)
-    assertSame(viaSql, viaCol, "mixture sample", samePlan = false)
-  }
-
-  test("SqlOps.gapFillSql == GapFill.dense (rows)") {
-    registered
-    Tables.events(spark, sfDir)
-      .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-      .agg(round(sum(col("value")), 2).as("v"))
-      .createOrReplaceTempView("gapfill_daily")
-    val viaSql = spark.sql(SqlOps.gapFillSql("gapfill_daily", "user_id", "day", "v"))
-    val viaCol = graft.ops.GapFill.dense(
-      spark.table("gapfill_daily"), "user_id", "day", "v")
-    assertSame(viaSql, viaCol, "gap fill", samePlan = false)
-  }
-
-  test("SqlOps.copurchaseTopNSql == Baskets.copurchaseTopN (rows, incl. truncation)") {
-    registered
-    val items = Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_partkey"))
-    items.createOrReplaceTempView("copurchase_items")
-    // maxBasket=5 forces real truncation at test SF, so the spelling's
-    // keep-smallest slice is exercised, not just the happy path.
-    val viaSql = spark.sql(SqlOps.copurchaseTopNSql(
-      "copurchase_items", "l_orderkey", "l_partkey", topN = 50, maxBasket = 5))
-    val viaCol = graft.ops.Baskets.copurchaseTopN(
-      items, "l_orderkey", "l_partkey", topN = 50, maxBasket = 5)
-    // Top-N ties beyond the tiebreak columns can't exist (full tiebreak),
-    // so rows are deterministic on both sides.
-    assertSame(viaSql, viaCol, "copurchase top-N", samePlan = false)
-    // the SQL spelling must keep the TakeOrderedAndProject shape
-    val phys = viaSql.queryExecution.executedPlan.toString
-    assert(phys.contains("TakeOrderedAndProject"),
-      s"SQL top-N lost the per-partition top-N shape:\n${phys.take(1500)}")
-  }
-
-  test("SqlOps.sourceOverlapSql == TextQueries.sourceOverlap (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.sourceOverlapSql("documents", "source", "text", 8))
-    val viaCol = graft.queries.TextQueries.sourceOverlap(
-      Tables.documents(spark, sfDir))
-    assertSame(viaSql, viaCol, "source overlap", samePlan = false)
-  }
-
-  test("SqlOps.qualityCutoffSql == q84 (rows); boilerplateGramsSql == q85 (rows)") {
-    registered
-    val viaSql84 = spark.sql(SqlOps.qualityCutoffSql("documents", "doc_id", "source", "text"))
-    val viaCol84 = SparkEntry.queries("q84_quality_cutoff")(spark, sfDir)
-    assertSame(viaSql84, viaCol84, "quality cutoff", samePlan = false)
-    val viaSql85 = spark.sql(SqlOps.boilerplateGramsSql("documents", "doc_id", "text"))
-    val viaCol85 = SparkEntry.queries("q85_boilerplate_grams")(spark, sfDir)
-    assertSame(viaSql85, viaCol85, "boilerplate grams", samePlan = false)
-  }
-
-  test("SqlOps.semDedupSql == Ann.semDedup (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.semDedupSql("embeddings", "vec_id", "embedding"))
-    val v = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id").as("id"), graft.sim.Ann.toDouble(col("embedding")).as("vec"))
-    val viaCol = graft.sim.Ann
-      .semDedup(v, graft.sim.Ann.hyperplaneBuckets(v, 8), 0.35)
-      .select(col("id").as("vec_id"), col("bucket"), col("dropped_by"), col("n_coverers"))
-    assertSame(viaSql, viaCol, "semdedup", samePlan = false)
-  }
-
-  test("SqlOps.minhashCandidatesSql == MinHash.candidates at every cap setting") {
-    registered
-    import graft.text.MinHash
-    val docs = Tables.documents(spark, sfDir)
-    def colSide(k: Int, r: Int, cap: Option[Int]) = {
-      val sh = MinHash.withShingles(docs, "doc_id", "text")
-      val sig = MinHash.signature(MinHash.shingleRows(sh, "doc_id"), "doc_id", k)
-      MinHash.candidates(MinHash.bands(sig, "doc_id", k, r), "doc_id", cap)
-    }
-    // default cap, an override that actually prunes, and the None opt-out
-    for (cap <- Seq(Some(MinHash.BucketCap), Some(2), None)) {
-      val viaSql = spark.sql(SqlOps.minhashCandidatesSql(
-        "documents", "doc_id", "text", k = 4, bandRows = 2, maxBucket = cap))
-      assertSame(viaSql, colSide(4, 2, cap), s"minhash candidates cap=$cap",
-        samePlan = false)
-    }
-    // the cap=2 override must genuinely prune relative to exhaustive
-    val n2 = spark.sql(SqlOps.minhashCandidatesSql(
-      "documents", "doc_id", "text", k = 4, bandRows = 2, maxBucket = Some(2))).count()
-    val nAll = spark.sql(SqlOps.minhashCandidatesSql(
-      "documents", "doc_id", "text", k = 4, bandRows = 2, maxBucket = None)).count()
-    assert(n2 < nAll, s"cap=2 should prune: $n2 vs $nAll")
-  }
-
-  test("SqlOps.minhashOverCapPairsSql == MinHash.overCapPairs; star flag == keepSet union") {
-    registered
-    import spark.implicits._
-    import graft.text.MinHash
-    // a 12-doc verbatim clique saturates its buckets at cap=5
-    val clique = (1L to 12L).map(i => (i, "hot boilerplate text repeated verbatim here"))
-    val docs = (clique :+ (100L, "rare unrelated document about other things"))
-      .toDF("doc_id", "text")
-    docs.createOrReplaceTempView("overcap_docs")
-    val bands = {
-      val sh = MinHash.withShingles(docs, "doc_id", "text")
-      val sig = MinHash.signature(MinHash.shingleRows(sh, "doc_id"), "doc_id", 4)
-      MinHash.bands(sig, "doc_id", 4, 2)
-    }
-    val viaSql = spark.sql(SqlOps.minhashOverCapPairsSql(
-      "overcap_docs", "doc_id", "text", k = 4, bandRows = 2, cap = 5))
-    val viaCol = MinHash.overCapPairs(bands, "doc_id", cap = 5)
-    assertSame(viaSql, viaCol, "over-cap star pairs", samePlan = false)
-    assert(viaSql.count() == 11L, "one star per non-representative clique member")
-    // includeOverCapStars: the candidate stream grows by exactly the stars
-    val withStars = spark.sql(SqlOps.minhashCandidatesSql(
-      "overcap_docs", "doc_id", "text", k = 4, bandRows = 2,
-      maxBucket = Some(5), includeOverCapStars = true))
-    val viaColUnion = MinHash.candidates(bands, "doc_id", Some(5))
-      .unionByName(MinHash.overCapPairs(bands, "doc_id", 5)).distinct()
-    assertSame(withStars, viaColUnion, "candidates + stars", samePlan = false)
-    // an uncapped run has no over-cap buckets to star — misuse fails fast
-    intercept[IllegalArgumentException] {
-      SqlOps.minhashCandidatesSql("overcap_docs", "doc_id", "text",
-        maxBucket = None, includeOverCapStars = true)
-    }
-  }
-
-  test("SqlOps.noveltySql == SpanDedup.novelty (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.noveltySql("documents", "doc_id", "text", 8))
-    val viaCol = graft.text.SpanDedup.novelty(
-      Tables.documents(spark, sfDir), "doc_id", "text", 8)
-    assertSame(viaSql, viaCol, "novelty", samePlan = false)
-  }
-
-  test("SqlOps.spanTrimSql == SpanDedup.trim (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.spanTrimSql("documents", "doc_id", "text", 8))
-    val viaCol = graft.text.SpanDedup.trim(
-      Tables.documents(spark, sfDir), "doc_id", "text", 8)
-    assertSame(viaSql, viaCol, "span trim", samePlan = false)
-  }
-
-  test("SqlOps.htmlExtractSql == HtmlExtract.mainText (rows)") {
-    registered
-    import spark.implicits._
-    val html = Seq(
-      (1L, "<div class=\"nav\"><a href=\"/\">Home</a> <a href=\"/a\">About</a></div>" +
-        "<p>A long enough paragraph of real prose to keep here.</p>" +
-        "<script>var hidden = true;</script>" +
-        "<p>Another paragraph with an inline <a href=\"x\">link</a> in it, also kept.</p>"),
-      (2L, ""),
-      (3L, "<div><a href=\"/x\">only links</a></div>"))
-      .toDF("doc_id", "html")
-    html.createOrReplaceTempView("html_docs")
-    val viaSql = spark.sql(SqlOps.htmlExtractSql("html_docs", "doc_id", "html"))
-    val viaCol = graft.text.HtmlExtract.mainText(html, "doc_id", "html")
-    assertSame(viaSql, viaCol, "html extract", samePlan = false)
-  }
-
-  test("SqlOps.contaminationTrimSql == Decontaminate.trim (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.contaminationTrimSql(
-      "documents", "doc_id", "text", "source = 'src0'", 8))
-    val viaCol = graft.text.Decontaminate.trim(
-      Tables.documents(spark, sfDir), "doc_id", "text", col("source") === "src0", 8)
-    assertSame(viaSql, viaCol, "contamination trim", samePlan = false)
-  }
-
-  test("SqlOps.temperatureSampleSql == q98's Column spelling (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.temperatureSampleSql("documents", "doc_id", "lang"))
-    val viaCol = SparkEntry.queries("q98_temperature_sample")(spark, sfDir)
-    assertSame(viaSql, viaCol, "temperature sample", samePlan = false)
-  }
-
-  test("SqlOps.bpeEncodeSql == q92's Column spelling (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.bpeEncodeSql(
-      "documents", "doc_id", "text", graft.text.Bpe.FixedMerges))
-    val viaCol = SparkEntry.queries("q92_bpe_encode")(spark, sfDir)
-    assertSame(viaSql, viaCol, "bpe encode", samePlan = false)
-  }
-
-  test("SqlOps.qualityClassifierSql == q100's Column spelling (rows, exact doubles)") {
-    registered
-    val viaSql = spark.sql(SqlOps.qualityClassifierSql("documents", "doc_id", "text"))
-    val viaCol = SparkEntry.queries("q100_quality_classifier")(spark, sfDir)
-    // exact equality is the point: the dyadic weight table makes both
-    // plans' double sums bit-identical whatever the aggregation order
-    assertSame(viaSql, viaCol, "quality classifier", samePlan = false)
-  }
-
   test("graft_bpe_byte_encode is SQL-reachable and round-trips through decodeBytes") {
     registered
     val enc = spark.sql(
@@ -641,137 +180,430 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(graft.text.Bpe.decodeBytes(enc) == "héllo🚀")
   }
 
-  test("SqlOps.pageRankSql == Graph.pageRank (rows at round-8 precision)") {
-    registered
-    val edges = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(spark, sfDir).select(col("l_orderkey"), col("l_partkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_partkey") + lit(1000000000L)).as("dst"))
-    edges.createOrReplaceTempView("pagerank_edges")
-    // round(8): the per-dst float sums may associate differently between
-    // the two plans — the same precision the q75 oracle is adjudicated at.
-    val viaSql = spark.sql(SqlOps.pageRankSql("pagerank_edges", "src", "dst", iters = 5))
-      .select(col("node"), round(col("rank"), 8).as("rank"))
-    val viaCol = graft.ops.Graph.pageRank(edges, "src", "dst", iters = 5)
-      .select(col("node"), round(col("rank"), 8).as("rank"))
-    assertSame(viaSql, viaCol, "pagerank", samePlan = false)
-    // rank mass is conserved up to rounding (sinks absorb — same default)
-    val mass = viaSql.agg(sum(col("rank"))).head().getDouble(0)
-    assert(mass > 0.0 && mass <= 1.0 + 1e-6, s"rank mass $mass")
+  // ---- operators: every graft_* table function == its library operator ----
+
+  private def t(s: SparkSession, n: String): DataFrame = s.table(n)
+  private def query(n: String): SparkSession => DataFrame =
+    s => SparkEntry.queries(n)(s, sfDir)
+  private val src0 = "source = ''src0''"
+  private val rulesSql =
+    """map('null_custkey', 'o_custkey IS NULL',
+      |    'bad_price', 'o_totalprice IS NULL OR o_totalprice <= 0',
+      |    'bad_status', 'o_orderstatus NOT IN (''O'',''F'',''P'')')""".stripMargin
+  private val colRules = Seq(
+    graft.ops.Quality.Rule("null_custkey", col("o_custkey").isNull),
+    graft.ops.Quality.Rule("bad_price", col("o_totalprice").isNull || col("o_totalprice") <= 0),
+    graft.ops.Quality.Rule("bad_status", !col("o_orderstatus").isin("O", "F", "P")))
+  private val packIn = "CREATE OR REPLACE TEMP VIEW pack_in AS SELECT doc_id, " +
+    "CAST(graft_token_count(text) AS BIGINT) AS n_tokens FROM documents"
+  private val docsUrls =
+    """CREATE OR REPLACE TEMP VIEW docs_urls AS SELECT doc_id, n_chars, concat('HTTPS://',
+      |  CASE WHEN doc_id % 2 = 0 THEN concat('WWW.', upper(source)) ELSE source END,
+      |  '.Example.COM', CASE WHEN doc_id % 3 = 0 THEN ':443' ELSE '' END,
+      |  '/', lang, '/doc/', CAST(doc_id AS STRING),
+      |  CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END,
+      |  CASE WHEN doc_id % 4 = 0 THEN concat('?utm_source=feed&id=', CAST(doc_id AS STRING))
+      |       WHEN doc_id % 4 = 1 THEN concat('?id=', CAST(doc_id AS STRING), '&utm_campaign=x')
+      |       ELSE '' END,
+      |  CASE WHEN doc_id % 7 = 0 THEN '#frag' ELSE '' END) AS raw_url
+      |FROM documents""".stripMargin
+  private def curate(s: SparkSession, blocklist: Seq[String]) =
+    graft.text.Urls.curate(t(s, "docs_urls"), "doc_id", "raw_url",
+      Seq(col("n_chars").desc, col("doc_id").asc), blocklist, 15)
+  private lazy val langs: Seq[String] = Tables.documents(spark, sfDir)
+    .select(col("lang").cast("string")).distinct().collect().map(_.getString(0)).sorted.toSeq
+  private def sqlArray(xs: Seq[String]) = xs.map(x => s"'$x'").mkString("array(", ", ", ")")
+  private def minhashBands(docs: DataFrame) = {
+    import graft.text.MinHash
+    val sh = MinHash.withShingles(docs, "doc_id", "text")
+    MinHash.bands(MinHash.signature(MinHash.shingleRows(sh, "doc_id"), "doc_id", 4), "doc_id", 4, 2)
+  }
+  private def report(view: String, opts: String) =
+    s"SELECT * FROM graft_corpus_report('$view', 'doc_id', 'text'$opts)"
+
+  private lazy val rows: Seq[Row] = Seq(
+    Row("SqlOps.dedupLatestSql == Dedup.latestPerKey (rows AND plan)", Nil, Seq(
+      "SELECT * FROM graft_dedup_latest('events', 'user_id', 'ts DESC, event_id DESC')" ->
+        ((s: SparkSession) => graft.ops.Dedup.latestPerKey(t(s, "events"), Seq("user_id"),
+          Seq(col("ts").desc, col("event_id").desc))))),
+    Row("SqlOps.quarantineSql == Quality.quarantine (rows AND plan)", Nil, Seq(
+      s"SELECT * FROM graft_quarantine('orders', $rulesSql)" ->
+        ((s: SparkSession) => graft.ops.Quality.quarantine(t(s, "orders"), colRules)))),
+    Row("SqlOps.quarantineSplitSql == Quality.split (both sides)", Nil, Seq(
+      s"SELECT * FROM graft_quarantine('orders', $rulesSql) WHERE NOT is_quarantined" ->
+        ((s: SparkSession) => graft.ops.Quality.split(t(s, "orders"), colRules)._1),
+      s"SELECT * FROM graft_quarantine(TABLE(orders), $rulesSql) WHERE is_quarantined" ->
+        ((s: SparkSession) => graft.ops.Quality.split(t(s, "orders"), colRules)._2))),
+    Row("SqlOps.scd2MergeSql == Scd2.merge (rows; one-statement upsert)", Seq(
+      """CREATE OR REPLACE TEMP VIEW scd2_base AS SELECT c_custkey,
+        |  round(c_acctbal, 2) AS acctbal, c_mktsegment AS segment FROM customer""".stripMargin,
+      """CREATE OR REPLACE TEMP VIEW scd2_existing AS SELECT *,
+        |  TIMESTAMP'2020-01-01 00:00:00' AS valid_from, CAST(NULL AS TIMESTAMP) AS valid_to,
+        |  true AS is_current FROM scd2_base""".stripMargin,
+      """CREATE OR REPLACE TEMP VIEW scd2_staged AS
+        |SELECT c_custkey, round(acctbal + 100, 2) AS acctbal, segment FROM scd2_base
+        |WHERE c_custkey % 10 = 0
+        |UNION ALL SELECT * FROM scd2_base WHERE c_custkey % 10 = 1""".stripMargin), Seq(
+      """SELECT * FROM graft_scd2_merge('scd2_existing', 'scd2_staged', 'c_custkey',
+        |  'acctbal, segment', TIMESTAMP'2024-01-01 00:00:00')""".stripMargin ->
+        ((s: SparkSession) => graft.ops.Scd2.merge(t(s, "scd2_existing"), t(s, "scd2_staged"),
+          Seq("c_custkey"), Seq("acctbal", "segment"), lit("2024-01-01").cast("timestamp"))))),
+    Row("SqlOps.decontaminateSql == Decontaminate.hits (rows)", Nil, Seq(
+      s"SELECT * FROM graft_decontaminate('documents', 'doc_id', 'text', '$src0', 8)" ->
+        ((s: SparkSession) => graft.text.Decontaminate.hits(t(s, "documents"), "doc_id", "text",
+          col("source") === "src0", 8)))),
+    Row("SqlOps.repetitionSql == q70's repetition columns (rows)", Nil, Seq(
+      "SELECT * FROM graft_repetition('documents', 'doc_id', 'text')" ->
+        query("q70_repetition"))),
+    Row("SqlOps.shardPackSql == ShardPack.assign (rows; SQL is the definitional window)",
+      Seq(packIn), Seq(
+      "SELECT * FROM graft_shard_pack('pack_in', 'doc_id', 'n_tokens', 512)" ->
+        ((s: SparkSession) => graft.ops.ShardPack.assign(t(s, "pack_in"), "doc_id", "n_tokens",
+          budget = 512)))),
+    Row("SqlOps.sequencePackSql == SequencePack.manifest (rows; SQL is the " +
+        "definitional window)", Seq(packIn), Seq(
+      "SELECT * FROM graft_sequence_pack('pack_in', 'doc_id', 'n_tokens', 256)" ->
+        ((s: SparkSession) => graft.ops.SequencePack.manifest(t(s, "pack_in"), "doc_id", "n_tokens",
+          seqLen = 256)))),
+    Row("SqlOps.corpusShuffleSql == SequencePack.shuffled (rows; same seeded " +
+        "hash, definitional window vs distributed hash-space prefix sum)", Seq(packIn), Seq(
+      "SELECT * FROM graft_corpus_shuffle('pack_in', 'doc_id', 'n_tokens', 256, 'graft-r17')" ->
+        ((s: SparkSession) => graft.ops.SequencePack.shuffled(t(s, "pack_in"), "doc_id", "n_tokens",
+          seqLen = 256, seed = "graft-r17")))),
+    Row("SqlOps.packStatsSql == the q118 rollup (rows)", Nil, Seq(
+      """SELECT * FROM graft_pack_stats(TABLE(SELECT doc_id,
+        |  CAST(size(graft_tokens(text)) AS BIGINT) AS n_tokens FROM documents),
+        |  'doc_id', 'n_tokens', 256)""".stripMargin -> query("q118_pack_stats"))),
+    Row("SqlOps.eosPackSql == fullSequences(assemble(withEos)) — the whole " +
+        "assembly in one statement, empty doc's EOS included (rows)", Seq(
+      """CREATE OR REPLACE TEMP VIEW eos_in AS SELECT * FROM VALUES
+        |  (0L, array(5, 6, 7)), (1L, CAST(array() AS ARRAY<INT>)), (2L, sequence(0, 10)),
+        |  (3L, array(1)), (4L, sequence(20, 28)) AS v(doc_id, tokens)""".stripMargin), Seq(
+      "SELECT * FROM graft_eos_pack('eos_in', 'doc_id', 99, 8)" ->
+        ((s: SparkSession) => graft.sources.TokenShards.packFull(
+          graft.sources.TokenShards.withEos(t(s, "eos_in"), 99), 8))),
+      check = { (s, got) =>
+        // the empty doc's EOS is genuinely in the stream: weights with the
+        // separator are 4+1+12+2+10 = 29 tokens → 3 full sequences whose 24
+        // tokens hold docs 0–3's separators (doc 4's EOS is in the dropped tail)
+        val seqs = got.head.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+        assert(seqs.keySet == Set(0L, 1L, 2L))
+        assert(seqs.values.flatten.count(_ == 99) == 4)
+      }),
+    Row("SqlOps.lineDedupSql == LineDedup.dedupRollup (rows)", Nil, Seq(
+      "SELECT * FROM graft_line_dedup('documents', 'doc_id', 'text', ' the ')" ->
+        query("q82_line_dedup"))),
+    Row("SqlOps.urlCurateSql == q102's url curation (rows)", Seq(docsUrls), Seq(
+      """SELECT * FROM graft_url_curate('docs_urls', 'doc_id', 'raw_url', 'n_chars DESC, doc_id',
+        |  array('src3.example.com', 'src7.example.com'), 15)""".stripMargin ->
+        query("q102_url_curate"))),
+    Row("SqlOps.urlCurateSql: empty blocklist parses (no NOT IN ()); quoted " +
+        "domains don't break the statement", Seq(docsUrls), Seq(
+      """SELECT * FROM graft_url_curate('docs_urls', 'doc_id', 'raw_url', 'n_chars DESC, doc_id',
+        |  array(), 15)""".stripMargin -> ((s: SparkSession) => curate(s, Nil)),
+      """SELECT * FROM graft_url_curate('docs_urls', 'doc_id', 'raw_url', 'n_chars DESC, doc_id',
+        |  array('o''brien.example.com'), 15)""".stripMargin ->
+        ((s: SparkSession) => curate(s, Seq("o'brien.example.com")))),
+      check = { (_, got) =>
+        assert(got.head.count() > 0)
+        assert(got(1).count() == got.head.count(), "a non-matching blocklist filters nothing")
+      }),
+    Row("SqlOps.langidScoreSql == q104's scoring face (rows)", Nil, Seq(
+      s"SELECT * FROM graft_langid_score('documents', 'doc_id', 'text', ${sqlArray(langs)}, 1024)" ->
+        query("q104_langid_learned"))),
+    Row("SqlOps.mixtureSampleSql == q81's mixture balancing (rows)", Nil, Seq(
+      "SELECT doc_id, lang FROM graft_mixture_sample('documents', 'doc_id', 'lang')" ->
+        query("q81_mixture_sample"))),
+    Row("SqlOps.temperatureSampleSql == q98's Column spelling (rows)", Nil, Seq(
+      "SELECT doc_id, lang FROM graft_mixture_sample('documents', 'doc_id', 'lang', 2)" ->
+        query("q98_temperature_sample"))),
+    Row("SqlOps.gapFillSql == GapFill.dense (rows)", Seq(
+      """CREATE OR REPLACE TEMP VIEW gapfill_daily AS SELECT user_id, to_date(ts) AS day,
+        |  round(sum(value), 2) AS v FROM events GROUP BY user_id, to_date(ts)""".stripMargin), Seq(
+      "SELECT * FROM graft_gap_fill('gapfill_daily', 'user_id', 'day', 'v')" ->
+        ((s: SparkSession) => graft.ops.GapFill.dense(t(s, "gapfill_daily"), "user_id", "day", "v")))),
+    Row("SqlOps.copurchaseTopNSql == Baskets.copurchaseTopN (rows, incl. truncation)", Seq(
+      "CREATE OR REPLACE TEMP VIEW copurchase_items AS SELECT l_orderkey, l_partkey FROM lineitem"),
+      // maxBasket=5 forces real truncation at test SF
+      Seq("""SELECT * FROM graft_copurchase_top_n('copurchase_items', 'l_orderkey',
+            |  'l_partkey', 50, 5)""".stripMargin ->
+        ((s: SparkSession) => graft.ops.Baskets.copurchaseTopN(t(s, "copurchase_items"), "l_orderkey",
+          "l_partkey", topN = 50, maxBasket = 5))),
+      check = { (_, got) =>
+        val phys = got.head.queryExecution.executedPlan.toString
+        assert(phys.contains("TakeOrderedAndProject"),
+          s"top-N lost the per-partition top-N shape:\n${phys.take(1500)}")
+      }),
+    Row("SqlOps.sourceOverlapSql == TextQueries.sourceOverlap (rows)", Nil, Seq(
+      "SELECT * FROM graft_source_overlap('documents')" -> query("q83_source_overlap"))),
+    Row("SqlOps.qualityCutoffSql == q84 (rows); boilerplateGramsSql == q85 (rows)", Nil, Seq(
+      "SELECT * FROM graft_quality_cutoff('documents')" -> query("q84_quality_cutoff"),
+      "SELECT * FROM graft_boilerplate_grams('documents', 'doc_id', 'text')" ->
+        query("q85_boilerplate_grams"))),
+    Row("SqlOps.semDedupSql == Ann.semDedup (rows)", Nil, Seq(
+      "SELECT * FROM graft_semdedup('embeddings', 'vec_id', 'embedding')" ->
+        query("q86_semdedup"))),
+    Row("SqlOps.minhashCandidatesSql == MinHash.candidates at every cap setting", Nil,
+      // the default cap, an override that prunes, and the NULL opt-out
+      Seq(
+        "SELECT * FROM graft_minhash_candidates('documents', 'doc_id', 'text', 4, 2)" ->
+          ((s: SparkSession) => graft.text.MinHash.candidates(minhashBands(t(s, "documents")), "doc_id",
+            Some(graft.text.MinHash.BucketCap))),
+        "SELECT * FROM graft_minhash_candidates('documents', 'doc_id', 'text', 4, 2, 2)" ->
+          ((s: SparkSession) => graft.text.MinHash.candidates(minhashBands(t(s, "documents")), "doc_id", Some(2))),
+        "SELECT * FROM graft_minhash_candidates('documents', 'doc_id', 'text', 4, 2, NULL)" ->
+          ((s: SparkSession) => graft.text.MinHash.candidates(minhashBands(t(s, "documents")), "doc_id", None))),
+      check = { (_, got) =>
+        val (n2, nAll) = (got(1).count(), got(2).count())
+        assert(n2 < nAll, s"cap=2 should prune: $n2 vs $nAll")
+      }),
+    Row("SqlOps.minhashOverCapPairsSql == MinHash.overCapPairs; star flag == keepSet union",
+      Seq( // a 12-doc verbatim clique saturates its buckets at cap=5
+        """CREATE OR REPLACE TEMP VIEW overcap_docs AS
+          |SELECT id AS doc_id, 'hot boilerplate text repeated verbatim here' AS text FROM range(1, 13)
+          |UNION ALL SELECT 100L, 'rare unrelated document about other things'""".stripMargin),
+      Seq(
+        "SELECT * FROM graft_minhash_over_cap_pairs('overcap_docs', 'doc_id', 'text', 4, 2, 5)" ->
+          ((s: SparkSession) => graft.text.MinHash.overCapPairs(minhashBands(t(s, "overcap_docs")), "doc_id", 5)),
+        // the candidate stream plus the star pairs: keepSet's over-cap union
+        """SELECT * FROM graft_minhash_candidates('overcap_docs', 'doc_id', 'text', 4, 2, 5)
+          |UNION
+          |SELECT * FROM graft_minhash_over_cap_pairs('overcap_docs', 'doc_id', 'text', 4, 2, 5)"""
+          .stripMargin -> { (s: SparkSession) =>
+          val b = minhashBands(t(s, "overcap_docs"))
+          graft.text.MinHash.candidates(b, "doc_id", Some(5))
+            .unionByName(graft.text.MinHash.overCapPairs(b, "doc_id", 5)).distinct()
+        }),
+      check = { (_, got) =>
+        assert(got.head.count() == 11L, "one star per non-representative clique member")
+      }),
+    Row("SqlOps.noveltySql == SpanDedup.novelty (rows)", Nil, Seq(
+      "SELECT * FROM graft_novelty('documents', 'doc_id', 'text', 8)" ->
+        ((s: SparkSession) => graft.text.SpanDedup.novelty(t(s, "documents"), "doc_id", "text", 8)))),
+    Row("SqlOps.spanTrimSql == SpanDedup.trim (rows)", Nil, Seq(
+      "SELECT * FROM graft_span_trim('documents', 'doc_id', 'text')" ->
+        ((s: SparkSession) => graft.text.SpanDedup.trim(t(s, "documents"), "doc_id", "text", 8)))),
+    Row("SqlOps.htmlExtractSql == HtmlExtract.mainText (rows)", Seq(
+      """CREATE OR REPLACE TEMP VIEW html_docs AS SELECT * FROM VALUES
+        |  (1L, '<div class="nav"><a href="/">Home</a> <a href="/a">About</a></div>'
+        |    || '<p>A long enough paragraph of real prose to keep here.</p>'
+        |    || '<script>var hidden = true;</script>'
+        |    || '<p>Another paragraph with an inline <a href="x">link</a> in it, also kept.</p>'),
+        |  (2L, ''),
+        |  (3L, '<div><a href="/x">only links</a></div>') AS v(doc_id, html)""".stripMargin),
+      Seq("SELECT * FROM graft_html_extract('html_docs', 'doc_id', 'html')" ->
+        ((s: SparkSession) => graft.text.HtmlExtract.mainText(t(s, "html_docs"), "doc_id", "html")))),
+    Row("SqlOps.contaminationTrimSql == Decontaminate.trim (rows)", Nil, Seq(
+      s"SELECT * FROM graft_contamination_trim('documents', 'doc_id', 'text', '$src0', 8)" ->
+        ((s: SparkSession) => graft.text.Decontaminate.trim(t(s, "documents"), "doc_id", "text",
+          col("source") === "src0", 8)))),
+    Row("SqlOps.bpeEncodeSql == q92's Column spelling (rows)", Nil, Seq(
+      "SELECT * FROM graft_bpe_doc_stats('documents', 'doc_id', 'text', " +
+        s"${sqlArray(graft.text.Bpe.FixedMerges)})" -> query("q92_bpe_encode"))),
+    // exact equality is the point: the dyadic weight table makes the
+    // double sums bit-identical whatever the aggregation order
+    Row("SqlOps.qualityClassifierSql == q100's Column spelling (rows, exact doubles)", Nil, Seq(
+      "SELECT * FROM graft_quality_classifier('documents', 'doc_id', 'text')" ->
+        query("q100_quality_classifier"))),
+    Row("SqlOps.linkGraphSql == q105's link-graph plan (rows)", Seq(
+      """CREATE OR REPLACE TEMP VIEW linkgraph_docs AS SELECT doc_id,
+        |  concat('<p>See <a href="HTTPS://WWW.src', CAST(doc_id % 10 AS STRING),
+        |    '.Example.COM/hub/?utm_source=feed">hub</a> <a href="/">home</a> ',
+        |    '<a href="//cdn', CAST(doc_id % 3 AS STRING), '.example.com/x">cdn</a> ',
+        |    '<a href="mailto:a@example.com">mail</a></p>') AS html,
+        |  concat('https://', source, '.example.com/', lang, '/doc/',
+        |    CAST(doc_id AS STRING)) AS base_url
+        |FROM documents""".stripMargin), Seq(
+      "SELECT * FROM graft_link_graph('linkgraph_docs', 'doc_id', 'html', 'base_url')" ->
+        ((s: SparkSession) => graft.text.HtmlExtract.hostEdges(graft.text.HtmlExtract.links(
+          t(s, "linkgraph_docs"), "doc_id", "html", "base_url"), "doc_id"))),
+      check = { (_, got) => assert(got.head.count() > 0) }),
+    Row("SqlOps.pageRankSql == Graph.pageRank (rows at round-8 precision)", Seq(
+      """CREATE OR REPLACE TEMP VIEW pagerank_edges AS SELECT o_custkey AS src,
+        |  l_partkey + 1000000000L AS dst
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin), Seq(
+      // round(8): the per-dst float sums may associate differently between
+      // two runs — the precision the q75 oracle is adjudicated at
+      "SELECT node, round(rank, 8) AS rank FROM graft_pagerank('pagerank_edges', 'src', 'dst', 5)" ->
+        ((s: SparkSession) => graft.ops.Graph.pageRank(t(s, "pagerank_edges"), "src", "dst", iters = 5)
+          .select(col("node"), round(col("rank"), 8).as("rank")))),
+      check = { (_, got) =>
+        // rank mass is conserved up to rounding (sinks absorb)
+        val mass = got.head.agg(sum(col("rank"))).head().getDouble(0)
+        assert(mass > 0.0 && mass <= 1.0 + 1e-6, s"rank mass $mass")
+      }),
+    Row("SqlOps.asofJoinSql == AsOf.asofJoin (rows)", Seq(
+      """CREATE OR REPLACE TEMP VIEW asof_quotes AS SELECT user_id % 5 AS ccy, ts,
+        |  max(value) AS rate FROM events WHERE event_type = 'purchase'
+        |GROUP BY user_id % 5, ts""".stripMargin,
+      """CREATE OR REPLACE TEMP VIEW asof_trades AS SELECT event_id, user_id % 5 AS ccy, ts
+        |FROM events WHERE event_type = 'click'""".stripMargin), Seq(
+      "SELECT * FROM graft_asof_join('asof_trades', 'asof_quotes', 'ccy', 'ts', 'ts')" ->
+        ((s: SparkSession) => graft.ops.AsOf.asofJoin(t(s, "asof_trades"), t(s, "asof_quotes"), "ccy",
+          "ts", "ts")),
+      "SELECT * FROM graft_asof_join(TABLE(asof_trades), TABLE(asof_quotes), 'ccy', 'ts', 'ts')" ->
+        ((s: SparkSession) => graft.ops.AsOf.asofJoin(t(s, "asof_trades"), t(s, "asof_quotes"), "ccy",
+          "ts", "ts")))),
+    Row("SqlOps.gopherFilterSql == Gopher.verdicts (rows)", Nil, Seq(
+      "SELECT * FROM graft_gopher_filter('documents', 'doc_id', 'text')" ->
+        query("q89_gopher_filter"))),
+    Row("SqlOps.spanDedupSql == SpanDedup.dupSpans (rows)", Nil, Seq(
+      "SELECT * FROM graft_span_dedup('documents', 'doc_id', 'text', 8)" ->
+        ((s: SparkSession) => graft.text.SpanDedup.dupSpans(t(s, "documents"), "doc_id", "text", 8)))),
+    Row("SqlOps.corpusReportSql == CorpusReport.report (rows)", Seq(
+      """CREATE OR REPLACE TEMP VIEW docs_cs AS SELECT *,
+        |  CASE WHEN doc_id % 3 = 0 THEN 'windows-1251' ELSE 'utf-8' END AS charset
+        |FROM documents""".stripMargin,
+      "CREATE OR REPLACE TEMP VIEW docs_dd AS SELECT *, doc_id % 13 = 0 AS declared_dup FROM documents",
+      """CREATE OR REPLACE TEMP VIEW docs_gates AS SELECT *,
+        |  CASE WHEN doc_id % 5 = 0 THEN CAST(NULL AS BOOLEAN) ELSE doc_id % 2 = 0 END AS image_keep,
+        |  doc_id % 3 <> 0 AS audio_keep
+        |FROM documents""".stripMargin), Seq(
+      report("documents", "") ->
+        ((s: SparkSession) => graft.text.CorpusReport.report(t(s, "documents"), "doc_id", "text")),
+      report("docs_cs", ", 'lang', 8, 'charset'") ->
+        ((s: SparkSession) => graft.text.CorpusReport.report(t(s, "docs_cs"), "doc_id", "text",
+          charsetCol = Some("charset"))),
+      report("docs_dd", ", 'lang', 8, NULL, 'declared_dup'") ->
+        ((s: SparkSession) => graft.text.CorpusReport.report(t(s, "docs_dd"), "doc_id", "text",
+          declaredDupCol = Some("declared_dup"))),
+      report("docs_gates", ", 'lang', 8, NULL, NULL, 'image_keep', 'audio_keep'") ->
+        ((s: SparkSession) => graft.text.CorpusReport.report(t(s, "docs_gates"), "doc_id", "text",
+          imageKeepCol = Some("image_keep"), audioKeepCol = Some("audio_keep")))),
+      check = { (_, got) =>
+        def metrics(df: DataFrame) = df.select("metric").collect().map(_.getString(0)).toSet
+        assert(metrics(got(1))("non_utf8_frac"))
+        assert(metrics(got(2))("declared_dup_frac"))
+        assert(Set("image_gate_drop_frac", "audio_gate_drop_frac").subsetOf(metrics(got(3))))
+      }),
+    Row("SqlOps.contaminationSpansSql == Decontaminate.contaminationSpans (rows)", Nil, Seq(
+      s"SELECT * FROM graft_contamination_spans('documents', 'doc_id', 'text', '$src0')" ->
+        ((s: SparkSession) => graft.text.Decontaminate.contaminationSpans(t(s, "documents"), "doc_id", "text",
+          col("source") === "src0", 8)))),
+    Row("SqlOps.bloomDecontaminateSql == BloomDecontaminate.hits == q69 (rows)", Nil, Seq(
+      s"SELECT * FROM graft_bloom_decontaminate('documents', 'doc_id', 'text', '$src0', 8)" ->
+        ((s: SparkSession) => graft.text.BloomDecontaminate.hits(t(s, "documents"), "doc_id", "text",
+          col("source") === "src0", 8)),
+      // the saturated 1-bit/gram filter still verifies back to the truth
+      s"SELECT * FROM graft_bloom_decontaminate('documents', 'doc_id', 'text', '$src0', 8, 1)" ->
+        ((s: SparkSession) => graft.text.Decontaminate.hits(t(s, "documents"), "doc_id", "text",
+          col("source") === "src0", 8)))),
+    Row("SqlOps.epochPlanSql == TokenShards.epochPlan (rows; definitional window vs " +
+        "distributed hash-space prefix sum)", Seq(
+      "CREATE OR REPLACE TEMP VIEW epoch_in AS SELECT id AS seq_id FROM range(37)"), Seq(
+      "SELECT * FROM graft_epoch_plan('epoch_in', 2, 's17', 256, 64, 'u2')" ->
+        ((s: SparkSession) => graft.sources.TokenShards.epochPlan(t(s, "epoch_in"), epochs = 2,
+          seed = "s17", seqLen = 256, seqsPerShard = 64, dtype = "u2"))))
+  )
+
+  /** Run one row on `s`: its setup, then each case's rows against the
+    * operator's; returns the SQL frames for the row's extra check.
+    */
+  private def runRow(s: SparkSession, r: Row): Unit = {
+    r.setup.foreach(s.sql)
+    val got = r.cases.map { case (stmt, op) =>
+      val viaSql = s.sql(stmt)
+      val viaOp = op(s)
+      assert(viaSql.columns.toSeq == viaOp.columns.toSeq,
+        s"${r.name}: columns ${viaSql.columns.mkString(",")} vs ${viaOp.columns.mkString(",")}")
+      assert(viaSql.exceptAll(viaOp).isEmpty && viaOp.exceptAll(viaSql).isEmpty,
+        s"${r.name}: `$stmt` diverges from its operator")
+      viaSql
+    }
+    r.check(s, got)
   }
 
-  test("SqlOps.asofJoinSql == AsOf.asofJoin (rows)") {
+  rows.foreach(r => test(r.name) { registered; runRow(spark, r) })
+
+  test("table functions: every registered function has a row, and the plan is " +
+      "the operator's own") {
     registered
-    val ev = Tables.events(spark, sfDir)
-    val quotes = ev.filter(col("event_type") === "purchase")
-      .select((col("user_id") % 5).as("ccy"), col("ts"), col("value"))
-      .groupBy(col("ccy"), col("ts")).agg(max(col("value")).as("rate"))
-    val trades = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), (col("user_id") % 5).as("ccy"), col("ts"))
-    quotes.createOrReplaceTempView("asof_quotes")
-    trades.createOrReplaceTempView("asof_trades")
-    val viaSql = spark.sql(SqlOps.asofJoinSql(
-      "asof_trades", "asof_quotes", "ccy", "ts", "ts",
-      leftCols = Seq("event_id", "ccy", "ts"), rightVals = Seq("rate")))
-    val viaCol = graft.ops.AsOf.asofJoin(trades, quotes, "ccy", "ts", "ts")
-    assertSame(viaSql, viaCol, "as-of join", samePlan = false)
+    val called = rows.flatMap(_.cases.map(_._1)).mkString("\n")
+    val missing = TableFunctions.all.map(_.name).filterNot(n => called.contains(n + "("))
+    assert(missing.isEmpty, s"table functions without a row: $missing")
+    // the function hands the analyzer the operator's plan: optimized plans
+    // agree once expression ids and scan paths are normalized
+    def norm(df: DataFrame) = df.queryExecution.optimizedPlan.treeString
+      .replaceAll("#\\d+L?", "#x").replaceAll("\\[file:[^\\]]*\\]", "[path]")
+    for (r <- rows.take(2); (stmt, op) <- r.cases) { // dedup-latest, quarantine
+      val (viaSql, viaOp) = (spark.sql(stmt), op(spark))
+      assert(norm(viaSql) == norm(viaOp), s"${r.name}\n${norm(viaSql)}\nvs\n${norm(viaOp)}")
+    }
   }
 
-  test("SqlOps.gopherFilterSql == Gopher.verdicts (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.gopherFilterSql("documents", "doc_id", "text"))
-    val viaCol = graft.text.Gopher.verdicts(
-      Tables.documents(spark, sfDir), "doc_id", "text")
-    assertSame(viaSql, viaCol, "gopher filter", samePlan = false)
+  test("table functions: a session with only SqlFunctions.register answers every row") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s2 = spark.newSession()
+    // strip what the extension injected, so only register can bring them back
+    TableFunctions.all.foreach(f =>
+      s2.sessionState.tableFunctionRegistry.dropFunction(FunctionIdentifier(f.name)))
+    SqlFunctions.registerTables(s2, sfDir)
+    val before = intercept[org.apache.spark.sql.AnalysisException](
+      s2.sql("SELECT * FROM graft_repetition('documents', 'doc_id', 'text')"))
+    assert(before.getCondition == "UNRESOLVABLE_TABLE_VALUED_FUNCTION", before.getMessage)
+    SqlFunctions.register(s2)
+    rows.foreach(r => runRow(s2, r))
   }
 
-  test("SqlOps.spanDedupSql == SpanDedup.dupSpans (rows)") {
+  test("graft_dedup_latest: 'ts DESC' keeps the latest row; 't', TABLE(t) and " +
+      "TABLE(SELECT …) agree") {
     registered
-    val viaSql = spark.sql(SqlOps.spanDedupSql("documents", "doc_id", "text", 8))
-    val viaCol = graft.text.SpanDedup.dupSpans(
-      Tables.documents(spark, sfDir), "doc_id", "text", 8)
-    assertSame(viaSql, viaCol, "span dedup", samePlan = false)
+    spark.sql("""CREATE OR REPLACE TEMP VIEW dl AS SELECT * FROM VALUES
+                |  (1, 1, 'old'), (1, 3, 'new'), (1, 2, 'mid'), (2, 5, 'only')
+                |  AS v(id, ts, v)""".stripMargin)
+    def latest(arg: String) =
+      spark.sql(s"SELECT id, v FROM graft_dedup_latest($arg, 'id', 'ts DESC')")
+        .collect().map(r => r.getInt(0) -> r.getString(1)).toSet
+    // read as an expression, 'ts DESC' would alias ts and sort ascending
+    assert(latest("'dl'") == Set(1 -> "new", 2 -> "only"))
+    assert(latest("TABLE(dl)") == latest("'dl'"))
+    assert(latest("TABLE(SELECT * FROM dl)") == latest("'dl'"))
   }
 
-  test("SqlOps.corpusReportSql == CorpusReport.report (rows)") {
+  test("table functions: wrong calls fail at analysis with named errors") {
     registered
-    val viaSql = spark.sql(SqlOps.corpusReportSql("documents", "doc_id", "text"))
-    val viaCol = graft.text.CorpusReport.report(
-      Tables.documents(spark, sfDir), "doc_id", "text")
-    assertSame(viaSql, viaCol, "corpus report", samePlan = false)
-    // the r16 intake-mix knob: both faces emit the non_utf8_frac row
-    Tables.documents(spark, sfDir)
-      .withColumn("charset",
-        when(col("doc_id") % 3 === 0, "windows-1251").otherwise("utf-8"))
-      .createOrReplaceTempView("docs_cs")
-    val sqlCs = spark.sql(SqlOps.corpusReportSql("docs_cs", "doc_id", "text",
-      charsetCol = Some("charset")))
-    val colCs = graft.text.CorpusReport.report(
-      spark.table("docs_cs"), "doc_id", "text", charsetCol = Some("charset"))
-    assertSame(sqlCs, colCs, "corpus report + charset", samePlan = false)
-    assert(colCs.filter(col("metric") === "non_utf8_frac").count() == 1)
-    // the r17 revisit knob: both faces emit the declared_dup_frac row
-    Tables.documents(spark, sfDir)
-      .withColumn("declared_dup", col("doc_id") % 13 === 0)
-      .createOrReplaceTempView("docs_dd")
-    val sqlDd = spark.sql(SqlOps.corpusReportSql("docs_dd", "doc_id", "text",
-      declaredDupCol = Some("declared_dup")))
-    val colDd = graft.text.CorpusReport.report(
-      spark.table("docs_dd"), "doc_id", "text",
-      declaredDupCol = Some("declared_dup"))
-    assertSame(sqlDd, colDd, "corpus report + declared dup", samePlan = false)
-    assert(colDd.filter(col("metric") === "declared_dup_frac").count() == 1)
-    // the r18 modality-gate knobs: both faces emit the drop-fraction rows
-    // from the same keep-verdict columns (NULL = decode failure = dropped)
-    Tables.documents(spark, sfDir)
-      .withColumn("image_keep", when(col("doc_id") % 5 === 0, lit(null)
-        .cast("boolean")).otherwise(col("doc_id") % 2 === 0))
-      .withColumn("audio_keep", col("doc_id") % 3 =!= 0)
-      .createOrReplaceTempView("docs_gates")
-    val sqlG = spark.sql(SqlOps.corpusReportSql("docs_gates", "doc_id", "text",
-      imageKeepCol = Some("image_keep"), audioKeepCol = Some("audio_keep")))
-    val colG = graft.text.CorpusReport.report(
-      spark.table("docs_gates"), "doc_id", "text",
-      imageKeepCol = Some("image_keep"), audioKeepCol = Some("audio_keep"))
-    assertSame(sqlG, colG, "corpus report + modality gates", samePlan = false)
-    assert(colG.filter(col("metric").isin(
-      "image_gate_drop_frac", "audio_gate_drop_frac")).count() == 2)
+    spark.sql("CREATE OR REPLACE TEMP VIEW dl2 AS SELECT * FROM VALUES (1, 1) AS v(id, ts)")
+    def condition(stmt: String): String =
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(stmt)).getCondition
+    // argument count
+    assert(condition("SELECT * FROM graft_dedup_latest('dl2', 'id')") ==
+      "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+    // a non-constant where a literal is required
+    assert(condition("SELECT * FROM graft_dedup_latest('dl2', uuid(), 'ts DESC')") ==
+      "NON_FOLDABLE_ARGUMENT")
+    // a literal of the wrong type
+    assert(condition("SELECT * FROM graft_dedup_latest('dl2', 1, 'ts DESC')") ==
+      "UNEXPECTED_INPUT_TYPE")
+    // an unknown table, an unknown column
+    assert(condition("SELECT * FROM graft_dedup_latest('no_such_view', 'id', 'ts DESC')") ==
+      "TABLE_OR_VIEW_NOT_FOUND")
+    assert(condition("SELECT * FROM graft_dedup_latest('dl2', 'no_such_col', 'ts DESC')")
+      .startsWith("UNRESOLVED_COLUMN"))
+    // a TABLE argument's PARTITION BY / ORDER BY, which no operator reads
+    assert(condition("SELECT * FROM graft_dedup_latest(TABLE(dl2) PARTITION BY (id), " +
+      "'id', 'ts DESC')") == "UNEXPECTED_INPUT_TYPE")
+    assert(condition("SELECT * FROM graft_dedup_latest(TABLE(dl2) WITH SINGLE PARTITION " +
+      "ORDER BY (ts), 'id', 'ts DESC')") == "UNEXPECTED_INPUT_TYPE")
   }
 
-  test("SqlOps.contaminationSpansSql == Decontaminate.contaminationSpans (rows)") {
+  test("table functions: exactly the named ones run jobs at analysis; EXPLAIN " +
+      "graft_pagerank runs PageRank's pinned jobs") {
     registered
-    val viaSql = spark.sql(SqlOps.contaminationSpansSql(
-      "documents", "doc_id", "text", "source = 'src0'", 8))
-    val viaCol = graft.text.Decontaminate.contaminationSpans(
-      Tables.documents(spark, sfDir), "doc_id", "text", col("source") === "src0", 8)
-    assertSame(viaSql, viaCol, "contamination spans", samePlan = false)
-  }
-
-  test("SqlOps.bloomDecontaminateSql == BloomDecontaminate.hits == q69 (rows)") {
-    registered
-    val viaSql = spark.sql(SqlOps.bloomDecontaminateSql(
-      "documents", "doc_id", "text", "source = 'src0'", 8))
-    val viaCol = graft.text.BloomDecontaminate.hits(
-      Tables.documents(spark, sfDir), "doc_id", "text", col("source") === "src0", 8)
-    assertSame(viaSql, viaCol, "bloom decontaminate", samePlan = false)
-    // and the saturated 1-bit/gram filter still verifies back to the truth
-    val viaSqlFp = spark.sql(SqlOps.bloomDecontaminateSql(
-      "documents", "doc_id", "text", "source = 'src0'", 8, bitsPerGram = 1))
-    assertSame(viaSqlFp, viaCol, "bloom decontaminate (fp-heavy)", samePlan = false)
-  }
-
-  test("SqlOps.epochPlanSql == TokenShards.epochPlan (rows; definitional " +
-      "window vs distributed hash-space prefix sum)") {
-    registered
-    import spark.implicits._
-    val full = (0L until 37L).map(i => Tuple1(i)).toDF("seq_id")
-    full.createOrReplaceTempView("epoch_in")
-    val viaSql = spark.sql(SqlOps.epochPlanSql("epoch_in", "seq_id",
-      epochs = 2, seed = "s17", seqLen = 256, seqsPerShard = 64, widthBytes = 2))
-    val viaCol = graft.sources.TokenShards.epochPlan(full, epochs = 2,
-      seed = "s17", seqLen = 256, seqsPerShard = 64, dtype = "u2")
-    assertSame(viaSql, viaCol, "epoch plan", samePlan = false)
+    rows.foreach(_.setup.foreach(spark.sql))
+    val names = TableFunctions.all.map(_.name).toSet
+    // counted on a re-analysis: graft_corpus_report's first analysis of an
+    // input also fills its cached base, which later analyses reuse
+    val eager = rows.flatMap(_.cases.map(_._1)).filter { stmt =>
+      spark.sql(stmt)
+      jobsOf(spark.sql(stmt)) > 0
+    }.flatMap("graft_\\w+(?=\\()".r.findAllIn(_).filter(names)).toSet
+    assert(eager == Set("graft_pagerank", "graft_mixture_sample", "graft_source_overlap",
+      "graft_bloom_decontaminate", "graft_langid_score"), s"run jobs at analysis: $eager")
+    val explain = jobsOf(spark.sql(
+      "EXPLAIN SELECT * FROM graft_pagerank('pagerank_edges', 'src', 'dst', 5)"))
+    assert(explain == jobsOf(graft.ops.Graph.pageRank(t(spark, "pagerank_edges"), "src", "dst",
+      iters = 5)), "EXPLAIN runs the operator's eager rounds, no more")
+    assert(explain == 6, s"EXPLAIN graft_pagerank ran $explain jobs")
   }
 
   // ---------------------------------------- r19: SqlDml — versioned DML twins
@@ -863,4 +695,17 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(VersionedTable.read(spark, tR).filter(col("id") === 2L)
       .select("note").head().getString(0) == "don't panic")
   }
+}
+
+object SqlSurfaceSpec {
+  /** One row of the table-driven test: SQL setup statements, then cases of
+    * (statement, the library operator on the same input). The row names
+    * keep the names of the per-generator tests they replace: each names a
+    * deleted SqlOps generator, and its parenthetical (a "definitional
+    * window", say) tells what that generator was compared with. Every row
+    * now compares the table function with the operator.
+    */
+  final case class Row(name: String, setup: Seq[String],
+      cases: Seq[(String, SparkSession => DataFrame)],
+      check: (SparkSession, Seq[DataFrame]) => Unit = (_, _) => ())
 }
