@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.SparkSessionExtensions
@@ -68,76 +67,16 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override def prettyName: String = "graft_dot"
 }
 
-/** Session extension registering graft's native functions and its table
-  * functions ([[graft.sql.TableFunctions]]).
+/** Session extension registering graft's scalar functions
+  * ([[graft.sql.SqlFunctions]]) and its table functions
+  * ([[graft.sql.TableFunctions]]), from the same tables
+  * `SqlFunctions.register` registers on a session without it.
   * Enable with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hash60"),
-      new ExpressionInfo(classOf[Hash60].getName, "graft_hash60"),
-      (children: Seq[Expression]) => Hash60(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bitand_count"),
-      new ExpressionInfo(classOf[BitAndCount].getName, "graft_bitand_count"),
-      (children: Seq[Expression]) => BitAndCount(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_gram_hash60"),
-      new ExpressionInfo(classOf[GramHash60].getName, "graft_gram_hash60"),
-      (children: Seq[Expression]) => GramHash60(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_word_gram_hash60"),
-      new ExpressionInfo(classOf[WordGramHash60].getName, "graft_word_gram_hash60"),
-      (children: Seq[Expression]) => WordGramHash60(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_winnow_select"),
-      new ExpressionInfo(classOf[WinnowSelect].getName, "graft_winnow_select"),
-      (children: Seq[Expression]) => WinnowSelect(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bitset"),
-      new ExpressionInfo(classOf[BitsetFromRanks].getName, "graft_bitset"),
-      (children: Seq[Expression]) => BitsetFromRanks(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bin"),
-      new ExpressionInfo(classOf[BinBySplits].getName, "graft_bin"),
-      (children: Seq[Expression]) => BinBySplits(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "graft_bpe_encode"),
-      (children: Seq[Expression]) => BpeEncode(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe_byte_encode"),
-      new ExpressionInfo(classOf[BpeByteEncode].getName, "graft_bpe_byte_encode"),
-      (children: Seq[Expression]) => BpeByteEncode(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_gunzip"),
-      new ExpressionInfo(classOf[Gunzip].getName, "graft_gunzip"),
-      (children: Seq[Expression]) => Gunzip(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_unigram_encode"),
-      new ExpressionInfo(classOf[UnigramEncode].getName, "graft_unigram_encode"),
-      (children: Seq[Expression]) => UnigramEncode(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_charset_sniff"),
-      new ExpressionInfo(classOf[CharsetSniff].getName, "graft_charset_sniff"),
-      (children: Seq[Expression]) => CharsetSniff(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pairs"),
-      new ExpressionInfo(classOf[SortedPairs].getName, "graft_pairs"),
-      (children: Seq[Expression]) => SortedPairs(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_charset_decode"),
-      new ExpressionInfo(classOf[CharsetDecode].getName, "graft_charset_decode"),
-      (children: Seq[Expression]) => CharsetDecode(children.head, children(1))))
+    graft.sql.SqlFunctions.registerWith((id, info, builder) =>
+      ext.injectFunction((id, info, builder)))
     graft.sql.TableFunctions.registerWith((id, info, builder) =>
       ext.injectTableFunction((id, info, builder)))
   }

@@ -36,9 +36,10 @@ object Cdm {
     * reproducible in DuckDB as `('0x' || substr(md5(x),1,15))::BIGINT`, which
     * the oracle SQL relies on. 15 hex digits = 60 bits < 63, so no sign issues.
     *
-    * Evaluates via the native [[graft.functions.Hash60]] expression (requires
-    * the GraftExtensions session extension, as graft sessions configure);
-    * [[hash60Composed]] is the extension-free equivalent.
+    * Evaluates via the native [[graft.functions.Hash60]] expression
+    * (registered by the GraftExtensions session extension, as graft
+    * sessions configure, or by `graft.sql.SqlFunctions.register`);
+    * [[hash60Composed]] is the built-ins-only equivalent.
     */
   def hash60(c: Column): Column =
     call_function("graft_hash60", c.cast("string"))

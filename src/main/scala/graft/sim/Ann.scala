@@ -22,8 +22,9 @@ object Ann {
   /** float[] → double[] (cosine math happens in double on both engines). */
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  /** Native codegen'd dot product ([[graft.functions.DotProduct]]; requires
-    * the GraftExtensions session extension). Bit-identical to the HOF
+  /** Native codegen'd dot product ([[graft.functions.DotProduct]];
+    * registered by the GraftExtensions session extension or by
+    * `graft.sql.SqlFunctions.register`). Bit-identical to the HOF
     * `aggregate(zip_with(...))` fold and to DuckDB's `list_sum` of products,
     * ~10× faster (HOFs evaluate interpreted).
     */

@@ -34,13 +34,15 @@ object WarcScale {
   }
 
   /** `f`'s result and its best (minimum) wall over two runs, timed by
-    * [[graft.Measure.timePasses]]; a failing run fails the probe.
+    * [[graft.Measure.timePasses]]; `boundary` runs untimed between them. A
+    * failing run fails the probe.
     */
-  private def bestOf2[T](f: => T): (T, Double) = {
+  private def bestOf2[T](f: => T, boundary: () => Unit = () => ()): (T, Double) = {
     var out: Option[T] = None
     val best = graft.Measure.timePasses[Unit](Seq.fill(2)(Seq(())), _ => out = Some(f),
       onTiming = (_: Unit, t: graft.Measure.Timing, _: Option[graft.Measure.Timing]) =>
-        t.error.foreach(e => throw e))
+        t.error.foreach(e => throw e),
+      boundary = _ => boundary())
     (out.get, best(()).sec)
   }
 
@@ -118,16 +120,14 @@ object WarcScale {
     // two-parse unpersisted one — the trade the persist buys
     def unpersistAll(): Unit =
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    // the unpersist RPC runs OUTSIDE the timed block — charging it to the
-    // persisted path would bias the exact comparison this metric makes
-    var dualShared = Double.MaxValue
-    (1 to 2).foreach { _ =>
+    // the unpersist RPC runs OUTSIDE the timed block (between the passes,
+    // and once after the last) — charging it to the persisted path would
+    // bias the exact comparison this metric makes
+    val (_, dualShared) = bestOf2({
       val (r, q) = Warc.read(spark, s"$outRoot/many/*.warc.gz")
-      val t0 = System.nanoTime()
       r.count(); q.count()
-      dualShared = math.min(dualShared, (System.nanoTime() - t0) / 1e9)
-      unpersistAll()
-    }
+    }, boundary = unpersistAll)
+    unpersistAll()
     val (_, dualReparse) = bestOf2 {
       val (r, q) = Warc.read(spark, s"$outRoot/many/*.warc.gz", persist = false)
       r.count() + q.count()

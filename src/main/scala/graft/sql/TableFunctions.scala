@@ -89,17 +89,17 @@ object TableFunctions {
   private def str(n: String) = Param(n, StrArg)
   private def str(n: String, d: String) = Param(n, StrArg, Some(d))
   private def optStr(n: String, d: Option[String]) = Param(n, StrArg, Some(d), nullable = true)
-  private def int(n: String) = Param(n, IntArg)
+  private[sql] def int(n: String) = Param(n, IntArg)
   private def int(n: String, d: Int) = Param(n, IntArg, Some(d))
   private def optInt(n: String, d: Option[Int]) = Param(n, IntArg, Some(d), nullable = true)
   private def long(n: String) = Param(n, LongArg)
   private def double(n: String, d: Double) = Param(n, DoubleArg, Some(d))
   private def strs(n: String) = Param(n, StrsArg)
   private def rules(n: String) = Param(n, RulesArg)
-  private def value(n: String) = Param(n, ValueArg)
+  private[sql] def value(n: String) = Param(n, ValueArg)
 
   /** One call's bound arguments, read by parameter name. */
-  final class Args private[TableFunctions] (spark: SparkSession, values: Map[String, Any]) {
+  final class Args private[sql] (spark: SparkSession, values: Map[String, Any]) {
     def session: SparkSession = spark
     def df(n: String): DataFrame = values(n).asInstanceOf[DataFrame]
     def str(n: String): String = values(n).asInstanceOf[String]
@@ -112,7 +112,8 @@ object TableFunctions {
     def strs(n: String): Seq[String] = values(n).asInstanceOf[Seq[String]]
     def optStr(n: String): Option[String] = values(n).asInstanceOf[Option[String]]
     def optInt(n: String): Option[Int] = values(n).asInstanceOf[Option[Int]]
-    def value(n: String): Column = values(n).asInstanceOf[Column]
+    def value(n: String): Column = StreamShim.column(expression(n))
+    def expression(n: String): Expression = values(n).asInstanceOf[Expression]
     /** A map of rule name → failing-row predicate, in written order. */
     def rules(n: String): Seq[Quality.Rule] =
       values(n).asInstanceOf[Seq[(String, String)]].map { case (r, p) => Quality.Rule(r, expr(p)) }
@@ -125,34 +126,43 @@ object TableFunctions {
 
     def id: FunctionIdentifier = FunctionIdentifier(name)
 
-    def info: ExpressionInfo = new ExpressionInfo(classOf[Fn].getName, null, name,
-      params.map(p => p.name + p.default.fold("")(_ => "?")).mkString(s"$name(", ", ", ")"), "")
+    def info: ExpressionInfo = TableFunctions.info(name, params)
 
     /** The analyzer's builder: bind, run the operator, hand back its plan. */
     def builder: Seq[Expression] => LogicalPlan = args => {
       val spark = SparkSession.active
-      run(bind(this, spark, args)).queryExecution.analyzed
+      run(bind(name, params, spark, args)).queryExecution.analyzed
     }
   }
 
+  /** A function's registry entry: its name and parameters as usage. */
+  private[sql] def info(name: String, params: Seq[Param]): ExpressionInfo =
+    new ExpressionInfo(classOf[Fn].getName, null, name,
+      params.map(p => p.name + p.default.fold("")(_ => "?")).mkString(s"$name(", ", ", ")"), "")
+
   // ---- binding ----
 
-  private def bind(fn: Fn, spark: SparkSession, args: Seq[Expression]): Args = {
-    val required = fn.params.count(_.default.isEmpty)
-    if (args.size < required || args.size > fn.params.size)
+  /** Bind the call `name(args…)` onto `params`; a wrong call fails with a
+    * named error.
+    */
+  private[sql] def bind(name: String, params: Seq[Param], spark: SparkSession,
+      args: Seq[Expression]): Args = {
+    val required = params.count(_.default.isEmpty)
+    if (args.size < required || args.size > params.size)
       throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
-        "functionName" -> s"`${fn.name}`",
+        "functionName" -> s"`$name`",
         "expectedNum" ->
-          (if (required == fn.params.size) s"$required"
-           else s"between $required and ${fn.params.size}"),
+          (if (required == params.size) s"$required"
+           else s"between $required and ${params.size}"),
         "actualNum" -> args.size.toString,
         "docroot" -> SPARK_DOC_ROOT))
-    new Args(spark, fn.params.zipWithIndex.map { case (p, i) =>
-      p.name -> (if (i < args.size) bindOne(fn, spark, p, i, args(i)) else p.default.get)
+    new Args(spark, params.zipWithIndex.map { case (p, i) =>
+      p.name -> (if (i < args.size) bindOne(name, spark, p, i, args(i)) else p.default.get)
     }.toMap)
   }
 
-  private def bindOne(fn: Fn, spark: SparkSession, p: Param, i: Int, e: Expression): Any = {
+  private def bindOne(name: String, spark: SparkSession, p: Param, i: Int,
+      e: Expression): Any = {
     // PARTITION BY / ORDER BY / WITH SINGLE PARTITION shape a UDTF's input;
     // no operator here reads them, so a TABLE argument with them fails
     def shaped(t: FunctionTableSubqueryArgumentExpression) =
@@ -164,7 +174,7 @@ object TableFunctions {
         case _ => (e.sql, e.dataType.sql)
       }
       new AnalysisException("UNEXPECTED_INPUT_TYPE", Map(
-        "paramIndex" -> s"${i + 1}", "functionName" -> s"`${fn.name}`",
+        "paramIndex" -> s"${i + 1}", "functionName" -> s"`$name`",
         "requiredType" -> s"\"${p.kind.sqlType}\"", "inputSql" -> s"\"$input\"",
         "inputType" -> s"\"$inputType\""))
     }
@@ -173,12 +183,12 @@ object TableFunctions {
         if (shaped(t)) throw mismatch
         return StreamShim.frame(spark, t.plan)
       case (_, _: FunctionTableSubqueryArgumentExpression) => throw mismatch
-      case (ValueArg, _) => return StreamShim.column(e)
+      case (ValueArg, _) => return e
       case _ =>
     }
     if (!e.foldable)
       throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
-        "funcName" -> s"`${fn.name}`", "paramName" -> s"`${p.name}`",
+        "funcName" -> s"`$name`", "paramName" -> s"`${p.name}`",
         "paramType" -> s"\"${p.kind.sqlType}\""))
     val v = e.eval()
     if (v == null) { if (p.nullable) return None else throw mismatch }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** The Spark-internal seams graft uses, each a `private[sql]` member
   * this object lives in the `org.apache.spark.sql` namespace to reach at
   * compile time. No other Spark internals are touched; everything else
-  * in graft is public API (or, for `graft.sql.SqlDml` and
-  * `graft.sql.TableFunctions`, the unresolved plans and expressions
+  * in graft is public API (or, for `graft.sql.SqlDml` and the
+  * `graft.sql` function tables, the unresolved plans and expressions
   * Spark's own parser and analyzer hand over).
   *
   *  - [[asStreamingFrame]]: a DSv1 streaming `Source.getBatch` must return
@@ -19,9 +19,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    for DSv1 sources (Spark's own FileStreamSource builds its batches
   *    exactly this way).
   *  - [[column]] / [[expression]]: the expressions of a parsed
-  *    MERGE/UPDATE/DELETE plan become Columns through
-  *    `classic.ExpressionUtils.column`, and a MERGE condition's Column
-  *    goes back to its unresolved expression to read its column names.
+  *    MERGE/UPDATE/DELETE plan, and a SQL function's arguments, become
+  *    Columns through `classic.ExpressionUtils.column`; a MERGE
+  *    condition's Column, and the Column a scalar function builds, go
+  *    back to their unresolved expressions.
   *  - [[frame]]: a table function's `TABLE(…)` argument arrives as a
   *    logical plan; `classic.Dataset.ofRows` makes it a DataFrame.
   */

@@ -1,10 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.util.Try
 
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType}
+
+import graft.sim.Ann
 import graft.sql.{SqlFunctions, TableFunctions}
-import graft.text.{TextFunctions => TF}
+import graft.text.{Urls, TextFunctions => TF}
 
 /** The SQL surface must be indistinguishable from the Column API: every
   * graft_* SQL function is compared against its Column twin on the real
@@ -128,8 +134,7 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("graft_cosine == Ann.cosine (native-dot body when extensions are on)") {
     registered
-    // The test session runs GraftExtensions, so the registered body must be
-    // the native graft_dot one.
+    // graft_cosine builds Ann.cosine, whose dot products are the native graft_dot
     assert(spark.catalog.functionExists("graft_dot"))
     val viaSql = spark.sql(
       """SELECT a.vec_id AS qa, b.vec_id AS qb,
@@ -178,6 +183,161 @@ class SqlSurfaceSpec extends SparkSpec {
       "SELECT graft_bpe_byte_encode('héllo🚀', array('l l')) AS s")
       .head().getSeq[String](0)
     assert(graft.text.Bpe.decodeBytes(enc) == "héllo🚀")
+  }
+
+  // ---- scalar functions: every entry == its Column twin ----
+
+  /** A one-row fixture with a column of each argument type, behind a
+    * checkpoint so the optimizer cannot fold the calls over it away.
+    */
+  private def scalarFixture(s: SparkSession): DataFrame = {
+    s.sql(
+      """SELECT 'The  Quick brown fox; the END of it.' AS text,
+        |  array('the', 'cat', 'the', 'hat') AS toks, array(5L, 3L, 9L, 1L, 7L) AS hs,
+        |  array(1.0d, 2.0d, 3.0d) AS a, array(0.5d, -1.0d, 2.0d) AS b, 1.25d AS x,
+        |  array(1, 3) AS ranks, 2 AS words, '../d?q=1#s' AS href, '/a/./b/../c' AS path,
+        |  'HTTPS://WWW.Example.COM:443/a/b/?utm_source=x&id=1#f' AS url,
+        |  encode('héllo', 'utf-8') AS payload, 'text/html; charset=utf-8' AS content_type,
+        |  'utf-8' AS charset""".stripMargin)
+      .localCheckpoint().createOrReplaceTempView("scalar_fx")
+    s.table("scalar_fx")
+  }
+
+  /** Every scalar entry: a call's arguments (fixture columns, or SQL
+    * literals) and its Column API twin. A native's twin is the
+    * `call_function` the library spells it with.
+    */
+  private val scalarCalls: Seq[(String, Seq[String], Seq[Column] => Column)] = {
+    def native(name: String, args: String*) =
+      (name, args.toSeq, (c: Seq[Column]) => call_function(name, c: _*))
+    Seq(
+      ("graft_tokens", Seq("text"), c => TF.tokens(c(0))),
+      ("graft_normalize", Seq("text"), c => TF.normalizeText(c(0))),
+      ("graft_fingerprint", Seq("text"), c => md5(TF.normalizeText(c(0)))),
+      ("graft_token_count", Seq("text"), c => size(TF.tokens(c(0)))),
+      ("graft_word_bigrams", Seq("toks"), c => TF.wordBigrams(c(0))),
+      ("graft_word_ngrams", Seq("toks", "2"), c => TF.wordNgrams(c(0), 2)),
+      ("graft_max_run_count", Seq("toks"), c => TF.maxRunCount(c(0))),
+      ("graft_char_ngrams", Seq("text", "3"), c => TF.charNgrams(c(0), 3)),
+      ("graft_langid_tokens", Seq("toks"), c => TF.langPredict(c(0))),
+      ("graft_langid", Seq("text"), c => TF.langPredict(TF.tokens(c(0)))),
+      ("graft_quality", Seq("text"), c => TF.qualityGrid(c(0)) / 1e4),
+      ("graft_gram_hashes", Seq("text", "4"), c => TF.gramHashes(c(0), 4)),
+      ("graft_winnow", Seq("hs", "2"), c => TF.winnowSelect(c(0), 2)),
+      ("graft_url_canon", Seq("url"), c => Urls.canonicalize(c(0))),
+      ("graft_url_domain", Seq("url"), c => Urls.domain(c(0))),
+      ("graft_surt_key", Seq("url"), c => Urls.surtKey(c(0))),
+      ("graft_dotsegs", Seq("path"), c => Urls.removeDotSegments(c(0))),
+      ("graft_url_resolve", Seq("url", "href"), c => Urls.resolve(c(0), c(1))),
+      ("graft_cosine", Seq("a", "b"), c => Ann.cosine(c(0), c(1))),
+      native("graft_dot", "a", "b"),
+      native("graft_hash60", "text"),
+      native("graft_bitand_count", "hs", "hs"),
+      native("graft_gram_hash60", "text", "4"),
+      native("graft_word_gram_hash60", "toks", "2"),
+      native("graft_winnow_select", "hs", "2"),
+      native("graft_bitset", "ranks", "words"),
+      native("graft_bin", "x", "array(0.5d, 1.5d)"),
+      native("graft_bpe_encode", "text", "array('t h', 'th e')"),
+      native("graft_bpe_byte_encode", "text", "array('t h')"),
+      native("graft_gunzip", "payload", "1024"),
+      native("graft_nfc", "text"),
+      native("graft_unigram_encode", "text", "array('th\\t-1.0', 'e\\t-2.0')"),
+      native("graft_charset_sniff", "content_type", "payload"),
+      native("graft_pairs", "toks"),
+      native("graft_charset_decode", "payload", "charset"))
+  }
+
+  /** Each scalar entry on `s`: its SQL call's canonicalized optimized
+    * plan, and its rows, equal its Column twin's.
+    */
+  private def scalarsAgree(s: SparkSession): Unit = {
+    val fx = scalarFixture(s)
+    for ((name, args, twin) <- scalarCalls) {
+      val viaSql = s.sql(s"SELECT $name(${args.mkString(", ")}) AS r FROM scalar_fx")
+      val viaCol = fx.select(
+        twin(args.map(a => if (fx.columns.contains(a)) col(a) else expr(a))).as("r"))
+      val (p, q) = (viaSql.queryExecution.optimizedPlan, viaCol.queryExecution.optimizedPlan)
+      assert(p.canonicalized == q.canonicalized, s"$name: SQL plan\n$p\nvs Column plan\n$q")
+      assert(viaSql.collect().toSeq == viaCol.collect().toSeq, s"$name: rows diverge")
+    }
+  }
+
+  /** A new session stripped of every graft function the extension
+    * injected, with the sf-dir tables as views.
+    */
+  private def withoutGraftFunctions(): SparkSession = {
+    val s2 = spark.newSession()
+    SqlFunctions.all.foreach(f =>
+      s2.sessionState.functionRegistry.dropFunction(FunctionIdentifier(f.name)))
+    TableFunctions.all.foreach(f =>
+      s2.sessionState.tableFunctionRegistry.dropFunction(FunctionIdentifier(f.name)))
+    SqlFunctions.registerTables(s2, sfDir)
+    s2
+  }
+
+  test("scalar functions: every entry's SQL plan is its Column twin's, on an " +
+      "extension session and on a register-only session") {
+    registered
+    val missing = SqlFunctions.all.map(_.name).toSet -- scalarCalls.map(_._1)
+    assert(missing.isEmpty, s"scalar functions without a twin: $missing")
+    scalarsAgree(spark)
+    val s2 = withoutGraftFunctions()
+    SqlFunctions.register(s2)
+    scalarsAgree(s2)
+  }
+
+  test("scalar functions take lambda variables as arguments") {
+    registered
+    import spark.implicits._
+    val viaSql = spark.sql(
+      """SELECT doc_id, transform(array(text), t -> graft_normalize(t)) AS norm,
+        |       filter(split(text, '[.]'), t -> graft_token_count(t) > 1) AS sentences
+        |FROM documents""".stripMargin)
+    val viaCol = Tables.documents(spark, sfDir).select(col("doc_id"),
+      transform(array(col("text")), t => TF.normalizeText(t)).as("norm"),
+      filter(split(col("text"), "[.]"), t => size(TF.tokens(t)) > 1).as("sentences"))
+    assert(viaSql.exceptAll(viaCol).isEmpty && viaCol.exceptAll(viaSql).isEmpty,
+      "lambda-argument calls diverge from the Column API")
+    val links = Seq(
+      ("https://a.com/b/c?q=1#f", Seq("HTTP://Other.com/X", "//cdn.com/lib.js", "/x/../y?id=2",
+        "?new=2", "#top", "", "./d", "../d?q=1#s")),
+      ("https://a.com", Seq("d/e")),
+      ("http://[2001:db8::1]:8080/a/b", Seq("c", "../../x"))).toDF("base", "hrefs")
+    links.createOrReplaceTempView("links_fixture")
+    val resolved = spark.sql(
+      "SELECT base, transform(hrefs, h -> graft_url_resolve(base, h)) AS r FROM links_fixture")
+    val twin = links.select(col("base"),
+      transform(col("hrefs"), h => Urls.resolve(col("base"), h)).as("r"))
+    assert(resolved.exceptAll(twin).isEmpty && twin.exceptAll(resolved).isEmpty,
+      "graft_url_resolve over a lambda variable diverges from Urls.resolve")
+  }
+
+  test("scalar functions: NULL, '' and array() arguments give a value or a named error") {
+    registered
+    val types = scalarFixture(spark).schema.map(f => f.name -> f.dataType).toMap
+    def boundary(t: DataType): Seq[String] = Seq("NULL", s"CAST(NULL AS ${t.sql})") ++
+      (t match {
+        case StringType => Seq("''")
+        case BinaryType => Seq("X''")
+        case _: ArrayType => Seq(s"CAST(array() AS ${t.sql})")
+        case _ => Nil
+      })
+    // Spark files an unexpected JVM exception under INTERNAL_ERROR
+    def named(e: Throwable) = e match {
+      case t: SparkThrowable =>
+        Option(t.getCondition).exists(c => !c.startsWith("INTERNAL_ERROR"))
+      case _ => false
+    }
+    val calls = for {
+      (name, args, _) <- scalarCalls
+      vals <- args.foldLeft(Seq(Seq.empty[String])) { (acc, a) =>
+        for (p <- acc; v <- types.get(a).fold(Seq(a))(boundary)) yield p :+ v
+      }
+    } yield s"SELECT $name(${vals.mkString(", ")})"
+    val raw = calls.flatMap(q =>
+      Try(spark.sql(q).collect()).failed.toOption.filterNot(named).map(e => s"$q: $e"))
+    assert(raw.isEmpty, raw.mkString("\n"))
   }
 
   // ---- operators: every graft_* table function == its library operator ----
@@ -532,17 +692,18 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("table functions: a session with only SqlFunctions.register answers every row") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val s2 = spark.newSession()
     // strip what the extension injected, so only register can bring them back
-    TableFunctions.all.foreach(f =>
-      s2.sessionState.tableFunctionRegistry.dropFunction(FunctionIdentifier(f.name)))
-    SqlFunctions.registerTables(s2, sfDir)
+    val s2 = withoutGraftFunctions()
     val before = intercept[org.apache.spark.sql.AnalysisException](
       s2.sql("SELECT * FROM graft_repetition('documents', 'doc_id', 'text')"))
     assert(before.getCondition == "UNRESOLVABLE_TABLE_VALUED_FUNCTION", before.getMessage)
+    val scalarBefore = intercept[org.apache.spark.sql.AnalysisException](
+      s2.sql("SELECT graft_dot(array(1.0d), array(2.0d))"))
+    assert(scalarBefore.getCondition == "UNRESOLVED_ROUTINE", scalarBefore.getMessage)
     SqlFunctions.register(s2)
     rows.foreach(r => runRow(s2, r))
+    // graft_dot, graft_hash60, graft_cosine and every other scalar entry
+    scalarsAgree(s2)
   }
 
   test("graft_dedup_latest: 'ts DESC' keeps the latest row; 't', TABLE(t) and " +
@@ -584,6 +745,13 @@ class SqlSurfaceSpec extends SparkSpec {
       "'id', 'ts DESC')") == "UNEXPECTED_INPUT_TYPE")
     assert(condition("SELECT * FROM graft_dedup_latest(TABLE(dl2) WITH SINGLE PARTITION " +
       "ORDER BY (ts), 'id', 'ts DESC')") == "UNEXPECTED_INPUT_TYPE")
+    // scalar functions: argument count, a non-constant n, a wrongly typed n
+    for (call <- Seq("graft_dot(array(1.0d))", "graft_hash60()", "graft_bin(1.0d)"))
+      assert(condition(s"SELECT $call") == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", call)
+    assert(condition("SELECT graft_char_ngrams(CAST(ts AS STRING), id) FROM dl2") ==
+      "NON_FOLDABLE_ARGUMENT")
+    assert(condition("SELECT graft_word_ngrams(array('a', 'b'), 'x')") ==
+      "UNEXPECTED_INPUT_TYPE")
   }
 
   test("table functions: exactly the named ones run jobs at analysis; EXPLAIN " +
