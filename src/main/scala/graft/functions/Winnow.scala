@@ -25,6 +25,12 @@ case class GramHash60(left: Expression, right: Expression) extends BinaryExpress
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    // a constant negative k fails analysis named, not as a read past the bytes
+    case (StringType, IntegerType) if right.foldable &&
+        Option(right.eval()).exists(_.asInstanceOf[Int] < 0) =>
+      TypeCheckResult.DataTypeMismatch("VALUE_OUT_OF_RANGE", Map(
+        "exprName" -> "`k`", "valueRange" -> s"[0, ${Int.MaxValue}]",
+        "currentValue" -> right.eval().toString))
     case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
     case (l, r) => TypeCheckResult.TypeCheckFailure(
       s"graft_gram_hash60 expects (string, int), got $l / $r")
@@ -54,6 +60,7 @@ object GramHash60 {
     * fallback-disabled spec in TextSpec pins compilability.
     */
   def hashStream(s: UTF8String, k: Int): ArrayData = {
+    require(k >= 0, s"graft_gram_hash60: k must be >= 0, got $k")
     val n = s.numChars()
     val bytes = s.getBytes // one materialization per document
     if (n < k) return new GenericArrayData(Array(Hash60.hash(bytes)))

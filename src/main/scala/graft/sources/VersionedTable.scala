@@ -1,9 +1,16 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference,
+  Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.StreamShim
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -770,29 +777,55 @@ object VersionedTable {
 
   // ------------------------------------------------ DV-aware scans (i30)
 
-  /** Per-row metadata columns the DML discovery scans ride: the table-
-    * relative file path and the parquet row index (Spark's
-    * `_metadata.file_path` / `_metadata.row_index` hidden columns — the
-    * row index is the file-local physical ordinal, exactly a deletion
-    * vector's coordinate system).
+  /** Per-row metadata columns the DML discovery scans ride: the logged
+    * (table-relative) file path, which [[scanFiles]] serves as each file's
+    * one partition value, and the parquet row index (`_metadata.row_index`,
+    * the file-local physical ordinal — exactly a deletion vector's
+    * coordinate system).
     */
   private[graft] val MetaRelCol = "__gf_rel"
   private[graft] val MetaPosCol = "__gf_pos"
 
-  /** Strip `scheme:[//authority]` from a file URI, leaving its RAW
-    * (percent-encoded) path — the `_metadata.file_path` side of the
-    * raw-path join below.
+  /** The file index of a scan over logged data files: Spark's file source
+    * plans from the log's own list and never lists a path. Each status is
+    * the qualified path with the logged size; a pre-i25 add (logged with
+    * 0 bytes) is stat-ed once, or it would plan as a zero-length split that
+    * reads no rows. `listFiles` keeps the files whose stats cannot exclude
+    * the pushed data filters ([[mayHold]]). With `keepMeta` each file is
+    * its own partition, valued by its logged path ([[MetaRelCol]]), and
+    * the partition filters (which Spark does not re-apply above the scan)
+    * are evaluated here. Equal file lists make equal indexes, so two reads
+    * of one state share caches and reused exchanges.
     */
-  private def rawPathExpr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.regexp_replace(c, "^[a-zA-Z0-9+.\\-]+:(//[^/]*)?", "")
+  private final case class LoggedFiles(table: String, files: Seq[AddFile],
+      keepMeta: Boolean)(spark: SparkSession) extends FileIndex {
+    private val fs = fsOf(spark, table)
+    private val status: Map[String, FileStatus] = files.map { f =>
+      val p = fs.makeQualified(new Path(s"$table/${f.path}"))
+      f.path -> (if (f.bytes > 0) new FileStatus(f.bytes, false, 0, 0, 0, p)
+                 else fs.getFileStatus(p))
+    }.toMap
 
-  /** The raw (percent-encoded) URI path of a table-relative file — byte-
-    * identical to `_metadata.file_path`'s path portion (both are
-    * java.net.URI encodings of the same Hadoop Path), which is what makes
-    * the scan→log join below EXACT instead of string surgery.
-    */
-  private def rawPathOf(fs: FileSystem, table: String, rel: String): String =
-    fs.makeQualified(new Path(s"$table/$rel")).toUri.getRawPath
+    override def rootPaths: Seq[Path] = Seq(fs.makeQualified(new Path(table)))
+    override def partitionSchema: StructType =
+      if (keepMeta) new StructType().add(MetaRelCol, StringType) else new StructType()
+    override def inputFiles: Array[String] = files.map(f => status(f.path).getPath.toString).toArray
+    override def sizeInBytes: Long = status.values.map(_.getLen).sum
+    override def refresh(): Unit = ()
+
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val kept = mayHold(files, dataFilters).map(f => f -> FileStatusWithMetadata(status(f.path)))
+      if (!keepMeta) Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2)))
+      else {
+        val onPath = Predicate.createInterpreted(partitionFilters.reduceOption(And)
+          .getOrElse(Literal.TrueLiteral)
+          .transform { case _: AttributeReference => BoundReference(0, StringType, nullable = true) })
+        kept.map { case (f, st) => PartitionDirectory(InternalRow(UTF8String.fromString(f.path)), Seq(st)) }
+          .filter(d => onPath.eval(d.values))
+      }
+    }
+  }
 
   /** Scan `files` honoring deletion vectors: files carrying a `dv`
     * anti-join their (file, pos) sidecar pairs on the parquet row index
@@ -805,66 +838,38 @@ object VersionedTable {
     * references it — the union can never over-delete for the files that
     * point at those dirs.
     */
-  private[sources] def scanFiles(spark: SparkSession, table: String, files: Seq[AddFile],
+  private[graft] def scanFiles(spark: SparkSession, table: String, files: Seq[AddFile],
       schema: StructType, keepMeta: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
     if (files.isEmpty) {
       val base = emptyFrame(spark, schema)
       return if (!keepMeta) base
       else base.withColumn(MetaRelCol, lit(null).cast("string"))
         .withColumn(MetaPosCol, lit(null).cast("long"))
     }
-    // `_metadata.file_path` is the file URI with PERCENT-ENCODED segments
-    // while AddFile.path is the decoded on-disk spelling — a space or '%'
-    // in a partition value diverges the two, and any string surgery on one
-    // side silently no-ops DML hit discovery (r19 review finding, spec:
-    // "URI-encodable partition values"). Reconcile exactly: the driver
-    // builds (raw URI path → logged relative path) for precisely the
-    // files this scan plans and each row joins back to its logged path.
-    def withMeta(fl: Seq[AddFile]): DataFrame = {
-      val fs = fsOf(spark, table)
-      val lookup = fl.map(f => (rawPathOf(fs, table, f.path), f.path))
-        .toDF("__gf_raw", MetaRelCol)
-      spark.read.schema(schema).parquet(fl.map(f => s"$table/${f.path}"): _*)
-        .withColumn("__gf_raw", rawPathExpr(col("_metadata.file_path")))
-        .withColumn(MetaPosCol, col("_metadata.row_index"))
-        .join(broadcast(lookup), "__gf_raw")
-        .drop("__gf_raw")
+    def logged(fl: Seq[AddFile], meta: Boolean): DataFrame = {
+      val index = LoggedFiles(table, fl, meta)(spark)
+      val df = spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+        schema.toNullable, None, new ParquetFileFormat, Map.empty)(spark))
+      if (meta) df.withColumn(MetaPosCol, col("_metadata.row_index")) else df
     }
     val (dvFiles, plainFiles) = files.partition(_.dv.isDefined)
-    val plainPart: Option[DataFrame] =
-      if (plainFiles.isEmpty) None
-      else if (keepMeta) Some(withMeta(plainFiles))
-      else Some(spark.read.schema(schema)
-        .parquet(plainFiles.map(f => s"$table/${f.path}"): _*))
-    val dvPart: Option[DataFrame] =
-      if (dvFiles.isEmpty) None
-      else {
-        val dirs = dvFiles.flatMap(_.dv).map(_.path).distinct
-        val pairs = spark.read.parquet(dirs.map(d => s"$table/$d"): _*)
-          .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-        val base = withMeta(dvFiles)
-        val survived = base.join(pairs,
-          base(MetaRelCol) === pairs("__dv_file") &&
-            base(MetaPosCol) === pairs("__dv_pos"), "left_anti")
-        Some(if (keepMeta) survived else survived.drop(MetaRelCol, MetaPosCol))
-      }
-    (plainPart, dvPart) match {
-      case (Some(p), Some(d)) => p.unionByName(d)
-      case (Some(p), None) => p
-      case (None, Some(d)) => d
-      case _ => sys.error("unreachable: files was non-empty")
+    val plainPart = Option.when(plainFiles.nonEmpty)(logged(plainFiles, keepMeta))
+    val dvPart = Option.when(dvFiles.nonEmpty) {
+      val dirs = dvFiles.flatMap(_.dv).map(_.path).distinct
+      val pairs = spark.read.parquet(dirs.map(d => s"$table/$d"): _*)
+        .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
+      val base = logged(dvFiles, meta = true)
+      val survived = base.join(pairs,
+        base(MetaRelCol) === pairs("__dv_file") &&
+          base(MetaPosCol) === pairs("__dv_pos"), "left_anti")
+      if (keepMeta) survived else survived.drop(MetaRelCol, MetaPosCol)
     }
+    (plainPart ++ dvPart).reduce(_.unionByName(_))
   }
 
-  private def readFiles(spark: SparkSession, table: String, s: Snapshot): DataFrame = {
-    val schema = s.schema
-    if (s.files.isEmpty)
-      emptyFrame(spark, schema)
-    else
-      scanFiles(spark, table, s.files, schema)
-  }
+  private def readFiles(spark: SparkSession, table: String, s: Snapshot): DataFrame =
+    scanFiles(spark, table, s.files, s.schema)
 
   /** The latest snapshot as a DataFrame — the plan reads ONLY files the
     * log references (never a directory listing).
@@ -1003,12 +1008,15 @@ object VersionedTable {
     * top-level column vs a literal. Anything else is kept exact but
     * contributes no pruning. Strings compare in unsigned UTF-8 order
     * (parquet's binary stats order); long/double carriers cross-compare.
+    *
+    * `read(…).filter(pred)` skips the same files when the scan runs (its
+    * pushed data filters reach [[mayHold]]); readWhere prunes when the
+    * frame is built, so the frame's `inputFiles` are the survivors.
     */
   def readWhere(spark: SparkSession, table: String,
       pred: org.apache.spark.sql.Column, version: Long = -1L): DataFrame = {
     val snap = snapshotAt(spark, table, version)
-    val pruned = snap.copy(files = pruneByPred(spark, snap, pred))
-    readFiles(spark, table, pruned).filter(pred)
+    scanFiles(spark, table, pruneByPred(spark, snap, pred), snap.schema).filter(pred)
   }
 
   /** The files [[readWhere]] would plan — the spec/observability hook. */
@@ -1023,16 +1031,19 @@ object VersionedTable {
     // of a zero-row frame: public API only, and the condition comes back
     // with typed AttributeReferences and folded Literals.
     val probe = emptyFrame(spark, snap.schema).filter(pred)
-    val cond = probe.queryExecution.analyzed.collectFirst {
+    probe.queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    cond match {
-      case None => snap.files
-      case Some(expr) =>
-        val conjuncts = splitConjuncts(expr).flatMap(translate(_))
-        if (conjuncts.isEmpty) snap.files
-        else snap.files.filter(f => conjuncts.forall(c => mayMatch(f, c)))
-    }
+    }.fold(snap.files)(cond => mayHold(snap.files, splitConjuncts(cond)))
+  }
+
+  /** The files whose stats cannot rule out a row matching every one of
+    * the resolved `conjuncts` — the one pruner behind [[pruneByPred]], a
+    * scan's pushed data filters ([[LoggedFiles]]) and the `graft-versioned`
+    * batch relation's filters. A conjunct it cannot read prunes nothing.
+    */
+  private[graft] def mayHold(files: Seq[AddFile], conjuncts: Seq[Expression]): Seq[AddFile] = {
+    val pruners = conjuncts.flatMap(translate(_))
+    if (pruners.isEmpty) files else files.filter(f => pruners.forall(mayMatch(f, _)))
   }
 
   /** Prunable conjuncts of `cond` when it references ONLY columns of
@@ -2744,11 +2755,8 @@ object VersionedTable {
             "reader cannot tell whether it appends or removes; upgrade the reader")
       nodes.filter(_.has("add")).map(n => parseAdd(n.get("add")))
         .filter(_.dataChange)
-        .map(_.path)
     }
-    val schema = snapshotAt(spark, table).schema
-    if (adds.isEmpty) emptyFrame(spark, schema)
-    else spark.read.schema(schema).parquet(adds.map(p => s"$table/$p"): _*)
+    scanFiles(spark, table, adds, snapshotAt(spark, table).schema)
   }
 
   /** The CDF face (i29; Delta's `readChangeData`): row-level change types
@@ -2769,9 +2777,10 @@ object VersionedTable {
     *  - optimize/vacuum commits: nothing (no row states change).
     *
     * Scale: the commit walk is driver-side metadata; the data reads are
-    * THREE scans total regardless of commit count (plain files, DV'd
-    * files, sidecar files), each joined to a broadcast (path → version,
-    * type) lookup — never a per-commit plan branch.
+    * one scan of the clean files, one per deletion vector and one of the
+    * sidecar files, whatever the commit count, each joined on the logged
+    * path to a broadcast (path → version, type) lookup — never a
+    * per-commit plan branch.
     */
   def readChangeFeed(spark: SparkSession, table: String, sinceVersion: Long,
       untilVersion: Long = -1L): DataFrame = {
@@ -2808,30 +2817,27 @@ object VersionedTable {
     var fileState: Map[String, AddFile] =
       if (sinceVersion == -1L) Map.empty
       else snapshotAt(spark, table, sinceVersion).files.map(f => f.path -> f).toMap
-    val plain = Seq.newBuilder[(String, Long, String)]   // (path, version, type)
-    val dvved = Seq.newBuilder[(AddFile, Long, String)]  // DV'd: anti-join first
-    val sidecars = Seq.newBuilder[(String, Long)]        // cdc (path, version)
+    val changed = Seq.newBuilder[(AddFile, Long, String)] // (add state, version, type)
+    val sidecars = Seq.newBuilder[(AddFile, Long)]        // (cdc file, version)
     later.foreach { v =>
       val (nodes, op) = parseCommit(fs, table, v)
       val adds = nodes.filter(_.has("add")).map(n => parseAdd(n.get("add")))
       val removes = nodes.filter(_.has("remove"))
         .map(_.get("remove").get("path").asText())
-      val cdcs = nodes.filter(_.has("cdc"))
-        .map(_.get("cdc").get("path").asText())
-      def route(f: AddFile, ct: String): Unit =
-        if (f.dv.isDefined) dvved += ((f, v, ct)) else plain += ((f.path, v, ct))
+      val cdcs = nodes.filter(_.has("cdc")).map(_.get("cdc"))
+        .map(c => AddFile(c.get("path").asText(), c.get("rows").asLong()))
       op match {
         case "create" | "convert" | "append" =>
-          adds.filter(_.dataChange).foreach(a => plain += ((a.path, v, "insert")))
+          adds.filter(_.dataChange).foreach(a => changed += ((a, v, "insert")))
         case "merge" | "merge_update" | "merge_delete" | "delete" | "update" =>
           if (cdcs.isEmpty) sys.error(
             s"versioned table $table: commit $v is a $op committed WITHOUT " +
               "change data (the change feed was not enabled then) — its " +
               "row-level changes were never recorded; reconsume from the snapshot")
-          cdcs.foreach(p => sidecars += ((p, v)))
+          cdcs.foreach(c => sidecars += ((c, v)))
         case "overwrite" | "overwrite_partitions" | "restore" =>
-          removes.foreach(p => fileState.get(p).foreach(route(_, "delete")))
-          adds.foreach(route(_, "insert"))
+          removes.foreach(p => fileState.get(p).foreach(f => changed += ((f, v, "delete"))))
+          adds.foreach(a => changed += ((a, v, "insert")))
         case "optimize" | "vacuum" | "constraint" | "property" => ()
         case other => sys.error(
           s"versioned table $table: commit $v has unknown op '$other' — this " +
@@ -2844,61 +2850,25 @@ object VersionedTable {
     val outCols = schema.fieldNames.map(col).toSeq :+
       col(ChangeTypeCol) :+ col(CommitVersionCol)
     import spark.implicits._
-    // per-file (version, type) joins key on the RAW URI path — the exact
-    // reconciliation scanFiles uses (percent-encoded partition segments
-    // would otherwise silently drop those files' rows from the feed)
-    val relExpr = rawPathExpr(col("_metadata.file_path"))
-    def joined(paths: Seq[(String, Long, String)], df: DataFrame): DataFrame = {
-      val lookup = paths
-        .map { case (p, v, ct) => (rawPathOf(fs, table, p), v, ct) }
-        .toDF("__cf_path", CommitVersionCol, ChangeTypeCol)
-      df.withColumn("__cf_path", relExpr)
-        .join(org.apache.spark.sql.functions.broadcast(lookup), "__cf_path")
-        .select(outCols: _*)
-    }
-    val parts = Seq.newBuilder[DataFrame]
-    val plainList = plain.result()
-    if (plainList.nonEmpty)
-      parts += joined(plainList,
-        spark.read.schema(schema)
-          .parquet(plainList.map(_._1).distinct.map(p => s"$table/$p"): _*))
-    // DV'd computed deletes/inserts: group by sidecar dir so each file
-    // anti-joins exactly ITS deletion vector (a later, larger DV for the
-    // same path in the range must not retro-shrink an earlier state)
-    dvved.result().groupBy(_._1.dv.get.path).foreach { case (_, group) =>
-      // distinct adds: the same (path, dv) state removed at two versions
-      // in the range must scan ONCE — the lookup join fans each row out to
-      // its per-version change entries. The key is scanFiles' own
-      // MetaRelCol (the logged path — `_metadata` is not resolvable
-      // through the DV anti-join plan).
-      val files = group.map(_._1).distinct
-      val lookup = group.map(g => (g._1.path, g._2, g._3))
-        .toDF(MetaRelCol, CommitVersionCol, ChangeTypeCol)
-      parts += scanFiles(spark, table, files, schema, keepMeta = true)
-        .drop(MetaPosCol)
+    // each file scans once however many versions in the range it serves:
+    // the lookup join on its logged path (scanFiles' MetaRelCol) fans a
+    // row out to its per-version change entries
+    def joined(files: Seq[AddFile], fileSchema: StructType, lookup: DataFrame) =
+      scanFiles(spark, table, files.distinctBy(_.path), fileSchema, keepMeta = true)
         .join(org.apache.spark.sql.functions.broadcast(lookup), MetaRelCol)
         .select(outCols: _*)
-    }
-    val cdcList = sidecars.result()
-    if (cdcList.nonEmpty) {
-      val cdcSchema = schema.add(ChangeTypeCol, "string")
-      val lookup = cdcList.map { case (p, v) => (rawPathOf(fs, table, p), v) }
-        .toDF("__cf_path", CommitVersionCol)
-      parts += spark.read.schema(cdcSchema)
-        .parquet(cdcList.map(_._1).distinct.map(p => s"$table/$p"): _*)
-        .withColumn("__cf_path", relExpr)
-        .join(org.apache.spark.sql.functions.broadcast(lookup), "__cf_path")
-        .select(outCols: _*)
-    }
-    val all = parts.result()
-    if (all.isEmpty)
-      emptyFrame(spark, org.apache.spark.sql.types.StructType(
-        schema.fields :+
-          org.apache.spark.sql.types.StructField(ChangeTypeCol,
-            org.apache.spark.sql.types.StringType) :+
-          org.apache.spark.sql.types.StructField(CommitVersionCol,
-            org.apache.spark.sql.types.LongType)))
-    else all.reduce(_.unionByName(_))
+    // one scan of the clean files, and one per deletion vector, so each
+    // DV'd file anti-joins exactly ITS deletion vector (a later, larger DV
+    // for the same path in the range must not retro-shrink an earlier state)
+    val cdc = sidecars.result()
+    val parts = changed.result().groupBy(_._1.dv.map(_.path)).values.toSeq.map { group =>
+      joined(group.map(_._1), schema, group.map { case (f, v, ct) => (f.path, v, ct) }
+        .toDF(MetaRelCol, CommitVersionCol, ChangeTypeCol))
+    } ++ Option.when(cdc.nonEmpty)(joined(cdc.map(_._1), schema.add(ChangeTypeCol, "string"),
+      cdc.map { case (f, v) => (f.path, v) }.toDF(MetaRelCol, CommitVersionCol)))
+    if (parts.isEmpty)
+      emptyFrame(spark, schema.add(ChangeTypeCol, "string").add(CommitVersionCol, "long"))
+    else parts.reduce(_.unionByName(_))
   }
 
   /** [[feedInto]]'s CDF sibling: the exactly-once hop whose transform sees

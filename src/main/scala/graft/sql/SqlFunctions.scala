@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.{md5, size}
@@ -45,7 +45,7 @@ object SqlFunctions {
     /** The analyzer's builder: bind, build the Column, hand back its
       * expression (the analyzer resolves what the combinator left open).
       */
-    def builder: Seq[Expression] => Expression = args => {
+    val builder: Seq[Expression] => Expression = args => {
       val spark = SparkSession.active
       StreamShim.expression(spark, build(TableFunctions.bind(name, params, spark, args)))
     }
@@ -57,6 +57,15 @@ object SqlFunctions {
     Fn(name, Seq(value(x), value(y)))(a => f(a.value(x), a.value(y)))
   private def fnN(name: String, x: String, n: String)(f: (Column, Int) => Column) =
     Fn(name, Seq(value(x), int(n)))(a => f(a.value(x), a.int(n)))
+  /** `graft_gram_hashes`' `k` below 0 fails analysis as a constant one
+    * passed to `graft_gram_hash60` does, before the combinator's require.
+    */
+  private def gramLength(k: Int): Int =
+    if (k >= 0) k
+    else throw new AnalysisException("DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", Map(
+      "sqlExpr" -> "\"graft_gram_hashes\"", "exprName" -> "`k`",
+      "valueRange" -> s"[0, ${Int.MaxValue}]", "currentValue" -> k.toString))
+
   private def native(name: String, x: String)(make: Expression => Expression) =
     Fn(name, Seq(value(x)))(a => StreamShim.column(make(a.expression(x))))
   private def native(name: String, x: String, y: String)(
@@ -80,7 +89,7 @@ object SqlFunctions {
     fn("graft_langid", "text")(t => TF.langPredict(TF.tokens(t))),
     // q24's quality score on its tie-free grid
     fn("graft_quality", "text")(t => TF.qualityGrid(t) / 1e4),
-    fnN("graft_gram_hashes", "text", "k")(TF.gramHashes),
+    fnN("graft_gram_hashes", "text", "k")((t, k) => TF.gramHashes(t, gramLength(k))),
     fnN("graft_winnow", "hs", "w")(TF.winnowSelect),
     // urls
     fn("graft_url_canon", "url")(Urls.canonicalize),
@@ -120,10 +129,14 @@ object SqlFunctions {
     * has them).
     */
   def register(spark: SparkSession): Unit = {
+    // an entry that is already this table's stays: replacing it changes
+    // nothing and logs a WARN per name
+    val fns = spark.sessionState.functionRegistry
     registerWith((id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder))
+      if (!fns.lookupFunctionBuilder(id).contains(builder)) fns.registerFunction(id, info, builder))
+    val tfs = spark.sessionState.tableFunctionRegistry
     TableFunctions.registerWith((id, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(id, info, builder))
+      if (!tfs.lookupFunctionBuilder(id).contains(builder)) tfs.registerFunction(id, info, builder))
   }
 
   /** Temp views over an sf-dir's tables so the whole catalog is plain-SQL

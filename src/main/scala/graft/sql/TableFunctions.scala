@@ -129,7 +129,7 @@ object TableFunctions {
     def info: ExpressionInfo = TableFunctions.info(name, params)
 
     /** The analyzer's builder: bind, run the operator, hand back its plan. */
-    def builder: Seq[Expression] => LogicalPlan = args => {
+    val builder: Seq[Expression] => LogicalPlan = args => {
       val spark = SparkSession.active
       run(bind(name, params, spark, args)).queryExecution.analyzed
     }

@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSourceProvider}
+import org.apache.spark.sql.sources.{BaseRelation, CatalystScan, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.VersionedTable
@@ -32,20 +33,20 @@ import graft.sources.VersionedTable
   *     .load()
   * }}}
   *
-  * BATCH (i35): a DSv1 `RelationProvider` whose relation pushes filter
-  * conjuncts into the log's own i25 stats pruning — `buildScan` translates
-  * the engine-pushed `Filter`s to a predicate, plans ONLY the surviving
-  * files (readWhere), and projects only the required columns, so both
-  * prunings reach the parquet scan. `needConversion=false`: the scan
-  * serves the inner plan's InternalRows directly (vectorized parquet +
-  * codegen stay on), never a per-row conversion. Spark re-applies every
-  * filter above the scan (default `unhandledFilters`), so translation
-  * gaps cost pruning power only, never correctness — the readWhere
-  * stance. Time travel via `versionAsOf`/`timestampAsOf` (mutually
-  * exclusive); `readChangeFeed=true` serves the i29 CDF range
-  * (`startingVersion` required, `endingVersion` optional) — both bounds
-  * INCLUSIVE, Delta's binding for the identically-spelled options (r21
-  * advice fix; the library API readChangeFeed stays (since, until]).
+  * BATCH (i35): a DSv1 `RelationProvider` whose relation is a
+  * `CatalystScan`: Spark hands `buildScan` the query's resolved filter
+  * conjuncts, and they go straight to the log's own i25 stats pruner, so
+  * the scan plans ONLY the files they cannot exclude and reads only the
+  * required columns. `needConversion=false`: the scan serves the inner
+  * plan's InternalRows directly (vectorized parquet + codegen stay on),
+  * never a per-row conversion. Spark re-applies every filter above the
+  * scan (default `unhandledFilters`), so a conjunct the pruner cannot
+  * read costs pruning power only, never correctness. Time travel via
+  * `versionAsOf`/`timestampAsOf` (mutually exclusive);
+  * `readChangeFeed=true` serves the i29 CDF range (`startingVersion`
+  * required, `endingVersion` optional) — both bounds INCLUSIVE, Delta's
+  * binding for the identically-spelled options (r21 advice fix; the
+  * library API readChangeFeed stays (since, until]).
   *
   * STREAMING (s36): offsets ARE commit versions — each trigger consumes
   * the commit range (lastCommitted, latest] via
@@ -179,13 +180,14 @@ private[graft] object VersionedStreamProvider {
       .add(VersionedTable.CommitVersionCol, "long")
 }
 
-/** Batch snapshot/time-travel relation (i35): filters prune FILES through
-  * the log stats, required columns prune the parquet read schema, rows
-  * are served as the inner plan's InternalRows (`needConversion=false`).
+/** Batch snapshot/time-travel relation (i35): the filters Spark hands
+  * over prune FILES through the log stats, required columns prune the
+  * parquet read schema, rows are served as the inner plan's InternalRows
+  * (`needConversion=false`).
   */
 private[graft] class VersionedBatchRelation(spark: SparkSession,
     override val sqlContext: SQLContext, table: String, version0: Long)
-    extends BaseRelation with PrunedFilteredScan {
+    extends BaseRelation with CatalystScan {
 
   // Pin "latest" ONCE at relation creation (analysis time), the way Delta
   // pins its snapshot: buildScan runs at execution, and a commit landing
@@ -203,25 +205,16 @@ private[graft] class VersionedBatchRelation(spark: SparkSession,
 
   override def needConversion: Boolean = false
 
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
+  override def buildScan(requiredColumns: Seq[Attribute],
+      filters: Seq[Expression]): RDD[Row] = {
     import org.apache.spark.sql.functions.col
-    val pred = filters.flatMap(VersionedBatchRelation.translate)
-      .reduceOption(_ && _)
-    val base = pred match {
-      case Some(p) => VersionedTable.readWhere(spark, table, p, version)
-      case None => VersionedTable.readVersion(spark, table, version)
-    }
-    // seam is OPT-IN (spec sets the flag): production scans must not pay
-    // a second log replay + pruning pass just to record a test counter
-    if (VersionedBatchRelation.trackPlannedFiles)
-      VersionedBatchRelation.lastPlannedFiles = pred match {
-        case Some(p) => VersionedTable.survivingFiles(spark, table, p, version).size
-        case None => VersionedTable.snapshotAt(spark, table, version).files.size
-      }
+    val snap = VersionedTable.snapshotAt(spark, table, version)
+    val files = VersionedTable.mayHold(snap.files, filters)
+    VersionedBatchRelation.lastPlannedFiles = files.size
+    val base = VersionedTable.scanFiles(spark, table, files, snap.schema)
     val projected =
       if (requiredColumns.isEmpty) base.select()
-      else base.select(requiredColumns.toSeq.map(col): _*)
+      else base.select(requiredColumns.map(a => col(a.name)): _*)
     // needConversion=false contract: serve InternalRows straight from the
     // inner plan — vectorized parquet + codegen stay on, zero row copies
     projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
@@ -229,47 +222,10 @@ private[graft] class VersionedBatchRelation(spark: SparkSession,
 }
 
 private[graft] object VersionedBatchRelation {
-  /** Test seam: how many files the LAST buildScan planned (the
-    * observability hook the pruning spec pins). OPT-IN via
-    * [[trackPlannedFiles]] — computing it costs a second driver-side
-    * prune pass production must not pay.
+  /** How many files the LAST buildScan planned (the observability hook
+    * the pruning spec pins).
     */
   @volatile private[graft] var lastPlannedFiles: Int = -1
-  @volatile private[graft] var trackPlannedFiles: Boolean = false
-
-  /** Engine `Filter` → Column predicate; None = untranslatable (the
-    * engine re-applies every filter above the scan, so skipping costs
-    * pruning power only, never rows).
-    */
-  private[graft] def translate(f: Filter): Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.sources
-    f match {
-      case sources.EqualTo(a, v) => Some(col(a) === lit(v))
-      case sources.EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-      case sources.GreaterThan(a, v) => Some(col(a) > lit(v))
-      case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-      case sources.LessThan(a, v) => Some(col(a) < lit(v))
-      case sources.LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-      case sources.In(a, vs) => Some(col(a).isin(vs.toSeq.map(lit): _*))
-      case sources.IsNull(a) => Some(col(a).isNull)
-      case sources.IsNotNull(a) => Some(col(a).isNotNull)
-      case sources.StringStartsWith(a, v) => Some(col(a).startsWith(v))
-      case sources.StringEndsWith(a, v) => Some(col(a).endsWith(v))
-      case sources.StringContains(a, v) => Some(col(a).contains(v))
-      // EXACT-or-nothing on every composite: a partially-translated AND
-      // is weaker than the original (safe alone) but NEGATING it under a
-      // NOT would yield a STRONGER predicate and silently drop rows —
-      // the engine already hands top-level conjuncts as separate Filters,
-      // so per-element partiality costs nothing
-      case sources.And(l, r) =>
-        for { a <- translate(l); b <- translate(r) } yield a && b
-      case sources.Or(l, r) =>
-        for { a <- translate(l); b <- translate(r) } yield a || b
-      case sources.Not(c) => translate(c).map(!_)
-      case _ => None
-    }
-  }
 }
 
 /** Batch CDF-range relation: `readChangeFeed` over (since, until] —

@@ -107,8 +107,10 @@ object TextFunctions {
     * once by construction). [[gramHashesHof]] is the built-ins-only
     * spelling, parity-pinned by test.
     */
-  def gramHashes(text: Column, k: Int): Column =
+  def gramHashes(text: Column, k: Int): Column = {
+    require(k >= 0, s"gramHashes: k must be >= 0, got $k")
     call_function("graft_gram_hash60", normalizeText(text), lit(k))
+  }
 
   /** Built-ins-only [[gramHashes]] (same values): the normal form is bound
     * INSIDE the expression via a one-element `transform` lambda

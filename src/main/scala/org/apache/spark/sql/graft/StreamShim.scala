@@ -4,12 +4,21 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The Spark-internal seams graft uses, each a `private[sql]` member
-  * this object lives in the `org.apache.spark.sql` namespace to reach at
-  * compile time. No other Spark internals are touched; everything else
-  * in graft is public API (or, for `graft.sql.SqlDml` and the
-  * `graft.sql` function tables, the unresolved plans and expressions
-  * Spark's own parser and analyzer hand over).
+/** The Spark-internal seams graft uses. Those below are `private[sql]`
+  * members this object lives in the `org.apache.spark.sql` namespace to
+  * reach at compile time. Two more are public classes of Spark's
+  * internal packages, used where they are needed:
+  *  - `execution.datasources`' `HadoopFsRelation` over a `FileIndex`:
+  *    `graft.sources.VersionedTable.scanFiles` builds every frame over a
+  *    table's logged data files from its own index, so Spark plans the
+  *    scan from the log's file list (no listing) and hands the pushed
+  *    data filters to the log's stats pruner;
+  *  - `sources.CatalystScan`: the `graft-versioned` batch relation
+  *    receives a query's resolved filter expressions for the same pruner.
+  * No other Spark internals are touched; everything else in graft is
+  * public API (or, for `graft.sql.SqlDml` and the `graft.sql` function
+  * tables, the unresolved plans and expressions Spark's own parser and
+  * analyzer hand over).
   *
   *  - [[asStreamingFrame]]: a DSv1 streaming `Source.getBatch` must return
   *    a DataFrame whose logical plan carries `isStreaming = true`

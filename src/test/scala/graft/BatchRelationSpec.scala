@@ -56,8 +56,6 @@ class BatchRelationSpec extends SparkSpec {
 
   test("a pushed filter provably PRUNES FILES through the log stats, and " +
       "an aggregate over the relation is still exact") {
-    VersionedBatchRelation.trackPlannedFiles = true
-    try {
     val t = tmpTable("prune")
     // four files with disjoint id ranges (create + three appends)
     VersionedTable.create(
@@ -84,7 +82,6 @@ class BatchRelationSpec extends SparkSpec {
       .filter(col("id") < 3L || col("id") > 38L).count() == 4L)
     assert(spark.read.format("graft-versioned").load(t)
       .filter(col("v").startsWith("a1") && col("id") <= 19L).count() == 11L)
-    } finally VersionedBatchRelation.trackPlannedFiles = false
   }
 
   test("CDF batch read: readChangeFeed + startingVersion/endingVersion == " +

@@ -29,6 +29,19 @@ class JobCountSpec extends SparkSpec {
       .toSeq == Seq(7L))
   }
 
+  test("building VersionedTable.read over 40 and 200 live files runs no job") {
+    val dir = java.nio.file.Files.createTempDirectory("read_jobs").toFile.getAbsolutePath
+    for (n <- Seq(40, 200)) {
+      val t = s"$dir/t$n"
+      VersionedTable.create(spark.range(0L, n.toLong, 1L, n).toDF("id"), t)
+      assert(VersionedTable.snapshotAt(spark, t).files.size == n)
+      // the scan plans from the log's file list: listing those paths again
+      // is a Spark job once there are more than 32 of them
+      assert(jobsOf(VersionedTable.read(spark, t)) == 0, s"$n files")
+      assert(VersionedTable.read(spark, t).count() == n)
+    }
+  }
+
   test("one Scd2.mergeVersioned batch runs a pinned number of jobs") {
     val ts = (d: Int) => new Timestamp(d * 86400000L)
     val t = java.nio.file.Files.createTempDirectory("scd2_jobs").toFile.getAbsolutePath + "/dim"
@@ -52,8 +65,9 @@ class JobCountSpec extends SparkSpec {
     // five executions, each a few jobs under AQE: the upsert checkpoint
     // (its row count and key ranges observed on the same job), the
     // duplicate-key check, the matched-file scan, and the survivor and
-    // staged writes — nothing re-derives what these produced
-    assert(jobs == 14, s"mergeVersioned ran $jobs jobs")
+    // staged writes — nothing re-derives what these produced, and the
+    // matched-file scan reads its file paths with no lookup join
+    assert(jobs == 13, s"mergeVersioned ran $jobs jobs")
     // an unchanged batch runs only the upsert checkpoint and commits nothing
     val noop = jobsOf {
       v = graft.ops.Scd2.mergeVersioned(spark, t, Seq((4L, "addr-4")).toDF("id", "addr"),
@@ -115,11 +129,12 @@ class JobCountSpec extends SparkSpec {
     val got = dml(changeFeed = false) ++ dml(changeFeed = true) +
       ("optimize(zorderBy)" -> optimizeJobs)
     // the discovery scan, the rewrite or the deletion vector (plus a
-    // post-image append), the change-data sidecar when the feed is on
-    assert(got == Map("delete" -> 4, "delete+cdf" -> 5,
-      "deleteVectors" -> 6, "deleteVectors+cdf" -> 7,
-      "update" -> 4, "update+cdf" -> 6,
-      "updateVectors" -> 7, "updateVectors+cdf" -> 8,
+    // post-image append), the change-data sidecar when the feed is on;
+    // the discovery scan reads its file paths with no lookup join
+    assert(got == Map("delete" -> 3, "delete+cdf" -> 4,
+      "deleteVectors" -> 5, "deleteVectors+cdf" -> 6,
+      "update" -> 3, "update+cdf" -> 5,
+      "updateVectors" -> 6, "updateVectors+cdf" -> 7,
       "optimize(zorderBy)" -> 5), got.toSeq.sortBy(_._1).mkString(", "))
   }
 
@@ -143,7 +158,8 @@ class JobCountSpec extends SparkSpec {
     // that decides its rewrite, and the survivor, update and insert
     // writes; a separate key-range aggregation over the source would add
     // two jobs, and one collect per decision (multiple-match check,
-    // per-action counts, rewrite files) five more
-    assert(jobs == 20, s"MERGE INTO ran $jobs jobs")
+    // per-action counts, rewrite files) five more, and a lookup join
+    // from each scanned row's file URI to its logged path two
+    assert(jobs == 18, s"MERGE INTO ran $jobs jobs")
   }
 }

@@ -3,7 +3,9 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, forked by sbt). */
@@ -22,6 +24,17 @@ object SparkTestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Files the file scans of `df` read: runs the action, then sums the
+    * `number of files read` metric of the executed plan's scan nodes.
+    */
+  protected def plannedFiles(df: DataFrame): Long = {
+    df.collect()
+    object plan extends AdaptiveSparkPlanHelper
+    plan.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+    }.sum
+  }
 
   /** Jobs started under a fresh job group while `body` runs. Listener
     * events arrive in order, so once a sentinel job started after `body`

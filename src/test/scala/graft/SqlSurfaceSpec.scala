@@ -329,10 +329,12 @@ class SqlSurfaceSpec extends SparkSpec {
         Option(t.getCondition).exists(c => !c.startsWith("INTERNAL_ERROR"))
       case _ => false
     }
+    // a constant count or length argument is also tried negative
+    def constant(a: String) = if (a.forall(_.isDigit)) Seq(a, "-1") else Seq(a)
     val calls = for {
       (name, args, _) <- scalarCalls
       vals <- args.foldLeft(Seq(Seq.empty[String])) { (acc, a) =>
-        for (p <- acc; v <- types.get(a).fold(Seq(a))(boundary)) yield p :+ v
+        for (p <- acc; v <- types.get(a).fold(constant(a))(boundary)) yield p :+ v
       }
     } yield s"SELECT $name(${vals.mkString(", ")})"
     val raw = calls.flatMap(q =>
@@ -704,6 +706,21 @@ class SqlSurfaceSpec extends SparkSpec {
     rows.foreach(r => runRow(s2, r))
     // graft_dot, graft_hash60, graft_cosine and every other scalar entry
     scalarsAgree(s2)
+  }
+
+  test("SqlFunctions.register on an extension session replaces no entry") {
+    val s = spark.newSession()
+    def entries() =
+      SqlFunctions.all.map(f => s.sessionState.functionRegistry.lookupFunction(f.id)) ++
+        TableFunctions.all.map(f => s.sessionState.tableFunctionRegistry.lookupFunction(f.id))
+    val before = entries()
+    assert(before.forall(_.isDefined), "the extension injects every entry")
+    SqlFunctions.register(s)
+    // a replaced entry carries a fresh ExpressionInfo (and logs a WARN)
+    val names = SqlFunctions.all.map(_.name) ++ TableFunctions.all.map(_.name)
+    val replaced = names.zip(entries().zip(before))
+      .collect { case (n, (a, b)) if !(a.get eq b.get) => n }
+    assert(replaced.isEmpty, s"register replaced ${replaced.mkString(", ")}")
   }
 
   test("graft_dedup_latest: 'ts DESC' keeps the latest row; 't', TABLE(t) and " +

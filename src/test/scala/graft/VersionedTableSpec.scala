@@ -13,6 +13,16 @@ class VersionedTableSpec extends SparkSpec {
   private def tmpTable(tag: String): String =
     Files.createTempDirectory(s"vt_$tag").resolve("t").toString
 
+  /** The files readWhere plans for `p`, checked against the files a plain
+    * read under the same filter reads: one pruner, at build and at scan.
+    */
+  private def surviving(t: String, p: org.apache.spark.sql.Column) = {
+    val s = VersionedTable.survivingFiles(spark, t, p)
+    val scanned = plannedFiles(VersionedTable.read(spark, t).filter(p))
+    assert(scanned == s.size, s"read(t).filter($p) read $scanned files, readWhere plans ${s.size}")
+    s
+  }
+
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
     df.select(col("id"), col("v")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -346,7 +356,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(snap.files.forall(_.bytes > 0))
 
     // numeric point lookup: one file survives planning
-    val hit = VersionedTable.survivingFiles(spark, t, col("id") === 25L)
+    val hit = surviving(t, col("id") === 25L)
     assert(hit.size == 1, hit.map(_.path).mkString(", "))
     assert(rows(VersionedTable.readWhere(spark, t, col("id") === 25L)) ==
       Set((25L, "c25")))
@@ -354,12 +364,12 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.readWhere(spark, t, col("id") === 25L)
       .inputFiles.length == 1)
     // range + conjunction
-    assert(VersionedTable.survivingFiles(spark, t,
+    assert(surviving(t,
       col("id") > 10L && col("id") <= 20L).size == 1)
     // string predicate prunes in UTF-8 order
-    assert(VersionedTable.survivingFiles(spark, t, col("v") === "b15").size == 1)
+    assert(surviving(t, col("v") === "b15").size == 1)
     // IN list touches two files
-    assert(VersionedTable.survivingFiles(spark, t,
+    assert(surviving(t,
       col("id").isin(5L, 25L)).size == 2)
     // un-prunable predicate keeps everything and stays exact
     assert(rows(VersionedTable.readWhere(spark, t, col("v").endsWith("15"))) ==
@@ -377,10 +387,10 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.append(
       Seq((3L, null.asInstanceOf[String]), (4L, null.asInstanceOf[String]))
         .toDF("id", "v").coalesce(1), t)
-    assert(VersionedTable.survivingFiles(spark, t, col("v").isNull).size == 1)
-    assert(VersionedTable.survivingFiles(spark, t, col("v").isNotNull).size == 1)
+    assert(surviving(t, col("v").isNull).size == 1)
+    assert(surviving(t, col("v").isNotNull).size == 1)
     // equality can never match inside an all-null chunk
-    assert(VersionedTable.survivingFiles(spark, t, col("v") === "a").size == 1)
+    assert(surviving(t, col("v") === "a").size == 1)
     assert(VersionedTable.readWhere(spark, t, col("v").isNull)
       .select("id").as[Long].collect().toSet == Set(3L, 4L))
   }
@@ -395,7 +405,7 @@ class VersionedTableSpec extends SparkSpec {
     }
     // v10 rolled a checkpoint; drop the pre-checkpoint commits
     (0L to 9L).foreach(v => fs.delete(new Path(s"$t/_graft_log/" + f"$v%020d.json"), false))
-    val hit = VersionedTable.survivingFiles(spark, t, col("id") === 700L)
+    val hit = surviving(t, col("id") === 700L)
     assert(hit.size == 1, s"checkpoint must carry per-file stats: ${hit.size} files")
     assert(rows(VersionedTable.readWhere(spark, t, col("id") === 700L)) ==
       Set((700L, "r7")))
@@ -421,7 +431,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(full.columns.toSeq == Seq("id", "day", "v"))
     assert(full.count() == 3)
     // partition pruning IS stats pruning: one partition's files survive
-    val surv = VersionedTable.survivingFiles(spark, t, col("day") === "2024-01-01")
+    val surv = surviving(t, col("day") === "2024-01-01")
     assert(surv.nonEmpty && surv.forall(_.partitions("day") == "2024-01-01"))
     assert(surv.size < snap.files.size)
     // dynamic partition overwrite: only the touched partition changes
@@ -643,7 +653,7 @@ class VersionedTableSpec extends SparkSpec {
     shuffled.drop(1).grouped(11).foreach(g =>
       VersionedTable.append(g.toDF("id", "score", "v").coalesce(1), t))
     val pre = VersionedTable.snapshotAt(spark, t).files
-    val preSurvive = VersionedTable.survivingFiles(spark, t,
+    val preSurvive = surviving(t,
       col("id") < 25L && col("score") < 25L)
     assert(preSurvive.size >= pre.size - 1,
       s"fixture broken: shuffled appends should defeat pruning almost " +
@@ -659,7 +669,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(rows(VersionedTable.read(spark, t)) == preRows, "data must be identical")
     // the 2-D corner predicate now prunes: compact curve regions mean
     // most files provably exclude it
-    val postSurvive = VersionedTable.survivingFiles(spark, t,
+    val postSurvive = surviving(t,
       col("id") < 25L && col("score") < 25L)
     assert(postSurvive.size < post.size,
       s"z-ordered files must prune the 2-D corner: ${postSurvive.size} of ${post.size}")
@@ -768,7 +778,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.delete(spark, t, col("v") === "zzz").isEmpty)
     assert(VersionedTable.latestVersion(spark, t) == v)
     // stats pruning: a predicate outside every file range scans nothing
-    assert(VersionedTable.survivingFiles(spark, t, col("id") > 1000L).isEmpty)
+    assert(surviving(t, col("id") > 1000L).isEmpty)
   }
 
   test("update: copy-on-write SET on matched rows only, typed casts, " +
@@ -830,9 +840,9 @@ class VersionedTableSpec extends SparkSpec {
       .coalesce(1), t2)
     VersionedTable.append((21L to 30L).map(i => (i, s"c$i")).toDF("id", "v")
       .coalesce(1), t2)
-    assert(VersionedTable.survivingFiles(spark, t2, col("id") === 25).size == 1,
+    assert(surviving(t2, col("id") === 25).size == 1,
       "Int-literal (cast-wrapped) point lookup must prune")
-    assert(VersionedTable.survivingFiles(spark, t2,
+    assert(surviving(t2,
       col("id") === lit(5).cast("long")).size == 1)
 
     // 3. a column whose values overflow parquet's stats size limit
@@ -1045,7 +1055,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(none.inputFiles.isEmpty && none.count() == 0)
     // a zero-row file survives no prunable predicate
     Seq(col("id") === 5L, col("v").isNull, col("v").isNotNull, interval).foreach { p =>
-      assert(VersionedTable.survivingFiles(spark, t, p).forall(_.rows > 0), p.toString)
+      assert(surviving(t, p).forall(_.rows > 0), p.toString)
     }
   }
 
