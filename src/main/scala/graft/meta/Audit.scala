@@ -89,6 +89,16 @@ object Audit {
     } catch { case e: Throwable => fs.delete(tmp, false); throw e }
   }
 
+  /** The audit log as a frame, read with the log's own schema: planning
+    * it runs no schema-inference job. A file of another schema cannot pass
+    * for the log: a column of another type fails the read, and a row
+    * without a `status` (its columns absent) fails it by name.
+    */
+  private[graft] def read(spark: SparkSession, auditDir: String): DataFrame =
+    spark.read.schema(schema).parquet(auditDir).withColumn("status",
+      coalesce(col("status"), raise_error(lit(s"audit log $auditDir holds a row " +
+        "with no status — a file that is not an audit record"))))
+
   /** New watermark after a load: stringified max of the watermark column,
     * None when the frame is empty or all-null
     * (reference: 1_audit/catch_new_watermark_value.py:30-45).
@@ -113,7 +123,7 @@ object Audit {
     */
   def latestRuns(spark: SparkSession, auditDir: String): DataFrame =
     graft.ops.Dedup.latestPerKey(
-      spark.read.parquet(auditDir),
+      read(spark, auditDir),
       Seq("source_system", "source_object"),
       Seq(col("end_time").desc,
         when(col("status") === "running", 0).otherwise(1).desc,
@@ -125,7 +135,7 @@ object Audit {
     */
   def latestCompletedRuns(spark: SparkSession, auditDir: String): DataFrame =
     graft.ops.Dedup.latestPerKey(
-      spark.read.parquet(auditDir).filter(col("status") =!= "running"),
+      read(spark, auditDir).filter(col("status") =!= "running"),
       Seq("source_system", "source_object"),
       Seq(col("end_time").desc, col("run_id").desc))
 }

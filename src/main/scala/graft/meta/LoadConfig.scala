@@ -1,7 +1,9 @@
 package graft.meta
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
+import org.apache.spark.sql.SparkSession
 
 /** Metadata-driven load configuration.
   *
@@ -30,9 +32,13 @@ object LoadConfig {
       if (sourceSystem.isEmpty) tableName else s"$sourceSystem.$tableName"
   }
 
-  /** Read a load-config CSV (header row, reference column names), its
-    * columns as written (`is_active` still a string). The
-    * `source_system` column is optional — single-system configs omit it.
+  /** Read a load-config CSV (header row, reference column names) on the
+    * driver: one file-system open and Spark's own CSV parser (univocity,
+    * with `spark.read.csv`'s defaults — no comment lines, values not
+    * trimmed, an empty value null), so a config read runs no Spark job.
+    * Each row comes back as its cells by column name (an absent cell
+    * null), `is_active` still a string. The `source_system` column is
+    * optional — single-system configs omit it.
     *
     * FAIL-FAST contract (reference: pl_ingestion_bronze.json guards the
     * config with GetMetadata + explicit Fail activities): a missing path
@@ -40,26 +46,32 @@ object LoadConfig {
     * at the orchestration boundary — not whatever Spark happens to throw
     * three operators later.
     */
-  private def readRaw(spark: SparkSession, path: String): DataFrame = {
+  private def readRaw(spark: SparkSession, path: String): Seq[Map[String, String]] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
       throw new IllegalArgumentException(s"load config not found at $path")
-    val raw = spark.read.option("header", "true").csv(path)
+    val settings = new CsvParserSettings()
+    settings.getFormat.setComment('\u0000')
+    settings.setLineSeparatorDetectionEnabled(true)
+    settings.setIgnoreLeadingWhitespaces(false)
+    settings.setIgnoreTrailingWhitespaces(false)
+    val in = fs.open(p)
+    val rows = try new CsvParser(settings).parseAll(in, StandardCharsets.UTF_8).asScala.toSeq
+      finally in.close()
+    val header = rows.headOption.fold(Seq.empty[String])(_.toSeq)
     val required = Seq("source_type", "table_name", "is_active", "load_mode",
       "watermark_column")
-    val missing = required.filterNot(raw.columns.contains)
+    val missing = required.filterNot(header.contains)
     if (missing.nonEmpty)
       throw new IllegalArgumentException(
         s"load config at $path is invalid: missing column(s) ${missing.mkString(", ")}")
-    val sys = if (raw.columns.contains("source_system"))
-      coalesce(col("source_system"), lit("")) else lit("")
-    raw.select(col("source_type"), sys.as("source_system"), col("table_name"),
-      col("is_active"), col("load_mode"), col("watermark_column"))
+    rows.drop(1).map(r => header.zipWithIndex.map { case (h, i) =>
+      h -> (if (i < r.length) r(i) else null) }.toMap)
   }
 
-  /** Active entries as typed config (small table — collected on the driver,
-    * as ADF does when fanning out per-table copy activities).
+  /** Active entries as typed config (a small table, read on the driver
+    * as ADF does when fanning out per-table copy activities: no Spark job).
     *
     * Every row is validated before any is returned, each failure a NAMED
     * error naming the table and the offending value: `is_active` must be
@@ -70,11 +82,11 @@ object LoadConfig {
     * silently reload in full).
     */
   def activeEntries(spark: SparkSession, path: String): Seq[Entry] =
-    readRaw(spark, path).collect().toSeq.map { r =>
-      val active = r.getString(3)
-      val wm = Option(r.getString(5))
-      val e = Entry(r.getString(0), r.getString(1), r.getString(2), active == "1",
-        r.getString(4), wm.filter(_.trim.nonEmpty))
+    readRaw(spark, path).map { r =>
+      val active = r("is_active")
+      val wm = Option(r("watermark_column"))
+      val e = Entry(r("source_type"), r.get("source_system").flatMap(Option(_)).getOrElse(""),
+        r("table_name"), active == "1", r("load_mode"), wm.filter(_.trim.nonEmpty))
       def bad(what: String) = throw new IllegalArgumentException(
         s"load config at $path: table ${e.qualifiedName} $what")
       if (active != "0" && active != "1")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Slowly-Changing-Dimension Type 2, Spark-first.
   *
@@ -63,8 +64,7 @@ object Scd2 {
       asOf: Column): DataFrame = {
     val current = existing.filter(col("is_current"))
     val historic = existing.filter(!col("is_current"))
-    val (stg, changed, inserts) =
-      stagedSide(staged, current, keys, attrs, asOf, existing.columns.toSeq)
+    val (stg, changed) = stagedSide(staged, keys, attrs)
     val joinCond = keys.map(k => col(k) === col(s"_stg_$k")).reduce(_ && _)
 
     // Current rows, left-joined to the staged batch: expire on change.
@@ -75,20 +75,8 @@ object Scd2 {
       .withColumn("valid_to", when(col("_changed"), asOf).otherwise(col("valid_to")))
       .select(existing.columns.map(col): _*)
 
-    historic.unionByName(currentMerged).unionByName(inserts)
-  }
-
-  /** What both merges derive from the staged batch: its `_stg_`-prefixed
-    * projection, the NULL-safe change predicate between a current row and
-    * its staged match, and the inserts — staged rows that are brand new
-    * or differ from the current version, as the fresh current version
-    * (`valid_from = asOf`) in `cols` order.
-    */
-  private def stagedSide(staged: DataFrame, current: DataFrame, keys: Seq[String],
-      attrs: Seq[String], asOf: Column, cols: Seq[String]): (DataFrame, Column, DataFrame) = {
-    val changed = attrs.map(a => !(col(a) <=> col(s"_stg_$a"))).reduce(_ || _)
-    val stg = staged.select(
-      (keys.map(k => col(k).as(s"_stg_$k")) ++ attrs.map(a => col(a).as(s"_stg_$a"))): _*)
+    // Staged rows that are brand new or differ from the current version,
+    // as the fresh current version.
     val inserts = stg
       .join(
         current.select((keys.map(col) :+ lit(true).as("_cur_exists")) ++ attrs.map(col): _*),
@@ -99,8 +87,21 @@ object Scd2 {
       .withColumn("valid_from", asOf)
       .withColumn("valid_to", lit(null).cast("timestamp"))
       .withColumn("is_current", lit(true))
-      .select(cols.map(col): _*)
-    (stg, changed, inserts)
+      .select(existing.columns.map(col): _*)
+
+    historic.unionByName(currentMerged).unionByName(inserts)
+  }
+
+  /** What both merges derive from the staged batch: its `_stg_`-prefixed
+    * projection and the NULL-safe change predicate between a current row
+    * and its staged match.
+    */
+  private def stagedSide(staged: DataFrame, keys: Seq[String],
+      attrs: Seq[String]): (DataFrame, Column) = {
+    val changed = attrs.map(a => !(col(a) <=> col(s"_stg_$a"))).reduce(_ || _)
+    val stg = staged.select(
+      (keys.map(k => col(k).as(s"_stg_$k")) ++ attrs.map(a => col(a).as(s"_stg_$a"))): _*)
+    (stg, changed)
   }
 
   /** [[merge]] committed ROW-LEVEL against an i23 versioned table — the
@@ -135,6 +136,18 @@ object Scd2 {
     * reference silently no-ops and loses the transition from its SCD2
     * history — the same documented fixed-behavior stance as [[merge]]
     * (both faces must agree or batch and row-level runs diverge).
+    *
+    * The merge decides its rewrite in the one job that materializes the
+    * upsert. One left join of the staged batch to the pinned snapshot's
+    * current rows yields both the expired and the inserted rows, and that
+    * snapshot is scanned with each row's logged file path, so every
+    * expired row names the file it replaces; the merge's staged
+    * checkpoint observes the set of those files and the most upsert rows
+    * one (key, valid_from) has
+    * ([[graft.sources.VersionedTable.mergeStaged]] with `tagged`). A
+    * staged key with two changed rows, or an `asOf` equal to a changed
+    * current row's `valid_from`, fails with the merge's named
+    * multiple-rows error and commits nothing.
     */
   def mergeVersioned(spark: org.apache.spark.sql.SparkSession, table: String,
       staged: DataFrame, keys: Seq[String], attrs: Seq[String], asOf: Column,
@@ -148,20 +161,49 @@ object Scd2 {
     // current rows per key (txnMerge's own snapshot would be too late).
     // Not materialized here: the pinned version's files are immutable, and
     // the one job that needs them is the merge's staged checkpoint.
-    val live = VT.readVersion(spark, table, baseSnap.version)
-    val existingCols = live.columns.toSeq
-    val current = live.filter(col("is_current"))
-    val (stg, changed, inserts) = stagedSide(staged, current, keys, attrs, asOf, existingCols)
-    // expire: current rows with a CHANGED staged match, closed out at asOf
-    val expired = current
-      .join(stg, keys.map(k => col(k) === col(s"_stg_$k")).reduce(_ && _), "inner")
-      .filter(changed)
-      .withColumn("is_current", lit(false))
-      .withColumn("valid_to", asOf)
-      .select(existingCols.map(col): _*)
+    val current = VT.scanFiles(spark, table, baseSnap.files, baseSnap.schema, keepMeta = true)
+      .filter(col("is_current")).withColumn("_cur_exists", lit(true))
+    val (stg, changed) = stagedSide(staged, keys, attrs)
+    // One join decides the upsert: each staged row meets its current
+    // version, if any, and yields up to two rows — that version EXPIRED
+    // (a changed match, closed out at asOf and tagged with the file it
+    // replaces) and the INSERTED fresh version (a new or changed key).
+    val schema = baseSnap.schema
+    val cols = schema.fieldNames.toSeq.filterNot(keys.contains) :+ VT.MetaRelCol
+    def version(value: PartialFunction[String, Column]) = struct(cols.map { c =>
+      value(c).cast(if (c == VT.MetaRelCol) StringType else schema(c).dataType).as(c)
+    }: _*)
+    val expired = version {
+      case "is_current" => lit(false)
+      case "valid_to" => asOf
+      case c => col(c)
+    }
+    val inserted = version {
+      case "is_current" => lit(true)
+      case "valid_from" => asOf
+      case "valid_to" | VT.MetaRelCol => lit(null)
+      case c => col(s"_stg_$c")
+    }
+    // Both rows take their key from the staged row (equal to the current
+    // version's), uncast when the types agree: the upsert keeps the staged
+    // batch's partitioning, so when the batch arrives partitioned by key,
+    // as a dedup leaves it, the merge counts rows per key without a
+    // shuffle of its own.
+    val key = keys.map { k =>
+      val c = col(s"_stg_$k")
+      (if (stg.schema(s"_stg_$k").dataType == schema(k).dataType) c
+       else c.cast(schema(k).dataType)).as(k)
+    }
+    val matched = col("_cur_exists").isNotNull
+    val upsert = stg
+      .join(current, keys.map(k => col(s"_stg_$k") === col(k)).reduce(_ && _), "left")
+      .select(keys.map(k => col(s"_stg_$k")) :+ explode(array(when(matched && changed, expired),
+        when(!matched || changed, inserted))).as("v"): _*)
+      .filter(col("v").isNotNull)
+      .select(key :+ col("v.*"): _*)
     // handed over lazily: the merge materializes it once and reads its
     // row count from that same job, committing nothing when it is empty
-    VT.mergeStaged(expired.unionByName(inserts), table, keys :+ "valid_from", app, batch,
-      readVersion = baseSnap.version, emptyIsNoop = true)
+    VT.mergeStaged(upsert, table, keys :+ "valid_from", app, batch,
+      readVersion = baseSnap.version, emptyIsNoop = true, tagged = true)
   }
 }

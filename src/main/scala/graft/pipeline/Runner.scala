@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import java.sql.Timestamp
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration._
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.meta.{Audit, LoadConfig}
@@ -19,9 +19,8 @@ import graft.ops.{Incremental, Observations}
   * Scale: the config and audit tables are metadata-rate (rows per RUN, not
   * per data row); per-table loads are independent Catalyst plans —
   * incremental windows push the watermark predicate into the scan, full
-  * loads are straight scans. Tables can be dispatched concurrently by the
-  * caller (each load is a self-contained job), mirroring ADF's parallel
-  * ForEach.
+  * loads are straight scans. Every run dispatches its loads concurrently
+  * (each load is a self-contained job), as ADF's ForEach does by default.
   *
   * Each load is ONE pass over the data: the rows-written count and the new
   * watermark ride the write job as `observe()` (CollectMetrics) metrics —
@@ -39,25 +38,31 @@ object Runner {
   /** Last successful watermark per (source_system, table) from the audit
     * log — keyed by BOTH (reference: 1_audit/fetch_logs.py:23-27), so two
     * systems landing same-named tables never share a watermark.
+    *
+    * One Spark job: the log is read with its own schema (no inference
+    * job) and deduplicated in one single-partition pass — it holds a few
+    * rows per run, so no shuffle pays.
     */
   private def lastWatermarks(spark: SparkSession,
-      auditDir: String): Map[(String, String), String] =
+      auditDir: String): Map[(String, String), String] = {
+    val dir = new org.apache.hadoop.fs.Path(auditDir)
     // ONLY a missing log means "first run"; a corrupt or wrong-schema
-    // audit log fails loudly (see Sources.parquetIfExists).
-    graft.sources.Sources.parquetIfExists(spark, auditDir).fold(
-        Map.empty[(String, String), String]) { audit =>
+    // audit log fails loudly (see Audit.read).
+    if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) Map.empty
+    else {
       // Succeeded runs only: a `running` row (a crashed load's marker) and
       // a `failed` row carry no new watermark — carry-forward reads through
       // them to the last load that landed, so a failed run never drops the
       // watermark and re-bootstraps the table.
       graft.ops.Dedup.latestPerKey(
-        audit.filter(col("status") === "succeeded"),
+        Audit.read(spark, auditDir).filter(col("status") === "succeeded").coalesce(1),
         Seq("source_system", "source_object"),
         Seq(col("end_time").desc, col("run_id").desc))
         .filter(col("watermark_value").isNotNull)
         .select(col("source_system"), col("source_object"), col("watermark_value"))
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     }
+  }
 
   /** Run every active config entry: read via `source` (called with the
     * system-qualified name, e.g. `bank_a.orders`), optionally window to
@@ -67,16 +72,23 @@ object Runner {
     * and audit the outcome. A failing table records a `failed` audit row
     * and does not stop the remaining tables.
     *
-    * `parallelism` > 1 dispatches table loads concurrently on a bounded
-    * pool — the engine-side analog of ADF's parallel ForEach
+    * Loads are dispatched concurrently, on a pool owned by this run: one
+    * thread per load, at most the context's default parallelism — the
+    * engine-side analog of ADF's ForEach, which runs its activities in
+    * parallel unless told otherwise
     * (reference: 2_bronze_ingestion_adf/pipelines/pl_ingestion_bronze.json
-    * ForEach batchCount). Per-table failure isolation and per-table audit
-    * rows are unchanged: each load is a self-contained job and Spark
-    * schedules concurrent jobs from one session fine. Audit rows are
-    * written from the driver, not by Spark jobs: each is one parquet file
-    * published by rename under its own uuid name, so concurrent appends
-    * cannot collide; the appends still take one JVM-local lock, which
-    * guards the shared row serializer (see [[graft.meta.Audit.log]]).
+    * ForEach batchCount). Each load is a self-contained job, and Spark
+    * schedules concurrent jobs from one session fine; the pool threads
+    * start under the caller's job group and active session. So `source`,
+    * `transform` and `onFailure` may run on pool threads, several at
+    * once. Audit rows are written from the driver, not by Spark jobs:
+    * each is one parquet file published by rename under its own uuid
+    * name, so concurrent appends cannot collide; the appends still take
+    * one JVM-local lock, which guards the shared row serializer (see
+    * [[graft.meta.Audit.log]]). The run returns once every load ended,
+    * its results in config order; what a load does not turn into a
+    * `failed` result (an `Error`, or a failed append of its `running`
+    * marker) is rethrown then.
     *
     * Full refreshes go through [[graft.sources.Sinks.overwriteAtomic]],
     * whose directory rename is atomic on HDFS and on ADLS Gen2's
@@ -94,7 +106,7 @@ object Runner {
   def run(spark: SparkSession, configPath: String, outDir: String, auditDir: String,
       runId: String, source: String => DataFrame,
       transform: Map[String, DataFrame => DataFrame] = Map.empty,
-      maxAttempts: Int = 1, parallelism: Int = 1,
+      maxAttempts: Int = 1,
       onFailure: LoadResult => Unit = _ => ()): Seq[LoadResult] = {
     val watermarks = lastWatermarks(spark, auditDir)
 
@@ -188,16 +200,15 @@ object Runner {
     }
 
     val entries = LoadConfig.activeEntries(spark, configPath)
-    if (parallelism <= 1) entries.map(loadOne)
-    else {
-      // Bounded pool, Future per table; loadOne never throws (failures
-      // become `failed` LoadResults), so the sequence always completes.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.sequence(entries.map(e => Future(loadOne(e)))), Duration.Inf)
-      finally pool.shutdown()
-    }
+    // A per-run pool: its threads are created by this call, so they
+    // inherit the caller's Spark local properties (job group, job
+    // description) and active session. invokeAll waits for every load;
+    // what escapes a load is rethrown as itself.
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(entries.size, spark.sparkContext.defaultParallelism)))
+    try pool.invokeAll(entries.map(e => (() => loadOne(e)): Callable[LoadResult]).asJava)
+      .asScala.toSeq.map(f => try f.get() catch { case ex: ExecutionException => throw ex.getCause })
+    finally pool.shutdown()
   }
 
   /** One stage of a master pipeline: `body` returns true on success. */

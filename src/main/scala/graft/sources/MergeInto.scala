@@ -422,7 +422,7 @@ final class MergeIntoBuilder private[sources] (
           if (nUpdated + nDeleted + nInserted == 0) None
           else Some(VT.Rewrite(removeFiles, rewritten ++ insertAdds,
             if (!base.changeFeed || cdcFrames.isEmpty) Nil
-            else orphans.trackCdc(VT.writeCdc(cdcFrames.reduce(_.unionByName(_)), table))))
+            else orphans.track(VT.writeCdc(cdcFrames.reduce(_.unionByName(_)), table))))
         }
         MergeMetrics(committed.getOrElse(base.version), committed.isDefined,
           nUpdated, nDeleted, nInserted, hitFiles.size)

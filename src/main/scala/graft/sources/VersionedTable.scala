@@ -409,8 +409,11 @@ object VersionedTable {
         val a = n.putArray("writerFeatures")
         writerFeatures.toSeq.sorted.foreach(a.add) }
     }
-  private def cdcLine(path: String, rows: Long) =
-    obj("cdc") { n => n.put("path", path); n.put("rows", rows) }
+  /** A change-data sidecar file: its path, rows and byte size, spelled
+    * as an add's, so the feed plans its scan with no file-system stat (a
+    * line logged before sizes were, with no `bytes`, is stat-ed once).
+    */
+  private def cdcLine(f: AddFile) = obj("cdc")(fillAdd(_, f))
   private def commitLine(op: String, token: String) =
     obj("commit") { n =>
       n.put("op", op); n.put("writer", token); n.put("ts", clock()) }
@@ -1459,8 +1462,6 @@ object VersionedTable {
     private val dirs = scala.collection.mutable.LinkedHashSet.empty[String]
     def track(adds: Seq[AddFile]): Seq[AddFile] = {
       adds.foreach(a => dirs += a.path.split("/")(1)); adds }
-    def trackCdc(cdc: Seq[(String, Long)]): Seq[(String, Long)] = {
-      cdc.foreach(c => dirs += c._1.split("/")(1)); cdc }
     /** For `data/<dir>`-shaped sidecar roots (DV dirs). */
     def trackDir(rel: String): String = {
       dirs += rel.stripPrefix(s"$DataDirName/"); rel }
@@ -1933,7 +1934,7 @@ object VersionedTable {
     * the snapshot file set; vacuum retains them while their commit is
     * retained.
     */
-  private[sources] def writeCdc(cdcDf: DataFrame, table: String): Seq[(String, Long)] = {
+  private[sources] def writeCdc(cdcDf: DataFrame, table: String): Seq[AddFile] = {
     val spark = cdcDf.sparkSession
     val uuid = java.util.UUID.randomUUID().toString.take(12)
     val rel = s"$DataDirName/cdc-$uuid"
@@ -1941,17 +1942,17 @@ object VersionedTable {
     val fs = fsOf(spark, table)
     val conf = spark.sparkContext.hadoopConfiguration
     val it = fs.listFiles(new Path(s"$table/$rel"), true)
-    val b = Seq.newBuilder[(String, Long)]
+    val b = Seq.newBuilder[AddFile]
     while (it.hasNext) {
       val f = it.next()
       if (f.getPath.getName.endsWith(".parquet")) {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         val rows = try r.getRecordCount finally r.close()
-        b += ((relativize(fs, table, f.getPath), rows))
+        b += AddFile(relativize(fs, table, f.getPath), rows, f.getLen)
       }
     }
-    b.result().sortBy(_._1)
+    b.result().sortBy(_.path)
   }
 
   // -------------------------------------------------------- merge (i24)
@@ -2022,9 +2023,22 @@ object VersionedTable {
     * [[graft.ops.Scd2.mergeVersioned]], which can then hand over its
     * upsert unmaterialized; [[merge]] and [[txnMerge]] commit an empty
     * version, as they always did.
+    *
+    * Two facts decide the rewrite: no key has more than one staged row,
+    * and which live files hold a row a staged row replaces. In general
+    * they take a duplicate-key collect and the matched-file scan
+    * ([[filesHit]]). With `tagged`, the staged batch carries them itself:
+    * each row's [[MetaRelCol]] is the logged path of the live file
+    * holding the row it replaces (null for an insert), and every such
+    * file is a file of the `readVersion` snapshot. That is what
+    * [[graft.ops.Scd2.mergeVersioned]] derives from its own scan. The
+    * checkpoint job then also observes the set of those paths (file-
+    * catalog-sized) and the most staged rows one key has, counted per key
+    * over the batch's own partitioning, and neither job runs.
     */
   private[graft] def mergeStaged(staged: DataFrame, table: String, keys: Seq[String],
-      app: String, batch: Long, readVersion: Long, emptyIsNoop: Boolean): Option[Long] = {
+      app: String, batch: Long, readVersion: Long, emptyIsNoop: Boolean,
+      tagged: Boolean = false): Option[Long] = {
     import org.apache.spark.sql.functions._
     val spark = staged.sparkSession
     val base = snapshotAt(spark, table)
@@ -2032,31 +2046,54 @@ object VersionedTable {
     val missing = keys.filterNot(base.schema.fieldNames.contains)
     require(missing.isEmpty,
       s"merge keys absent from table schema: ${missing.mkString(", ")}")
-    val (stagedAligned, stagedRows, ranges) = stage(align(staged, base.schema), keys,
+    // Null-key rows never count as duplicates: they never match a live
+    // row and never collide with each other (SQL join semantics —
+    // documented below as landing as inserts), so grouping them as equal
+    // would turn a legal two-null-row batch into a deterministic
+    // poison-pill micro-batch under the s04 streaming replay (every
+    // replay re-fails).
+    val keyed = keys.map(col(_).isNotNull).reduce(_ && _)
+    val tags = org.apache.spark.sql.Observation()
+    val toStage = if (!tagged) staged else staged
+      .withColumn("__gf_n", when(keyed, count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*))))
+      .observe(tags, collect_set(col(MetaRelCol)).as("files"),
+        max(col("__gf_n")).as("n"), max_by(struct(keys.map(col): _*), col("__gf_n")).as("key"))
+      .drop("__gf_n", MetaRelCol)
+    val (stagedAligned, stagedRows, ranges) = stage(align(toStage, base.schema), keys,
       s"merge into $table: staged batch statistics")
     try {
       if (stagedRows == 0L && emptyIsNoop) return None
       // multiple staged rows per key would make the upsert ambiguous —
-      // the Delta MERGE multiple-match error, named. Null-key rows are
-      // EXCLUDED from the check: they never match a live row and never
-      // collide with each other (SQL join semantics — documented below as
-      // landing as inserts), so grouping them as equal would turn a legal
-      // two-null-row batch into a deterministic poison-pill micro-batch
-      // under the s04 streaming replay (every replay re-fails).
-      val dup = stagedAligned
-        .filter(keys.map(col(_).isNotNull).reduce(_ && _))
-        .groupBy(keys.map(col): _*)
-        .count().filter(col("count") > 1).limit(1).collect()
+      // the Delta MERGE multiple-match error, named
+      val (dup, hit) =
+        if (tagged) {
+          val m = graft.ops.Observations.of(tags, s"merge into $table: staged file tags")
+          (Option(m("key")).filter(_ => Option(m("n")).exists(_.asInstanceOf[Long] > 1L)),
+            Some(m("files").asInstanceOf[scala.collection.Iterable[String]].toSet))
+        } else (stagedAligned.filter(keyed).groupBy(keys.map(col): _*)
+          .count().filter(col("count") > 1).limit(1).collect().headOption, None)
       require(dup.isEmpty,
-        s"merge staged batch has multiple rows for key ${dup.headOption.map(_.toString).getOrElse("")} — " +
+        s"merge staged batch has multiple rows for key ${dup.map(_.toString).getOrElse("")} — " +
           "dedupe upstream (Dedup.latestPerKey), exactly as the reference does")
 
-      val stagedKeysDf = stagedAligned.select(keys.map(col): _*).distinct()
-      val candidates = inKeyRanges(base.files, keys.zip(ranges))
-      val matchedFiles =
-        if (stagedRows == 0L) Nil
-        else filesHit(spark, table, base.schema, candidates)(
+      // No distinct: the check above proved the non-null keys unique, and
+      // the semi and anti joins below ignore repeated keys anyway. The
+      // checkpoint carries no size estimate the planner can use, so the
+      // keys are broadcast here when their exact size (the observed row
+      // count times Spark's row-width estimate) is under the broadcast
+      // threshold; otherwise the joins shuffle both sides first.
+      val stagedKeys = stagedAligned.select(keys.map(col): _*)
+      val keyBytes = stagedRows * (8L + stagedKeys.schema.map(_.dataType.defaultSize).sum)
+      val stagedKeysDf =
+        if (keyBytes <= spark.sessionState.conf.autoBroadcastJoinThreshold) broadcast(stagedKeys)
+        else stagedKeys
+      val matchedFiles = hit match {
+        case Some(paths) => base.files.filter(f => paths.contains(f.path))
+        case None if stagedRows == 0L => Nil
+        case None => filesHit(spark, table, base.schema, inKeyRanges(base.files, keys.zip(ranges)))(
           _.select((keys.map(col) :+ col(MetaRelCol)): _*).join(stagedKeysDf, keys, "left_semi"))
+      }
 
       // copy-on-write: matched files are rewritten WITHOUT the matched
       // rows; the staged batch lands whole (updates replace, rest insert).
@@ -2083,7 +2120,7 @@ object VersionedTable {
         // change data (i29): matched live rows are update preimages, their
         // staged replacements postimages, unmatched staged rows inserts —
         // written as a commit-owned sidecar so the feed survives the merge
-        val cdcAdds: Seq[(String, Long)] =
+        val cdcAdds: Seq[AddFile] =
           if (!base.changeFeed) Nil
           else {
             // checkpoint the preimages ONCE: pre feeds the union AND derives
@@ -2095,7 +2132,7 @@ object VersionedTable {
               val matchedKeysDf = pre.select(keys.map(col): _*).distinct()
               val post = stagedAligned.join(matchedKeysDf, keys, "left_semi")
               val ins = stagedAligned.join(matchedKeysDf, keys, "left_anti")
-              orphans.trackCdc(writeCdc(
+              orphans.track(writeCdc(
                 pre.withColumn(ChangeTypeCol, lit("update_preimage"))
                   .unionByName(post.withColumn(ChangeTypeCol, lit("update_postimage")))
                   .unionByName(ins.withColumn(ChangeTypeCol, lit("insert"))),
@@ -2160,7 +2197,7 @@ object VersionedTable {
     * files it adds, and its change-data sidecars.
     */
   private[sources] final case class Rewrite(removes: Seq[AddFile], adds: Seq[AddFile],
-      cdc: Seq[(String, Long)])
+      cdc: Seq[AddFile])
 
   /** The commit of a row-level change decided against the table at
     * `readVersion` — [[mergeStaged]], [[MergeIntoBuilder]], and
@@ -2186,7 +2223,7 @@ object VersionedTable {
                 snap.writerFeatures.contains("deletion-vectors"))) Nil
           else Seq(protocolLine(Set("deletion-vectors"), Set("deletion-vectors")))
         protocol ++ r.removes.map(f => removeLine(f.path)) ++ r.adds.map(addLine) ++
-          r.cdc.map { case (p, n) => cdcLine(p, n) }
+          r.cdc.map(cdcLine)
       }
     }
   }
@@ -2341,7 +2378,7 @@ object VersionedTable {
         // when they feed both union branches
         val cdcAdds = if (!base.changeFeed) Nil else {
           val once = if (set.isDefined && !vectors) pre.localCheckpoint() else pre
-          try orphans.trackCdc(writeCdc(set match {
+          try orphans.track(writeCdc(set match {
             case None => once.withColumn(ChangeTypeCol, l("delete"))
             case Some(s) => once.withColumn(ChangeTypeCol, l("update_preimage"))
               .unionByName(postImage(once, s).withColumn(ChangeTypeCol, l("update_postimage")))
@@ -2824,8 +2861,7 @@ object VersionedTable {
       val adds = nodes.filter(_.has("add")).map(n => parseAdd(n.get("add")))
       val removes = nodes.filter(_.has("remove"))
         .map(_.get("remove").get("path").asText())
-      val cdcs = nodes.filter(_.has("cdc")).map(_.get("cdc"))
-        .map(c => AddFile(c.get("path").asText(), c.get("rows").asLong()))
+      val cdcs = nodes.filter(_.has("cdc")).map(n => parseAdd(n.get("cdc")))
       op match {
         case "create" | "convert" | "append" =>
           adds.filter(_.dataChange).foreach(a => changed += ((a, v, "insert")))

@@ -2,7 +2,8 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
-import graft.meta.Audit
+import graft.meta.{Audit, LoadConfig}
+import graft.pipeline.Runner
 import graft.sources.VersionedTable
 
 /** Spark jobs per call of the medallion's bookkeeping paths and the table
@@ -29,6 +30,40 @@ class JobCountSpec extends SparkSpec {
       .toSeq == Seq(7L))
   }
 
+  test("LoadConfig.activeEntries reads the config on the driver: no job") {
+    val cfg = java.nio.file.Files.createTempDirectory("cfg_jobs").toFile.getAbsolutePath +
+      "/load_config.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(cfg),
+      "source_type,source_system,table_name,is_active,load_mode,watermark_column\n" +
+        "sql,bank_a,tx,1,incremental,ts\nsql,bank_b,tx,0,full,\n")
+    var entries = Seq.empty[LoadConfig.Entry]
+    val jobs = jobFramesOf { entries = LoadConfig.activeEntries(spark, cfg) }
+    assert(jobs.isEmpty, s"LoadConfig.activeEntries ran:\n${jobs.mkString("\n")}")
+    assert(entries.map(_.qualifiedName) == Seq("bank_a.tx"))
+  }
+
+  test("one incremental Runner.run runs one job per table write plus one audit read") {
+    val dir = java.nio.file.Files.createTempDirectory("runner_jobs").toFile.getAbsolutePath
+    val names = Seq("t1", "t2", "t3")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/load_config.csv"),
+      "source_type,table_name,is_active,load_mode,watermark_column\n" +
+        names.map(n => s"sql,$n,1,incremental,ts\n").mkString)
+    def source(day: Int)(name: String) = (1 to day).map(d =>
+      (d.toLong, new Timestamp(d * 86400000L))).toDF("id", "ts")
+    def run(runId: String, day: Int) = Runner.run(spark, s"$dir/load_config.csv",
+      s"$dir/out", s"$dir/audit", runId, source(day))
+    assert(run("run1", 1).forall(_.status == "succeeded")) // bootstrap loads
+    var res = Seq.empty[Runner.LoadResult]
+    val jobs = jobFramesOf { res = run("run2", 2) }
+    assert(res.map(r => (r.status, r.rows)) == names.map(_ => ("succeeded", 1L)))
+    // the audit log's one read (no schema inference, one single-partition
+    // dedup) and one append per table; the config read is driver-side and
+    // the watermark and row counts ride the writes. The appends run on the
+    // run's pool threads, counted here because those threads keep the
+    // caller's job group.
+    assert(jobs.size == names.size + 1, s"Runner.run ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
+
   test("building VersionedTable.read over 40 and 200 live files runs no job") {
     val dir = java.nio.file.Files.createTempDirectory("read_jobs").toFile.getAbsolutePath
     for (n <- Seq(40, 200)) {
@@ -53,7 +88,7 @@ class JobCountSpec extends SparkSpec {
     val staged = Seq((1L, "addr-1b"), (2L, "addr-2b"), (3L, "addr-3"),
       (7L, "addr-7"), (8L, "addr-8")).toDF("id", "addr")
     var v: Option[Long] = None
-    val jobs = jobsOf {
+    val jobs = jobFramesOf {
       v = graft.ops.Scd2.mergeVersioned(spark, t, staged, Seq("id"), Seq("addr"), lit(ts(2)),
         app = "silver", batch = 1L)
     }
@@ -62,18 +97,22 @@ class JobCountSpec extends SparkSpec {
       .select("id", "addr").as[(Long, String)].collect().toMap
     assert(current == Map(1L -> "addr-1b", 2L -> "addr-2b", 3L -> "addr-3", 4L -> "addr-4",
       5L -> "addr-5", 6L -> "addr-6", 7L -> "addr-7", 8L -> "addr-8"))
-    // five executions, each a few jobs under AQE: the upsert checkpoint
-    // (its row count and key ranges observed on the same job), the
-    // duplicate-key check, the matched-file scan, and the survivor and
-    // staged writes — nothing re-derives what these produced, and the
-    // matched-file scan reads its file paths with no lookup join
-    assert(jobs == 13, s"mergeVersioned ran $jobs jobs")
-    // an unchanged batch runs only the upsert checkpoint and commits nothing
-    val noop = jobsOf {
+    // three executions: the upsert checkpoint (the current versions'
+    // broadcast, the shuffle counting rows per (key, valid_from), the
+    // checkpoint itself), which also observes its row count, key ranges,
+    // the most rows one key has and the files its expired rows replace;
+    // the survivor write (the staged keys' broadcast, the write); the
+    // staged write. A duplicate-key collect (2 jobs) or a matched-file
+    // scan (5) would re-derive what the checkpoint already observed.
+    assert(jobs.size == 6, s"mergeVersioned ran ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    // an unchanged batch runs only the upsert checkpoint's jobs and
+    // commits nothing
+    val noop = jobFramesOf {
       v = graft.ops.Scd2.mergeVersioned(spark, t, Seq((4L, "addr-4")).toDF("id", "addr"),
         Seq("id"), Seq("addr"), lit(ts(3)), app = "silver", batch = 2L)
     }
-    assert(v.isEmpty && noop == 3, s"no-op mergeVersioned ran $noop jobs")
+    assert(v.isEmpty && noop.size == 2,
+      s"no-op mergeVersioned ran ${noop.size} jobs:\n${noop.mkString("\n")}")
   }
 
   test("one decontaminateSink batch (two logs) runs a pinned number of jobs") {

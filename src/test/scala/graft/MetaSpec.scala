@@ -22,6 +22,27 @@ class MetaSpec extends SparkSpec {
     assert(entries.find(_.tableName == "accounts").get.watermarkColumn.isEmpty)
   }
 
+  test("LoadConfig's driver parse reads a config as spark.read.csv does") {
+    val f = Files.createTempDirectory("cfg_csv").toFile.getAbsolutePath + "/load_config.csv"
+    // CRLF line ends, a blank line, quoted cells (one holding the
+    // delimiter), an empty source_system, a padded cell and a short row
+    Files.writeString(java.nio.file.Paths.get(f),
+      "source_type,source_system,table_name,is_active,load_mode,watermark_column\r\n" +
+        "sql,\"bank_a\",tx,1,incremental,ts\r\n\r\n" +
+        "api,,\"fx, rates\",1,full,\r\n" +
+        "sql,bank_b, acct ,1,incremental,\" ts \"\r\n" +
+        "sql,bank_b,old,0,full\r\n")
+    val viaSpark = spark.read.option("header", "true").csv(f).collect().toSeq.map { r =>
+      def s(c: String) = r.getAs[String](c)
+      LoadConfig.Entry(s("source_type"), Option(s("source_system")).getOrElse(""),
+        s("table_name"), s("is_active") == "1", s("load_mode"),
+        Option(s("watermark_column")).filter(_.trim.nonEmpty))
+    }.filter(_.isActive)
+    val entries = LoadConfig.activeEntries(spark, f)
+    assert(entries == viaSpark)
+    assert(entries.map(_.qualifiedName) == Seq("bank_a.tx", "fx, rates", "bank_b. acct "))
+  }
+
   test("LoadConfig fails fast with a named error on a missing or invalid config") {
     val dir = Files.createTempDirectory("cfg_bad").toFile.getAbsolutePath
     val missing = intercept[IllegalArgumentException] {

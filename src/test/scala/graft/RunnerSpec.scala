@@ -246,8 +246,7 @@ class RunnerSpec extends SparkSpec {
           "table loads did not overlap — dispatch is not concurrent")
         data
     }
-    val res = Runner.run(spark, cfg, s"$dir/out", s"$dir/audit", "run1", src,
-      parallelism = 3)
+    val res = Runner.run(spark, cfg, s"$dir/out", s"$dir/audit", "run1", src)
     assert(res.map(r => r.table -> r.status).toMap ==
       Map("t1" -> "succeeded", "t2" -> "succeeded", "boom" -> "failed"))
     assert(spark.read.parquet(s"$dir/out/t1").count() == 1)

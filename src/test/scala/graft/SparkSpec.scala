@@ -1,11 +1,12 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, forked by sbt). */
@@ -40,19 +41,39 @@ trait SparkSpec extends AnyFunSuite {
     * events arrive in order, so once a sentinel job started after `body`
     * is seen, every job of `body` has been counted.
     */
-  protected def jobsOf(body: => Unit): Int = {
+  protected def jobsOf(body: => Unit): Int = jobFramesOf(body).size
+
+  /** [[jobsOf]], itemized: each counted job's first `graft.` stack frame,
+    * in start order, so a failing pin names the execution that added a
+    * job. The frame comes from the job's final stage's call site, or, for
+    * a job submitted from Spark's own threads (an AQE map stage), from
+    * the call site of the SQL execution the job belongs to; "?" when
+    * neither has one.
+    */
+  protected def jobFramesOf(body: => Unit): Seq[String] = {
+    def graftFrame(callSite: String): Option[String] =
+      callSite.linesIterator.map(_.trim).find(_.startsWith("graft."))
     val sc = spark.sparkContext
     val group = s"jobcount-${java.util.UUID.randomUUID()}"
     val sentinelGroup = s"$group-sentinel"
-    val jobs = new AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Option[String], Option[Long])]()
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val sentinel = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.add((graftFrame(e.stageInfos.maxBy(_.stageId).details),
+            props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)))
           case `sentinelGroup` => sentinel.countDown()
           case _ =>
         }
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          graftFrame(x.details).foreach(executions.put(x.executionId, _))
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -61,7 +82,9 @@ trait SparkSpec extends AnyFunSuite {
       sc.setJobGroup(sentinelGroup, "sentinel")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never seen")
-      jobs.get
+      jobs.asScala.toSeq.map { case (frame, execution) =>
+        frame.orElse(execution.flatMap(id => Option(executions.get(id)))).getOrElse("?")
+      }
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -177,6 +177,38 @@ class VersionedCdfSpec extends SparkSpec {
       (7L, "x", "insert", 5L)), s"got $ow")
   }
 
+  test("a cdc action logs its sidecar's byte size; a line logged without one still reads") {
+    val t = tmpTable("cdcbytes")
+    VersionedTable.create(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t,
+      changeFeed = true)                                                   // v0
+    VersionedTable.merge(Seq((1L, "A"), (3L, "c")).toDF("id", "v"), t, Seq("id")) // v1
+    val commit = new Path(s"$t/${VersionedTable.LogDirName}/${"%020d".format(1)}.json")
+    def lines = scala.io.Source.fromInputStream(fs.open(commit), "UTF-8")
+      .getLines().toList
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val cdc = lines.map(json.readTree).filter(_.has("cdc")).map(_.get("cdc"))
+    assert(cdc.nonEmpty)
+    cdc.foreach { c =>
+      assert(c.get("bytes").asLong() == fs.getFileStatus(new Path(s"$t/${c.get("path").asText()}"))
+        .getLen, c.toString)
+    }
+    val feed = changes(VersionedTable.readChangeFeed(spark, t, 0L))
+    assert(feed == Set((1L, "a", "update_preimage", 1L), (1L, "A", "update_postimage", 1L),
+      (3L, "c", "insert", 1L)), s"got $feed")
+    // the same commit as a log written before sizes were: no `bytes` on
+    // its cdc lines; the feed stats the sidecars and serves the same rows
+    val old = lines.map { l =>
+      val n = json.readTree(l)
+      if (n.has("cdc")) { n.get("cdc").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        .remove("bytes"); json.writeValueAsString(n) } else l
+    }
+    assert(old.exists(_.contains("\"cdc\"")) && !old.exists(l => l.contains("\"cdc\"") &&
+      l.contains("bytes")))
+    val out = fs.create(commit, true)
+    out.write(old.mkString("", "\n", "\n").getBytes("UTF-8")); out.close()
+    assert(changes(VersionedTable.readChangeFeed(spark, t, 0L)) == feed)
+  }
+
   test("CDF discipline: DML on a table without the change feed fails the " +
       "CDF read named; enableChangeFeed turns it on from there (i29)") {
     val t = tmpTable("cdfoff")

@@ -933,6 +933,72 @@ class VersionedTableSpec extends SparkSpec {
       Seq("id"), Seq("addr"), lit(ts(5)), app = "s04", batch = 1L).isEmpty)
   }
 
+  test("Scd2.mergeVersioned edge cases: a duplicate staged key and an asOf equal to " +
+      "a changed current row's valid_from fail named and commit nothing") {
+    val ts = (d: Int) => new java.sql.Timestamp(d * 86400000L)
+    val t = tmpTable("scd2edge")
+    VersionedTable.create(Seq(
+      (1L, "addr-a", ts(1), null.asInstanceOf[java.sql.Timestamp], true),
+      (2L, "addr-b", ts(2), null.asInstanceOf[java.sql.Timestamp], true))
+      .toDF("id", "addr", "valid_from", "valid_to", "is_current").repartition(2, col("id")), t)
+    val before = VersionedTable.read(spark, t).collect().map(_.toSeq).toSet
+    def merge(staged: Seq[(Long, String)], asOf: Int) = graft.ops.Scd2.mergeVersioned(
+      spark, t, staged.toDF("id", "addr"), Seq("id"), Seq("addr"), lit(ts(asOf)))
+    // two changed rows for key 1: two expirations of one live row
+    val dup = intercept[IllegalArgumentException](merge(Seq((1L, "x"), (1L, "y")), 3))
+    assert(dup.getMessage.contains("multiple rows"), dup.getMessage)
+    // key 2 changes at its own valid_from: its expiration and its new
+    // version would share one (key, valid_from)
+    val same = intercept[IllegalArgumentException](merge(Seq((2L, "addr-b2")), 2))
+    assert(same.getMessage.contains("multiple rows"), same.getMessage)
+    assert(VersionedTable.latestVersion(spark, t) == 0L, "a failed merge must commit nothing")
+    assert(VersionedTable.read(spark, t).collect().map(_.toSeq).toSet == before)
+    assert(VersionedTable.read(spark, t).groupBy("id", "valid_from").count()
+      .filter(col("count") > 1).isEmpty)
+  }
+
+  test("Scd2.mergeVersioned: two null-key staged rows land as inserts (r19 rule)") {
+    val ts = (d: Int) => new java.sql.Timestamp(d * 86400000L)
+    val t = tmpTable("scd2nullkeys")
+    VersionedTable.create(Seq(
+      (1L, "addr-a", ts(1), null.asInstanceOf[java.sql.Timestamp], true))
+      .toDF("id", "addr", "valid_from", "valid_to", "is_current"), t)
+    val staged = Seq[(java.lang.Long, String)]((null, "n1"), (null, "n2"), (1L, "addr-a2"))
+      .toDF("id", "addr")
+    assert(graft.ops.Scd2.mergeVersioned(spark, t, staged, Seq("id"), Seq("addr"),
+      lit(ts(2))).isDefined)
+    val got = VersionedTable.read(spark, t)
+      .select("id", "addr", "valid_from", "is_current").collect().map(_.toSeq).toSet
+    assert(got == Set(Seq(null, "n1", ts(2), true), Seq(null, "n2", ts(2), true),
+      Seq(1L, "addr-a", ts(1), false), Seq(1L, "addr-a2", ts(2), true)), s"got $got")
+  }
+
+  test("Scd2.mergeVersioned into a silver table holding deletion vectors merges to the " +
+      "same rows as into its copy-on-write twin") {
+    val ts = (d: Int) => new java.sql.Timestamp(d * 86400000L)
+    val dim0 = (1L to 8L).map(i => (i, s"addr-$i", ts(1), null.asInstanceOf[java.sql.Timestamp],
+      true)).toDF("id", "addr", "valid_from", "valid_to", "is_current").repartition(2, col("id"))
+    val dv = tmpTable("scd2dv")
+    val cow = tmpTable("scd2cow")
+    VersionedTable.create(dim0, dv)
+    VersionedTable.create(dim0, cow)
+    VersionedTable.deleteVectors(spark, dv, col("id") === 2L)
+    VersionedTable.delete(spark, cow, col("id") === 2L)
+    assert(VersionedTable.snapshotAt(spark, dv).files.exists(_.dv.isDefined))
+    // every surviving key changes, so the DV'd file is rewritten too; a
+    // new key lands as an insert
+    val staged = ((1L to 8L).filterNot(_ == 2L).map(i => (i, s"addr-$i-b")) :+ ((9L, "addr-9")))
+      .toDF("id", "addr")
+    def merged(t: String) = {
+      assert(graft.ops.Scd2.mergeVersioned(spark, t, staged, Seq("id"), Seq("addr"),
+        lit(ts(2))).isDefined)
+      VersionedTable.read(spark, t).collect().map(_.toSeq).toSeq
+    }
+    val got = merged(dv)
+    assert(got.sortBy(_.toString) == merged(cow).sortBy(_.toString))
+    assert(got.size == 15 && got.count(_(4) == true) == 8, got.mkString("\n"))
+  }
+
   test("merge of an empty staged batch commits an empty version; only " +
       "Scd2.mergeVersioned treats an empty upsert as a no-op") {
     val t = tmpTable("emptymerge")
